@@ -52,12 +52,10 @@ def run(sf_dir: str, cpus: int, index_root: str = "/tmp/bench_index"):
     # The JOB must be identical across parallelism levels for the scaling
     # comparison to be meaningful: shard count and shuffle width are fixed
     # (64 = 2x the max core count), only the executor-thread count varies.
-    # Driver heap is sized for local mode (all executors share one JVM).
     # BENCH_RAMDISK=1 puts shuffle + index on /dev/shm: this sandbox's
     # shared virtio disk has external IO contention that otherwise
     # bottlenecks every parallelism level identically, masking compute
     # scaling (a real cluster's disks scale with executors).
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
     if os.environ.get("BENCH_RAMDISK") == "1":
         os.makedirs("/dev/shm/spark_local", exist_ok=True)
         os.environ.setdefault("SPARK_LOCAL_DIR", "/dev/shm/spark_local")

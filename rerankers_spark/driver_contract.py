@@ -620,9 +620,10 @@ def _contract_engine(spark: SparkSession, sf_dir: str, scorer="overlap"):
 
 def q_bm25_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fixed query set through Engine.search(mode='auto') — the
-    cost-based dense/sparse router (rare-term queries → WAND, head-term
-    queries → vectorized exhaustive) — under the same from-scratch
-    DuckDB oracle as the other index paths."""
+    cogroup kernel's per-(query, shard) dense/sparse routing (rare-term
+    queries → WAND, head-term queries → the vectorized block-scan
+    scorer) — under the same from-scratch DuckDB oracle as the other
+    index paths."""
     eng = _contract_engine(spark, sf_dir)
     raw = eng.search(_queries_df(spark), k=50, mode="auto")
     rounded = raw.select(

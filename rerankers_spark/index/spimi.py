@@ -75,9 +75,9 @@ RETIRED_SCHEMA = ("tbl string, part_col string, part_val string, "
 
 def _tf_sat(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
     """THE numpy tf-saturation (FIXTURES.md §4 frozen math) — shared by
-    the block builder, both query kernels (bmw.py) and the DataFrame
-    exhaustive path (executor.py) so the formula lives in one place; the
-    only other restatements are the scalar hot-loop form in
+    the block builder and the query kernel (bmw.py: its block-scan
+    scorer and its 'safe' block bounds) so the formula lives in one
+    place; the only other restatements are the scalar hot-loop form in
     bmw._TermCursor.score_at_cur and the Column form in bm25.tf_sat_col,
     each carrying a pointer comment back here."""
     tf = tf.astype(np.float64)

@@ -19,7 +19,12 @@ algorithmic skip-list, not a Catalyst concern. Correctness invariants:
 * the skip target d' is capped by the next term's cur_doc, so docs in
   [pivot, d') provably have upper bound ≤ θ from the prefix terms alone;
 * scores are recomputed in float64 from raw (tf, dl) stored in the block
-  plus global (idf, avgdl) → bit-identical to the exhaustive path.
+  plus global (idf, avgdl) → equal to the vectorized block-scan kernel
+  (_exhaustive_single) up to float-sum reassociation (~1e-15).
+
+Every Engine.search mode runs through this one cogroup kernel
+(bmw_topk); the modes differ only in the per-(query, shard) routing
+threshold between WAND and the block-scan kernel (dense_df_ratio).
 """
 
 from __future__ import annotations
@@ -267,8 +272,8 @@ def _wand_single(cursors: list[_TermCursor], k: int,
 #: within a shard task, a query whose RAREST term matches more than this
 #: fraction of the shard's docs gets no skipping from WAND (θ rises too
 #: slowly to prune dense lists) — route it to the vectorized block-scan
-#: kernel instead. Mirrors Engine.AUTO_DENSE_DF_RATIO, but per (query,
-#: shard) inside the task, so one Spark job serves mixed workloads.
+#: kernel instead. The test runs per (query, shard) inside the task, so
+#: one Spark job serves mixed workloads.
 DENSE_DF_RATIO = 0.10
 
 
@@ -325,26 +330,6 @@ def _exhaustive_single(
     return [(float(acc[i]), -int(uniq[i])) for i in order]
 
 
-def wand_topk_group(pdf: pd.DataFrame, k: int, avgdl: float) -> pd.DataFrame:
-    """One (query_id, shard_id) group of block rows → local top-k.
-    (Single-query form; the distributed path uses wand_topk_shard.)"""
-    if len(pdf) == 0:
-        return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-    query_id = int(pdf["query_id"].iloc[0])
-    cursors = [
-        _TermCursor(_TermData(str(term), g), float(g["idf"].iloc[0]), avgdl)
-        for term, g in pdf.groupby("term")
-    ]
-    out = _wand_single(cursors, k)
-    return pd.DataFrame(
-        {
-            "query_id": np.full(len(out), query_id, dtype=np.int64),
-            "doc_id": np.array([-d for _, d in out], dtype=np.int64),
-            "score": np.array([s for s, _ in out], dtype=np.float64),
-        }
-    )
-
-
 def wand_topk_shard(
     pdf: pd.DataFrame,
     queries: list[tuple[int, list[tuple[str, float]]]],
@@ -354,6 +339,7 @@ def wand_topk_shard(
     n_docs_shard: float = 0.0,
     deleted: np.ndarray | None = None,
     keep: np.ndarray | None = None,
+    dense_df_ratio: float = DENSE_DF_RATIO,
 ) -> pd.DataFrame:
     """One shard's blocks (the bucket's query terms, deduplicated) + the
     bucket's query list → per-query local top-k.
@@ -361,10 +347,11 @@ def wand_topk_shard(
     Decoded blocks are cached per term and shared across queries — the
     shard's bytes move through the shuffle exactly once regardless of how
     many queries touch the same head term. Queries whose rarest term is
-    dense in this shard (df/n_docs_shard > DENSE_DF_RATIO, where WAND
+    dense in this shard (df/n_docs_shard > dense_df_ratio, where WAND
     degenerates to a doc-at-a-time Python loop with no skips) route to
     the vectorized block-scan kernel instead; pass n_docs_shard=0 to
-    force pure WAND.
+    force pure WAND, or dense_df_ratio=0 to send every query to the
+    block-scan kernel (every term present in the shard has df >= 1).
     """
     terms: dict[str, _TermData] = {
         str(term): _TermData(str(term), g, avgdl, bound_mode)
@@ -376,7 +363,7 @@ def wand_topk_shard(
         if not present:
             continue
         min_df = min(d.df for d, _ in present)
-        if n_docs_shard > 0 and min_df > DENSE_DF_RATIO * n_docs_shard:
+        if n_docs_shard > 0 and min_df > dense_df_ratio * n_docs_shard:
             out = _exhaustive_single(present, k, avgdl, deleted, keep)
         else:
             cursors = [_TermCursor(d, idf, avgdl) for d, idf in present]
@@ -427,10 +414,10 @@ TERM_PUSHDOWN_CAP = 4096
 #: bucket_terms, the cogroup query side — derives from a LOCAL relation.
 #: The distributed formulation re-evaluated the tokenize→dedup→termstats
 #: subplan 3-5× per search (term collect, bucket_terms broadcast build,
-#: q_side, the auto router's tag agg — measured ~4 s of redundant jobs
-#: per 50-query call at local[32]). Past the cap the original fully
-#: distributed path runs unchanged — a billion-row query log never
-#: touches the driver (same size-gated adaptivity as a broadcast join).
+#: q_side — measured ~4 s of redundant jobs per 50-query call at
+#: local[32]). Past the cap the original fully distributed path runs
+#: unchanged — a billion-row query log never touches the driver (same
+#: size-gated adaptivity as a broadcast join).
 QT_PAIR_CAP = 16384
 
 
@@ -465,13 +452,6 @@ class LocalQueryPlan:
     def empty(self) -> bool:
         return not self.pairs
 
-    def subset(self, query_ids) -> "LocalQueryPlan":
-        pairs = [(q, t) for q, t in self.pairs if q in query_ids]
-        terms = sorted({t for _, t in pairs})
-        return LocalQueryPlan(pairs, terms,
-                              {t: self.df_map[t] for t in terms},
-                              len({q for q, _ in pairs}), self.qtext)
-
     def queries_df(self, spark: SparkSession) -> DataFrame:
         """(query_id, query) of every query with at least one token — a
         local relation standing in for the caller's queries DataFrame in
@@ -483,14 +463,6 @@ class LocalQueryPlan:
             pd.DataFrame({"query_id": np.array(ids, dtype=np.int64),
                           "query": [self.qtext[q] for q in ids]}),
             "query_id long, query string")
-
-    def min_df_by_query(self) -> dict:
-        out: dict[int, int] = {}
-        for q, t in self.pairs:
-            d = self.df_map[t]
-            if q not in out or d < out[q]:
-                out[q] = d
-        return out
 
     def local_qt(self, spark: SparkSession, n_docs: int) -> DataFrame:
         """(query_id, term, idf, df) as a local relation — the same
@@ -512,19 +484,19 @@ class LocalQueryPlan:
 
 def build_local_query_plan(
     spark: SparkSession, queries: DataFrame, termstats: DataFrame,
-    pair_cap: int = QT_PAIR_CAP,
 ) -> LocalQueryPlan | None:
     """Try to materialize the bounded local query plan; None past the
     caps (the caller falls back to the distributed formulation). Two
     bounded jobs: a single-stage limit-collect of the exploded query
-    terms, and a term-df lookup filtered to that vocabulary."""
+    terms, and a term-df lookup filtered to that vocabulary. The caps
+    are read at call time."""
     from rerankers_spark.functions.tokenize import tokenize_col
 
     pair_rows = (
         queries.select("query_id", "query",
                        F.explode(tokenize_col("query")).alias("term"))
-        .limit(pair_cap + 1).collect())
-    if len(pair_rows) > pair_cap:
+        .limit(QT_PAIR_CAP + 1).collect())
+    if len(pair_rows) > QT_PAIR_CAP:
         return None
     seen = sorted({(int(r["query_id"]), str(r["term"]))
                    for r in pair_rows})
@@ -563,7 +535,7 @@ def bmw_topk(
     blocks: DataFrame | None = None,
     query_buckets: int | None = None,
     keep_docs: DataFrame | None = None,
-    qt: DataFrame | None = None,
+    dense_df_ratio: float = DENSE_DF_RATIO,
     tomb_bc="load",
     keep_mode: str = "broadcast",
     attr_values: list | None = None,
@@ -608,9 +580,13 @@ def bmw_topk(
       still better as an index partition column — that prunes whole
       shards instead of filtering inside them.)
 
-    qt: optional precomputed ``query_terms_with_idf`` table for these
-    queries (the auto router computes it once for routing and passes it
-    to both branches instead of re-tokenizing).
+    dense_df_ratio: per-(query, shard) routing between the two kernels
+    (wand_topk_shard) — a query whose rarest term's shard df exceeds
+    this fraction of the shard's docs is scored by the vectorized
+    block-scan kernel, the rest by WAND. The default is DENSE_DF_RATIO;
+    0.0 sends every query to the block-scan kernel (Engine.search
+    mode='exhaustive'). Both kernels read the same blocks and apply the
+    same tombstone / keep / attr exclusions.
 
     tomb_bc: the sentinel "load" (default) loads + broadcasts the
     tombstone array per call; a long-lived Engine instead passes its
@@ -620,7 +596,7 @@ def bmw_topk(
 
     keep_bc: optional pre-built Broadcast of keep_docs' sorted id array
     (broadcast mode only) — the Engine's per-filter cache
-    (executor._keep_broadcast) passes it so repeated filtered searches
+    (executor.Engine._keep_entry) passes it so repeated filtered searches
     skip the collect + ship; a standalone call leaves it None and this
     function builds one.
 
@@ -654,7 +630,7 @@ def bmw_topk(
         keep_bc = None
     elif keep_docs is not None and keep_bc is None:
         # standalone call: collect + broadcast here. A long-lived Engine
-        # passes its CACHED keep_bc instead (executor._keep_broadcast) so
+        # passes its CACHED keep_bc instead (executor.Engine._keep_entry) so
         # repeated filtered searches ship the array once, like tomb_bc.
         keep_arr = np.array(
             [r["doc_id"] for r in keep_docs.select("doc_id")
@@ -680,18 +656,14 @@ def bmw_topk(
     # local_plan: None = not probed yet; False = probed, past the caps
     # (use the distributed path without re-probing); a LocalQueryPlan is
     # truthy and selects the local path.
-    push_terms: list[str] | None = None
-    if qt is None:
-        if termstats is None:
-            from rerankers_spark.index.spimi import load_termstats
+    if not local_plan and termstats is None:
+        from rerankers_spark.index.spimi import load_termstats
 
-            termstats = load_termstats(spark, paths, meta)
-        if local_plan is None:
-            local_plan = build_local_query_plan(spark, queries,
-                                                termstats) or False
-        if not local_plan:
-            qt = query_terms_with_idf(spark, queries, paths, n_docs,
-                                      termstats)
+        termstats = load_termstats(spark, paths, meta)
+    if local_plan is None:
+        local_plan = build_local_query_plan(spark, queries,
+                                            termstats) or False
+    push_terms: list[str] | None = None
     if local_plan:
         # bounded local plan: query terms + df already on the driver —
         # qt becomes a LOCAL relation (idf via the same JVM expression),
@@ -701,12 +673,8 @@ def bmw_topk(
             return empty_result(spark)
         qt = local_plan.local_qt(spark, n_docs)
         push_terms = local_plan.terms
-    # the bucket expression is instantiated separately per cogroup side so
-    # the two plans don't share an attribute (ambiguous-self-join check)
-    def _bucket_col():
-        return F.pmod(F.xxhash64("query_id"), F.lit(n_buckets)).cast("int")
-
-    if push_terms is None:
+    else:
+        qt = query_terms_with_idf(spark, queries, paths, n_docs, termstats)
         # Bounded term-list pushdown (see TERM_PUSHDOWN_CAP). limit() means
         # the driver never holds more than CAP+1 terms even for a huge
         # query log. Collected from the RAW query terms (no termstats join
@@ -718,6 +686,12 @@ def bmw_topk(
             return empty_result(spark)
         if len(term_rows) <= TERM_PUSHDOWN_CAP:
             push_terms = [r["term"] for r in term_rows]
+
+    # the bucket expression is instantiated separately per cogroup side so
+    # the two plans don't share an attribute (ambiguous-self-join check)
+    def _bucket_col():
+        return F.pmod(F.xxhash64("query_id"), F.lit(n_buckets)).cast("int")
+
     if blocks is None:
         from rerankers_spark.index.spimi import load_blocks
 
@@ -848,7 +822,8 @@ def bmw_topk(
                                n_docs_shard=n_docs / n_shards_total,
                                deleted=(tomb_bc.value if tomb_bc is not None
                                         else None),
-                               keep=keep_local)
+                               keep=keep_local,
+                               dense_df_ratio=dense_df_ratio)
 
     local = blocks_b.groupby(*group_keys).cogroup(
         q_side.groupby(*group_keys)

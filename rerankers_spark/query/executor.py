@@ -16,8 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rerankers_spark.index.spimi import IndexPaths, build_index
-from rerankers_spark.operators import bm25
-from rerankers_spark.operators.topk import topk
 from rerankers_spark.query import bmw
 from rerankers_spark.rerank.ranker import Reranker
 
@@ -225,10 +223,9 @@ class Engine:
 
     # -- first stage ----------------------------------------------------------
 
-    #: a query whose RAREST term still matches more than this fraction of
-    #: the corpus gets no skipping benefit from WAND (θ rises too slowly);
-    #: vectorized exhaustive decode wins there.
-    AUTO_DENSE_DF_RATIO = 0.10
+    #: alias of bmw.DENSE_DF_RATIO, the in-kernel per-(query, shard)
+    #: WAND / block-scan routing threshold.
+    AUTO_DENSE_DF_RATIO = bmw.DENSE_DF_RATIO
 
     #: doc_filter keep-lists up to this many ids ship to the BMW kernels
     #: as a sorted broadcast array (~80 MB at the cap); a larger filter
@@ -240,6 +237,10 @@ class Engine:
     #: broadcast, and the query stays on the WAND skip path.
     KEEP_BROADCAST_CAP = 10_000_000
 
+    #: Engine.search mode → bmw_topk dense_df_ratio (see search()).
+    MODES = {"bmw": bmw.DENSE_DF_RATIO, "auto": bmw.DENSE_DF_RATIO,
+             "exhaustive": 0.0}
+
     def search(self, queries: DataFrame, k: int = 10,
                mode: str = "bmw",
                doc_filter: Optional[DataFrame] = None,
@@ -248,13 +249,25 @@ class Engine:
                ) -> DataFrame:
         """(query_id, doc_id, score, rank) — BM25 top-k.
 
-        mode='bmw' (block-skipping fast path), 'exhaustive' (vectorized
-        decode-all path), or 'auto' (per-query cost-based routing on term
-        document frequency); all are exact — same doc sets, scores equal
-        to float-sum reassociation (~1e-15). At EXACT score ties the
-        (score desc, doc_id asc) order can therefore differ between
-        modes; consumers comparing modes rank on ROUNDED scores
-        (CLAUDE.md invariant, as the driver-contract queries do).
+        Every mode runs the same cogroup kernel (bmw.bmw_topk) over the
+        same index blocks, with tombstones, doc_filter and attr_filter
+        applied inside it; the modes differ only in how each (query,
+        shard) pair picks between the kernel's two scorers:
+
+        * 'bmw' — block-max WAND, except where the query's rarest term
+          covers more than bmw.DENSE_DF_RATIO of the shard's docs; those
+          pairs take the vectorized block-scan scorer (WAND cannot skip
+          there).
+        * 'auto' — the same call as 'bmw' (kept as a name for callers
+          of the former per-query router).
+        * 'exhaustive' — every pair takes the block-scan scorer: decode
+          and score every posting of every query term, no skipping.
+
+        All are exact — same doc sets, scores equal to float-sum
+        reassociation (~1e-15). At EXACT score ties the (score desc,
+        doc_id asc) order can therefore differ between modes; consumers
+        comparing modes rank on ROUNDED scores (CLAUDE.md invariant, as
+        the driver-contract queries do).
 
         doc_filter: optional (doc_id) DataFrame restricting results to a
         metadata-selected doc set (e.g. ``corpus.where(lang ==
@@ -273,201 +286,34 @@ class Engine:
 
         local_plan: optional pre-built bmw.LocalQueryPlan for these
         queries (rank() builds one and shares it between the stages);
-        None → each path probes for one itself (bounded, falls back to
-        the distributed formulation past bmw.QT_PAIR_CAP).
+        None → probe for one (bounded, falls back to the distributed
+        formulation past bmw.QT_PAIR_CAP).
+
+        Caching contract: the query plan (terms, df, query text) and the
+        doc_filter keep-list are cached per frame SEMANTICS, so queries
+        and doc_filter frames are treated as immutable snapshots — a
+        source rewritten in place under the same plan returns the cached
+        result. Call refresh() after the index or such a source changes
+        outside this Engine (appends, compactions, rewrites by another
+        process); delete()/compact() on this Engine handle their own.
         """
-        keep_mode = "broadcast"
-        keep_bc = None
-        if doc_filter is not None and mode in ("bmw", "auto"):
-            keep_mode, keep_bc = self._keep_entry(doc_filter)
+        if mode not in self.MODES:
+            raise ValueError(f"unknown mode {mode!r}")
+        keep_mode, keep_bc = (self._keep_entry(doc_filter)
+                              if doc_filter is not None
+                              else ("broadcast", None))
         if local_plan is None:
             local_plan = self._query_plan(queries)
-        if mode == "bmw":
-            meta, termstats, blocks = self._handles()
-            return bmw.bmw_topk(self.spark, queries, self.paths, k=k,
-                                meta=meta, termstats=termstats,
-                                blocks=blocks, keep_docs=doc_filter,
-                                tomb_bc=self._tomb_bc,
-                                keep_mode=keep_mode,
-                                attr_values=attr_filter,
-                                keep_bc=keep_bc,
-                                local_plan=local_plan)
-        if mode == "exhaustive":
-            return self._exhaustive(queries, k, doc_filter=doc_filter,
-                                    attr_filter=attr_filter,
-                                    local_plan=local_plan)
-        if mode == "auto":
-            return self._auto(queries, k, doc_filter=doc_filter,
-                              keep_mode=keep_mode,
-                              attr_filter=attr_filter, keep_bc=keep_bc,
-                              local_plan=local_plan)
-        raise ValueError(f"unknown mode {mode!r}")
-
-    def _auto(self, queries: DataFrame, k: int,
-              doc_filter: Optional[DataFrame] = None,
-              keep_mode: str = "broadcast",
-              attr_filter: Optional[list] = None,
-              keep_bc=None,
-              local_plan: Optional["bmw.LocalQueryPlan"] = None
-              ) -> DataFrame:
-        """Route each query dense/sparse. Bounded query sets route on the
-        driver over the local query plan (one job instead of re-running
-        the tokenize→termstats tag aggregation in every branch); larger
-        logs keep the fully set-oriented tag-column formulation (the
-        routing table stays a DataFrame however large the query log is).
-        Both compute the identical min-df test, so the branch assignment
-        — and therefore every score — is unchanged."""
         meta, termstats, blocks = self._handles()
-        n_docs = int(meta["n_docs"])
-        if local_plan is None:
-            local_plan = self._query_plan(queries)
-        if local_plan:
-            if local_plan.empty:
-                return bmw.empty_result(self.spark)
-            min_df = local_plan.min_df_by_query()
-            dense_ids = {q for q, d in min_df.items()
-                         if d / n_docs > self.AUTO_DENSE_DF_RATIO}
-            sparse_ids = set(min_df) - dense_ids
-            parts = []
-            if dense_ids:
-                parts.append(self._exhaustive(
-                    queries, k, doc_filter=doc_filter,
-                    attr_filter=attr_filter,
-                    local_plan=local_plan.subset(dense_ids)))
-            if sparse_ids:
-                parts.append(bmw.bmw_topk(
-                    self.spark, queries, self.paths, k=k,
-                    meta=meta, termstats=termstats, blocks=blocks,
-                    keep_docs=doc_filter,
-                    local_plan=local_plan.subset(sparse_ids),
-                    tomb_bc=self._tomb_bc, keep_mode=keep_mode,
-                    attr_values=attr_filter, keep_bc=keep_bc))
-            if not parts:
-                return bmw.empty_result(self.spark)
-            return parts[0] if len(parts) == 1 \
-                else parts[0].unionByName(parts[1])
-        qt = bmw.query_terms_with_idf(
-            self.spark, queries, self.paths, n_docs, termstats)
-        tag = qt.groupBy("query_id").agg(
-            (F.min("df") / F.lit(float(n_docs))
-             > self.AUTO_DENSE_DF_RATIO).alias("__dense"))
-        tagged = queries.join(tag, "query_id", "left")
-        # NULL tag = no term in the index vocabulary → zero results either
-        # way; dropped here rather than shipped through a search.
-        dense_q = tagged.where(F.col("__dense")).drop("__dense")
-        sparse_q = tagged.where(~F.col("__dense")).drop("__dense")
-        # qt was already computed for routing — pass the per-branch
-        # slices down so neither branch re-tokenizes or re-joins termstats
-        qt_dense = qt.join(dense_q.select("query_id"), "query_id",
-                           "left_semi")
-        qt_sparse = qt.join(sparse_q.select("query_id"), "query_id",
-                            "left_semi")
-        return self._exhaustive(dense_q, k, doc_filter=doc_filter,
-                                qt=qt_dense, attr_filter=attr_filter) \
-            .unionByName(
-                bmw.bmw_topk(self.spark, sparse_q, self.paths, k=k,
-                             meta=meta, termstats=termstats, blocks=blocks,
-                             keep_docs=doc_filter, qt=qt_sparse,
-                             tomb_bc=self._tomb_bc, keep_mode=keep_mode,
-                             attr_values=attr_filter, keep_bc=keep_bc)
-        )
-
-    def _exhaustive(self, queries: DataFrame, k: int,
-                    doc_filter: Optional[DataFrame] = None,
-                    qt: Optional[DataFrame] = None,
-                    attr_filter: Optional[list] = None,
-                    local_plan: Optional["bmw.LocalQueryPlan"] = None
-                    ) -> DataFrame:
-        """Score every posting of every query term (no skipping) by
-        decoding blocks — the C9 oracle path over the SAME index bytes."""
-        import numpy as np
-        import pandas as pd
-
-        from rerankers_spark.index import varbyte as vb_codec
-
-        # cached handles: no scalar-collect / termstats scan / parquet
-        # re-listing on repeated searches (the Engine cache exists for this)
-        meta, termstats, blocks = self._handles()
-        if attr_filter is not None:
-            if not meta.get("attr_col"):
-                raise ValueError(
-                    "attr_filter requires an attribute-partitioned index "
-                    "(build_index attr_col=...)")
-            blocks = blocks.where(
-                F.col("attr").isin([str(v) for v in attr_filter]))
-        n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
-        if qt is None and local_plan is None:
-            local_plan = self._query_plan(queries)
-        if local_plan:
-            # bounded local plan (see bmw.QT_PAIR_CAP): terms + df are
-            # already on the driver — no separate pushdown-collect job,
-            # qt becomes a local relation (idf via the same expression).
-            if local_plan.empty:
-                return bmw.empty_result(self.spark)
-            terms = local_plan.terms
-            qt = local_plan.local_qt(self.spark, n_docs)
-        else:
-            if qt is None:
-                qt = bmw.query_terms_with_idf(self.spark, queries,
-                                              self.paths, n_docs, termstats)
-            # bounded pushdown list (see bmw.TERM_PUSHDOWN_CAP): small
-            # query vocabularies push a term filter into the parquet scan;
-            # larger ones rely on the broadcast join below as the only
-            # term filter.
-            terms = [r["term"] for r in qt.select("term").distinct()
-                     .limit(bmw.TERM_PUSHDOWN_CAP + 1).collect()]
-        if not terms:
-            return bmw.empty_result(self.spark)
-        if len(terms) <= bmw.TERM_PUSHDOWN_CAP:
-            blocks = blocks.where(F.col("term").isin(terms))
-        matched = blocks.join(F.broadcast(qt), "term")
-        from rerankers_spark.index.spimi import _tf_sat
-
-        def _decode_score(batches):
-            for pdf in batches:
-                qids, docs_out, contribs = [], [], []
-                for row in pdf.itertuples(index=False):
-                    docs = vb_codec.delta_decode(row.docs_vb,
-                                                 base=row.first_doc)
-                    tfs = vb_codec.decode(row.tfs_vb)
-                    dls = vb_codec.decode(row.dls_vb)
-                    sat = _tf_sat(tfs, dls, avgdl)
-                    qids.append(
-                        np.full(len(docs), row.query_id, dtype=np.int64)
-                    )
-                    docs_out.append(docs)
-                    contribs.append(row.idf * sat)
-                if qids:
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.concatenate(qids),
-                            "doc_id": np.concatenate(docs_out),
-                            "contrib": np.concatenate(contribs),
-                        }
-                    )
-
-        contrib = matched.mapInPandas(
-            _decode_score, "query_id long, doc_id long, contrib double"
-        )
-        scored = contrib.groupBy("query_id", "doc_id").agg(
-            F.sum("contrib").alias("score")
-        )
-        # soft deletes: set-oriented anti-join (this path never needs the
-        # kernel-side tombstone array — the exclusion is just a join)
-        if self.paths.exists(self.spark, "tombstones"):
-            scored = scored.join(
-                self.paths.read(self.spark, "tombstones")
-                .select("doc_id").distinct(),
-                "doc_id", "left_anti",
-            )
-        # metadata filter: semi-join against the keep set (set-oriented —
-        # this path handles arbitrarily large filters, no broadcast cap)
-        if doc_filter is not None:
-            scored = scored.join(
-                doc_filter.select("doc_id").distinct(), "doc_id",
-                "left_semi",
-            )
-        return topk(scored, k)
+        return bmw.bmw_topk(self.spark, queries, self.paths, k=k,
+                            meta=meta, termstats=termstats,
+                            blocks=blocks, keep_docs=doc_filter,
+                            dense_df_ratio=self.MODES[mode],
+                            tomb_bc=self._tomb_bc,
+                            keep_mode=keep_mode,
+                            attr_values=attr_filter,
+                            keep_bc=keep_bc,
+                            local_plan=local_plan)
 
     # -- driver-side facade ----------------------------------------------------
 
@@ -517,7 +363,11 @@ class Engine:
         cells 5-8) as one job. corpus_text: (doc_id, content);
         doc_filter / attr_filter as in :meth:`search` (applied in the
         first stage, so the reranker only ever sees eligible
-        candidates).
+        candidates). The caching contract of :meth:`search` holds here
+        too, and extends to the query TEXT: the cached plan supplies it
+        to the final join, so a queries frame must be an immutable
+        snapshot; call refresh() after the index changes outside this
+        Engine.
         """
         local_plan = self._query_plan(queries)
         cands = self.search(queries, k=first_k, mode=mode,

@@ -32,7 +32,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
     os.makedirs("/tmp/spark-events", exist_ok=True)
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
     os.environ["SPARK_EXTRA_CONF"] = json.dumps({
         "spark.eventLog.enabled": "true",
         "spark.eventLog.dir": "file:/tmp/spark-events",

@@ -48,7 +48,6 @@ def main() -> None:
     threshold = float(os.environ.get("CC_THRESHOLD", "0.5"))
 
     make_corpus(n_docs, corpus_dir)
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
     if os.environ.get("BENCH_RAMDISK") == "1":
         os.makedirs("/dev/shm/spark_local", exist_ok=True)
         os.environ.setdefault("SPARK_LOCAL_DIR", "/dev/shm/spark_local")

@@ -47,7 +47,6 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
     make_corpus(n_docs, corpus_dir)
-    os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
     index_root = "/tmp/warm_index"
     if os.environ.get("BENCH_RAMDISK") == "1":
         os.makedirs("/dev/shm/spark_local", exist_ok=True)

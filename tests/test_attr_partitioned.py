@@ -24,6 +24,7 @@ from rerankers_spark.corpus import synthetic_corpus_pdf, with_doc_id
 from rerankers_spark.index import spimi
 from rerankers_spark.query import bmw
 from rerankers_spark.query.executor import Engine
+from tests.test_deletes import _oracle_excluding
 
 BASE = "/tmp/test_attr_index"
 PLAIN = "/tmp/test_attr_index_plain"
@@ -163,9 +164,10 @@ def lifecycle_matrix(spark):
     gens = spimi.visible_generations(meta)
     assert len(gens) == 3
     spimi.compact_index(spark, MATRIX_BASE, generations=gens[1:])
-    spimi.delete_docs(
-        spark, MATRIX_BASE,
-        corpus.select("doc_id").where(F.abs(F.col("doc_id")) % 7 == 0))
+    dead = corpus.select("doc_id").where(F.abs(F.col("doc_id")) % 7 == 0)
+    spimi.delete_docs(spark, MATRIX_BASE, dead)
+    dead_ids = {r["doc_id"] for r in dead.collect()}
+    assert dead_ids
     eng = Engine(spark, MATRIX_BASE)
     q = spark.createDataFrame(
         # common_util is dense (~50% df) → exercises the per-(query,
@@ -173,7 +175,7 @@ def lifecycle_matrix(spark):
         # on the WAND skip path
         [(0, "common_util"), (1, "def return class"), (2, "rareterm_0")],
         "query_id long, query string")
-    return corpus, eng, q
+    return corpus, eng, q, dead_ids
 
 
 @pytest.mark.parametrize("attr", [None, ["python"], ["python", "go"]])
@@ -181,12 +183,22 @@ def lifecycle_matrix(spark):
 def test_lifecycle_matrix_cell(spark, lifecycle_matrix, keep_mode, attr):
     """Every keep-ship-mode × attr-filter cell, on the composed
     deletes+generations state, must be rank-identical (rounded scores)
-    to the exhaustive decode-all path under the same filters."""
-    corpus, eng, q = lifecycle_matrix
+    to the numpy oracle under the same filters: full-corpus stats
+    (appends and the tiered merge keep them, deletes defer theirs), with
+    tombstoned, non-keep and non-attr docs dropped after ranking."""
+    corpus, eng, q, dead_ids = lifecycle_matrix
     keep = (corpus.select("doc_id").where(F.abs(F.col("doc_id")) % 3 == 0)
             if keep_mode else None)
-    exp = _rounded(eng._exhaustive(q, 10, doc_filter=keep,
-                                   attr_filter=attr))
+    keep_ids = ({r["doc_id"] for r in keep.collect()}
+                if keep is not None else None)
+    rows = corpus.select("doc_id", "content", "lang").collect()
+    drop = dead_ids | {
+        r["doc_id"] for r in rows
+        if (keep_ids is not None and r["doc_id"] not in keep_ids)
+        or (attr is not None and r["lang"] not in attr)}
+    expect = _oracle_excluding(rows, drop)
+    exp = sorted((r["query_id"], d, round(s, 9)) for r in q.collect()
+                 for d, s in expect(r["query"], 10))
     got = _rounded(bmw.bmw_topk(spark, q, eng.paths, k=10,
                                 keep_docs=keep,
                                 keep_mode=keep_mode or "broadcast",

@@ -1,9 +1,10 @@
 """Soft deletes (tombstones) + physical purge at compaction.
 
 Semantics (spimi.delete_docs / compact_index docstrings):
-* after delete_docs, tombstoned docs vanish from EVERY query path (BMW,
-  in-kernel dense fallback, DataFrame-exhaustive) while scores keep
-  pre-delete global stats — Lucene deferred-stats semantics;
+* after delete_docs, tombstoned docs vanish from EVERY search mode (bmw,
+  auto, exhaustive — both scorers of the one cogroup kernel: WAND and
+  the in-kernel block-scan) while scores keep pre-delete global stats —
+  Lucene deferred-stats semantics;
 * after compact_index, results are identical to a fresh build on the
   surviving corpus (stats recomputed, tombstones table dropped).
 """

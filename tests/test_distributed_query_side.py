@@ -1,0 +1,91 @@
+"""The distributed query side (query sets past bmw.QT_PAIR_CAP) must
+return exactly what the bounded local query plan returns.
+
+Production query sets in tests stay far under the cap, so the cap is
+forced to 0 here: build_local_query_plan then gives up, and bmw_topk
+derives its query side from query_terms_with_idf (a DataFrame, never
+collected) plus the bounded term-pushdown collect. A second case also
+forces TERM_PUSHDOWN_CAP to 0, so the block scan runs without the term
+filter and the broadcast bucket-join is the only term filter.
+
+The index carries tombstones, and every mode runs with and without a
+doc_filter, plus the two-stage rank(); rows compare as
+(query_id, doc_id, round(score, 9), rank) tuples.
+"""
+
+from __future__ import annotations
+
+import shutil
+
+import pytest
+from pyspark.sql import functions as F
+
+from rerankers_spark.corpus import synthetic_corpus_pdf, with_doc_id
+from rerankers_spark.index import spimi
+from rerankers_spark.query import bmw
+from rerankers_spark.query.executor import Engine
+
+BASE = "/tmp/test_distributed_query_side"
+
+QUERIES = [(0, "common_util"), (1, "def return class"), (2, "rareterm_0"),
+           (3, "common_util rareterm_1"), (4, "zzznotaterm")]
+
+
+@pytest.fixture(scope="module")
+def tombstoned(spark):
+    corpus = with_doc_id(spark.createDataFrame(
+        synthetic_corpus_pdf(300, seed=23))).cache()
+    corpus.count()
+    shutil.rmtree(BASE, ignore_errors=True)
+    spimi.build_index(spark, corpus, BASE, n_shards=4)
+    spimi.delete_docs(
+        spark, BASE,
+        corpus.select("doc_id").where(F.abs(F.col("doc_id")) % 5 == 1))
+    keep = corpus.select("doc_id").where(F.abs(F.col("doc_id")) % 2 == 0)
+    return corpus, keep
+
+
+def _run_all(spark, eng, corpus, keep):
+    """Every search mode with and without the doc_filter, and rank()."""
+    q = spark.createDataFrame(QUERIES, "query_id long, query string")
+    out = {}
+    for mode in ("bmw", "auto", "exhaustive"):
+        for name, filt in (("all", None), ("kept", keep)):
+            out[mode, name] = sorted(
+                (r["query_id"], r["doc_id"], round(r["score"], 9),
+                 r["rank"])
+                for r in eng.search(q, k=10, mode=mode,
+                                    doc_filter=filt).collect())
+    out["rank"] = sorted(
+        (r["query_id"], r["doc_id"], round(r["bm25_score"], 9),
+         round(r["score"], 9), r["rank"])
+        for r in eng.rank(q, corpus.select("doc_id", "content"),
+                          first_k=20, final_k=5).collect())
+    return out, q
+
+
+@pytest.fixture(scope="module")
+def local_results(spark, tombstoned):
+    corpus, keep = tombstoned
+    eng = Engine(spark, BASE)
+    out, q = _run_all(spark, eng, corpus, keep)
+    assert eng._query_plan(q), "the reference must use the local plan"
+    assert all(out.values()), "every reference result must be non-empty"
+    return out
+
+
+@pytest.mark.parametrize("no_pushdown", [False, True])
+def test_distributed_query_side_matches_local_plan(spark, tombstoned,
+                                                   local_results,
+                                                   monkeypatch,
+                                                   no_pushdown):
+    corpus, keep = tombstoned
+    monkeypatch.setattr(bmw, "QT_PAIR_CAP", 0)
+    if no_pushdown:
+        monkeypatch.setattr(bmw, "TERM_PUSHDOWN_CAP", 0)
+    eng = Engine(spark, BASE)
+    got, q = _run_all(spark, eng, corpus, keep)
+    assert eng._query_plan(q) is False
+    assert got.keys() == local_results.keys()
+    for key in local_results:
+        assert got[key] == local_results[key], key

@@ -135,7 +135,10 @@ def test_wand_kernel_direct():
                 }
             )
     pdf = pd.DataFrame(rows)
-    out = bmw.wand_topk_group(pdf, k=10, avgdl=avgdl)
+    q_list = [(0, [(t, float(g["idf"].iloc[0]))
+                   for t, g in pdf.groupby("term")])]
+    out = bmw.wand_topk_shard(pdf, q_list, k=10, avgdl=avgdl,
+                              n_docs_shard=0)
     expected = sorted(truth.items(), key=lambda t: (-t[1], t[0]))[:10]
     assert list(out["doc_id"]) == [d for d, _ in expected]
     np.testing.assert_allclose(
@@ -250,8 +253,8 @@ def test_oversized_doc_filter_routes_to_bucketed_keep(spark, engine,
     auto-routes it to keep_mode='bucketed', where the ids flow through
     the (shard, bucket) cogroup shuffle as data rows. Results must be
     identical across the broadcast kernel path, the bucketed kernel
-    path, and the exhaustive semi-join (rounded-score comparison,
-    CLAUDE.md cross-mode invariant)."""
+    path, and the exhaustive mode (rounded-score comparison, CLAUDE.md
+    cross-mode invariant)."""
     keep = tiny_corpus.select("doc_id").where(
         F.abs(F.col("doc_id")) % 2 == 0)
     n_keep = keep.count()
@@ -287,7 +290,7 @@ def test_oversized_doc_filter_routes_to_bucketed_keep(spark, engine,
     assert modes == ["broadcast", "bucketed"]
     assert via_bucketed == via_broadcast
 
-    # exhaustive semi-join agrees too
+    # the exhaustive mode (block-scan scorer, same keep path) agrees too
     via_exh = rounded(engine.search(tiny_queries, k=10, mode="exhaustive",
                                     doc_filter=keep))
     assert via_exh == via_broadcast

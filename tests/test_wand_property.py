@@ -57,7 +57,9 @@ def test_wand_matches_bruteforce_randomized(seed):
     pdf, truth = _mk_blocks(rng, n_terms, universe, avgdl,
                             block_size=int(rng.choice([1, 7, 128])))
     k = int(rng.integers(1, 25))
-    out = bmw.wand_topk_group(pdf, k=k, avgdl=avgdl)
+    q_list = [(0, [(t, float(g["idf"].iloc[0]))
+                   for t, g in pdf.groupby("term")])]
+    out = bmw.wand_topk_shard(pdf, q_list, k=k, avgdl=avgdl, n_docs_shard=0)
     expected = sorted(truth.items(), key=lambda t: (-t[1], t[0]))[:k]
     assert list(out["doc_id"]) == [d for d, _ in expected], f"seed={seed}"
     np.testing.assert_allclose(
