@@ -4,7 +4,8 @@ Re-expresses the capabilities of AnswerDotAI/rerankers (reference at
 /root/reference, a pure-Python inference wrapper: rerankers/reranker.py:196)
 as a Spark-first engine:
 
-* first stage: SPIMI inverted-index build + BM25 block-max-WAND top-k
+* first stage: SPIMI inverted-index build + exact BM25 top-k (a
+  columnar block-scan kernel per shard task)
   (the stage the reference's consistency tests consume as a precomputed
   artifact — tests/consistency_notebooks/test_crossenc.ipynb cell 5)
 * second stage: ``Reranker.rank(query, docs, doc_ids) -> RankedResults``
@@ -13,7 +14,7 @@ as a Spark-first engine:
 
 Everything relational is declarative DataFrame API (Catalyst optimizes);
 Python only appears as Arrow-vectorized UDFs (tokenizer parity UDF,
-varbyte codec, BMW kernel, rerank scorers) — never per-row Python.
+varbyte codec, shard kernel, rerank scorers) — never per-row Python.
 """
 
 __version__ = "0.1.0"

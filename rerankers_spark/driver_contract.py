@@ -192,9 +192,9 @@ def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bm25_topk_bmw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME fixed query set answered through the FULL index path:
-    SPIMI block build → block-max WAND → global top-k. Shares the DuckDB
-    oracle with the exhaustive query, putting the compressed index and
-    the WAND kernel under the driver's correctness gate.
+    SPIMI block build → the cogroup shard kernel → global top-k. Shares
+    the DuckDB oracle with the exhaustive query, putting the compressed
+    index and the shard kernel under the driver's correctness gate.
 
     Searches k=50 raw, then re-ranks on the rounded score (cross-engine
     determinism, see _SQL_BM25_TOPK note) and cuts to 10. The wide raw
@@ -619,10 +619,9 @@ def _contract_engine(spark: SparkSession, sf_dir: str, scorer="overlap"):
 
 
 def q_bm25_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fixed query set through Engine.search(mode='auto') — the
-    cogroup kernel's per-(query, shard) dense/sparse routing (rare-term
-    queries → WAND, head-term queries → the vectorized block-scan
-    scorer) — under the same from-scratch DuckDB oracle as the other
+    """The fixed query set through Engine.search(mode='auto') — a name
+    kept for callers; it runs the same cogroup block-scan kernel as
+    every mode — under the same from-scratch DuckDB oracle as the other
     index paths."""
     eng = _contract_engine(spark, sf_dir)
     raw = eng.search(_queries_df(spark), k=50, mode="auto")

@@ -10,7 +10,7 @@ Each shard is a self-contained mini-index over a disjoint doc subset, so:
   the term is corpus-wide (this replaces ad-hoc salting: the doc-hash IS
   the salt, applied uniformly, and queries need no de-salting merge
   because per-doc scores are shard-local and independent);
-* query-time block-max WAND runs per (query, shard) in parallel and
+* query-time scoring runs per (query, shard) in parallel and
   shard-local top-k lists merge into the exact global top-k (scores
   depend only on global scalars N/avgdl/df, never on shard membership);
 * checkpoint/resume is per shard: a failed build resumes by rebuilding
@@ -75,11 +75,12 @@ RETIRED_SCHEMA = ("tbl string, part_col string, part_val string, "
 
 def _tf_sat(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
     """THE numpy tf-saturation (FIXTURES.md §4 frozen math) — shared by
-    the block builder and the query kernel (bmw.py: its block-scan
-    scorer and its 'safe' block bounds) so the formula lives in one
-    place; the only other restatements are the scalar hot-loop form in
-    bmw._TermCursor.score_at_cur and the Column form in bm25.tf_sat_col,
-    each carrying a pointer comment back here."""
+    the block builder and the query side (bmw.py: the production
+    scan_topk_shard scorer, and the 'safe' block bounds of the WAND
+    reference kernel) so the formula lives in one place; the only other
+    restatements are the scalar hot-loop form in the WAND reference
+    (bmw._TermCursor.score_at_cur) and the Column form in
+    bm25.tf_sat_col, each carrying a pointer comment back here."""
     tf = tf.astype(np.float64)
     dl = dl.astype(np.float64)
     return (tf * (bm25.K1 + 1.0)) / (
@@ -626,16 +627,21 @@ def _scalars_local_dir(paths: IndexPaths) -> str | None:
     local filesystem in parquet mode, else None. Gates the driver-side
     single-row fast path below: a one-row table needs no Spark job (the
     createDataFrame→write job costs a full scheduling round trip and is
-    exposed to this sandbox's multi-second IO stalls), but hdfs://s3a://
-    roots and Iceberg catalogs keep the Spark path."""
+    exposed to multi-second IO stalls on a busy host), but other schemes
+    (hdfs:, s3a:, ...), relative roots and Iceberg catalogs keep the
+    Spark path. Local means scheme '' or 'file' with an absolute path, so
+    every Hadoop spelling of a local root — ``/tmp/idx``,
+    ``file:/tmp/idx``, ``file:///tmp/idx`` — commits to the same place."""
+    import os
+    from urllib.parse import urlparse
+
     if paths.catalog_name is not None:
         return None
-    root = paths.root
-    if root.startswith("file://"):
-        root = root[len("file://"):] or "/"
-    elif "://" in root:
+    u = urlparse(paths.root)
+    if u.scheme not in ("", "file") or u.netloc not in ("", "localhost") \
+            or not os.path.isabs(u.path):
         return None
-    return f"{root}/scalars"
+    return f"{u.path.rstrip('/')}/scalars"
 
 
 SCALARS_SCHEMA = (
@@ -659,7 +665,10 @@ def _read_scalars_local(paths: IndexPaths) -> dict | None:
         return None  # mid-overwrite or unexpected layout → Spark read
     import pyarrow.parquet as pq
 
-    rows = pq.read_table(f"{d}/{files[0]}").to_pylist()
+    try:
+        rows = pq.read_table(f"{d}/{files[0]}").to_pylist()
+    except FileNotFoundError:
+        return None  # replaced by a concurrent commit since the listing
     if len(rows) != 1:
         return None
     row = rows[0]
@@ -668,8 +677,10 @@ def _read_scalars_local(paths: IndexPaths) -> dict | None:
 
 
 def _write_scalars_local(paths: IndexPaths, row: tuple) -> bool:
-    """Driver-side single-row scalars overwrite — same delete-then-write
-    visibility window as the Spark overwrite it replaces. Returns False
+    """Driver-side single-row scalars overwrite. The new file is renamed
+    into place BEFORE the old ones are unlinked, so a concurrent reader
+    always finds a complete row (the old or the new; _read_scalars_local
+    falls back to the Spark read while both are present). Returns False
     when the root is not local-parquet (caller uses the Spark path)."""
     import os
     import uuid
@@ -696,10 +707,11 @@ def _write_scalars_local(paths: IndexPaths, row: tuple) -> bool:
     os.makedirs(d, exist_ok=True)
     tmp = f"{d}/.tmp-{uuid.uuid4().hex}.parquet"
     pq.write_table(table, tmp)
+    name = f"part-00000-{uuid.uuid4().hex}.snappy.parquet"
+    os.replace(tmp, f"{d}/{name}")
     for f in os.listdir(d):
-        if not f.startswith((".", "_")):
+        if f != name and not f.startswith((".", "_")):
             os.unlink(f"{d}/{f}")
-    os.replace(tmp, f"{d}/part-00000-{uuid.uuid4().hex}.snappy.parquet")
     return True
 
 
@@ -793,9 +805,10 @@ def append_index(
     shards. Global stats update incrementally (observed batch totals +
     the exact sum_dl carried in scalars — append cost is independent of
     index size); OLD blocks' ``max_tfsat`` was computed under the old
-    avgdl and is now stale, which is why query-time bounds switch to the
-    avgdl-independent (max_tf, min_dl) form once generation > 0 (see
-    bmw._TermData's 'safe' bound mode).
+    avgdl and is now stale. Search does not read block maxima (the block
+    scan scores every posting), but the WAND reference kernel switches
+    to the avgdl-independent (max_tf, min_dl) bound once generation > 0
+    (bmw._TermData's 'safe' bound mode).
 
     Atomicity / replay (foreachBatch is at-least-once):
 
@@ -1049,11 +1062,10 @@ def compact_index(spark: SparkSession, path: str,
     re-shard by ``pmod(xxhash64(doc_id), n_shards)`` into the NEW
     generation's shard range and re-block under the current global
     avgdl. After a FULL compact exactly one generation is visible, so
-    query-time WAND switches back from the looser append-safe
-    ``(max_tf, min_dl)`` bound to the tightest 'exact' bound mode
-    (bmw._TermData), and the visible shard count collapses back to
-    ``n_shards`` — streaming ingest otherwise accretes tiny generation
-    shards (small files + scheduler overhead).
+    ``max_tfsat`` is exact again (the tightest bound for the WAND
+    reference kernel, bmw._TermData), and the visible shard count
+    collapses back to ``n_shards`` — streaming ingest otherwise accretes
+    tiny generation shards (small files + scheduler overhead).
 
     Physical delete purge happens only on a FULL compact: the tombstone
     set is SNAPSHOT once (one collect; the same snapshot feeds both

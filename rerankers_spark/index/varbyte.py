@@ -1,15 +1,15 @@
 """Varbyte codec for posting blocks (frozen spec, FIXTURES.md §4).
 
 Encoding: little-endian base-128; 7 payload bits per byte, MSB set means
-"continuation" (more bytes follow). Doc ids are delta-coded (first value
-absolute... actually: deltas against ``prev``, with the block's first
-delta taken against the block's ``first_doc`` base stored in block
-metadata — see spimi.py).
+"continuation" (more bytes follow). Doc ids are delta-coded: deltas
+against the previous id, with the block's first delta taken against the
+block's ``first_doc`` base stored in block metadata (see spimi.py).
 
-Vectorized with numpy: encode/decode operate on whole int64 arrays, no
-per-element Python in the steady state beyond one pass to split byte
-runs. These run INSIDE Arrow UDFs (mapInPandas), so the per-batch numpy
-cost is the whole story.
+Vectorized with numpy: encode/decode operate on whole int64 arrays with
+no per-element Python. These run INSIDE Arrow UDFs, so the per-batch
+numpy cost is the whole story; decode_many / delta_decode_blocks decode
+a whole task's blocks in one pass, and this module is the only place
+that knows the byte format.
 """
 
 from __future__ import annotations
@@ -62,25 +62,47 @@ def encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     return out.tobytes(), bl
 
 
+def _decode_bytes(b: np.ndarray) -> tuple[np.ndarray, np.ndarray | None]:
+    """(values, index of each value's last byte) for a uint8 array of
+    whole varbyte values; the index is None when every value is one byte
+    (no continuation bit set: value i is byte i)."""
+    cont = b >= _CONT
+    if not cont.any():
+        return b.astype(np.int64), None
+    ends = np.flatnonzero(~cont)
+    starts = np.empty(len(ends), dtype=np.int64)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    # byte position within its value → shift of its 7 payload bits
+    pos = np.arange(b.size, dtype=np.int64) - np.repeat(
+        starts, ends - starts + 1)
+    parts = (b & np.uint8(_MASK)).astype(np.uint64) << (
+        7 * pos).astype(np.uint64)
+    return np.bitwise_or.reduceat(parts, starts).view(np.int64), ends
+
+
 def decode(buf: bytes) -> np.ndarray:
     """Decode varbyte bytes back to an int64 array (vectorized)."""
     if not buf:
         return np.empty(0, dtype=np.int64)
-    b = np.frombuffer(buf, dtype=np.uint8)
-    is_last = (b & _CONT) == 0
-    n = int(is_last.sum())
-    # group index per byte: 0-based value index
-    group = np.zeros(b.size, dtype=np.int64)
-    group[1:] = np.cumsum(is_last)[:-1]
-    # position within group
-    starts = np.zeros(n, dtype=np.int64)
-    ends = np.flatnonzero(is_last)
-    starts[1:] = ends[:-1] + 1
-    pos = np.arange(b.size, dtype=np.int64) - starts[group]
-    vals = np.zeros(n, dtype=np.uint64)
-    np.add.at(vals, group,
-              (b & np.uint8(_MASK)).astype(np.uint64) << (7 * pos).astype(np.uint64))
-    return vals.astype(np.int64)
+    return _decode_bytes(np.frombuffer(buf, dtype=np.uint8))[0]
+
+
+def decode_many(bufs) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a sequence of buffers in ONE pass over their concatenation
+    → (all values in buffer order, per-buffer value counts). Each buffer
+    holds whole values, so the concatenation is a valid stream."""
+    lens = np.fromiter((len(x) for x in bufs), dtype=np.int64,
+                       count=len(bufs))
+    joined = b"".join(bufs)
+    if not joined:
+        return np.empty(0, dtype=np.int64), np.zeros(len(bufs), np.int64)
+    vals, ends = _decode_bytes(np.frombuffer(joined, dtype=np.uint8))
+    if ends is None:
+        return vals, lens
+    # values ending before each buffer's end, differenced
+    done = np.searchsorted(ends, np.cumsum(lens), side="left")
+    return vals, np.diff(done, prepend=0)
 
 
 _BIAS = np.uint64(1) << np.uint64(63)
@@ -106,3 +128,21 @@ def delta_decode(buf: bytes, base: int) -> np.ndarray:
     deltas = decode(buf).astype(np.uint64)
     b = np.uint64((int(base) + (1 << 63)) % (1 << 64))
     return ((np.cumsum(deltas) + b) - _BIAS).astype(np.int64)
+
+
+def delta_decode_blocks(bufs, bases) -> tuple[np.ndarray, np.ndarray]:
+    """delta_decode over many blocks at once → (doc ids of every block in
+    order, per-block counts). One decode pass over the concatenated
+    buffers, then a segmented cumsum in biased uint64 space (wrapping
+    arithmetic, so full-range int64 ids cannot overflow) anchored at each
+    block's base."""
+    deltas, counts = decode_many(bufs)
+    u = deltas.view(np.uint64)
+    cs = np.cumsum(u)
+    # per value: subtract the running sum that precedes its block (taken
+    # at the block's first value), add the block's biased base
+    first = np.repeat(np.cumsum(counts) - counts, counts)
+    anchor = np.repeat(
+        np.asarray(bases, dtype=np.int64).view(np.uint64) ^ _BIAS, counts)
+    return ((cs - (cs[first] - u[first]) + anchor) ^ _BIAS).view(
+        np.int64), counts

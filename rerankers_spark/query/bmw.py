@@ -1,4 +1,4 @@
-"""Block-max WAND top-k over the doc-sharded block index.
+"""Exact BM25 top-k over the doc-sharded block index.
 
 Distribution model: queries are hash-bucketed (``pmod(xxhash64(query_id),
 B)``) and cogrouped with the shard's blocks on ``(shard_id, bucket)`` —
@@ -6,12 +6,21 @@ the doc-sharded layout (see spimi.py) makes shard results independent, so
 per-shard top-k lists merge into the EXACT global top-k with a final
 window. Parallelism = |shards| × B; both the query set and the block
 table stay distributed (no driver collect — the query log can be a
-billion rows). Within a task, decoded blocks are cached per term and
-shared across every query in the bucket.
+billion rows).
 
-The kernel (Ding & Suel, "Faster Top-k Document Retrieval Using Block-Max
-Indexes", SIGIR 2011) is numpy-over-decoded-blocks inside the UDF — an
-algorithmic skip-list, not a Catalyst concern. Correctness invariants:
+Every Engine.search mode runs through this one cogroup kernel (bmw_topk),
+and every (query, shard) pair in it is scored by scan_topk_shard: a
+columnar, term-at-a-time block scan that decodes the task's blocks once
+and scores all of the task's queries against a dense accumulator. Per-
+element work stays inside numpy: the per-query Python loops it replaced
+(doc-at-a-time WAND, a per-term groupby) measured 8-24× slower per task
+on 1k-25k-doc shards, single-threaded on a 4-core x86 host.
+
+Block-max WAND (Ding & Suel, "Faster Top-k Document Retrieval Using
+Block-Max Indexes", SIGIR 2011) stays as wand_topk_shard(n_docs_shard=0):
+the reference the property tests hold the scan to and the skipping
+kernel the single-threaded kernel bench times. Its correctness
+invariants:
 
 * pivot docs are nondecreasing, so pruning at ``ub <= θ`` can never drop
   a doc that would win the (score desc, doc_id asc) tie-break against an
@@ -19,12 +28,8 @@ algorithmic skip-list, not a Catalyst concern. Correctness invariants:
 * the skip target d' is capped by the next term's cur_doc, so docs in
   [pivot, d') provably have upper bound ≤ θ from the prefix terms alone;
 * scores are recomputed in float64 from raw (tf, dl) stored in the block
-  plus global (idf, avgdl) → equal to the vectorized block-scan kernel
-  (_exhaustive_single) up to float-sum reassociation (~1e-15).
-
-Every Engine.search mode runs through this one cogroup kernel
-(bmw_topk); the modes differ only in the per-(query, shard) routing
-threshold between WAND and the block-scan kernel (dense_df_ratio).
+  plus global (idf, avgdl) → equal to the block scan up to float-sum
+  reassociation (~1e-15).
 """
 
 from __future__ import annotations
@@ -41,7 +46,9 @@ from rerankers_spark.index.spimi import IndexPaths
 from rerankers_spark.operators import bm25
 from rerankers_spark.operators.topk import topk
 
-_INF = np.iinfo(np.int64).max
+#: exhausted-cursor sentinel: one past the int64 range, so a real doc id
+#: of int64 max (xxhash64 spans the full range) is never mistaken for it
+_INF = 1 << 63
 
 
 class _TermData:
@@ -50,13 +57,12 @@ class _TermData:
 
     __slots__ = ("term", "block_first", "block_last", "block_max",
                  "docs_vb", "tfs_vb", "dls_vb", "nblocks", "max_sat",
-                 "df", "_cache")
+                 "_cache")
 
     def __init__(self, term: str, g: pd.DataFrame, avgdl: float | None = None,
                  bound_mode: str = "exact"):
         g = g.sort_values("block_id")
         self.term = term
-        self.df = int(g["n"].sum()) if "n" in g.columns else 0
         self.block_first = g["first_doc"].to_numpy(dtype=np.int64)
         self.block_last = g["last_doc"].to_numpy(dtype=np.int64)
         if bound_mode == "exact":
@@ -140,7 +146,7 @@ class _TermCursor:
     def shallow_block(self, target: int) -> int:
         """Index of first block with last_doc >= target (no decode);
         nblocks if none."""
-        if self.exhausted:
+        if self.exhausted or target >= _INF:
             return self.nblocks
         return int(np.searchsorted(self.block_last, target, side="left"))
 
@@ -269,65 +275,136 @@ def _wand_single(cursors: list[_TermCursor], k: int,
     return sorted(heap, key=lambda t: (-t[0], -t[1]))
 
 
-#: within a shard task, a query whose RAREST term matches more than this
-#: fraction of the shard's docs gets no skipping from WAND (θ rises too
-#: slowly to prune dense lists) — route it to the vectorized block-scan
-#: kernel instead. The test runs per (query, shard) inside the task, so
-#: one Spark job serves mixed workloads.
-DENSE_DF_RATIO = 0.10
+#: cells (query rows × distinct docs) of the block scan's dense float64
+#: score accumulator per chunk of queries (~16 MB); a task scores its
+#: queries in as many chunks as this budget needs.
+SCAN_BUDGET_CELLS = 1 << 21
 
 
-def _exhaustive_single(
-    q_terms: list[tuple[_TermData, float]], k: int, avgdl: float,
+def _empty_topk() -> pd.DataFrame:
+    return pd.DataFrame({
+        "query_id": np.array([], dtype=np.int64),
+        "doc_id": np.array([], dtype=np.int64),
+        "score": np.array([], dtype=np.float64),
+    })
+
+
+def _member_mask(arr: np.ndarray, vals: np.ndarray) -> np.ndarray:
+    """vals ∈ arr, elementwise (arr sorted)."""
+    if len(arr) == 0:
+        return np.zeros(len(vals), dtype=bool)
+    pos = np.minimum(np.searchsorted(arr, vals), len(arr) - 1)
+    return arr[pos] == vals
+
+
+def scan_topk_shard(
+    pdf: pd.DataFrame,
+    query_ids: np.ndarray,
+    terms: np.ndarray,
+    idfs: np.ndarray,
+    k: int,
+    avgdl: float,
     deleted: np.ndarray | None = None,
     keep: np.ndarray | None = None,
-) -> list[tuple[float, int]]:
-    """Vectorized decode-and-score of every posting of the query's terms —
-    the in-kernel dense path. Same output shape as _wand_single
-    ([(score, -doc_id)] sorted by (score desc, doc_id asc)); scores agree
-    with the WAND path to float-sum reassociation (~1e-15), which every
-    cross-engine consumer already rounds away (CLAUDE.md invariants)."""
-    docs_parts: list[np.ndarray] = []
-    contrib_parts: list[np.ndarray] = []
-    # terms processed in sorted order → deterministic per-doc sum order
+) -> pd.DataFrame:
+    """The production shard kernel: one shard's blocks + the task's
+    (query_id, term, idf) rows → per-query local top-k, as (query_id,
+    doc_id, score) rows ordered by query_id, then (score desc, doc_id
+    asc).
+
+    Columnar block scan, term-at-a-time:
+
+    1. sort the block rows once by (term, block_id) and decode each
+       varbyte stream in one pass (varbyte.delta_decode_blocks), so each
+       term's postings are one contiguous slice;
+    2. map the task's distinct docs to dense column indices;
+    3. score the queries in chunks against a dense (queries × docs)
+       float64 accumulator of at most SCAN_BUDGET_CELLS cells, adding
+       ``idf * _tf_sat`` for the i-th present term of every query of the
+       chunk at once, in sorted term order per query — the per-doc sum
+       order of a per-query scan, so scores do not depend on chunking;
+    4. tombstones (``deleted``) and the keep-list (``keep``; an empty
+       array keeps nothing) become a column mask; each row keeps every
+       doc tied at its k-th score, then cuts on (score desc, doc_id asc).
+    """
     from rerankers_spark.index.spimi import _tf_sat
 
-    for data, idf in sorted(q_terms, key=lambda p: p[0].term):
-        for bi in range(data.nblocks):
-            docs, tfs, dls = data.decoded(bi)
-            docs_parts.append(docs)
-            contrib_parts.append(idf * _tf_sat(tfs, dls, avgdl))
-    if not docs_parts:
-        return []
-    all_docs = np.concatenate(docs_parts)
-    all_contrib = np.concatenate(contrib_parts)
-    uniq, inv = np.unique(all_docs, return_inverse=True)
-    acc = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(acc, inv, all_contrib)
-    def _member_mask(arr: np.ndarray, vals: np.ndarray) -> np.ndarray:
-        if len(arr) == 0:
-            return np.zeros(len(vals), dtype=bool)
-        pos = np.searchsorted(arr, vals)
-        pos[pos >= len(arr)] = len(arr) - 1
-        return arr[pos] == vals
+    if len(pdf) == 0 or len(query_ids) == 0:
+        return _empty_topk()
+    codes, vocab = pd.factorize(pdf["term"], sort=True)
+    order = np.lexsort((pdf["block_id"].to_numpy(dtype=np.int64), codes))
+    docs, counts = vb.delta_decode_blocks(
+        pdf["docs_vb"].to_numpy(dtype=object)[order],
+        pdf["first_doc"].to_numpy(dtype=np.int64)[order])
+    tfs, _ = vb.decode_many(pdf["tfs_vb"].to_numpy(dtype=object)[order])
+    dls, _ = vb.decode_many(pdf["dls_vb"].to_numpy(dtype=object)[order])
+    sat = _tf_sat(tfs, dls, avgdl)
+    # posting range [lo, hi) of each term code
+    bounds = np.concatenate(([0], np.cumsum(counts)))
+    first_block = np.searchsorted(codes[order], np.arange(len(vocab) + 1))
+    t_lo, t_hi = bounds[first_block[:-1]], bounds[first_block[1:]]
+    col_doc, col = np.unique(docs, return_inverse=True)
+    n_cols = len(col_doc)
+    eligible = np.ones(n_cols, dtype=bool)
+    if deleted is not None:
+        eligible &= ~_member_mask(deleted, col_doc)
+    if keep is not None:
+        eligible &= _member_mask(keep, col_doc)
 
-    if deleted is not None and len(uniq):
-        mask = ~_member_mask(deleted, uniq)
-        uniq, acc = uniq[mask], acc[mask]
-    if keep is not None and len(uniq):
-        mask = _member_mask(keep, uniq)
-        uniq, acc = uniq[mask], acc[mask]
-    if len(uniq) == 0:
-        return []
-    if len(uniq) > k:
-        # keep EVERY doc tied with the k-th score so the (score desc,
-        # doc_id asc) tie-break below stays exact at the cut boundary
-        kth = np.partition(-acc, k - 1)[k - 1]
-        cand = np.nonzero(-acc <= kth)[0]
-    else:
-        cand = np.arange(len(uniq))
-    order = cand[np.lexsort((uniq[cand], -acc[cand]))][:k]
-    return [(float(acc[i]), -int(uniq[i])) for i in order]
+    # query rows: present terms only, sorted by (query_id, term) — term
+    # codes follow string order (factorize sort=True)
+    q_code = vocab.get_indexer(terms)
+    present = q_code >= 0
+    q_id = np.asarray(query_ids, dtype=np.int64)[present]
+    q_code = q_code[present].astype(np.int64)
+    q_idf = np.asarray(idfs, dtype=np.float64)[present]
+    o = np.lexsort((q_code, q_id))
+    q_id, q_code, q_idf = q_id[o], q_code[o], q_idf[o]
+    new_q = np.ones(len(q_id), dtype=bool)
+    new_q[1:] = q_id[1:] != q_id[:-1]
+    q_row = np.cumsum(new_q) - 1
+    q_pos = np.arange(len(q_id)) - np.flatnonzero(new_q)[q_row]
+    row_qid = q_id[new_q]
+    n_rows = len(row_qid)
+
+    step = max(1, SCAN_BUDGET_CELLS // max(1, n_cols))
+    out_q, out_d, out_s = [], [], []
+    for r0 in range(0, n_rows, step):
+        r1 = min(r0 + step, n_rows)
+        e0, e1 = np.searchsorted(q_row, (r0, r1))
+        acc = np.zeros((r1 - r0) * n_cols, dtype=np.float64)
+        hit = np.zeros((r1 - r0) * n_cols, dtype=bool)
+        for p in range(int(q_pos[e0:e1].max()) + 1):
+            sel = np.flatnonzero(q_pos[e0:e1] == p) + e0
+            lo = t_lo[q_code[sel]]
+            n = t_hi[q_code[sel]] - lo
+            # concatenated ranges [lo, lo + n) of every selected term
+            idx = np.repeat(lo - np.cumsum(n) + n, n) + np.arange(n.sum())
+            cell = np.repeat(q_row[sel] - r0, n) * n_cols + col[idx]
+            acc[cell] += np.repeat(q_idf[sel], n) * sat[idx]
+            hit[cell] = True
+        acc = acc.reshape(r1 - r0, n_cols)
+        ok = hit.reshape(r1 - r0, n_cols) & eligible
+        score = np.where(ok, acc, -np.inf)
+        if n_cols > k:
+            # every doc tied with the row's k-th score stays a candidate
+            kth = np.partition(score, n_cols - k, axis=1)[:, n_cols - k]
+            ok &= score >= kth[:, None]
+        rows, cols = np.nonzero(ok)
+        vals = score[rows, cols]
+        # columns ascend with doc_id → (score desc, doc_id asc) per row
+        o = np.lexsort((cols, -vals, rows))
+        rows, cols, vals = rows[o], cols[o], vals[o]
+        rank = np.arange(len(rows)) - np.searchsorted(rows, rows)
+        cut = rank < k
+        out_q.append(row_qid[r0 + rows[cut]])
+        out_d.append(col_doc[cols[cut]])
+        out_s.append(vals[cut])
+    if not out_q:
+        return _empty_topk()
+    return pd.DataFrame({"query_id": np.concatenate(out_q),
+                         "doc_id": np.concatenate(out_d),
+                         "score": np.concatenate(out_s)})
 
 
 def wand_topk_shard(
@@ -339,36 +416,33 @@ def wand_topk_shard(
     n_docs_shard: float = 0.0,
     deleted: np.ndarray | None = None,
     keep: np.ndarray | None = None,
-    dense_df_ratio: float = DENSE_DF_RATIO,
 ) -> pd.DataFrame:
-    """One shard's blocks (the bucket's query terms, deduplicated) + the
-    bucket's query list → per-query local top-k.
+    """One shard's blocks + a query list ``[(query_id, [(term, idf)])]``
+    → per-query local top-k.
 
-    Decoded blocks are cached per term and shared across queries — the
-    shard's bytes move through the shuffle exactly once regardless of how
-    many queries touch the same head term. Queries whose rarest term is
-    dense in this shard (df/n_docs_shard > dense_df_ratio, where WAND
-    degenerates to a doc-at-a-time Python loop with no skips) route to
-    the vectorized block-scan kernel instead; pass n_docs_shard=0 to
-    force pure WAND, or dense_df_ratio=0 to send every query to the
-    block-scan kernel (every term present in the shard has df >= 1).
+    n_docs_shard > 0 runs the production kernel (scan_topk_shard) on the
+    flattened query list. n_docs_shard == 0 runs pure block-max WAND, one
+    query at a time: decoded blocks are cached per term (decoded lazily
+    through varbyte.delta_decode) and shared across the queries. The
+    WAND route is kept as the reference for the property tests and the
+    single-threaded kernel bench; no search mode takes it.
     """
+    if n_docs_shard > 0:
+        flat = [(q, t, idf) for q, ts in queries for t, idf in ts]
+        return scan_topk_shard(
+            pdf, np.array([q for q, _, _ in flat], dtype=np.int64),
+            np.array([t for _, t, _ in flat], dtype=object),
+            np.array([i for _, _, i in flat], dtype=np.float64),
+            k, avgdl, deleted, keep)
     terms: dict[str, _TermData] = {
         str(term): _TermData(str(term), g, avgdl, bound_mode)
         for term, g in pdf.groupby("term")
     }
     qids, docs, scores = [], [], []
     for query_id, q_terms in queries:
-        present = [(terms[t], idf) for t, idf in q_terms if t in terms]
-        if not present:
-            continue
-        min_df = min(d.df for d, _ in present)
-        if n_docs_shard > 0 and min_df > dense_df_ratio * n_docs_shard:
-            out = _exhaustive_single(present, k, avgdl, deleted, keep)
-        else:
-            cursors = [_TermCursor(d, idf, avgdl) for d, idf in present]
-            out = _wand_single(cursors, k, deleted, keep)
-        for s, negd in out:
+        cursors = [_TermCursor(terms[t], idf, avgdl)
+                   for t, idf in q_terms if t in terms]
+        for s, negd in _wand_single(cursors, k, deleted, keep):
             qids.append(query_id)
             docs.append(-negd)
             scores.append(s)
@@ -529,24 +603,20 @@ def bmw_topk(
     queries: DataFrame,
     paths: IndexPaths,
     k: int = 10,
-    bound_mode: str | None = None,
     meta: dict | None = None,
     termstats: DataFrame | None = None,
     blocks: DataFrame | None = None,
     query_buckets: int | None = None,
     keep_docs: DataFrame | None = None,
-    dense_df_ratio: float = DENSE_DF_RATIO,
     tomb_bc="load",
     keep_mode: str = "broadcast",
     attr_values: list | None = None,
     keep_bc=None,
     local_plan: LocalQueryPlan | None = None,
 ) -> DataFrame:
-    """(query_id, doc_id, score, rank): exact BM25 top-k via BMW.
+    """(query_id, doc_id, score, rank): exact BM25 top-k, every (query,
+    shard) pair scored by the columnar block scan (scan_topk_shard).
 
-    bound_mode: 'exact' uses build-time max_tfsat (tightest skipping);
-    'safe' derives bounds from (max_tf, min_dl) and the CURRENT avgdl —
-    required after append_index generations. None → auto from index meta.
     meta/termstats/blocks: pre-loaded handles (Engine caches them so
     repeated searches skip the scalar-read jobs).
     query_buckets: query-side fan-out B (tasks = |shards| × B). None →
@@ -574,19 +644,11 @@ def bmw_topk(
       the same (shard, bucket) cogroup shuffle as marker rows on the
       query side — fully distributed: no driver materialization, no
       broadcast, each task sees only its own shard's keep ids (|keep| ×
-      |gens| × B shuffle rows). This keeps arbitrarily large filters on
-      the WAND skip path; Engine.search auto-routes past
+      |gens| × B shuffle rows), so arbitrarily large filters stay off
+      the driver; Engine.search auto-routes past
       KEEP_BROADCAST_CAP. (At 100 TB a high-selectivity attribute is
       still better as an index partition column — that prunes whole
       shards instead of filtering inside them.)
-
-    dense_df_ratio: per-(query, shard) routing between the two kernels
-    (wand_topk_shard) — a query whose rarest term's shard df exceeds
-    this fraction of the shard's docs is scored by the vectorized
-    block-scan kernel, the rest by WAND. The default is DENSE_DF_RATIO;
-    0.0 sends every query to the block-scan kernel (Engine.search
-    mode='exhaustive'). Both kernels read the same blocks and apply the
-    same tombstone / keep / attr exclusions.
 
     tomb_bc: the sentinel "load" (default) loads + broadcasts the
     tombstone array per call; a long-lived Engine instead passes its
@@ -637,12 +699,6 @@ def bmw_topk(
              .distinct().collect()], dtype=np.int64)
         keep_arr.sort()
         keep_bc = spark.sparkContext.broadcast(keep_arr)
-    if bound_mode is None:
-        # >1 visible generation → per-generation avgdls differ from the
-        # current global avgdl, so build-time max_tfsat may be stale →
-        # the avgdl-independent 'safe' bound. One generation (fresh
-        # build or post-full-compact) → tightest 'exact' bound.
-        bound_mode = "safe" if int(meta.get("generation", 0)) > 0 else "exact"
     n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
     shard_ids = _gen_shards(visible_generations(meta),
                             int(meta.get("n_shards", 32)))
@@ -808,22 +864,12 @@ def bmw_topk(
                 qpdf = qpdf[~km]
             else:
                 keep_local = np.array([], dtype=np.int64)
-        if len(bpdf) == 0 or len(qpdf) == 0:
-            return pd.DataFrame({
-                "query_id": np.array([], dtype=np.int64),
-                "doc_id": np.array([], dtype=np.int64),
-                "score": np.array([], dtype=np.float64),
-            })
-        q_map: dict[int, list[tuple[str, float]]] = {}
-        for qid, t, idf in zip(qpdf["query_id"], qpdf["term"], qpdf["idf"]):
-            q_map.setdefault(int(qid), []).append((str(t), float(idf)))
-        q_list = sorted(q_map.items())
-        return wand_topk_shard(bpdf, q_list, k, avgdl, bound_mode,
-                               n_docs_shard=n_docs / n_shards_total,
-                               deleted=(tomb_bc.value if tomb_bc is not None
-                                        else None),
-                               keep=keep_local,
-                               dense_df_ratio=dense_df_ratio)
+        return scan_topk_shard(
+            bpdf, qpdf["query_id"].to_numpy(dtype=np.int64),
+            qpdf["term"].to_numpy(dtype=object),
+            qpdf["idf"].to_numpy(dtype=np.float64), k, avgdl,
+            deleted=tomb_bc.value if tomb_bc is not None else None,
+            keep=keep_local)
 
     local = blocks_b.groupby(*group_keys).cogroup(
         q_side.groupby(*group_keys)

@@ -223,23 +223,23 @@ class Engine:
 
     # -- first stage ----------------------------------------------------------
 
-    #: alias of bmw.DENSE_DF_RATIO, the in-kernel per-(query, shard)
-    #: WAND / block-scan routing threshold.
-    AUTO_DENSE_DF_RATIO = bmw.DENSE_DF_RATIO
+    #: report-only: the document-frequency share past which a query term
+    #: counts as "dense" (WAND could not skip its postings). No search
+    #: route reads it; the benchmark reports the share of such queries.
+    AUTO_DENSE_DF_RATIO = 0.10
 
-    #: doc_filter keep-lists up to this many ids ship to the BMW kernels
+    #: doc_filter keep-lists up to this many ids ship to the shard kernel
     #: as a sorted broadcast array (~80 MB at the cap); a larger filter
     #: (a low-selectivity predicate over a 100-TB corpus can select
     #: billions of ids) would OOM the driver building the array, so
     #: search() auto-routes it to keep_mode='bucketed': the ids are
     #: sharded like the index and flow through the (shard, bucket)
     #: cogroup shuffle as data rows — no driver materialization, no
-    #: broadcast, and the query stays on the WAND skip path.
+    #: broadcast.
     KEEP_BROADCAST_CAP = 10_000_000
 
-    #: Engine.search mode → bmw_topk dense_df_ratio (see search()).
-    MODES = {"bmw": bmw.DENSE_DF_RATIO, "auto": bmw.DENSE_DF_RATIO,
-             "exhaustive": 0.0}
+    #: the accepted Engine.search mode names (see search()).
+    MODES = frozenset({"bmw", "auto", "exhaustive"})
 
     def search(self, queries: DataFrame, k: int = 10,
                mode: str = "bmw",
@@ -249,25 +249,21 @@ class Engine:
                ) -> DataFrame:
         """(query_id, doc_id, score, rank) — BM25 top-k.
 
-        Every mode runs the same cogroup kernel (bmw.bmw_topk) over the
-        same index blocks, with tombstones, doc_filter and attr_filter
-        applied inside it; the modes differ only in how each (query,
-        shard) pair picks between the kernel's two scorers:
+        'bmw', 'auto' and 'exhaustive' are three names for one call:
+        the cogroup kernel (bmw.bmw_topk) scores every (query, shard)
+        pair with the columnar block scan (bmw.scan_topk_shard), which
+        decodes and scores every posting of every query term, with
+        tombstones, doc_filter and attr_filter applied inside it. The
+        names are kept for callers of the former per-mode scorers
+        (block-max WAND for 'bmw'/'auto'); a measurement showed the scan
+        faster on every shard shape tried.
 
-        * 'bmw' — block-max WAND, except where the query's rarest term
-          covers more than bmw.DENSE_DF_RATIO of the shard's docs; those
-          pairs take the vectorized block-scan scorer (WAND cannot skip
-          there).
-        * 'auto' — the same call as 'bmw' (kept as a name for callers
-          of the former per-query router).
-        * 'exhaustive' — every pair takes the block-scan scorer: decode
-          and score every posting of every query term, no skipping.
-
-        All are exact — same doc sets, scores equal to float-sum
-        reassociation (~1e-15). At EXACT score ties the (score desc,
-        doc_id asc) order can therefore differ between modes; consumers
-        comparing modes rank on ROUNDED scores (CLAUDE.md invariant, as
-        the driver-contract queries do).
+        The result is exact and identical across modes. Against another
+        engine (or the WAND reference kernel) scores agree to float-sum
+        reassociation (~1e-15), so at EXACT score ties the (score desc,
+        doc_id asc) order can differ; consumers comparing engines rank
+        on ROUNDED scores (CLAUDE.md invariant, as the driver-contract
+        queries do).
 
         doc_filter: optional (doc_id) DataFrame restricting results to a
         metadata-selected doc set (e.g. ``corpus.where(lang ==
@@ -308,7 +304,6 @@ class Engine:
         return bmw.bmw_topk(self.spark, queries, self.paths, k=k,
                             meta=meta, termstats=termstats,
                             blocks=blocks, keep_docs=doc_filter,
-                            dense_df_ratio=self.MODES[mode],
                             tomb_bc=self._tomb_bc,
                             keep_mode=keep_mode,
                             attr_values=attr_filter,

@@ -62,7 +62,7 @@ def get_spark(
         # AQE coalescing targets BYTES, but this engine's post-shuffle
         # stages are Python kernels whose cost per byte dwarfs shuffle
         # IO: with the 1m default the (shard × bucket) cogroup collapses
-        # to ONE task on compressed-KB inputs and the WAND kernel runs
+        # to ONE task on compressed-KB inputs and the shard kernel runs
         # serially. 64k keeps small-input kernels parallel while leaving
         # sizeable shuffles governed by totalBytes/parallelism as before.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",

@@ -6,8 +6,8 @@ Spark-native extensions a continuously-growing corpus needs:
 * :func:`stream_index_appends` — file-source stream of new corpus rows →
   ``foreachBatch`` → :func:`spimi.append_index`. Each micro-batch becomes
   a new index generation (doc-disjoint shards), so query code is
-  unchanged and BM25 stays exact under the updated global stats (the
-  bmw 'safe' bound mode). foreachBatch is AT-LEAST-once; end-to-end
+  unchanged and BM25 stays exact under the updated global stats (scores
+  are recomputed from the raw tf and dl stored in each block). foreachBatch is AT-LEAST-once; end-to-end
   exactly-once comes from append_index's commit protocol (epoch id
   recorded at the scalars commit + orphan-partition cleanup on retry),
   not from the checkpoint alone.

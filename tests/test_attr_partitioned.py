@@ -170,9 +170,8 @@ def lifecycle_matrix(spark):
     assert dead_ids
     eng = Engine(spark, MATRIX_BASE)
     q = spark.createDataFrame(
-        # common_util is dense (~50% df) → exercises the per-(query,
-        # shard) in-kernel dense fallback in every cell; the others stay
-        # on the WAND skip path
+        # common_util is dense (~50% df), the others rare: the block
+        # scan's exclusion masks are exercised on both posting shapes
         [(0, "common_util"), (1, "def return class"), (2, "rareterm_0")],
         "query_id long, query string")
     return corpus, eng, q, dead_ids

@@ -2,9 +2,8 @@
 
 Semantics (spimi.delete_docs / compact_index docstrings):
 * after delete_docs, tombstoned docs vanish from EVERY search mode (bmw,
-  auto, exhaustive — both scorers of the one cogroup kernel: WAND and
-  the in-kernel block-scan) while scores keep pre-delete global stats —
-  Lucene deferred-stats semantics;
+  auto, exhaustive — one cogroup kernel, one block-scan scorer) while
+  scores keep pre-delete global stats — Lucene deferred-stats semantics;
 * after compact_index, results are identical to a fresh build on the
   surviving corpus (stats recomputed, tombstones table dropped).
 """
@@ -73,8 +72,8 @@ def test_deleted_docs_excluded_stats_deferred(spark, deleted_engine, mode):
 
 
 def test_dense_fallback_excludes_deleted(spark, deleted_engine):
-    """The head term routes to the in-kernel dense path
-    (_exhaustive_single) under auto routing — deletes must hold there
+    """A head term (in most docs of every shard) through mode='auto' —
+    the block scan's tombstone column mask must hold on dense postings
     too."""
     eng, full, dead_ids = deleted_engine
     q = spark.createDataFrame([(0, "common_util")],

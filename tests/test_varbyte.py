@@ -41,3 +41,44 @@ def test_delta_requires_sorted():
 
 def test_decode_empty():
     assert vb.decode(b"").size == 0
+
+
+_EDGE = st.sampled_from([0, 127, 128, 2**14 - 1, 2**14, 2**63 - 1])
+_VALUES = st.lists(st.one_of(_EDGE, st.integers(0, 2**63 - 1)), max_size=60)
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(_VALUES, max_size=12))
+def test_decode_per_buffer_and_concatenated(chunks):
+    """encode → decode round-trips each buffer, and decode_many over the
+    buffers returns the concatenated values with per-buffer counts."""
+    arrs = [np.array(c, dtype=np.int64) for c in chunks]
+    bufs = [vb.encode(a) for a in arrs]
+    for a, b in zip(arrs, bufs):
+        assert (vb.decode(b) == a).all()
+    vals, counts = vb.decode_many(bufs)
+    assert counts.tolist() == [len(a) for a in arrs]
+    expected = np.concatenate(arrs) if arrs else np.empty(0, np.int64)
+    assert vals.dtype == np.int64 and (vals == expected).all()
+
+
+_INT64 = st.integers(-(2**63), 2**63 - 1)
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(st.sets(st.one_of(
+    st.sampled_from([-(2**63), -(2**63) + 1, -1, 0, 1, 2**63 - 1]),
+    _INT64), min_size=1, max_size=40), max_size=10))
+def test_delta_decode_blocks_matches_per_block(blocks):
+    """delta_decode_blocks == per-block delta_decode, full int64 range."""
+    ids = [np.array(sorted(b), dtype=np.int64) for b in blocks]
+    bases = np.array([int(a[0]) for a in ids], dtype=np.int64)
+    bufs = [vb.delta_encode(a, int(a[0])) for a in ids]
+    docs, counts = vb.delta_decode_blocks(bufs, bases)
+    assert counts.tolist() == [len(a) for a in ids]
+    per_block = [vb.delta_decode(b, int(f)) for b, f in zip(bufs, bases)]
+    expected = (np.concatenate(per_block) if per_block
+                else np.empty(0, np.int64))
+    assert docs.dtype == np.int64 and (docs == expected).all()
+    if ids:
+        assert (docs == np.concatenate(ids)).all()
