@@ -33,6 +33,22 @@ Lineage (input_hint): docstats carries per-row ``content_sha256``; the
 manifest aggregates row counts and an order-independent XOR fingerprint
 of those hashes per shard.
 
+Lifecycle: build_index, append_index and compact_index each write ONE
+generation through the same two steps, and differ only in where their
+rows come from, how they derive the new global totals, and what they
+commit:
+
+1. ``_write_gen_docstats`` — orphan cleanup of the generation's docstats
+   partitions, then the docstats append with (n, sum_dl) observed in the
+   same pass;
+2. ``_write_gen_blocks`` — orphan cleanup of its blocks/termstats/
+   manifest partitions, the block build + append, then the termstats
+   contribution and the full manifest rows, derived from the new block
+   metadata and written concurrently.
+
+The single-row scalars overwrite (``_write_scalars``) that follows is
+the commit point for all three.
+
 The reference presupposes this whole stage as an external artifact
 (tests/consistency_notebooks/test_crossenc.ipynb cell 5).
 """
@@ -40,11 +56,13 @@ The reference presupposes this whole stage as an external artifact
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Iterable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from rerankers_spark.functions.tokenize import token_count_pandas_udf
@@ -71,6 +89,19 @@ MANIFEST_SCHEMA = (
 
 RETIRED_SCHEMA = ("tbl string, part_col string, part_val string, "
                   "gen int, retired_at double")
+
+TOMBSTONES_SCHEMA = "doc_id long, tomb_batch string"
+
+
+def local_df(spark: SparkSession, pdf: pd.DataFrame,
+             schema: str) -> DataFrame:
+    """Small driver-side table → DataFrame via the Arrow path: the data
+    ships to the JVM as Arrow batches decoded JVM-side, so downstream
+    stages evaluate it without Python workers. createDataFrame on a
+    plain row list instead builds a pickled Python RDD whose every
+    evaluation (broadcast builds, cogroup sides) spins up a Python
+    worker — measured multi-second 1-task stages on the query path."""
+    return spark.createDataFrame(pdf, schema=schema)
 
 
 def _tf_sat(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
@@ -312,7 +343,7 @@ class IndexPaths:
         # a compact live in new partitions and are never dropped (closes
         # the old drop-then-rewrite race). Reads as NULL on legacy
         # non-partitioned tombstone files.
-        "tombstones": "doc_id long, tomb_batch string",
+        "tombstones": TOMBSTONES_SCHEMA,
         "compact_postings": POSTINGS_SCHEMA_ATTR,
         "compact_docstats": "doc_id long, shard_id int, "
                             "content_sha256 string, dl long",
@@ -423,27 +454,158 @@ def _sha_xor_agg():
     return F.expr(_SHA_XOR_EXPR).alias("sha256_xor")
 
 
-def _probe_nonempty(spark: SparkSession, df: DataFrame) -> bool:
-    """Bounded emptiness probe: one task over one partition in the
-    (normal) non-empty case. The session-wide
-    ``spark.sql.limit.initialNumPartitions=64`` (session.py — right for
-    bounded query-plan collects) would make a bare ``isEmpty`` evaluate
-    up to 64 input partitions; scoping the conf back to 1 here keeps the
-    probe O(1 partition), and projecting a constant lets the scan prune
-    every column."""
-    old = None
+def _gen_shard_col(n_shards: int, gen: int):
+    """shard_id of a doc in generation ``gen``: the doc-hash shard
+    offset into the generation's range (see _gen_shards)."""
+    return (F.pmod(F.xxhash64("doc_id"), F.lit(n_shards))
+            + F.lit(gen * n_shards)).cast("int")
+
+
+def _shard_corpus(spark: SparkSession, corpus: DataFrame, n_shards: int,
+                  gen: int, attr_col: str | None
+                  ) -> tuple[DataFrame, DataFrame]:
+    """Corpus rows → (sharded corpus, its docstats rows) for generation
+    ``gen`` — the input side build_index and append_index share.
+
+    The round-robin repartition spreads the tokenize work across the
+    cluster regardless of the input file layout: a handful of big
+    parquet files would otherwise pin the whole scan to a few tasks
+    (observed: 1 file → 1-core tokenize). At 100 TB the input has
+    thousands of files and this is a cheap no-op round-robin; locally it
+    is the difference between 1 and N cores."""
+    width = max(n_shards, spark.sparkContext.defaultParallelism)
+    corpus = corpus.repartition(width).withColumn(
+        "shard_id", _gen_shard_col(n_shards, gen))
+    if attr_col:
+        corpus = corpus.withColumn("attr", F.col(attr_col).cast("string"))
+    dt = corpus.select(
+        "doc_id", "shard_id", "content_sha256",
+        token_count_pandas_udf(F.col("content")).alias("dl"),
+    )
+    return corpus, dt
+
+
+def _write_gen_docstats(spark: SparkSession, paths: IndexPaths,
+                        dt: DataFrame, gen: int,
+                        n_shards: int) -> tuple[int, int]:
+    """Step 1 of a generation write: append generation ``gen``'s docstats
+    rows ``dt`` (doc_id, shard_id, content_sha256, dl) and return their
+    (n, sum_dl), observed during the write — no separate aggregation job.
+
+    A failed earlier attempt at the same generation id may have left
+    orphan partitions; they are deleted first, so a retry never
+    double-counts. repartition("shard_id") before the partitioned write
+    gives each task whole shards and one file per shard dir (without it
+    every task opens a writer per shard dir: width × n_shards small
+    files, measured +10 s at 800k docs/local[8]). The observe node sits
+    upstream of the exchange on a join-free scan→write plan, so totals
+    come from the same single pass.
+
+    Empty input: AQE's empty-plan propagation drops the observation row
+    and ``obs.get`` raises a Py4JJavaError (PythonSQLUtils.toPyRow). That
+    error is taken as (0, 0) only after a bounded check that the
+    generation's docstats range really is empty — anything else
+    re-raises, so wrong totals are never committed."""
+    paths.catalog(spark).delete_partitions(
+        "docstats", "shard_id", _gen_shards([gen], n_shards))
+    obs = Observation(f"docstats_totals_{gen}")
+    paths.write(
+        dt.observe(obs, F.count(F.lit(1)).alias("n"),
+                   F.sum("dl").alias("sum_dl")).repartition("shard_id"),
+        "docstats", mode="append", partition_by=["shard_id"])
     try:
-        old = spark.conf.get("spark.sql.limit.initialNumPartitions")
-    except Exception:
-        pass
-    spark.conf.set("spark.sql.limit.initialNumPartitions", "1")
-    try:
-        return not df.select(F.lit(1).alias("one")).isEmpty()
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.limit.initialNumPartitions")
-        else:
-            spark.conf.set("spark.sql.limit.initialNumPartitions", old)
+        row = obs.get
+    except Py4JJavaError:
+        if not paths.read(spark, "docstats").where(
+                shard_pred({"n_shards": n_shards}, [gen])).isEmpty():
+            raise
+        return 0, 0
+    return int(row["n"]), int(row["sum_dl"] or 0)  # 0 rows: sum is NULL
+
+
+def _write_gen_blocks(spark: SparkSession, paths: IndexPaths,
+                      postings: DataFrame, avgdl: float, gen: int,
+                      n_shards: int, attr_mode: bool,
+                      skip: set[int] | frozenset[int] = frozenset()
+                      ) -> None:
+    """Step 2 of a generation write: build and append generation
+    ``gen``'s blocks from ``postings`` (shard_id, term, doc_id, dl, tf
+    [, attr]) under ``avgdl``, then derive its termstats contribution and
+    manifest rows from the written blocks. ``skip``: shard ids whose
+    blocks are already complete (build_index resume) — their partitions
+    are kept, and ``postings`` must not contain them.
+
+    The two independent aggs+writes run concurrently on a threaded
+    scheduler (separate concurrent jobs sharing the executor pool on a
+    real cluster), each over its own scan of the generation's block
+    metadata columns (shard_id, term, n — partition- and column-pruned,
+    the binary payloads are never read). A cached shared scan was
+    measured worse: its materialization added one or two (racing) Spark
+    jobs per generation write. The manifest rows carry per-shard
+    n_docs/sum_dl/sha256_xor from the generation's docstats,
+    n_postings/n_blocks from its blocks, and the measured block-build
+    wall time."""
+    cat = paths.catalog(spark)
+    cat.delete_partitions(
+        "blocks", "shard_id",
+        [s for s in _gen_shards([gen], n_shards) if s not in skip])
+    cat.delete_partitions("termstats", "gen", [gen])
+    cat.delete_partitions("manifest", "gen", [gen])
+
+    t0 = time.time()
+    group_keys = ["shard_id"] + (["attr"] if attr_mode else [])
+    blocks = postings.groupBy(*group_keys).applyInPandas(
+        lambda pdf: _build_shard_blocks(pdf, avgdl),
+        BLOCKS_SCHEMA if attr_mode else BLOCKS_SCHEMA_BASE)
+    paths.write(blocks, "blocks", mode="append", partition_by=group_keys)
+    wall = time.time() - t0
+
+    in_gen = shard_pred({"n_shards": n_shards}, [gen])
+    blocks_meta = paths.read(spark, "blocks").where(in_gen).select(
+        "shard_id", "term", "n")
+
+    def _write_termstats():
+        paths.write(
+            blocks_meta.groupBy("term").agg(
+                F.sum("n").cast("long").alias("df"))
+            .withColumn("gen", F.lit(gen)),
+            "termstats", mode="append", partition_by=["gen"])
+
+    def _write_manifest():
+        # one aggregation over the union of the two sides, not two
+        # aggregations and a join: one shuffle, two fewer Spark jobs
+        docs = paths.read(spark, "docstats").where(in_gen).select(
+            "shard_id", F.lit(1).alias("doc"), "dl", "content_sha256",
+            F.lit(None).cast("int").alias("n"))
+        blks = blocks_meta.select(
+            "shard_id", F.lit(0).alias("doc"),
+            F.lit(None).cast("long").alias("dl"),
+            F.lit(None).cast("string").alias("content_sha256"), "n")
+        manifest = (
+            docs.unionByName(blks).groupBy("shard_id").agg(
+                F.sum("doc").cast("long").alias("n_docs"),
+                F.sum("dl").cast("long").alias("sum_dl"),
+                _sha_xor_agg(),
+                F.sum("n").cast("long").alias("n_postings"),
+                F.count("n").alias("n_blocks"))
+            .na.fill({"n_postings": 0})
+            .select(
+                "shard_id", "n_docs", "n_postings", "n_blocks", "sum_dl",
+                "sha256_xor",
+                F.lit("ok").alias("status"),
+                F.lit(float(wall)).alias("wall_time"),
+                F.lit(gen).alias("gen"),
+            )
+        )
+        paths.write(manifest, "manifest", mode="append",
+                    partition_by=["gen"])
+
+    # the context manager propagates the FIRST failure and tears the pool
+    # down even when a stage throws
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        for f in [pool.submit(_write_termstats),
+                  pool.submit(_write_manifest)]:
+            f.result()
 
 
 def build_index(
@@ -454,11 +616,18 @@ def build_index(
     resume: bool = False,
     attr_col: str | None = None,
 ) -> IndexPaths:
-    """Build (or resume) the block index at ``path``.
+    """Build (or resume) the block index at ``path`` as generation 0.
 
     corpus: DataFrame(doc_id, content, content_sha256, ...).
-    Plan shape: ONE wide shuffle (explode→groupBy for tf) feeding a
-    per-shard applyInPandas; global stats are separate cheap aggs.
+    Plan shape: the docstats write (totals observed in the same pass),
+    then ONE shard shuffle of fused-Arrow postings feeding a per-shard
+    applyInPandas block build; both are the shared generation-write
+    steps (_write_gen_docstats, _write_gen_blocks). What is build's own:
+    overwrite semantics — the tables it rebuilds are dropped first — and
+    ``resume``, which keeps the blocks of shards the manifest lists as
+    ok (only missing shards are rebuilt) and reuses committed docstats
+    totals. termstats and manifest are always re-derived over all of
+    generation 0. The scalars row is written LAST (the commit point).
 
     attr_col: optional metadata column (e.g. ``lang``, ``repo``) that
     becomes a PHYSICAL partition column of the blocks table — the
@@ -482,140 +651,31 @@ def build_index(
             .select("shard_id")
             .collect()
         }
-
-    # Spread the tokenize/explode work across the cluster regardless of the
-    # input file layout: a handful of big parquet files would otherwise pin
-    # the whole scan to a few tasks (observed: 1 file → 1-core tokenize).
-    # At 100 TB the input has thousands of files and this is a cheap no-op
-    # round-robin; locally it is the difference between 1 and N cores.
-    width = max(n_shards, spark.sparkContext.defaultParallelism)
-    # emptiness probe for the docstats write below, taken on the PRE-shuffle
-    # plan: limit(1) on the raw input stops after one row, while isEmpty on
-    # top of the repartition would materialize the ENTIRE corpus through the
-    # exchange map side first (limit cannot skip a shuffle) — a full wasted
-    # corpus pass at 100 TB.
-    src = corpus
-    corpus = corpus.repartition(width)
-
-    corpus = corpus.withColumn(
-        "shard_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
-    )
-    if attr_col:
-        corpus = corpus.withColumn("attr", F.col(attr_col).cast("string"))
-
-    # ---- global stats (full corpus, independent of resume state) ----------
-    # N and avgdl are observed DURING the docstats write (one action, no
-    # read-back-and-aggregate job between the two corpus passes).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import Observation
-
-    dt = corpus.select(
-        "doc_id", "shard_id", "content_sha256",
-        token_count_pandas_udf(F.col("content")).alias("dl"),
-    )
-    n_docs = None
+    totals = None
     if resume and paths.exists(spark, "docstats"):
         row = paths.read(spark, "docstats").agg(
             F.count("*").alias("n"),
             F.sum("dl").cast("long").alias("sum_dl")).collect()[0]
         if int(row["n"]) > 0:
-            n_docs = int(row["n"])
-            sum_dl = int(row["sum_dl"] or 0)
+            totals = int(row["n"]), int(row["sum_dl"] or 0)
         # else: the directory exists but holds no committed rows (crash
-        # mid-write left only _temporary) — fall through and rebuild;
-        # bare-existence must not be trusted as a checkpoint.
-    if n_docs is None:
-        obs = Observation("corpus_totals")
-        observed = dt.observe(obs, F.count(F.lit(1)).alias("n"),
-                              F.sum("dl").alias("sum_dl"))
-        # repartition("shard_id") BEFORE the partitioned write: without
-        # it every write task opens a writer per shard dir (width ×
-        # n_shards small files — measured +10 s at 800k docs/local[8]
-        # and a small-file tax on every later docstats scan); with it
-        # each task owns whole shards and writes one file per dir. The
-        # observe node sits upstream of the exchange, so totals come
-        # from the same single pass — EXCEPT on an empty input, where
-        # AQE's empty-plan propagation drops the CollectMetrics row and
-        # obs.get raises (reproduced on this Spark); the bounded
-        # pre-shuffle isEmpty probe skips the exchange for that case only.
-        if _probe_nonempty(spark, src):
-            observed = observed.repartition("shard_id")
-        paths.write(observed, "docstats", mode="overwrite",
-                    partition_by=["shard_id"])
-        n_docs = int(obs.get["n"])
-        sum_dl = int(obs.get["sum_dl"] or 0)  # 0-doc corpus: sum is NULL
+        # mid-write left only _temporary) — rebuild it; bare existence
+        # must not be trusted as a checkpoint.
+    # overwrite semantics: drop every table this build rewrites (a resume
+    # keeps its done shards' blocks and reusable docstats)
+    cat = paths.catalog(spark)
+    for name in (["termstats", "manifest"] + ([] if done else ["blocks"])
+                 + ([] if totals else ["docstats"])):
+        cat.drop_table(name)
+
+    corpus, dt = _shard_corpus(spark, corpus, n_shards, 0, attr_col)
+    n_docs, sum_dl = totals or _write_gen_docstats(spark, paths, dt, 0,
+                                                   n_shards)
     avgdl = (sum_dl / n_docs) if n_docs else 0.0
-
-    # ---- postings for not-yet-done shards ----------------------------------
     todo = corpus.where(~F.col("shard_id").isin(list(done))) if done else corpus
-    p = corpus_postings_arrow(todo, attr=bool(attr_col))
-
-    t0 = time.time()
-    group_keys = ["shard_id"] + (["attr"] if attr_col else [])
-    blocks = p.groupBy(*group_keys).applyInPandas(
-        lambda pdf: _build_shard_blocks(pdf, avgdl),
-        BLOCKS_SCHEMA if attr_col else BLOCKS_SCHEMA_BASE
-    )
-    paths.write(blocks, "blocks", mode="append" if done else "overwrite",
-                partition_by=group_keys)
-    wall = time.time() - t0
-
-    # ---- termstats + manifest: ONE narrow scan of the block metadata
-    # columns (term, n, shard_id — parquet prunes the binary payload
-    # columns), cached, then the two independent aggs+writes run
-    # concurrently ----------------------------------------------------------
-    all_blocks_meta = paths.read(spark, "blocks").select(
-        "shard_id", "term", "n"
-    ).cache()
-    all_blocks_meta.count()  # materialize once before the concurrent jobs
-
-    def _write_termstats():
-        ts = all_blocks_meta.groupBy("term").agg(
-            F.sum("n").cast("long").alias("df")
-        ).withColumn("gen", F.lit(0))
-        paths.write(ts, "termstats", mode="overwrite",
-                    partition_by=["gen"])
-
-    def _write_manifest():
-        shard_stats = paths.read(spark, "docstats").groupBy("shard_id").agg(
-            F.count("*").alias("n_docs"),
-            F.sum("dl").cast("long").alias("sum_dl"),
-            _sha_xor_agg(),
-        )
-        block_stats = all_blocks_meta.groupBy("shard_id").agg(
-            F.sum("n").cast("long").alias("n_postings"),
-            F.count("*").alias("n_blocks"),
-        )
-        manifest = (
-            shard_stats.join(block_stats, "shard_id", "left")
-            .na.fill({"n_postings": 0, "n_blocks": 0})
-            .select(
-                "shard_id", "n_docs", "n_postings", "n_blocks", "sum_dl",
-                "sha256_xor",
-                F.lit("ok").alias("status"),
-                F.lit(float(wall)).alias("wall_time"),
-                F.lit(0).alias("gen"),
-            )
-        )
-        paths.write(manifest, "manifest", mode="overwrite",
-                    partition_by=["gen"])
-
-    # The two independent derived writes overlap on a threaded scheduler
-    # (separate concurrent jobs sharing the executor pool on a real
-    # cluster); the context manager propagates the FIRST failure and
-    # tears the pool down even when a stage throws.
-    try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            ts_f = pool.submit(_write_termstats)
-            mf_f = pool.submit(_write_manifest)
-            ts_f.result()
-            mf_f.result()
-    finally:
-        all_blocks_meta.unpersist()
-    # COMMIT (written LAST, matching the append/compact protocol): a
-    # reader that finds scalars is guaranteed blocks/termstats/manifest
-    # are complete; a crash before this point leaves no committed index.
+    _write_gen_blocks(spark, paths,
+                      corpus_postings_arrow(todo, attr=bool(attr_col)),
+                      avgdl, 0, n_shards, bool(attr_col), skip=done)
     _write_scalars(spark, paths, n_docs, avgdl, n_shards,
                    visible_gens=[0], next_gen=1, sum_dl=sum_dl,
                    attr_col=attr_col)
@@ -810,15 +870,21 @@ def append_index(
     to the avgdl-independent (max_tf, min_dl) bound once generation > 0
     (bmw._TermData's 'safe' bound mode).
 
+    The generation is written by the same two steps as build and compact
+    (_write_gen_docstats, then _write_gen_blocks); what is append's own
+    is the replay guard and the batch-total arithmetic. An empty batch
+    still commits a (row-less) generation; totals are unchanged.
+
     Atomicity / replay (foreachBatch is at-least-once):
 
     * every data write (docstats/blocks/termstats/manifest) is APPEND of
       rows belonging only to the new generation; readers hide them via
       shard_pred / load_termstats until the final single-row scalars
       overwrite — the commit point — publishes the generation;
-    * a crash before commit leaves only invisible orphans; the retry
-      first deletes the would-be generation's partitions (same ids are
-      recomputed deterministically), so a replay never double-indexes;
+    * a crash before commit leaves only invisible orphans; each step
+      first deletes the would-be generation's partitions of the tables it
+      writes (same ids are recomputed deterministically), so a replay
+      never double-indexes;
     * batch_id (pass the foreachBatch epoch id) is recorded in scalars
       at commit: a replay of an ALREADY-committed batch is a no-op.
     """
@@ -829,72 +895,18 @@ def append_index(
     gen = next_generation(meta)
     if batch_id is not None and meta.get("last_batch_id") == str(batch_id):
         return paths  # replay of a committed batch (exactly-once)
-    cat = paths.catalog(spark)
-    new_shards = list(range(gen * n_shards, (gen + 1) * n_shards))
-    # orphan cleanup from a previous failed attempt at THIS generation
-    cat.delete_partitions("blocks", "shard_id", new_shards)
-    cat.delete_partitions("docstats", "shard_id", new_shards)
-    cat.delete_partitions("termstats", "gen", [gen])
-    cat.delete_partitions("manifest", "gen", [gen])
-
-    from pyspark.sql import Observation
-
-    width = max(n_shards, spark.sparkContext.defaultParallelism)
-    src = new_corpus  # pre-shuffle emptiness probe (see build_index)
-    new_corpus = new_corpus.repartition(width).withColumn(
-        "shard_id",
-        (F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)) + gen * n_shards)
-        .cast("int"),
-    )
     attr_col = meta.get("attr_col")
-    if attr_col:
-        new_corpus = new_corpus.withColumn(
-            "attr", F.col(attr_col).cast("string"))
-    dt = new_corpus.select(
-        "doc_id", "shard_id", "content_sha256",
-        token_count_pandas_udf(F.col("content")).alias("dl"),
-    )
-    obs = Observation(f"append_totals_{gen}")
-    observed = dt.observe(obs, F.count(F.lit(1)).alias("n"),
-                          F.sum("dl").alias("sum_dl"))
-    if _probe_nonempty(spark, src):
-        # one writer per shard dir (see build_index; skipped on an empty
-        # batch, where the exchange would drop the observation row)
-        observed = observed.repartition("shard_id")
-    paths.write(observed, "docstats", mode="append",
-                partition_by=["shard_id"])
-    batch_n, batch_sum = int(obs.get["n"]), int(obs.get["sum_dl"] or 0)
+    corpus, dt = _shard_corpus(spark, new_corpus, n_shards, gen, attr_col)
+    batch_n, batch_sum = _write_gen_docstats(spark, paths, dt, gen,
+                                             n_shards)
     prev_sum = int(meta.get("sum_dl") or
                    round(float(meta["avgdl"]) * int(meta["n_docs"])))
     n_docs = int(meta["n_docs"]) + batch_n
     sum_dl = prev_sum + batch_sum
     avgdl = (sum_dl / n_docs) if n_docs else 0.0
-
-    p = corpus_postings_arrow(new_corpus, attr=bool(attr_col))
-    group_keys = ["shard_id"] + (["attr"] if attr_col else [])
-    blocks = p.groupBy(*group_keys).applyInPandas(
-        lambda pdf: _build_shard_blocks(pdf, avgdl),
-        BLOCKS_SCHEMA if attr_col else BLOCKS_SCHEMA_BASE
-    )
-    paths.write(blocks, "blocks", mode="append", partition_by=group_keys)
-
-    # per-generation df CONTRIBUTION (load_termstats sums visible gens) —
-    # derived from the new generation's blocks only, never a full rescan
-    lo, hi = gen * n_shards, (gen + 1) * n_shards
-    gen_blocks = paths.read(spark, "blocks").where(
-        (F.col("shard_id") >= lo) & (F.col("shard_id") < hi)
-    ).select("term", "n")
-    paths.write(
-        gen_blocks.groupBy("term").agg(
-            F.sum("n").cast("long").alias("df"))
-        .withColumn("gen", F.lit(gen)),
-        "termstats", mode="append", partition_by=["gen"])
-
-    new_manifest = _manifest_from_docstats(
-        paths.read(spark, "docstats")
-        .where((F.col("shard_id") >= lo) & (F.col("shard_id") < hi)), gen)
-    paths.write(new_manifest, "manifest", mode="append",
-                partition_by=["gen"])
+    _write_gen_blocks(spark, paths,
+                      corpus_postings_arrow(corpus, attr=bool(attr_col)),
+                      avgdl, gen, n_shards, bool(attr_col))
 
     # COMMIT: publish the generation (+ the replay guard)
     _write_scalars(spark, paths, n_docs, avgdl, n_shards,
@@ -904,21 +916,6 @@ def append_index(
                                   else str(batch_id)),
                    attr_col=attr_col)
     return paths
-
-
-def _manifest_from_docstats(dt: DataFrame, gen: int) -> DataFrame:
-    return dt.groupBy("shard_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
-        _sha_xor_agg(),
-    ).select(
-        "shard_id", "n_docs",
-        F.lit(None).cast("long").alias("n_postings"),
-        F.lit(None).cast("long").alias("n_blocks"),
-        "sum_dl", "sha256_xor",
-        F.lit("ok").alias("status"), F.lit(0.0).alias("wall_time"),
-        F.lit(gen).alias("gen"),
-    )
 
 
 def delete_docs(spark: SparkSession, path: str,
@@ -954,17 +951,22 @@ def delete_docs(spark: SparkSession, path: str,
             rows = [r["doc_id"] for r in
                     paths.read(spark, "tombstones").select("doc_id")
                     .distinct().collect()]
-            paths.write(
-                spark.createDataFrame([(int(d), "legacy") for d in rows],
-                                      "doc_id long, tomb_batch string"),
-                "tombstones", mode="overwrite",
-                partition_by=["tomb_batch"])
+            paths.write(_tombstone_rows(spark, rows, "legacy"),
+                        "tombstones", mode="overwrite",
+                        partition_by=["tomb_batch"])
     batch = f"{time.time_ns():x}-{uuid.uuid4().hex[:8]}"
     paths.write(
         doc_ids.select(F.col("doc_id").cast("long")).distinct()
         .withColumn("tomb_batch", F.lit(batch)),
         "tombstones", mode="append", partition_by=["tomb_batch"],
     )
+
+
+def _tombstone_rows(spark: SparkSession, doc_ids, batch: str) -> DataFrame:
+    """(doc_id, tomb_batch) rows of one batch, as an Arrow local relation."""
+    return local_df(spark, pd.DataFrame({
+        "doc_id": np.asarray(doc_ids, dtype=np.int64),
+        "tomb_batch": batch}), TOMBSTONES_SCHEMA)
 
 
 def load_tombstones(spark: SparkSession, paths: IndexPaths):
@@ -1086,8 +1088,15 @@ def compact_index(spark: SparkSession, path: str,
     the same generation id deletes first. Retiring the merged
     generations' partitions happens post-commit and is best-effort: a
     failure there leaves dead (invisible) files, never wrong answers.
-    Decoded postings are staged to ``compact_postings`` first so the
-    blocks append never reads the table it writes.
+
+    The new generation is written by the same two steps as build and
+    append (_write_gen_docstats, then _write_gen_blocks). What is
+    compact's own: the generation-selection checks, the tombstone
+    snapshot, the ``compact_docstats`` / ``compact_postings`` staging,
+    and the retired ledger and tombstone cleanup after the commit. The
+    re-sharded (and purged) rows are staged first so the docstats and
+    blocks appends never read the table they write, and so the totals
+    are observed on the join-free staging scan, never on the anti-join.
 
     Invariants (test-asserted): query results are IDENTICAL pre/post
     (BM25 depends only on global stats, never on shard membership; with
@@ -1096,8 +1105,6 @@ def compact_index(spark: SparkSession, path: str,
     n_docs/avgdl/termstats totals and the manifest's global sha256-xor
     lineage are preserved.
     """
-    from pyspark.sql import Observation
-
     paths = IndexPaths(path)
     meta = load_meta(spark, paths)
     n_shards = int(meta["n_shards"])
@@ -1130,37 +1137,23 @@ def compact_index(spark: SparkSession, path: str,
             legacy_tombs = None in batches
             snap_batches = sorted(b for b in batches if b is not None)
     purge = tomb_arr is not None
-    tomb_df = (spark.createDataFrame([(int(d),) for d in tomb_arr],
-                                     "doc_id long") if purge else None)
+    tomb_df = (local_df(spark, pd.DataFrame({"doc_id": tomb_arr}),
+                        "doc_id long") if purge else None)
 
     new_gen = next_generation(meta)
-    lo = new_gen * n_shards
-    new_shards = list(range(lo, lo + n_shards))
-    # orphan cleanup of a previous failed attempt at this generation id
-    cat.delete_partitions("blocks", "shard_id", new_shards)
-    cat.delete_partitions("docstats", "shard_id", new_shards)
-    cat.delete_partitions("termstats", "gen", [new_gen])
-    cat.delete_partitions("manifest", "gen", [new_gen])
-
     sel_pred = shard_pred(meta, sel)
-    reshard = (F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)) + F.lit(lo)) \
-        .cast("int")
+    reshard = _gen_shard_col(n_shards, new_gen)
 
-    t0 = time.time()
     # docstats first: a full compact's purge shifts N/avgdl, and the
-    # re-blocked max_tfsat must be exact under the NEW avgdl. Totals are
-    # observed during the staging write (no separate agg job).
+    # re-blocked max_tfsat must be exact under the NEW avgdl.
     ds = paths.read(spark, "docstats").where(sel_pred) \
         .withColumn("shard_id", reshard)
     if purge:
         ds = ds.join(tomb_df, "doc_id", "left_anti")
-    obs = Observation(f"compact_totals_{new_gen}")
-    paths.write(
-        ds.observe(obs, F.count(F.lit(1)).alias("n"),
-                   F.sum("dl").alias("sum_dl")),
-        "compact_docstats", mode="overwrite")
-    sel_n = int(obs.get["n"])
-    sel_sum = int(obs.get["sum_dl"] or 0)
+    paths.write(ds, "compact_docstats", mode="overwrite")
+    sel_n, sel_sum = _write_gen_docstats(
+        spark, paths, paths.read(spark, "compact_docstats"), new_gen,
+        n_shards)
     if full:
         n_docs, sum_dl = sel_n, sel_sum
     else:
@@ -1169,9 +1162,6 @@ def compact_index(spark: SparkSession, path: str,
         sum_dl = int(meta.get("sum_dl") or
                      round(float(meta["avgdl"]) * n_docs))
     avgdl = (sum_dl / n_docs) if n_docs else 0.0
-    paths.write(paths.read(spark, "compact_docstats")
-                .repartition("shard_id"),  # one writer per shard dir
-                "docstats", mode="append", partition_by=["shard_id"])
 
     attr_mode = bool(meta.get("attr_col"))
     attr_sel = ["attr"] if attr_mode else []
@@ -1188,53 +1178,13 @@ def compact_index(spark: SparkSession, path: str,
     if purge:
         postings = postings.join(tomb_df, "doc_id", "left_anti")
     paths.write(postings, "compact_postings", mode="overwrite")
-
-    group_keys = ["shard_id"] + attr_sel
     compact_src = paths.read(spark, "compact_postings")
     if not attr_mode:
         compact_src = compact_src.drop("attr")
-    blocks = compact_src.groupBy(*group_keys).applyInPandas(
-        lambda pdf: _build_shard_blocks(pdf, avgdl),
-        BLOCKS_SCHEMA if attr_mode else BLOCKS_SCHEMA_BASE)
-    paths.write(blocks, "blocks", mode="append",
-                partition_by=group_keys)
-
-    wall = time.time() - t0
-    gen_pred = shard_pred(meta, [new_gen])
-    new_ds = paths.read(spark, "docstats").where(gen_pred)
-    new_blocks_meta = paths.read(spark, "blocks").where(gen_pred).select(
-        "shard_id", "term", "n").cache()
-    new_blocks_meta.count()
-    # termstats contribution of the merged generation (sum(n) per term is
-    # invariant under re-sharding, so a no-delete merge preserves df)
-    paths.write(
-        new_blocks_meta.groupBy("term").agg(
-            F.sum("n").cast("long").alias("df"))
-        .withColumn("gen", F.lit(new_gen)),
-        "termstats", mode="append", partition_by=["gen"])
-    block_meta = new_blocks_meta.groupBy("shard_id").agg(
-        F.sum("n").cast("long").alias("n_postings"),
-        F.count("*").alias("n_blocks"),
-    )
-    manifest = (
-        new_ds.groupBy("shard_id").agg(
-            F.count("*").alias("n_docs"),
-            F.sum("dl").cast("long").alias("sum_dl"),
-            _sha_xor_agg(),
-        )
-        .join(block_meta, "shard_id", "left")
-        .na.fill({"n_postings": 0, "n_blocks": 0})
-        .select(
-            "shard_id", "n_docs", "n_postings", "n_blocks", "sum_dl",
-            "sha256_xor",
-            F.lit("ok").alias("status"),
-            F.lit(float(wall)).alias("wall_time"),
-            F.lit(new_gen).alias("gen"),
-        )
-    )
-    paths.write(manifest, "manifest", mode="append",
-                partition_by=["gen"])
-    new_blocks_meta.unpersist()
+    # termstats contribution: sum(n) per term is invariant under
+    # re-sharding, so a no-delete merge preserves df
+    _write_gen_blocks(spark, paths, compact_src, avgdl, new_gen, n_shards,
+                      attr_mode)
 
     # COMMIT: swap the merged generations for the new one. last_batch_id
     # is kept so a committed batch replayed AFTER compaction is still
@@ -1259,8 +1209,7 @@ def compact_index(spark: SparkSession, path: str,
             for s in _gen_shards(sel, n_shards)]
     led += [("termstats", "gen", str(g), g, now_ts) for g in sel]
     led += [("manifest", "gen", str(g), g, now_ts) for g in sel]
-    paths.write(spark.createDataFrame(led, RETIRED_SCHEMA), "retired",
-                mode="append")
+    paths.write(_retired_rows(spark, led), "retired", mode="append")
     # staging has no readers — dropped immediately
     cat.drop_table("compact_postings")
     cat.drop_table("compact_docstats")
@@ -1285,13 +1234,18 @@ def compact_index(spark: SparkSession, path: str,
             remaining = sorted(d for d in cur if d not in snap)
             cat.drop_table("tombstones")
             if remaining:
-                paths.write(
-                    spark.createDataFrame(
-                        [(d, "legacy") for d in remaining],
-                        "doc_id long, tomb_batch string"),
-                    "tombstones", mode="append",
-                    partition_by=["tomb_batch"])
+                paths.write(_tombstone_rows(spark, remaining, "legacy"),
+                            "tombstones", mode="append",
+                            partition_by=["tomb_batch"])
     return paths
+
+
+def _retired_rows(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Retired-ledger tuples (RETIRED_SCHEMA order) as an Arrow local
+    relation."""
+    return local_df(spark, pd.DataFrame(
+        rows, columns=["tbl", "part_col", "part_val", "gen", "retired_at"]),
+        RETIRED_SCHEMA)
 
 
 def gc_retired(spark: SparkSession, path: str,
@@ -1331,8 +1285,8 @@ def gc_retired(spark: SparkSession, path: str,
                   r["retired_at"]) for r in rows
                  if float(r["retired_at"]) > cutoff]
     if remaining:
-        paths.write(spark.createDataFrame(remaining, RETIRED_SCHEMA),
-                    "retired", mode="overwrite")
+        paths.write(_retired_rows(spark, remaining), "retired",
+                    mode="overwrite")
     else:
         cat.drop_table("retired")
     return [(r["tbl"], r["part_col"], r["part_val"]) for r in due]

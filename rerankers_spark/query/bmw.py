@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rerankers_spark.index import varbyte as vb
-from rerankers_spark.index.spimi import IndexPaths
+from rerankers_spark.index.spimi import IndexPaths, local_df
 from rerankers_spark.operators import bm25
 from rerankers_spark.operators.topk import topk
 
@@ -493,17 +493,6 @@ TERM_PUSHDOWN_CAP = 4096
 #: unchanged — a billion-row query log never touches the driver (same
 #: size-gated adaptivity as a broadcast join).
 QT_PAIR_CAP = 16384
-
-
-def local_df(spark: SparkSession, pdf: pd.DataFrame,
-             schema: str) -> DataFrame:
-    """Small driver-side table → DataFrame via the Arrow path: the data
-    ships to the JVM as Arrow batches decoded JVM-side, so downstream
-    stages evaluate it without Python workers. createDataFrame on a
-    plain row list instead builds a pickled Python RDD whose every
-    evaluation (broadcast builds, cogroup sides) spins up a Python
-    worker — measured multi-second 1-task stages on the query path."""
-    return spark.createDataFrame(pdf, schema=schema)
 
 
 class LocalQueryPlan:

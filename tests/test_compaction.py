@@ -135,7 +135,7 @@ def test_compaction_preserves_stats_and_lineage(spark, compacted):
     assert agg["x"] == ds_x["x"]
     assert agg["sdl"] == ds_x["sdl"]
     assert man.where(F.col("status") != "ok").count() == 0
-    # per-shard block stats present (not NULL like append-generation rows)
+    # per-shard block stats present (every generation writes them)
     assert man.where(F.col("n_postings").isNull()).count() == 0
 
 
