@@ -477,15 +477,17 @@ def q_bm25_topk_filtered_bucketed(spark: SparkSession,
     hash-match the same DuckDB oracle as the broadcast path."""
     import os
 
-    from rerankers_spark.index.spimi import IndexPaths, build_index
+    from rerankers_spark.index.spimi import (IndexPaths, build_index,
+                                             reusable_index)
     from rerankers_spark.query import bmw as bmw_mod
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     idx = f"/tmp/contract_index_filt_{tag}"
     # reuse the index q_bm25_topk_filtered built for this sf_dir (the
-    # registry runs entries in dict order); build only if absent
+    # registry runs entries in dict order); build only if absent or left
+    # by a run in another block format
     paths = IndexPaths(idx)
-    if not paths.exists(spark, "scalars"):
+    if not reusable_index(spark, paths):
         corpus = documents_as_corpus(spark, sf_dir)
         paths = build_index(spark, corpus, idx, n_shards=8)
     keep = (spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -601,17 +603,19 @@ LEFT JOIN ideal i ON q.query_id = i.query_id
 
 def _contract_engine(spark: SparkSession, sf_dir: str, scorer="overlap"):
     """Engine over the shared per-sf contract index (built fresh by
-    q_bm25_topk_bmw earlier in registry order; built here if absent)."""
+    q_bm25_topk_bmw earlier in registry order; built here if absent or
+    left by a run in another block format)."""
     import os
     import shutil
 
-    from rerankers_spark.index.spimi import IndexPaths, build_index
+    from rerankers_spark.index.spimi import (IndexPaths, build_index,
+                                             reusable_index)
     from rerankers_spark.query.executor import Engine
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     idx = f"/tmp/contract_index_{tag}"
     paths = IndexPaths(idx)
-    if not paths.exists(spark, "scalars"):
+    if not reusable_index(spark, paths):
         shutil.rmtree(idx, ignore_errors=True)
         build_index(spark, documents_as_corpus(spark, sf_dir), idx,
                     n_shards=8)

@@ -20,14 +20,27 @@ At 100 TB, ``n_shards`` is sized so one shard's postings fit a task
 (~10k shards for 10^12 docs); locally we default to a small multiple of
 cores.
 
-Block format (FIXTURES.md §4): ≤128 postings per block, doc_id-ascending;
-``docs_vb`` = varbyte(delta(doc_ids)) anchored at ``first_doc``;
-``tfs_vb`` / ``dls_vb`` = varbyte(raw tf / doc-length). Storing dl in the
-block lets query-time scoring recompute EXACT float64 BM25 (tf, dl,
-global avgdl, idf) with no docstats join; ``max_tfsat`` is the exact
-per-block max of the tf-saturation factor (idf-independent, so term
-statistics are only needed at query time, broadcast-joined onto query
-terms).
+Block format 2 (FIXTURES.md §4). Postings address docs by ORDINAL: a
+doc's ordinal is the rank of its doc_id (signed int64 order) among the
+docs of its block-build group — a shard, or a (shard, attr) pair — that
+have at least one posting, so ordinal order is doc_id order. Posting
+rows: ≤128 postings per block, ordinal-ascending; ``first_doc`` /
+``last_doc`` are ordinals and ``docs_vb`` = varbyte(delta(ordinals))
+anchored at ``first_doc`` — dense ordinals make the gaps 1-2 bytes where
+random full-range doc ids took ~8. ``tfs_vb`` / ``dls_vb`` = varbyte(raw
+tf / doc-length). Storing dl in the block lets query-time scoring
+recompute EXACT float64 BM25 (tf, dl, global avgdl, idf) with no
+docstats join; ``max_tfsat`` is the exact per-block max of the
+tf-saturation factor (idf-independent, so term statistics are only
+needed at query time, broadcast-joined onto query terms). Each group's
+DOCMAP (ordinal → doc_id) lives in the same table under the reserved
+term ``DOCMAP_TERM``: rows of at most ``DOCMAP_ROW_IDS`` sorted doc ids,
+``docs_vb`` = their biased varbyte deltas anchored at ``first_doc``,
+``n`` = their count. This module owns the format both ways: the build
+(_build_shard_blocks) and the decode (split_docmap, ordinals_of,
+decode_group); the scalars commit records ``block_format`` and every
+reader rejects an index written in any other format
+(check_block_format).
 
 Lineage (input_hint): docstats carries per-row ``content_sha256``; the
 manifest aggregates row counts and an order-independent XOR fingerprint
@@ -57,11 +70,11 @@ from __future__ import annotations
 
 import time
 from concurrent.futures import ThreadPoolExecutor
-from typing import Iterable
 
 import numpy as np
 import pandas as pd
 from py4j.protocol import Py4JJavaError
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -70,6 +83,14 @@ from rerankers_spark.index import varbyte as vb
 from rerankers_spark.operators import bm25
 
 BLOCK_SIZE = 128
+
+#: the block format this module writes and reads, recorded in scalars
+#: (``block_format``) by every commit
+BLOCK_FORMAT = 2
+#: the reserved term of docmap rows — the tokenizer never emits ""
+DOCMAP_TERM = ""
+#: doc ids per docmap row, so no binary cell grows with the shard
+DOCMAP_ROW_IDS = 4096
 
 BLOCKS_SCHEMA_BASE = (
     "shard_id int, term string, block_id int, first_doc long, last_doc long, "
@@ -206,16 +227,17 @@ def corpus_postings_arrow(corpus_with_shard: DataFrame,
 def _build_shard_blocks(
     pdf: pd.DataFrame, avgdl: float
 ) -> pd.DataFrame:
-    """One group's (term, doc_id, tf, dl) rows → block rows. A group is
+    """One group's (term, doc_id, tf, dl) rows → its docmap rows plus its
+    posting block rows (block format 2, module docstring). A group is
     one shard — or one (shard, attr) pair for an attribute-partitioned
     index (build_index attr_col), in which case every input row shares
-    one ``attr`` value that is stamped onto the block rows.
+    one ``attr`` value that is stamped onto every row.
 
-    Fully vectorized across the whole shard: block boundaries, per-block
-    aggregates (reduceat) and the three varbyte streams are each ONE
-    numpy pass; per-block work is just byte-slicing. (The earlier
-    per-block formulation made ~8 tiny numpy calls per block — 3M calls
-    per 50k-doc build — and dominated build wall time.)"""
+    Fully vectorized across the whole shard: ordinals, block boundaries,
+    per-block aggregates (reduceat) and the three varbyte streams are
+    each ONE numpy pass; per-block work is just byte-slicing. (The
+    earlier per-block formulation made ~8 tiny numpy calls per block —
+    3M calls per 50k-doc build — and dominated build wall time.)"""
     has_attr = "attr" in pdf.columns
     cols = ("shard_id", "term", "block_id", "first_doc", "last_doc", "n",
             "docs_vb", "tfs_vb", "dls_vb", "max_tfsat", "max_tf", "min_dl",
@@ -230,14 +252,15 @@ def _build_shard_blocks(
     # concurrent shard tasks (measured: the blocks stage at 0.32 scaling
     # efficiency local[2]->[8]); strings are touched only at block
     # boundaries below. factorize(sort=True) orders codes by the same
-    # python-str comparison sort_values used, so block output is
-    # byte-identical.
+    # python-str comparison sort_values used.
     codes, uniques = pd.factorize(pdf["term"], sort=True)
     codes = codes.astype(np.int64)
-    docs_u = pdf["doc_id"].to_numpy(dtype=np.int64)
-    order = np.lexsort((docs_u, codes))
+    # the docmap (ordinal → doc_id) and each posting's ordinal
+    doc_map, ords = np.unique(pdf["doc_id"].to_numpy(dtype=np.int64),
+                              return_inverse=True)
+    order = np.lexsort((ords, codes))
     codes = codes[order]
-    docs = docs_u[order]
+    docs = ords.reshape(-1)[order].astype(np.int64)
     tfs = pdf["tf"].to_numpy(dtype=np.int64)[order]
     dls = pdf["dl"].to_numpy(dtype=np.int64)[order]
     n = len(docs)
@@ -257,15 +280,14 @@ def _build_shard_blocks(
     max_tfsat = np.maximum.reduceat(sat, bstart)
     max_tf = np.maximum.reduceat(tfs, bstart)
     min_dl = np.minimum.reduceat(dls, bstart)
-    first_doc = docs[bstart]
-    last_doc = docs[bend - 1]
 
-    # doc-id deltas (biased uint64; anchor = block's first doc → delta 0)
-    u = docs.astype(np.uint64) ^ (np.uint64(1) << np.uint64(63))
-    prev = np.empty_like(u)
-    prev[1:] = u[:-1]
-    prev[bstart] = u[bstart]
-    d_buf, d_len = vb.encode_with_lengths(u - prev)
+    # ordinal deltas (anchor = block's first ordinal → delta 0): the
+    # bytes varbyte.delta_encode(block, first_doc) writes, for all
+    # blocks in one pass
+    prev = np.empty_like(docs)
+    prev[1:] = docs[:-1]
+    prev[bstart] = docs[bstart]
+    d_buf, d_len = vb.encode_with_lengths(docs - prev)
     t_buf, t_len = vb.encode_with_lengths(tfs)
     l_buf, l_len = vb.encode_with_lengths(dls)
 
@@ -275,13 +297,13 @@ def _build_shard_blocks(
         v_start = ends[bstart] - lens[bstart]
         return [buf[a:b] for a, b in zip(v_start, v_end)]
 
-    return pd.DataFrame(
+    postings = pd.DataFrame(
         {
             "shard_id": np.full(len(bstart), shard_id, dtype=np.int32),
             "term": np.asarray(uniques, dtype=object)[codes[bstart]],
             "block_id": (pos_in_run[bstart] // BLOCK_SIZE).astype(np.int32),
-            "first_doc": first_doc,
-            "last_doc": last_doc,
+            "first_doc": docs[bstart],
+            "last_doc": docs[bend - 1],
             "n": (bend - bstart).astype(np.int32),
             "docs_vb": _slices(d_buf, d_len),
             "tfs_vb": _slices(t_buf, t_len),
@@ -293,16 +315,106 @@ def _build_shard_blocks(
             "max_tfsat": max_tfsat,
             "max_tf": max_tf,
             "min_dl": min_dl,
-            **({"attr": np.full(len(bstart), attr_val, dtype=object)}
-               if has_attr else {}),
         }
     )
+    m_lo = np.arange(0, len(doc_map), DOCMAP_ROW_IDS)
+    m_hi = np.minimum(m_lo + DOCMAP_ROW_IDS, len(doc_map))
+    docmap = pd.DataFrame(
+        {
+            "shard_id": np.full(len(m_lo), shard_id, dtype=np.int32),
+            "term": DOCMAP_TERM,
+            "block_id": np.arange(len(m_lo), dtype=np.int32),
+            "first_doc": doc_map[m_lo],
+            "last_doc": doc_map[m_hi - 1],
+            "n": (m_hi - m_lo).astype(np.int32),
+            "docs_vb": [vb.delta_encode(doc_map[a:b], int(doc_map[a]))
+                        for a, b in zip(m_lo, m_hi)],
+            "tfs_vb": b"",
+            "dls_vb": b"",
+            "max_tfsat": 0.0,
+            "max_tf": np.int64(0),
+            "min_dl": np.int64(0),
+        }
+    )
+    out = pd.concat([docmap, postings], ignore_index=True)
+    if has_attr:
+        out["attr"] = attr_val
+    return out
 
 
-def decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(doc_ids, tfs, dls) for one block row (Row or dict-like)."""
-    docs = vb.delta_decode(row["docs_vb"], base=int(row["first_doc"]))
-    return docs, vb.decode(row["tfs_vb"]), vb.decode(row["dls_vb"])
+def check_block_format(meta: dict, root: str) -> None:
+    """Reject an index whose scalars commit does not record this
+    module's BLOCK_FORMAT — driver-side, before any Spark job, so no
+    reader ever decodes bytes of another format."""
+    fmt = meta.get("block_format")
+    if fmt != BLOCK_FORMAT:
+        raise ValueError(
+            f"index {root} was written in block format {fmt or 1}; this "
+            f"version reads block format {BLOCK_FORMAT} only — rebuild "
+            f"the index with build_index")
+
+
+def reusable_index(spark: SparkSession, paths: "IndexPaths") -> bool:
+    """True for a committed index in this module's block format — for
+    callers that reuse an on-disk index across runs and rebuild it
+    otherwise."""
+    return paths.exists(spark, "scalars") and load_meta(
+        spark, paths).get("block_format") == BLOCK_FORMAT
+
+
+def split_docmap(pdf: pd.DataFrame) -> tuple[pd.DataFrame, np.ndarray]:
+    """One group's block rows → (its posting rows, its docmap: the
+    group's sorted doc ids, indexed by ordinal). A group whose rows hold
+    postings but no docmap is not block format 2 and raises."""
+    is_map = (pdf["term"] == DOCMAP_TERM).to_numpy()
+    postings = pdf[~is_map]
+    if not is_map.any():
+        if len(postings):
+            raise ValueError(
+                "block group has postings but no docmap rows — the index "
+                "is not block format 2; rebuild it with build_index")
+        return postings, np.empty(0, dtype=np.int64)
+    maps = pdf[is_map]
+    o = np.argsort(maps["block_id"].to_numpy(), kind="stable")
+    doc_map, _ = vb.delta_decode_blocks(
+        maps["docs_vb"].to_numpy(dtype=object)[o],
+        maps["first_doc"].to_numpy(dtype=np.int64)[o])
+    return postings, doc_map
+
+
+def ordinals_of(doc_map: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """Ordinals of the docmap's doc ids that are in ``ids`` (sorted
+    int64), ascending — how tombstones and keep-lists reach a kernel that
+    sees ordinals."""
+    if len(ids) == 0 or len(doc_map) == 0:
+        return np.empty(0, dtype=np.int64)
+    pos = np.minimum(np.searchsorted(ids, doc_map), len(ids) - 1)
+    return np.flatnonzero(ids[pos] == doc_map)
+
+
+#: decode_group's output schema (plus ``attr string`` on attr indexes)
+DECODED_SCHEMA = "term string, doc_id long, dl long, tf long"
+
+
+def decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One group's block rows → its raw (term, doc_id, dl, tf[, attr])
+    posting rows: the inverse of _build_shard_blocks, numpy over the
+    whole group. The group's ``attr`` (attribute-partitioned indexes) is
+    repeated per posting when the input carries it."""
+    postings, doc_map = split_docmap(pdf)
+    ords, counts = vb.delta_decode_blocks(
+        postings["docs_vb"].to_numpy(dtype=object),
+        postings["first_doc"].to_numpy(dtype=np.int64))
+    out = {
+        "term": np.repeat(postings["term"].to_numpy(dtype=object), counts),
+        "doc_id": doc_map[ords],
+        "dl": vb.decode_many(postings["dls_vb"].to_numpy(dtype=object))[0],
+        "tf": vb.decode_many(postings["tfs_vb"].to_numpy(dtype=object))[0],
+    }
+    if "attr" in pdf.columns:
+        out["attr"] = np.repeat(postings["attr"].to_numpy(dtype=object),
+                                counts)
+    return pd.DataFrame(out)
 
 
 class IndexPaths:
@@ -427,7 +539,10 @@ def shard_pred(meta: dict, gens: list[int] | None = None):
 
 def load_blocks(spark: SparkSession, paths: IndexPaths,
                 meta: dict) -> DataFrame:
-    """The committed block set (orphan/retired generations filtered)."""
+    """The committed block set (orphan/retired generations filtered):
+    posting rows and docmap rows. Rejects an index of another block
+    format before any Spark job."""
+    check_block_format(meta, paths.root)
     return paths.read(spark, "blocks").where(shard_pred(meta))
 
 
@@ -529,22 +644,25 @@ def _write_gen_blocks(spark: SparkSession, paths: IndexPaths,
                       skip: set[int] | frozenset[int] = frozenset()
                       ) -> None:
     """Step 2 of a generation write: build and append generation
-    ``gen``'s blocks from ``postings`` (shard_id, term, doc_id, dl, tf
-    [, attr]) under ``avgdl``, then derive its termstats contribution and
-    manifest rows from the written blocks. ``skip``: shard ids whose
-    blocks are already complete (build_index resume) — their partitions
-    are kept, and ``postings`` must not contain them.
+    ``gen``'s blocks (docmap and posting rows) from ``postings``
+    (shard_id, term, doc_id, dl, tf[, attr]) under ``avgdl``, then
+    derive its termstats contribution and manifest rows from the written
+    posting rows. ``skip``: shard ids whose blocks are already complete
+    (build_index resume) — their partitions are kept, and ``postings``
+    must not contain them.
 
     The two independent aggs+writes run concurrently on a threaded
     scheduler (separate concurrent jobs sharing the executor pool on a
     real cluster), each over its own scan of the generation's block
     metadata columns (shard_id, term, n — partition- and column-pruned,
-    the binary payloads are never read). A cached shared scan was
-    measured worse: its materialization added one or two (racing) Spark
-    jobs per generation write. The manifest rows carry per-shard
-    n_docs/sum_dl/sha256_xor from the generation's docstats,
-    n_postings/n_blocks from its blocks, and the measured block-build
-    wall time."""
+    the binary payloads are never read). Both threads run under the
+    caller's job group and local properties (inheritable_thread_target),
+    so a traced or cancelled job group covers their jobs. A cached
+    shared scan was measured worse: its materialization added one or
+    two (racing) Spark jobs per generation write. The manifest rows
+    carry per-shard n_docs/sum_dl/sha256_xor from the generation's
+    docstats, n_postings/n_blocks from its posting rows, and the
+    measured block-build wall time."""
     cat = paths.catalog(spark)
     cat.delete_partitions(
         "blocks", "shard_id",
@@ -561,8 +679,9 @@ def _write_gen_blocks(spark: SparkSession, paths: IndexPaths,
     wall = time.time() - t0
 
     in_gen = shard_pred({"n_shards": n_shards}, [gen])
-    blocks_meta = paths.read(spark, "blocks").where(in_gen).select(
-        "shard_id", "term", "n")
+    blocks_meta = (paths.read(spark, "blocks")
+                   .where(in_gen & (F.col("term") != DOCMAP_TERM))
+                   .select("shard_id", "term", "n"))
 
     def _write_termstats():
         paths.write(
@@ -602,9 +721,10 @@ def _write_gen_blocks(spark: SparkSession, paths: IndexPaths,
 
     # the context manager propagates the FIRST failure and tears the pool
     # down even when a stage throws
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(_write_termstats),
-                  pool.submit(_write_manifest)]:
+        for f in [pool.submit(inherit(_write_termstats)),
+                  pool.submit(inherit(_write_manifest))]:
             f.result()
 
 
@@ -628,6 +748,8 @@ def build_index(
     ok (only missing shards are rebuilt) and reuses committed docstats
     totals. termstats and manifest are always re-derived over all of
     generation 0. The scalars row is written LAST (the commit point).
+    A resume rejects a committed index of another block format, and a
+    done shard without a docmap row is rebuilt.
 
     attr_col: optional metadata column (e.g. ``lang``, ``repo``) that
     becomes a PHYSICAL partition column of the blocks table — the
@@ -643,11 +765,17 @@ def build_index(
     """
     paths = IndexPaths(path)
     done: set[int] = set()
-    if resume and paths.exists(spark, "manifest"):
+    if resume and paths.exists(spark, "scalars"):
+        check_block_format(load_meta(spark, paths), path)
+    if resume and paths.exists(spark, "manifest") \
+            and paths.exists(spark, "blocks"):
         done = {
             r["shard_id"]
             for r in paths.read(spark, "manifest")
             .where(F.col("status") == "ok")
+            .join(paths.read(spark, "blocks")
+                  .where(F.col("term") == DOCMAP_TERM)
+                  .select("shard_id").distinct(), "shard_id")
             .select("shard_id")
             .collect()
         }
@@ -707,7 +835,7 @@ def _scalars_local_dir(paths: IndexPaths) -> str | None:
 SCALARS_SCHEMA = (
     "n_docs long, avgdl double, n_shards int, generation int, "
     "sum_dl long, last_batch_id string, visible_gens string, "
-    "next_gen int, attr_col string")
+    "next_gen int, attr_col string, block_format int")
 
 
 def _read_scalars_local(paths: IndexPaths) -> dict | None:
@@ -752,7 +880,7 @@ def _write_scalars_local(paths: IndexPaths, row: tuple) -> bool:
     import pyarrow.parquet as pq
 
     (n_docs, avgdl, n_shards, generation, sum_dl, last_batch_id,
-     visible_gens, next_gen, attr_col) = row
+     visible_gens, next_gen, attr_col, block_format) = row
     table = pa.table({
         "n_docs": pa.array([n_docs], pa.int64()),
         "avgdl": pa.array([avgdl], pa.float64()),
@@ -763,6 +891,7 @@ def _write_scalars_local(paths: IndexPaths, row: tuple) -> bool:
         "visible_gens": pa.array([visible_gens], pa.string()),
         "next_gen": pa.array([next_gen], pa.int32()),
         "attr_col": pa.array([attr_col], pa.string()),
+        "block_format": pa.array([block_format], pa.int32()),
     })
     os.makedirs(d, exist_ok=True)
     tmp = f"{d}/.tmp-{uuid.uuid4().hex}.parquet"
@@ -792,14 +921,15 @@ def _write_scalars(spark: SparkSession, paths: IndexPaths, n_docs: int,
     modes off and maintenance keys merge policy off — while
     ``visible_gens`` carries the actual ids. sum_dl makes incremental
     avgdl updates exact (no float drift); last_batch_id is the
-    streaming replay guard."""
+    streaming replay guard; block_format is this module's BLOCK_FORMAT,
+    which every reader checks (check_block_format)."""
     if sum_dl is None:
         sum_dl = int(round(avgdl * n_docs))
     visible_gens = sorted(visible_gens)
     generation = len(visible_gens) - 1
     row = (n_docs, avgdl, n_shards, generation, sum_dl, last_batch_id,
            ",".join(str(g) for g in visible_gens), int(next_gen),
-           attr_col)
+           attr_col, BLOCK_FORMAT)
     if _write_scalars_local(paths, row):
         return
     df = spark.createDataFrame([row], SCALARS_SCHEMA).coalesce(1)
@@ -820,16 +950,20 @@ def load_meta(spark: SparkSession, paths: IndexPaths) -> dict:
 
 def index_stats(spark: SparkSession, paths: IndexPaths) -> dict:
     """Diagnostics: compressed block bytes vs raw posting bytes (a
-    posting is 3 int64s uncompressed: doc_id, tf, dl). This scans the
+    posting is 3 int64s uncompressed: doc_id, tf, dl). ``n_postings`` /
+    ``n_blocks`` count posting rows only; ``vb_bytes`` is every varbyte
+    byte, the docmap's (``docmap_bytes``) included. This scans the
     binary columns — a deliberate full read for reporting, NOT on any
     query path (query-path scans prune binaries via column projection)."""
     meta = load_meta(spark, paths)
+    is_post = F.col("term") != DOCMAP_TERM
     r = load_blocks(spark, paths, meta).agg(
         F.sum(
             F.length("docs_vb") + F.length("tfs_vb") + F.length("dls_vb")
         ).alias("vb_bytes"),
-        F.sum("n").cast("long").alias("n_postings"),
-        F.count("*").alias("n_blocks"),
+        F.sum(F.when(~is_post, F.length("docs_vb"))).alias("docmap_bytes"),
+        F.sum(F.when(is_post, F.col("n"))).cast("long").alias("n_postings"),
+        F.count(F.when(is_post, 1)).alias("n_blocks"),
     ).collect()[0]
     raw_bytes = 24 * int(r["n_postings"] or 0)
     vb_bytes = int(r["vb_bytes"] or 0)
@@ -840,6 +974,7 @@ def index_stats(spark: SparkSession, paths: IndexPaths) -> dict:
         "n_postings": int(r["n_postings"] or 0),
         "n_blocks": int(r["n_blocks"] or 0),
         "vb_bytes": vb_bytes,
+        "docmap_bytes": int(r["docmap_bytes"] or 0),
         "raw_bytes": raw_bytes,
         "compression_ratio": round(raw_bytes / vb_bytes, 3)
         if vb_bytes else None,
@@ -890,6 +1025,7 @@ def append_index(
     """
     paths = IndexPaths(path)
     meta = load_meta(spark, paths)
+    check_block_format(meta, path)
     n_shards = int(meta["n_shards"])
     vis = visible_generations(meta)
     gen = next_generation(meta)
@@ -989,39 +1125,6 @@ def load_tombstones(spark: SparkSession, paths: IndexPaths):
     return arr
 
 
-def _decode_blocks_map(batches: Iterable[pd.DataFrame]
-                       ) -> Iterable[pd.DataFrame]:
-    """Block rows → raw (term, doc_id, dl, tf[, attr]) posting rows
-    (shard_id is re-derived downstream). Inverse of _build_shard_blocks,
-    numpy per block, one concat per Arrow batch; the block's ``attr``
-    (attribute-partitioned indexes) is repeated per posting when the
-    input carries it."""
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        has_attr = "attr" in pdf.columns
-        terms, docs, tfs, dls, attrs = [], [], [], [], []
-        for row in pdf.itertuples(index=False):
-            d = vb.delta_decode(row.docs_vb, base=int(row.first_doc))
-            terms.append(np.repeat(np.array([row.term], dtype=object),
-                                   len(d)))
-            docs.append(d)
-            tfs.append(vb.decode(row.tfs_vb))
-            dls.append(vb.decode(row.dls_vb))
-            if has_attr:
-                attrs.append(np.repeat(np.array([row.attr], dtype=object),
-                                       len(d)))
-        out = {
-            "term": np.concatenate(terms),
-            "doc_id": np.concatenate(docs).astype(np.int64),
-            "dl": np.concatenate(dls).astype(np.int64),
-            "tf": np.concatenate(tfs).astype(np.int64),
-        }
-        if has_attr:
-            out["attr"] = np.concatenate(attrs)
-        yield pd.DataFrame(out)
-
-
 def plan_tiered_merge(spark: SparkSession, paths: IndexPaths,
                       max_generations: int = 4) -> list[int] | None:
     """Maintenance policy (Lucene TieredMergePolicy shape): when more
@@ -1059,8 +1162,10 @@ def compact_index(spark: SparkSession, path: str,
     is only rewritten when a full compact is explicitly requested).
 
     Index-only: postings are recovered by DECODING the selected
-    generations' blocks — the corpus is never re-read or re-tokenized
-    (at scale the compressed index is ~8× smaller than the text). Rows
+    generations' blocks, one block-build group at a time through its
+    docmap (decode_group) — the corpus is never re-read or re-tokenized
+    (at scale the compressed index is several times smaller than the
+    text). Rows
     re-shard by ``pmod(xxhash64(doc_id), n_shards)`` into the NEW
     generation's shard range and re-block under the current global
     avgdl. After a FULL compact exactly one generation is visible, so
@@ -1107,6 +1212,7 @@ def compact_index(spark: SparkSession, path: str,
     """
     paths = IndexPaths(path)
     meta = load_meta(spark, paths)
+    check_block_format(meta, path)
     n_shards = int(meta["n_shards"])
     cat = paths.catalog(spark)
     vis = visible_generations(meta)
@@ -1167,11 +1273,11 @@ def compact_index(spark: SparkSession, path: str,
     attr_sel = ["attr"] if attr_mode else []
     postings = (
         paths.read(spark, "blocks").where(sel_pred)
-        .select("term", "first_doc", "docs_vb", "tfs_vb", "dls_vb",
-                *attr_sel)
-        .mapInPandas(_decode_blocks_map,
-                     "term string, doc_id long, dl long, tf long"
-                     + (", attr string" if attr_mode else ""))
+        .select("shard_id", "term", "block_id", "first_doc", "docs_vb",
+                "tfs_vb", "dls_vb", *attr_sel)
+        .groupBy("shard_id", *attr_sel)
+        .applyInPandas(decode_group, DECODED_SCHEMA
+                       + (", attr string" if attr_mode else ""))
         .withColumn("shard_id", reshard)
         .select("shard_id", "term", "doc_id", "dl", "tf", *attr_sel)
     )

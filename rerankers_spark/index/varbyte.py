@@ -1,9 +1,10 @@
 """Varbyte codec for posting blocks (frozen spec, FIXTURES.md §4).
 
 Encoding: little-endian base-128; 7 payload bits per byte, MSB set means
-"continuation" (more bytes follow). Doc ids are delta-coded: deltas
-against the previous id, with the block's first delta taken against the
-block's ``first_doc`` base stored in block metadata (see spimi.py).
+"continuation" (more bytes follow). Ids — posting ordinals and docmap
+doc ids (spimi.py, block format 2) — are delta-coded: deltas against the
+previous id, with the block's first delta taken against the block's
+``first_doc`` base stored in block metadata.
 
 Vectorized with numpy: encode/decode operate on whole int64 arrays with
 no per-element Python. These run INSIDE Arrow UDFs, so the per-batch

@@ -16,6 +16,13 @@ element work stays inside numpy: the per-query Python loops it replaced
 (doc-at-a-time WAND, a per-term groupby) measured 8-24× slower per task
 on 1k-25k-doc shards, single-threaded on a 4-core x86 host.
 
+Block rows address docs by shard-local ordinal (spimi block format 2).
+Each group's docmap rows ride the cogroup with its posting rows; the
+kernel scores ordinals, and bmw_topk's task body maps tombstones and
+keep-lists into ordinals and the kernel's output back to doc ids
+through the spimi decode helpers. Ordinal order is doc_id order, so the
+(score desc, doc_id asc) tie-break is unchanged.
+
 Block-max WAND (Ding & Suel, "Faster Top-k Document Retrieval Using
 Block-Max Indexes", SIGIR 2011) stays as wand_topk_shard(n_docs_shard=0):
 the reference the property tests hold the scan to and the skipping
@@ -42,7 +49,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rerankers_spark.index import varbyte as vb
-from rerankers_spark.index.spimi import IndexPaths, local_df
+from rerankers_spark.index.spimi import (
+    DOCMAP_TERM,
+    IndexPaths,
+    local_df,
+    ordinals_of,
+    split_docmap,
+)
 from rerankers_spark.operators import bm25
 from rerankers_spark.operators.topk import topk
 
@@ -663,6 +676,7 @@ def bmw_topk(
     """
     from rerankers_spark.index.spimi import (
         _gen_shards,
+        load_blocks,
         load_meta,
         load_tombstones,
         visible_generations,
@@ -670,6 +684,9 @@ def bmw_topk(
 
     if meta is None:
         meta = load_meta(spark, paths)
+    if blocks is None:
+        # first, so an index of another block format fails before any job
+        blocks = load_blocks(spark, paths, meta)
     if isinstance(tomb_bc, str) and tomb_bc == "load":
         tomb = load_tombstones(spark, paths)
         tomb_bc = (spark.sparkContext.broadcast(tomb)
@@ -737,10 +754,6 @@ def bmw_topk(
     def _bucket_col():
         return F.pmod(F.xxhash64("query_id"), F.lit(n_buckets)).cast("int")
 
-    if blocks is None:
-        from rerankers_spark.index.spimi import load_blocks
-
-        blocks = load_blocks(spark, paths, meta)
     attr_mode = bool(meta.get("attr_col"))
     if attr_values is not None:
         if not attr_mode:
@@ -753,12 +766,19 @@ def bmw_topk(
         # the parquet scan (PartitionFilters, asserted in tests)
         blocks = blocks.where(F.col("attr").isin(attr_values))
     if push_terms is not None:
-        blocks = blocks.where(F.col("term").isin(push_terms))
+        blocks = blocks.where(
+            F.col("term").isin(push_terms + [DOCMAP_TERM]))
 
-    # blocks → (shard_id, bucket) groups: a block row is replicated to
-    # exactly the buckets whose queries use its term.
-    bucket_terms = qt.select(_bucket_col().alias("bucket"),
-                             "term").distinct()
+    # blocks → (shard_id, bucket) groups: a posting row is replicated to
+    # exactly the buckets whose queries use its term, a docmap row to
+    # every bucket (a literal relation, so the over-cap path does not
+    # evaluate the query subplan once more for it).
+    docmap_buckets = local_df(
+        spark, pd.DataFrame({"bucket": np.arange(n_buckets, dtype=np.int32),
+                             "term": DOCMAP_TERM}),
+        "bucket int, term string")
+    bucket_terms = qt.select(_bucket_col().alias("bucket"), "term") \
+        .distinct().unionByName(docmap_buckets)
     blocks_b = blocks.join(F.broadcast(bucket_terms), "term")
 
     # queries → every shard (shard results are doc-disjoint and merge
@@ -784,8 +804,6 @@ def bmw_topk(
             # would otherwise share its plan subtree with the cogroup's
             # block side → ambiguous-self-join analysis error. Reads
             # only the two partition columns (footer-level scan).
-            from rerankers_spark.index.spimi import load_blocks
-
             side_df = (load_blocks(spark, paths, meta)
                        .select("shard_id", "attr").distinct())
     else:
@@ -853,12 +871,22 @@ def bmw_topk(
                 qpdf = qpdf[~km]
             else:
                 keep_local = np.array([], dtype=np.int64)
-        return scan_topk_shard(
-            bpdf, qpdf["query_id"].to_numpy(dtype=np.int64),
+        if len(bpdf) == 0 or len(qpdf) == 0:
+            return _empty_topk()
+        # the kernel sees ordinals: tombstones and the keep-list map in
+        # through the group's docmap, its output ordinals map back out
+        postings, doc_map = split_docmap(bpdf)
+        deleted = tomb_bc.value if tomb_bc is not None else None
+        out = scan_topk_shard(
+            postings, qpdf["query_id"].to_numpy(dtype=np.int64),
             qpdf["term"].to_numpy(dtype=object),
             qpdf["idf"].to_numpy(dtype=np.float64), k, avgdl,
-            deleted=tomb_bc.value if tomb_bc is not None else None,
-            keep=keep_local)
+            deleted=None if deleted is None
+            else ordinals_of(doc_map, deleted),
+            keep=None if keep_local is None
+            else ordinals_of(doc_map, keep_local))
+        out["doc_id"] = doc_map[out["doc_id"].to_numpy(dtype=np.int64)]
+        return out
 
     local = blocks_b.groupby(*group_keys).cogroup(
         q_side.groupby(*group_keys)

@@ -143,15 +143,18 @@ class Engine:
         )
 
         if self._meta is None:
-            self._meta = load_meta(self.spark, self.paths)
+            meta = load_meta(self.spark, self.paths)
             # visibility-filtered views: rows of uncommitted (failed
             # append) or retired (compacted-away) generations are
-            # excluded — see spimi.visible_generations. termstats is
-            # persisted: its per-generation aggregation would otherwise
-            # re-run inside every query job that joins it.
+            # excluded — see spimi.visible_generations. Blocks first:
+            # load_blocks rejects an index of another block format
+            # before any Spark job. termstats is persisted: its
+            # per-generation aggregation would otherwise re-run inside
+            # every query job that joins it.
+            self._blocks = load_blocks(self.spark, self.paths, meta)
             self._termstats = load_termstats(self.spark, self.paths,
-                                             self._meta).persist()
-            self._blocks = load_blocks(self.spark, self.paths, self._meta)
+                                             meta).persist()
+            self._meta = meta
         if isinstance(self._tomb_bc, str):
             tomb = load_tombstones(self.spark, self.paths)
             self._tomb_bc = (
@@ -295,12 +298,12 @@ class Engine:
         """
         if mode not in self.MODES:
             raise ValueError(f"unknown mode {mode!r}")
+        meta, termstats, blocks = self._handles()
         keep_mode, keep_bc = (self._keep_entry(doc_filter)
                               if doc_filter is not None
                               else ("broadcast", None))
         if local_plan is None:
             local_plan = self._query_plan(queries)
-        meta, termstats, blocks = self._handles()
         return bmw.bmw_topk(self.spark, queries, self.paths, k=k,
                             meta=meta, termstats=termstats,
                             blocks=blocks, keep_docs=doc_filter,

@@ -1,6 +1,6 @@
-"""Warm long-lived-Engine throughput on the 800k bench corpus (VERDICT
-r4 #5: track the 800k two-stage 2k-query row every round — the sf0.1
-driver phase is scheduling-floor-dominated and can't see regressions).
+"""Warm long-lived-Engine throughput on a bench corpus (VERDICT r4 #5:
+track the two-stage 2k-query row every round — the sf0.1 driver phase is
+scheduling-floor-dominated and can't see regressions).
 
 Builds the index ONCE, then measures a long-lived Engine (cached
 meta/termstats/blocks handles + tombstone broadcast) the way a serving
@@ -18,10 +18,15 @@ later phases run on an Engine already warmed by the earlier ones
 (cached handles, per-task decoded-block caches), so their cold_sec
 understates a fresh Engine's first call.
 
-Env: WARM_CORPUS_DIR (default /tmp/sfbench800k), WARM_N_DOCS (800000),
-SPARK_GRAFT_CPUS (8), BENCH_RAMDISK=1 respected like bench.py;
-WARM_REBUILD=1 forces a fresh index build even if one exists (set it
-after any index-format or build-code change between rounds).
+Env: WARM_N_DOCS (default 150000, sized for a 4-core, 15 GB host; the
+round-5/6 rows in BENCH_SCALING.md used 800000 on a 32-core VM),
+WARM_CORPUS_DIR (default /tmp/sfbench<N>), SPARK_GRAFT_CPUS (default: the
+CPUs this process may run on, as nproc counts them), BENCH_RAMDISK=1
+respected like bench.py. An on-disk index from an earlier run is reused
+only when its scalars record the current block format
+(spimi.BLOCK_FORMAT); otherwise it is rebuilt. WARM_REBUILD=1 forces a
+fresh build anyway (set it after a build-code change that keeps the
+format).
 """
 
 from __future__ import annotations
@@ -36,15 +41,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import synthetic_queryset  # noqa: E402
 from rerankers_spark.corpus import documents_as_corpus  # noqa: E402
+from rerankers_spark.index import spimi  # noqa: E402
 from rerankers_spark.query.executor import Engine  # noqa: E402
 from rerankers_spark.session import get_spark  # noqa: E402
 from scripts.make_bench_corpus import main as make_corpus  # noqa: E402
 
 
 def main() -> None:
-    corpus_dir = os.environ.get("WARM_CORPUS_DIR", "/tmp/sfbench800k")
-    n_docs = int(os.environ.get("WARM_N_DOCS", "800000"))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    n_docs = int(os.environ.get("WARM_N_DOCS", "150000"))
+    corpus_dir = os.environ.get("WARM_CORPUS_DIR",
+                                f"/tmp/sfbench{n_docs // 1000}k")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
 
     make_corpus(n_docs, corpus_dir)
     index_root = "/tmp/warm_index"
@@ -63,9 +71,8 @@ def main() -> None:
         f"corpus dir from an earlier run with a different size; remove "
         f"it or point WARM_CORPUS_DIR elsewhere")
     index_path = f"{index_root}_{n}_{cpus}"
-    if os.environ.get("WARM_REBUILD") == "1":
-        shutil.rmtree(index_path, ignore_errors=True)
-    if not os.path.exists(os.path.join(index_path, "scalars")):
+    if os.environ.get("WARM_REBUILD") == "1" \
+            or not spimi.reusable_index(spark, spimi.IndexPaths(index_path)):
         shutil.rmtree(index_path, ignore_errors=True)
         t0 = time.perf_counter()
         Engine.build(spark, corpus, index_path, n_shards=64,
@@ -100,7 +107,7 @@ def main() -> None:
                             mode="auto").count())
 
     print(json.dumps({
-        "metric": "warm_engine_800k",
+        "metric": f"warm_engine_{n // 1000}k",
         "n_docs": n,
         "cpus": cpus,
         "build_sec": round(build_sec, 2) if build_sec else None,

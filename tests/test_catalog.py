@@ -35,6 +35,8 @@ def test_iceberg_gate_is_honest(spark):
 def test_index_stats_compression(spark, tiny_corpus, tmp_path):
     import shutil
 
+    from pyspark.sql import functions as F
+
     from rerankers_spark.index.spimi import build_index, index_stats
 
     path = str(tmp_path / "idx")
@@ -45,6 +47,12 @@ def test_index_stats_compression(spark, tiny_corpus, tmp_path):
     assert stats["raw_bytes"] == 24 * stats["n_postings"]
     assert 0 < stats["vb_bytes"] < stats["raw_bytes"]
     assert stats["compression_ratio"] > 1.0
+    # posting rows only; the docmap bytes are counted in vb_bytes
+    man = paths.read(spark, "manifest").agg(
+        F.sum("n_postings").alias("p"), F.sum("n_blocks").alias("b")
+    ).collect()[0]
+    assert (stats["n_postings"], stats["n_blocks"]) == (man["p"], man["b"])
+    assert 0 < stats["docmap_bytes"] < stats["vb_bytes"]
 
 
 def test_index_paths_io_goes_through_catalog(spark, tmp_path):

@@ -212,15 +212,11 @@ def test_compact_purges_and_recomputes_stats(spark, deleted_engine):
             assert r["score"] == pytest.approx(s, abs=1e-9)
 
     # postings physically gone
-    from rerankers_spark.index.spimi import _decode_blocks_map
-    import pandas as pd
-
-    blocks_pdf = spark.read.parquet(f"{BASE}/blocks").select(
-        "term", "first_doc", "docs_vb", "tfs_vb", "dls_vb").toPandas()
+    blocks_pdf = spark.read.parquet(f"{BASE}/blocks").toPandas()
     all_docs = set()
-    for out in _decode_blocks_map([blocks_pdf]):
-        all_docs.update(out["doc_id"].tolist())
-    assert not (all_docs & dead_ids)
+    for _, group in blocks_pdf.groupby("shard_id"):
+        all_docs.update(spimi.decode_group(group)["doc_id"].tolist())
+    assert all_docs and not (all_docs & dead_ids)
 
 
 def test_legacy_tombstone_layout_migrates_on_new_delete(spark):

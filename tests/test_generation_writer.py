@@ -1,7 +1,8 @@
 """The shared generation writer (spimi._write_gen_docstats /
 _write_gen_blocks): no session-global conf writes, empty inputs commit
 clean generations, a lost totals observation on real rows fails the call
-before the commit, and appended generations get full manifest rows."""
+before the commit, appended generations get full manifest rows, and every
+job of a build or append runs under the caller's job group."""
 
 from __future__ import annotations
 
@@ -129,7 +130,8 @@ def test_append_manifest_rows_carry_block_sums(spark):
            .where(F.col("gen") == 1).collect()}
     sums = {r["shard_id"]: (r["p"], r["b"]) for r in
             spark.read.parquet(f"{path}/blocks")
-            .where((F.col("shard_id") >= 2) & (F.col("shard_id") < 4))
+            .where((F.col("shard_id") >= 2) & (F.col("shard_id") < 4)
+                   & (F.col("term") != spimi.DOCMAP_TERM))
             .groupBy("shard_id")
             .agg(F.sum("n").alias("p"), F.count("*").alias("b")).collect()}
     assert sorted(man) == sorted(sums) == [2, 3]
@@ -137,3 +139,26 @@ def test_append_manifest_rows_carry_block_sums(spark):
         assert (r["n_postings"], r["n_blocks"]) == sums[s]
         assert r["status"] == "ok" and r["wall_time"] > 0
     assert sum(r["n_docs"] for r in man.values()) == 30
+
+
+def test_writer_jobs_stay_in_the_callers_job_group(spark):
+    """The writer's pool threads inherit the caller's job group: under
+    sc.setJobGroup, build_index and append_index start no job outside
+    it (so cancelJobGroup and per-group job attribution reach them)."""
+    path = f"{BASE}/job_group"
+    shutil.rmtree(path, ignore_errors=True)
+    pdf = synthetic_corpus_pdf(60, seed=11)
+    first, second = (_corpus(spark, pdf.iloc[:40]),
+                     _corpus(spark, pdf.iloc[40:]))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("generation-writer-test", "build + append")
+    try:
+        spimi.build_index(spark, first, path, n_shards=2)
+        spimi.append_index(spark, second, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert tracker.getJobIdsForGroup("generation-writer-test")

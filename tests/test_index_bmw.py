@@ -28,20 +28,37 @@ def engine(spark, tiny_corpus):
 
 
 def test_block_format(spark, engine):
-    blocks = spark.read.parquet(engine.paths.blocks)
-    pdf = blocks.limit(200).toPandas()
+    """Block format 2: each shard's docmap rows decode to the sorted ids
+    of its docs with postings; posting rows decode to ordinals below the
+    docmap size."""
+    pdf = spark.read.parquet(engine.paths.blocks).toPandas()
     assert len(pdf) > 0
-    for row in pdf.itertuples(index=False):
-        docs = vb.delta_decode(row.docs_vb, base=row.first_doc)
-        tfs = vb.decode(row.tfs_vb)
-        dls = vb.decode(row.dls_vb)
-        assert len(docs) == row.n <= spimi.BLOCK_SIZE
-        assert docs[0] == row.first_doc and docs[-1] == row.last_doc
-        # strictly ascending within block (python ints: int64 diff overflows)
-        dl_ = docs.tolist()
-        assert all(a < b for a, b in zip(dl_, dl_[1:]))
-        assert len(tfs) == len(dls) == len(docs)
-        assert (tfs >= 1).all() and (dls >= 1).all()
+    ds = spark.read.parquet(engine.paths.docstats).where("dl > 0") \
+        .select("shard_id", "doc_id").toPandas()
+    for shard, g in pdf.groupby("shard_id"):
+        maps = g[g["term"] == spimi.DOCMAP_TERM].sort_values("block_id")
+        assert len(maps) >= 1
+        assert (maps["n"] <= spimi.DOCMAP_ROW_IDS).all()
+        assert maps["block_id"].tolist() == list(range(len(maps)))
+        _, doc_map = spimi.split_docmap(g)
+        assert len(doc_map) == maps["n"].sum()
+        # python ints: int64 diff overflows
+        assert doc_map.tolist() == sorted(
+            ds.loc[ds["shard_id"] == shard, "doc_id"].tolist())
+        assert maps["first_doc"].tolist() == [
+            int(doc_map[i]) for i in range(0, len(doc_map),
+                                           spimi.DOCMAP_ROW_IDS)]
+        for row in g[g["term"] != spimi.DOCMAP_TERM].head(50).itertuples(
+                index=False):
+            docs = vb.delta_decode(row.docs_vb, base=row.first_doc)
+            tfs = vb.decode(row.tfs_vb)
+            dls = vb.decode(row.dls_vb)
+            assert len(docs) == row.n <= spimi.BLOCK_SIZE
+            assert docs[0] == row.first_doc and docs[-1] == row.last_doc
+            assert 0 <= docs[0] and docs[-1] < len(doc_map)
+            assert (np.diff(docs) > 0).all()  # strictly ascending ordinals
+            assert len(tfs) == len(dls) == len(docs)
+            assert (tfs >= 1).all() and (dls >= 1).all()
 
 
 def test_index_stats_match_native(spark, engine, tiny_corpus):
