@@ -475,21 +475,10 @@ def q_bm25_topk_filtered_bucketed(spark: SparkSession,
     of a driver-collected broadcast array (the 100-TB shape for large
     filters — Engine.search auto-routes past KEEP_BROADCAST_CAP). Must
     hash-match the same DuckDB oracle as the broadcast path."""
-    import os
-
-    from rerankers_spark.index.spimi import (IndexPaths, build_index,
-                                             reusable_index)
     from rerankers_spark.query import bmw as bmw_mod
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    idx = f"/tmp/contract_index_filt_{tag}"
-    # reuse the index q_bm25_topk_filtered built for this sf_dir (the
-    # registry runs entries in dict order); build only if absent or left
-    # by a run in another block format
-    paths = IndexPaths(idx)
-    if not reusable_index(spark, paths):
-        corpus = documents_as_corpus(spark, sf_dir)
-        paths = build_index(spark, corpus, idx, n_shards=8)
+    # the index q_bm25_topk_filtered built for this sf_dir
+    paths = _contract_index(spark, sf_dir, "contract_index_filt")
     keep = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .where(F.col("lang") == "en")
             .select(F.col("doc_id").cast("long").alias("doc_id")))
@@ -601,25 +590,45 @@ LEFT JOIN ideal i ON q.query_id = i.query_id
 """
 
 
-def _contract_engine(spark: SparkSession, sf_dir: str, scorer="overlap"):
-    """Engine over the shared per-sf contract index (built fresh by
-    q_bm25_topk_bmw earlier in registry order; built here if absent or
-    left by a run in another block format)."""
+def _contract_index(spark: SparkSession, sf_dir: str, name: str):
+    """IndexPaths of the shared contract index ``/tmp/<name>_<sf tag>``
+    over ``sf_dir``'s documents, as another contract query may have left
+    it. Reused only when it is committed in this block format over this
+    very corpus — its committed n_docs and the XOR of its visible
+    manifest rows' sha256_xor equal the corpus's row count and XOR
+    fingerprint (spimi._SHA_XOR_EXPR) — else rebuilt: the tag is only
+    the sf dir's basename, so another corpus, another run or other code
+    may have written the directory."""
     import os
     import shutil
 
-    from rerankers_spark.index.spimi import (IndexPaths, build_index,
-                                             reusable_index)
+    from rerankers_spark.index.spimi import (_SHA_XOR_EXPR, IndexPaths,
+                                             build_index, load_meta,
+                                             reusable_index,
+                                             visible_generations)
+
+    idx = f"/tmp/{name}_{os.path.basename(sf_dir.rstrip('/'))}"
+    corpus = documents_as_corpus(spark, sf_dir)
+    paths = IndexPaths(idx)
+    if reusable_index(spark, paths):
+        meta = load_meta(spark, paths)
+        want = corpus.agg(F.count("*"), F.expr(_SHA_XOR_EXPR)).first()
+        have = (paths.read(spark, "manifest")
+                .where(F.col("gen").isin(visible_generations(meta)))
+                .agg(F.expr("bit_xor(sha256_xor)")).first()[0])
+        if (meta["n_docs"], have) == tuple(want):
+            return paths
+    shutil.rmtree(idx, ignore_errors=True)
+    return build_index(spark, corpus, idx, n_shards=8)
+
+
+def _contract_engine(spark: SparkSession, sf_dir: str, scorer="overlap"):
+    """Engine over the shared per-sf contract index that q_bm25_topk_bmw
+    builds (see _contract_index)."""
     from rerankers_spark.query.executor import Engine
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    idx = f"/tmp/contract_index_{tag}"
-    paths = IndexPaths(idx)
-    if not reusable_index(spark, paths):
-        shutil.rmtree(idx, ignore_errors=True)
-        build_index(spark, documents_as_corpus(spark, sf_dir), idx,
-                    n_shards=8)
-    return Engine(spark, idx, scorer=scorer)
+    paths = _contract_index(spark, sf_dir, "contract_index")
+    return Engine(spark, paths.root, scorer=scorer)
 
 
 def q_bm25_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:

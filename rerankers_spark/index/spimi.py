@@ -59,8 +59,10 @@ commit:
    contribution and the full manifest rows, derived from the new block
    metadata and written concurrently.
 
-The single-row scalars overwrite (``_write_scalars``) that follows is
-the commit point for all three.
+The scalars commit that follows (``_write_scalars``: one parquet file
+written under a temp name and renamed into ``<root>/scalars`` through
+the Hadoop FileSystem, Catalog.commit_row) is the commit point for all
+three.
 
 The reference presupposes this whole stage as an external artifact
 (tests/consistency_notebooks/test_crossenc.ipynb cell 5).
@@ -73,6 +75,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from py4j.protocol import Py4JJavaError
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -810,98 +813,13 @@ def build_index(
     return paths
 
 
-def _scalars_local_dir(paths: IndexPaths) -> str | None:
-    """The scalars dir as a plain POSIX path when the index lives on the
-    local filesystem in parquet mode, else None. Gates the driver-side
-    single-row fast path below: a one-row table needs no Spark job (the
-    createDataFrame→write job costs a full scheduling round trip and is
-    exposed to multi-second IO stalls on a busy host), but other schemes
-    (hdfs:, s3a:, ...), relative roots and Iceberg catalogs keep the
-    Spark path. Local means scheme '' or 'file' with an absolute path, so
-    every Hadoop spelling of a local root — ``/tmp/idx``,
-    ``file:/tmp/idx``, ``file:///tmp/idx`` — commits to the same place."""
-    import os
-    from urllib.parse import urlparse
-
-    if paths.catalog_name is not None:
-        return None
-    u = urlparse(paths.root)
-    if u.scheme not in ("", "file") or u.netloc not in ("", "localhost") \
-            or not os.path.isabs(u.path):
-        return None
-    return f"{u.path.rstrip('/')}/scalars"
-
-
-SCALARS_SCHEMA = (
-    "n_docs long, avgdl double, n_shards int, generation int, "
-    "sum_dl long, last_batch_id string, visible_gens string, "
-    "next_gen int, attr_col string, block_format int")
-
-
-def _read_scalars_local(paths: IndexPaths) -> dict | None:
-    """Driver-side scalars read (no Spark job) — local parquet only.
-    None → caller falls back to the Spark read (missing dir included, so
-    error behavior matches the slow path)."""
-    import os
-
-    d = _scalars_local_dir(paths)
-    if d is None or not os.path.isdir(d):
-        return None
-    files = [f for f in os.listdir(d)
-             if f.endswith(".parquet") and not f.startswith((".", "_"))]
-    if len(files) != 1:
-        return None  # mid-overwrite or unexpected layout → Spark read
-    import pyarrow.parquet as pq
-
-    try:
-        rows = pq.read_table(f"{d}/{files[0]}").to_pylist()
-    except FileNotFoundError:
-        return None  # replaced by a concurrent commit since the listing
-    if len(rows) != 1:
-        return None
-    row = rows[0]
-    # float NaN → None normalization matches Row.asDict for absent strings
-    return row
-
-
-def _write_scalars_local(paths: IndexPaths, row: tuple) -> bool:
-    """Driver-side single-row scalars overwrite. The new file is renamed
-    into place BEFORE the old ones are unlinked, so a concurrent reader
-    always finds a complete row (the old or the new; _read_scalars_local
-    falls back to the Spark read while both are present). Returns False
-    when the root is not local-parquet (caller uses the Spark path)."""
-    import os
-    import uuid
-
-    d = _scalars_local_dir(paths)
-    if d is None:
-        return False
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    (n_docs, avgdl, n_shards, generation, sum_dl, last_batch_id,
-     visible_gens, next_gen, attr_col, block_format) = row
-    table = pa.table({
-        "n_docs": pa.array([n_docs], pa.int64()),
-        "avgdl": pa.array([avgdl], pa.float64()),
-        "n_shards": pa.array([n_shards], pa.int32()),
-        "generation": pa.array([generation], pa.int32()),
-        "sum_dl": pa.array([sum_dl], pa.int64()),
-        "last_batch_id": pa.array([last_batch_id], pa.string()),
-        "visible_gens": pa.array([visible_gens], pa.string()),
-        "next_gen": pa.array([next_gen], pa.int32()),
-        "attr_col": pa.array([attr_col], pa.string()),
-        "block_format": pa.array([block_format], pa.int32()),
-    })
-    os.makedirs(d, exist_ok=True)
-    tmp = f"{d}/.tmp-{uuid.uuid4().hex}.parquet"
-    pq.write_table(table, tmp)
-    name = f"part-00000-{uuid.uuid4().hex}.snappy.parquet"
-    os.replace(tmp, f"{d}/{name}")
-    for f in os.listdir(d):
-        if f != name and not f.startswith((".", "_")):
-            os.unlink(f"{d}/{f}")
-    return True
+#: the scalars row, one parquet file committed by Catalog.commit_row
+SCALARS_SCHEMA = pa.schema([
+    ("n_docs", pa.int64()), ("avgdl", pa.float64()),
+    ("n_shards", pa.int32()), ("generation", pa.int32()),
+    ("sum_dl", pa.int64()), ("last_batch_id", pa.string()),
+    ("visible_gens", pa.string()), ("next_gen", pa.int32()),
+    ("attr_col", pa.string()), ("block_format", pa.int32())])
 
 
 def _write_scalars(spark: SparkSession, paths: IndexPaths, n_docs: int,
@@ -913,9 +831,10 @@ def _write_scalars(spark: SparkSession, paths: IndexPaths, n_docs: int,
                    attr_col: str | None = None) -> None:
     """The scalars row is the index's COMMIT POINT: every other table is
     append-only with orphan rows made invisible by visible_generations /
-    shard_pred / load_termstats, so the single-row scalars overwrite
-    atomically publishes any membership change (append adds a
-    generation, compaction swaps a subset for one merged generation).
+    shard_pred / load_termstats, so the single-row scalars commit (one
+    file renamed into place, Catalog.commit_row) atomically publishes
+    any membership change (append adds a generation, compaction swaps a
+    subset for one merged generation).
     ``generation`` is kept as the COUNT of visible generations minus one
     — the "how fragmented is this index" signal query code keys bound
     modes off and maintenance keys merge policy off — while
@@ -927,13 +846,14 @@ def _write_scalars(spark: SparkSession, paths: IndexPaths, n_docs: int,
         sum_dl = int(round(avgdl * n_docs))
     visible_gens = sorted(visible_gens)
     generation = len(visible_gens) - 1
-    row = (n_docs, avgdl, n_shards, generation, sum_dl, last_batch_id,
-           ",".join(str(g) for g in visible_gens), int(next_gen),
-           attr_col, BLOCK_FORMAT)
-    if _write_scalars_local(paths, row):
-        return
-    df = spark.createDataFrame([row], SCALARS_SCHEMA).coalesce(1)
-    paths.write(df, "scalars", mode="overwrite")
+    row = dict(n_docs=n_docs, avgdl=avgdl, n_shards=n_shards,
+               generation=generation, sum_dl=sum_dl,
+               last_batch_id=last_batch_id,
+               visible_gens=",".join(str(g) for g in visible_gens),
+               next_gen=int(next_gen), attr_col=attr_col,
+               block_format=BLOCK_FORMAT)
+    paths.catalog(spark).commit_row(
+        "scalars", pa.Table.from_pylist([row], SCALARS_SCHEMA))
 
 
 def load_scalars(spark: SparkSession, paths: IndexPaths) -> tuple[int, float]:
@@ -942,10 +862,7 @@ def load_scalars(spark: SparkSession, paths: IndexPaths) -> tuple[int, float]:
 
 
 def load_meta(spark: SparkSession, paths: IndexPaths) -> dict:
-    r = _read_scalars_local(paths)
-    if r is not None:
-        return r
-    return paths.read(spark, "scalars").collect()[0].asDict()
+    return paths.catalog(spark).read_row("scalars")
 
 
 def index_stats(spark: SparkSession, paths: IndexPaths) -> dict:
@@ -967,9 +884,6 @@ def index_stats(spark: SparkSession, paths: IndexPaths) -> dict:
     ).collect()[0]
     raw_bytes = 24 * int(r["n_postings"] or 0)
     vb_bytes = int(r["vb_bytes"] or 0)
-    n_tomb = (paths.read(spark, "tombstones").select("doc_id")
-              .distinct().count()
-              if paths.exists(spark, "tombstones") else 0)
     return {
         "n_postings": int(r["n_postings"] or 0),
         "n_blocks": int(r["n_blocks"] or 0),
@@ -982,7 +896,7 @@ def index_stats(spark: SparkSession, paths: IndexPaths) -> dict:
         "generation": int(meta.get("generation", 0)),
         "n_generations": len(visible_generations(meta)),
         "visible_gens": visible_generations(meta),
-        "n_tombstones": n_tomb,
+        "n_tombstones": count_tombstones(spark, paths),
     }
 
 
@@ -1014,8 +928,8 @@ def append_index(
 
     * every data write (docstats/blocks/termstats/manifest) is APPEND of
       rows belonging only to the new generation; readers hide them via
-      shard_pred / load_termstats until the final single-row scalars
-      overwrite — the commit point — publishes the generation;
+      shard_pred / load_termstats until the final scalars commit — the
+      commit point — publishes the generation;
     * a crash before commit leaves only invisible orphans; each step
       first deletes the would-be generation's partitions of the tables it
       writes (same ids are recomputed deterministically), so a replay
@@ -1125,6 +1039,13 @@ def load_tombstones(spark: SparkSession, paths: IndexPaths):
     return arr
 
 
+def count_tombstones(spark: SparkSession, paths: IndexPaths) -> int:
+    """Distinct tombstoned doc ids — the backlog a full compact purges."""
+    if not paths.exists(spark, "tombstones"):
+        return 0
+    return paths.read(spark, "tombstones").select("doc_id").distinct().count()
+
+
 def plan_tiered_merge(spark: SparkSession, paths: IndexPaths,
                       max_generations: int = 4) -> list[int] | None:
     """Maintenance policy (Lucene TieredMergePolicy shape): when more
@@ -1187,8 +1108,7 @@ def compact_index(spark: SparkSession, path: str,
     Crash safety — the same commit protocol as append_index: every
     output lands in the new generation's partitions (docstats/blocks by
     shard range, termstats/manifest by gen), INVISIBLE until the final
-    single-row scalars overwrite publishes ``visible = (visible - merged)
-    + [new]``. A crash at any earlier point leaves the old index fully
+    scalars commit publishes ``visible = (visible - merged) + [new]``. A crash at any earlier point leaves the old index fully
     intact plus invisible orphans, which the next writer to allocate
     the same generation id deletes first. Retiring the merged
     generations' partitions happens post-commit and is best-effort: a

@@ -106,6 +106,7 @@ class Engine:
         the longest in-flight query. Returns what it did."""
         from rerankers_spark.index.spimi import (
             compact_index,
+            count_tombstones,
             gc_retired,
             load_meta,
             plan_tiered_merge,
@@ -113,10 +114,7 @@ class Engine:
 
         meta = load_meta(self.spark, self.paths)
         n_docs = max(1, int(meta["n_docs"]))
-        n_tomb = (
-            self.paths.read(self.spark, "tombstones")
-            .select("doc_id").distinct().count()
-            if self.paths.exists(self.spark, "tombstones") else 0)
+        n_tomb = count_tombstones(self.spark, self.paths)
         did = "noop"
         if n_tomb / n_docs > tombstone_ratio:
             compact_index(self.spark, self.paths.root)

@@ -9,6 +9,12 @@ catalog transparently when `spark.sql.catalog.*` is configured.
 
 from __future__ import annotations
 
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 
 
@@ -60,6 +66,64 @@ class Catalog:
     def _fs_exists(self, path_str: str) -> bool:
         fs, jpath = self._hadoop_fs(path_str)
         return bool(fs.exists(jpath))
+
+    # -- single-row commit point (the index's scalars) -----------------------
+    # The row is ONE parquet file under <root>/<name>, written and read on
+    # the driver with no Spark job. The commit writes it under a hidden
+    # temp name and renames it to a fresh visible name (atomic on local
+    # disk and HDFS; one object put on s3a), then deletes every other
+    # entry: a reader finds the old row or the new one, never zero files
+    # or a partial file, and a commit that fails before its rename leaves
+    # the old row in force (its temp file goes with the next commit).
+
+    def commit_row(self, name: str, row: pa.Table) -> None:
+        if self.catalog_name:
+            self.write_table(self.spark.createDataFrame(row).coalesce(1),
+                             name)
+            return
+        buf = pa.BufferOutputStream()
+        pq.write_table(row, buf)
+        fs, d = self._hadoop_fs(self._path(name))
+        Path = self.spark._jvm.org.apache.hadoop.fs.Path
+        tmp = Path(d, f".tmp-{uuid.uuid4().hex}.parquet")
+        out = fs.create(tmp, False)
+        try:
+            out.write(buf.getvalue().to_pybytes())
+        finally:
+            out.close()
+        final = f"part-{uuid.uuid4().hex}.parquet"
+        if not fs.rename(tmp, Path(d, final)):
+            raise IOError(f"failed to publish {self._path(name)}/{final}")
+        for st in fs.listStatus(d):
+            if st.getPath().getName() != final:
+                fs.delete(st.getPath(), False)
+
+    def read_row(self, name: str) -> dict:
+        """The committed row of a commit_row table: the newest visible
+        file (a commit that died between its rename and its deletes
+        leaves two), listed again if a commit deleted it meanwhile."""
+        if self.catalog_name:
+            return self.table(name).collect()[0].asDict()
+        fs, d = self._hadoop_fs(self._path(name))
+        while True:
+            files = [st for st in fs.listStatus(d)
+                     if not st.getPath().getName().startswith((".", "_"))]
+            if not files:
+                raise FileNotFoundError(
+                    f"no committed row under {self._path(name)}")
+            newest = max(files, key=lambda st: st.getModificationTime())
+            try:
+                stream = fs.open(newest.getPath())
+            except Py4JJavaError as e:
+                if is_instance_of(self.spark._sc._gateway, e.java_exception,
+                                  "java.io.FileNotFoundException"):
+                    continue
+                raise
+            try:
+                data = stream.readAllBytes()
+            finally:
+                stream.close()
+            return pq.read_table(pa.BufferReader(data)).to_pylist()[0]
 
     def table(self, name: str, schema: str | None = None) -> DataFrame:
         """schema: optional DDL string — parquet dirs written from an

@@ -144,6 +144,16 @@ def test_attr_partitioned_groups_translate(spark, corpus):
         corpus, keep=go)
 
 
+def _rewrite(f: str, table) -> None:
+    """Overwrite parquet file ``f`` in place, dropping Hadoop's checksum
+    file of the old bytes."""
+    pq.write_table(table, f)
+    d, name = os.path.split(f)
+    crc = os.path.join(d, f".{name}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
 def _strip_format(path: str, shards=None) -> None:
     """Rewrite an index as the previous format would have left it: no
     docmap rows in ``shards`` (default all), and (when every shard is
@@ -152,15 +162,10 @@ def _strip_format(path: str, shards=None) -> None:
         shard = int(f.split("shard_id=")[1].split("/")[0])
         if shards is None or shard in shards:
             t = pq.read_table(f)
-            pq.write_table(t.filter(pc.not_equal(t["term"],
-                                                 spimi.DOCMAP_TERM)), f)
-            d, name = os.path.split(f)
-            crc = os.path.join(d, f".{name}.crc")  # Hadoop's checksum file
-            if os.path.exists(crc):
-                os.remove(crc)
+            _rewrite(f, t.filter(pc.not_equal(t["term"], spimi.DOCMAP_TERM)))
     if shards is None:
         (f,) = glob.glob(f"{path}/scalars/*.parquet")
-        pq.write_table(pq.read_table(f).drop(["block_format"]), f)
+        _rewrite(f, pq.read_table(f).drop(["block_format"]))
 
 
 def test_previous_format_is_rejected_before_any_job(spark, corpus):

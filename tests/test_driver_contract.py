@@ -78,3 +78,39 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() >= 0
     assert set(df.columns) == {"query_id", "doc_id", "rank", "score"}
+
+
+def test_contract_index_rebuilds_for_another_corpus(spark, tmp_path):
+    """Two corpora under the same sf basename share one /tmp contract
+    index path: asking for the second rebuilds the index the first
+    built, and asking for the same corpus again reuses it."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from rerankers_spark import driver_contract as dc
+    from rerankers_spark.index import spimi
+
+    docs = pq.read_table("/root/testdata/sf0.001/documents.parquet")
+    dirs = []
+    for side, rows in (("a", docs.slice(0, 60)), ("b", docs.slice(60, 40))):
+        d = tmp_path / side / "sf_contract_reuse"
+        d.mkdir(parents=True)
+        pq.write_table(rows, d / "documents.parquet")
+        dirs.append(str(d))
+    idx = "/tmp/contract_index_sf_contract_reuse"
+    shutil.rmtree(idx, ignore_errors=True)
+    try:
+        dc._contract_engine(spark, dirs[0])
+        eng = dc._contract_engine(spark, dirs[1])
+        meta = spimi.load_meta(spark, eng.paths)
+        assert meta["n_docs"] == 40
+        ids = {r["doc_id"] for r in
+               spark.read.parquet(f"{idx}/docstats").collect()}
+        assert ids == set(docs.slice(60, 40)["doc_id"].to_pylist())
+        scalars = os.listdir(f"{idx}/scalars")
+        dc._contract_engine(spark, dirs[1])
+        assert os.listdir(f"{idx}/scalars") == scalars
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)
