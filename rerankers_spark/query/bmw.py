@@ -1,12 +1,13 @@
 """Exact BM25 top-k over the doc-sharded block index.
 
-Distribution model: queries are hash-bucketed (``pmod(xxhash64(query_id),
-B)``) and cogrouped with the shard's blocks on ``(shard_id, bucket)`` —
-the doc-sharded layout (see spimi.py) makes shard results independent, so
-per-shard top-k lists merge into the EXACT global top-k with a final
-window. Parallelism = |shards| × B; both the query set and the block
-table stay distributed (no driver collect — the query log can be a
-billion rows).
+Distribution model: queries are split into B buckets and cogrouped with
+the shard's blocks on ``(shard_id, bucket)`` — the doc-sharded layout
+(see spimi.py) makes shard results independent, so per-shard top-k lists
+merge into the EXACT global top-k with a final window. Parallelism =
+|shards| × B. A bounded query set (QT_PAIR_CAP) is planned on the driver
+and dealt round-robin over the buckets; past the cap the query set stays
+distributed, hash-bucketed by ``pmod(xxhash64(query_id), B)`` (no driver
+collect — the query log can be a billion rows).
 
 Every Engine.search mode runs through this one cogroup kernel (bmw_topk),
 and every (query, shard) pair in it is scored by scan_topk_shard: a
@@ -45,7 +46,7 @@ import heapq
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rerankers_spark.index import varbyte as vb
@@ -494,18 +495,33 @@ def query_terms_with_idf(
 #: (a query log that big touches most of the index anyway).
 TERM_PUSHDOWN_CAP = 4096
 
-#: query sets whose exploded (query_id, term) pair count stays under this
-#: cap get the LOCAL query-plan fast path: the pairs are collected once
-#: (one bounded single-stage job), term df is fetched with one bounded
-#: lookup, and every downstream use — term pushdown list, routing,
-#: bucket_terms, the cogroup query side — derives from a LOCAL relation.
-#: The distributed formulation re-evaluated the tokenize→dedup→termstats
-#: subplan 3-5× per search (term collect, bucket_terms broadcast build,
-#: q_side — measured ~4 s of redundant jobs per 50-query call at
-#: local[32]). Past the cap the original fully distributed path runs
-#: unchanged — a billion-row query log never touches the driver (same
-#: size-gated adaptivity as a broadcast join).
+#: query sets of at most this many rows and (query_id, term) pairs get
+#: the LOCAL query-plan fast path: the query rows are collected once and
+#: tokenized on the driver (no job when the queries frame is a local
+#: relation), term df is fetched with one bounded lookup, and the
+#: cogroup's query side is one local relation. The distributed
+#: formulation re-evaluated the tokenize→dedup→termstats subplan 3-5×
+#: per search (term collect, bucket_terms broadcast build, q_side —
+#: measured ~4 s of redundant jobs per 50-query call at local[32]). Past
+#: the cap the fully distributed path runs — a billion-row query log
+#: never touches the driver (same size-gated adaptivity as a broadcast
+#: join).
 QT_PAIR_CAP = 16384
+
+
+def _sql_in(col: str, values) -> str:
+    """``col IN ('v', ...)`` as SQL text: one F.expr parse for the whole
+    list, where Column.isin makes one py4j round trip per literal. Spark
+    turns a long literal IN list into a hash InSet."""
+    lits = ("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+            for v in values)
+    return f"{col} IN ({', '.join(lits)})"
+
+
+def _explode_ints(values) -> Column:
+    """One row per literal int (shard ids, buckets), by expression — no
+    literal relation and no broadcast of it."""
+    return F.expr(f"explode(array({', '.join(str(int(v)) for v in values)}))")
 
 
 class LocalQueryPlan:
@@ -540,43 +556,49 @@ class LocalQueryPlan:
                           "query": [self.qtext[q] for q in ids]}),
             "query_id long, query string")
 
-    def local_qt(self, spark: SparkSession, n_docs: int) -> DataFrame:
-        """(query_id, term, idf, df) as a local relation — the same
-        schema query_terms_with_idf produces, no distributed subplan."""
-        pdf = pd.DataFrame({
-            "query_id": np.array([q for q, _ in self.pairs],
-                                 dtype=np.int64),
+    def bucketed_pairs(self, n_buckets: int) -> pd.DataFrame:
+        """(query_id, term, df, bucket) rows: the queries dealt round-
+        robin over the buckets in query_id order. Any assignment is
+        exact (a query meets every shard in exactly one task); this one
+        is balanced and needs no hash on the driver."""
+        qid = np.array([q for q, _ in self.pairs], dtype=np.int64)
+        return pd.DataFrame({
+            "query_id": qid,
             "term": [t for _, t in self.pairs],
             "df": np.array([self.df_map[t] for _, t in self.pairs],
                            dtype=np.int64),
+            # pairs are sorted: factorize codes are query_id ranks
+            "bucket": (pd.factorize(qid)[0] % n_buckets).astype(np.int32),
         })
-        return (
-            local_df(spark, pdf, "query_id long, term string, df long")
-            .coalesce(1)
-            .select("query_id", "term",
-                    bm25.idf_col(F.col("df"), n_docs).alias("idf"), "df")
-        )
 
 
 def build_local_query_plan(
     spark: SparkSession, queries: DataFrame, termstats: DataFrame,
 ) -> LocalQueryPlan | None:
     """Try to materialize the bounded local query plan; None past the
-    caps (the caller falls back to the distributed formulation). Two
-    bounded jobs: a single-stage limit-collect of the exploded query
-    terms, and a term-df lookup filtered to that vocabulary. The caps
-    are read at call time."""
-    from rerankers_spark.functions.tokenize import tokenize_col
+    caps (the caller falls back to the distributed formulation). The
+    query rows are collected (bounded by the cap) and tokenized on the
+    driver with tokenize_py, the spec twin of the index's tokenizer and
+    of tokenize_col; the term-df lookup filtered to that vocabulary is
+    the one Spark job. The caps are read at call time."""
+    from rerankers_spark.functions.tokenize import tokenize_py
 
-    pair_rows = (
-        queries.select("query_id", "query",
-                       F.explode(tokenize_col("query")).alias("term"))
-        .limit(QT_PAIR_CAP + 1).collect())
-    if len(pair_rows) > QT_PAIR_CAP:
+    rows = queries.select("query_id", "query").limit(QT_PAIR_CAP + 1) \
+        .collect()
+    if len(rows) > QT_PAIR_CAP:
         return None
-    seen = sorted({(int(r["query_id"]), str(r["term"]))
-                   for r in pair_rows})
-    qtext = {int(r["query_id"]): r["query"] for r in pair_rows}
+    seen: set[tuple[int, str]] = set()
+    qtext: dict[int, str] = {}
+    n_pairs = 0
+    for r in rows:
+        toks = tokenize_py(r["query"])
+        if toks:
+            qid = int(r["query_id"])
+            n_pairs += len(toks)
+            seen.update((qid, t) for t in toks)
+            qtext[qid] = r["query"]
+    if n_pairs > QT_PAIR_CAP:
+        return None
     terms = sorted({t for _, t in seen})
     if len(terms) > TERM_PUSHDOWN_CAP:
         return None
@@ -584,10 +606,10 @@ def build_local_query_plan(
     if terms:
         df_map = {
             r["term"]: int(r["df"])
-            for r in termstats.where(F.col("term").isin(terms)).collect()}
-    pairs = [(q, t) for q, t in seen if t in df_map]
-    return LocalQueryPlan(pairs, sorted(df_map), df_map,
-                          len({q for q, _ in seen}), qtext)
+            for r in termstats.where(F.expr(_sql_in("term", terms)))
+            .collect()}
+    pairs = [(q, t) for q, t in sorted(seen) if t in df_map]
+    return LocalQueryPlan(pairs, sorted(df_map), df_map, len(qtext), qtext)
 
 
 def empty_result(spark: SparkSession) -> DataFrame:
@@ -670,8 +692,9 @@ def bmw_topk(
     partition directories are pruned before any byte moves (the 100-TB
     shape for high-selectivity attributes; no keep-list, no broadcast).
     Scores keep full-corpus stats, identical semantics to the
-    keep-list paths. On an attr-partitioned index the cogroup keys are
-    (shard, attr, bucket): each (shard, attr) posting run is
+    keep-list paths. The cogroup keys are (shard, bucket) on every
+    index; on an attr-partitioned index the task scores each (shard,
+    attr) docmap group of its rows separately — the groups are
     doc-disjoint, so per-group top-k lists still merge exactly.
     """
     from rerankers_spark.index.spimi import (
@@ -714,6 +737,7 @@ def bmw_topk(
             1, spark.sparkContext.defaultParallelism
             // max(1, n_shards_total))
     n_buckets = int(query_buckets)
+    attr_mode = bool(meta.get("attr_col"))
 
     # local_plan: None = not probed yet; False = probed, past the caps
     # (use the distributed path without re-probing); a LocalQueryPlan is
@@ -725,18 +749,63 @@ def bmw_topk(
     if local_plan is None:
         local_plan = build_local_query_plan(spark, queries,
                                             termstats) or False
-    push_terms: list[str] | None = None
+
+    if attr_values is not None:
+        if not attr_mode:
+            raise ValueError(
+                "attr_values requires an attribute-partitioned index "
+                "(build_index attr_col=...); use keep_docs for ad-hoc "
+                "filters")
+        # partition-column predicate → whole attr directories pruned at
+        # the parquet scan (PartitionFilters, asserted in tests)
+        blocks = blocks.where(
+            F.col("attr").isin([str(v) for v in attr_values]))
+
+    # Both sides are keyed on (shard_id, bucket). A posting row goes to
+    # exactly the buckets whose queries use its term, a docmap row to
+    # every bucket; a query row goes to every shard (shard results are
+    # doc-disjoint and merge exactly — the query side is rows of (id,
+    # term, idf), tiny next to block bytes, so the |shards|× replication
+    # is the cheap direction).
     if local_plan:
-        # bounded local plan: query terms + df already on the driver —
-        # qt becomes a LOCAL relation (idf via the same JVM expression),
-        # no per-call re-evaluation of the tokenize→dedup→termstats
-        # subplan and no separate pushdown-collect job.
+        # bounded local plan: query terms, df and buckets are on the
+        # driver — the query side is ONE local relation (idf via the
+        # same JVM expression as the distributed path), and the blocks
+        # side is bucketed by one expression with a hash InSet per
+        # bucket: no query subplan, no broadcast, no extra job.
         if local_plan.empty:
             return empty_result(spark)
-        qt = local_plan.local_qt(spark, n_docs)
-        push_terms = local_plan.terms
+        pairs = local_plan.bucketed_pairs(n_buckets)
+        used = sorted(set(pairs["bucket"]))
+        qt = local_df(spark, pairs,
+                      "query_id long, term string, df long, bucket int") \
+            .coalesce(1).select(
+                "query_id", "term",
+                bm25.idf_col(F.col("df"), n_docs).alias("idf"), "bucket")
+        blocks = blocks.where(F.expr(_sql_in(
+            "term", local_plan.terms + [DOCMAP_TERM])))
+        # the pushdown keeps only the plan's terms and the docmap, so a
+        # bucket holding every term takes every row
+        arms = [str(b) if g.nunique() == len(local_plan.terms) else
+                f"IF({_sql_in('term', sorted(set(g)) + [DOCMAP_TERM])}, "
+                f"{b}, NULL)"
+                for b, g in pairs.groupby("bucket")["term"]]
+        blocks_b = blocks.select("*", F.expr(
+            f"explode(array_compact(array({', '.join(arms)})))"
+        ).alias("bucket"))
     else:
-        qt = query_terms_with_idf(spark, queries, paths, n_docs, termstats)
+        used = range(n_buckets)
+
+        # instantiated separately per use so the cogroup's two sides
+        # don't share an attribute (ambiguous-self-join check)
+        def _bucket_col():
+            return F.pmod(F.xxhash64("query_id"),
+                          F.lit(n_buckets)).cast("int")
+
+        qt_idf = query_terms_with_idf(spark, queries, paths, n_docs,
+                                      termstats)
+        qt = qt_idf.select("query_id", "term", "idf",
+                           _bucket_col().alias("bucket"))
         # Bounded term-list pushdown (see TERM_PUSHDOWN_CAP). limit() means
         # the driver never holds more than CAP+1 terms even for a huge
         # query log. Collected from the RAW query terms (no termstats join
@@ -747,71 +816,21 @@ def bmw_topk(
         if not term_rows:
             return empty_result(spark)
         if len(term_rows) <= TERM_PUSHDOWN_CAP:
-            push_terms = [r["term"] for r in term_rows]
+            blocks = blocks.where(F.expr(_sql_in(
+                "term", [r["term"] for r in term_rows] + [DOCMAP_TERM])))
+        # docmap rows join every bucket through a literal relation, so
+        # the query subplan is not evaluated once more for them
+        docmap_buckets = local_df(
+            spark, pd.DataFrame({"bucket": np.arange(n_buckets,
+                                                     dtype=np.int32),
+                                 "term": DOCMAP_TERM}),
+            "bucket int, term string")
+        bucket_terms = qt_idf.select(_bucket_col().alias("bucket"), "term") \
+            .distinct().unionByName(docmap_buckets)
+        blocks_b = blocks.join(F.broadcast(bucket_terms), "term")
 
-    # the bucket expression is instantiated separately per cogroup side so
-    # the two plans don't share an attribute (ambiguous-self-join check)
-    def _bucket_col():
-        return F.pmod(F.xxhash64("query_id"), F.lit(n_buckets)).cast("int")
-
-    attr_mode = bool(meta.get("attr_col"))
-    if attr_values is not None:
-        if not attr_mode:
-            raise ValueError(
-                "attr_values requires an attribute-partitioned index "
-                "(build_index attr_col=...); use keep_docs for ad-hoc "
-                "filters")
-        attr_values = [str(v) for v in attr_values]
-        # partition-column predicate → whole attr directories pruned at
-        # the parquet scan (PartitionFilters, asserted in tests)
-        blocks = blocks.where(F.col("attr").isin(attr_values))
-    if push_terms is not None:
-        blocks = blocks.where(
-            F.col("term").isin(push_terms + [DOCMAP_TERM]))
-
-    # blocks → (shard_id, bucket) groups: a posting row is replicated to
-    # exactly the buckets whose queries use its term, a docmap row to
-    # every bucket (a literal relation, so the over-cap path does not
-    # evaluate the query subplan once more for it).
-    docmap_buckets = local_df(
-        spark, pd.DataFrame({"bucket": np.arange(n_buckets, dtype=np.int32),
-                             "term": DOCMAP_TERM}),
-        "bucket int, term string")
-    bucket_terms = qt.select(_bucket_col().alias("bucket"), "term") \
-        .distinct().unionByName(docmap_buckets)
-    blocks_b = blocks.join(F.broadcast(bucket_terms), "term")
-
-    # queries → every shard (shard results are doc-disjoint and merge
-    # exactly); the query side is rows of (id, term, idf) — tiny next to
-    # block bytes, so the |shards|× replication is the cheap direction.
-    shards = local_df(
-        spark, pd.DataFrame({"shard_id": np.array(shard_ids,
-                                                  dtype=np.int32)}),
-        "shard_id int")
-    if attr_mode:
-        # cogroup keys gain attr: each (shard, attr) is a doc-disjoint
-        # posting run, so group-local top-k lists still merge exactly.
-        # The query side fans out to the (shard, attr) pairs in play —
-        # the explicit filter list when given (no scan), else the
-        # distinct partition pairs of the (term-filtered) blocks.
-        group_keys = ["shard_id", "attr", "bucket"]
-        if attr_values is not None:
-            side_df = shards.crossJoin(local_df(
-                spark, pd.DataFrame({"attr": list(attr_values)}),
-                "attr string"))
-        else:
-            # FRESH scan (not the `blocks` handle): the pairs listing
-            # would otherwise share its plan subtree with the cogroup's
-            # block side → ambiguous-self-join analysis error. Reads
-            # only the two partition columns (footer-level scan).
-            side_df = (load_blocks(spark, paths, meta)
-                       .select("shard_id", "attr").distinct())
-    else:
-        group_keys = ["shard_id", "bucket"]
-        side_df = shards
-    q_side = qt.select("query_id", "term", "idf",
-                       _bucket_col().alias("bucket")) \
-        .crossJoin(F.broadcast(side_df))
+    q_side = qt.select("query_id", "term", "idf", "bucket",
+                       _explode_ints(shard_ids).alias("shard_id"))
 
     if bucketed_keep:
         # keep ids flow through the SAME (shard, bucket) cogroup shuffle
@@ -822,8 +841,6 @@ def bmw_topk(
         # nullable int64 column would decay to float64 through Arrow →
         # pandas and mangle full-range xxhash64 doc ids (CLAUDE.md
         # invariant); query_id stays int64 because every row sets it.
-        from rerankers_spark.index.spimi import visible_generations
-
         n_sh = int(meta.get("n_shards", 32))
         base = keep_docs.select(
             F.col("doc_id").cast("long").alias("keep_doc")).distinct()
@@ -835,27 +852,11 @@ def bmw_topk(
                 "keep_doc")
             keep_sharded = part if keep_sharded is None \
                 else keep_sharded.unionByName(part)
-        buckets = local_df(
-            spark, pd.DataFrame({"bucket": np.arange(n_buckets,
-                                                     dtype=np.int32)}),
-            "bucket int")
-        keep_rows = keep_sharded.crossJoin(F.broadcast(buckets))
-        if attr_mode:
-            # a keep id's attr is unknown → replicate it to the shard's
-            # attr groups so every group knows its eligible set (prefer
-            # attr_values for attribute predicates — that path prunes
-            # instead of replicating)
-            keep_rows = keep_rows.join(
-                F.broadcast(side_df.select("shard_id", "attr").distinct()),
-                "shard_id")
-        keep_rows = keep_rows.select(
+        q_side = q_side.unionByName(keep_sharded.select(
             F.col("keep_doc").alias("query_id"),
             F.lit(None).cast("string").alias("term"),
             F.lit(None).cast("double").alias("idf"),
-            "bucket", "shard_id",
-            *(["attr"] if attr_mode else []),
-        )
-        q_side = q_side.unionByName(keep_rows)
+            _explode_ints(used).alias("bucket"), "shard_id"))
 
     def _run(bpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
         keep_local = keep_bc.value if keep_bc is not None else None
@@ -873,22 +874,29 @@ def bmw_topk(
                 keep_local = np.array([], dtype=np.int64)
         if len(bpdf) == 0 or len(qpdf) == 0:
             return _empty_topk()
-        # the kernel sees ordinals: tombstones and the keep-list map in
-        # through the group's docmap, its output ordinals map back out
-        postings, doc_map = split_docmap(bpdf)
         deleted = tomb_bc.value if tomb_bc is not None else None
-        out = scan_topk_shard(
-            postings, qpdf["query_id"].to_numpy(dtype=np.int64),
-            qpdf["term"].to_numpy(dtype=object),
-            qpdf["idf"].to_numpy(dtype=np.float64), k, avgdl,
-            deleted=None if deleted is None
-            else ordinals_of(doc_map, deleted),
-            keep=None if keep_local is None
-            else ordinals_of(doc_map, keep_local))
-        out["doc_id"] = doc_map[out["doc_id"].to_numpy(dtype=np.int64)]
-        return out
+        # each docmap group — the shard, or on an attr index each (shard,
+        # attr) pair — numbers its own ordinals and is doc-disjoint from
+        # the others: scored on its own, the lists merge in the top-k
+        outs = []
+        for _, g in (bpdf.groupby("attr", dropna=False, sort=False)
+                     if attr_mode else [(None, bpdf)]):
+            # the kernel sees ordinals: tombstones and the keep-list map
+            # in through the group's docmap, its output ordinals map back
+            postings, doc_map = split_docmap(g)
+            out = scan_topk_shard(
+                postings, qpdf["query_id"].to_numpy(dtype=np.int64),
+                qpdf["term"].to_numpy(dtype=object),
+                qpdf["idf"].to_numpy(dtype=np.float64), k, avgdl,
+                deleted=None if deleted is None
+                else ordinals_of(doc_map, deleted),
+                keep=None if keep_local is None
+                else ordinals_of(doc_map, keep_local))
+            out["doc_id"] = doc_map[out["doc_id"].to_numpy(dtype=np.int64)]
+            outs.append(out)
+        return pd.concat(outs, ignore_index=True)
 
-    local = blocks_b.groupby(*group_keys).cogroup(
-        q_side.groupby(*group_keys)
+    local = blocks_b.groupby("shard_id", "bucket").cogroup(
+        q_side.groupby("shard_id", "bucket")
     ).applyInPandas(_run, "query_id long, doc_id long, score double")
     return topk(local, k)

@@ -10,7 +10,9 @@ filter and the broadcast bucket-join is the only term filter.
 
 The index carries tombstones, and every mode runs with and without a
 doc_filter, plus the two-stage rank(); rows compare as
-(query_id, doc_id, round(score, 9), rank) tuples.
+(query_id, doc_id, round(score, 9), rank) tuples. The same parity holds
+on an attribute-partitioned index (each task scores its shard's attr
+groups separately) with an attr_filter and a bucketed keep-list.
 """
 
 from __future__ import annotations
@@ -89,3 +91,61 @@ def test_distributed_query_side_matches_local_plan(spark, tombstoned,
     assert got.keys() == local_results.keys()
     for key in local_results:
         assert got[key] == local_results[key], key
+
+
+ATTR_BASE = "/tmp/test_distributed_query_side_attr"
+
+
+@pytest.fixture(scope="module")
+def attr_tombstoned(spark):
+    corpus = with_doc_id(spark.createDataFrame(
+        synthetic_corpus_pdf(300, seed=29))).cache()
+    corpus.count()
+    shutil.rmtree(ATTR_BASE, ignore_errors=True)
+    spimi.build_index(spark, corpus, ATTR_BASE, n_shards=4, attr_col="lang")
+    spimi.delete_docs(
+        spark, ATTR_BASE,
+        corpus.select("doc_id").where(F.abs(F.col("doc_id")) % 5 == 1))
+    keep = corpus.select("doc_id").where(F.abs(F.col("doc_id")) % 2 == 0)
+    langs = sorted(r["lang"] for r in corpus.select("lang").distinct()
+                   .collect())
+    assert len(langs) >= 3
+    return keep, langs[:2]
+
+
+def _run_attr(spark, keep, pick):
+    """attr_filter and a bucketed doc_filter, alone and together."""
+    eng = Engine(spark, ATTR_BASE)
+    # every doc_filter takes the bucketed (cogroup marker-row) route
+    eng.KEEP_BROADCAST_CAP = 0
+    assert eng._keep_entry(keep)[0] == "bucketed"
+    q = spark.createDataFrame(QUERIES, "query_id long, query string")
+    out = {}
+    for name, attr, filt in (("all", None, None), ("attr", pick, None),
+                             ("kept", None, keep), ("attr_kept", pick, keep)):
+        out[name] = sorted(
+            (r["query_id"], r["doc_id"], round(r["score"], 9), r["rank"])
+            for r in eng.search(q, k=10, attr_filter=attr,
+                                doc_filter=filt).collect())
+    return out, eng._query_plan(q)
+
+
+@pytest.fixture(scope="module")
+def attr_local_results(spark, attr_tombstoned):
+    out, plan = _run_attr(spark, *attr_tombstoned)
+    assert plan, "the reference must use the local plan"
+    assert all(out.values()), "every reference result must be non-empty"
+    assert out["attr"] != out["all"] and out["kept"] != out["all"]
+    return out
+
+
+@pytest.mark.parametrize("no_pushdown", [False, True])
+def test_attr_index_distributed_query_side_matches_local_plan(
+        spark, attr_tombstoned, attr_local_results, monkeypatch,
+        no_pushdown):
+    monkeypatch.setattr(bmw, "QT_PAIR_CAP", 0)
+    if no_pushdown:
+        monkeypatch.setattr(bmw, "TERM_PUSHDOWN_CAP", 0)
+    got, plan = _run_attr(spark, *attr_tombstoned)
+    assert plan is False
+    assert got == attr_local_results

@@ -114,3 +114,49 @@ def test_tokenize_is_jvm_side(spark):
     )._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.one_of(st.none(), st.text(max_size=80)), max_size=6))
+def test_native_matches_python_on_arbitrary_text(spark, texts):
+    """tokenize_col (the over-cap query side) and tokenize_py (the local
+    query plan, and the spec of the index's splitter) agree on arbitrary
+    text; a NULL string tokenizes to no tokens on both."""
+    import pandas as pd
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"i": range(len(texts)),
+                      "content": pd.Series(texts, dtype="object")}),
+        "i long, content string")
+    got = {r["i"]: r["toks"] or [] for r in
+           df.select("i", tokenize_col("content").alias("toks")).collect()}
+    assert [got[i] for i in range(len(texts))] == \
+        [tokenize_py(t) for t in texts]
+
+
+def _code_point_rows(it):
+    """(cp, text, tokenize_py(text) joined by spaces) for every code
+    point of the input range ids, in the context a{c}b x{c} {c}z."""
+    import pandas as pd
+
+    for pdf in it:
+        cps = pdf["id"].tolist()
+        texts = [f"a{chr(c)}b x{chr(c)} {chr(c)}z" for c in cps]
+        yield pd.DataFrame({
+            "cp": pdf["id"], "text": texts,
+            "want": [" ".join(tokenize_py(t)) for t in texts]})
+
+
+def test_native_matches_python_on_every_non_ascii_code_point(spark):
+    """Every non-ASCII code point (surrogates excluded: they have no
+    UTF-8 form) between ASCII letters, at a token edge and alone: the
+    JVM lowercase + split must give exactly Python's tokens. One job."""
+    import sys
+
+    cps = spark.range(0x80, sys.maxunicode + 1, numPartitions=8).where(
+        ~F.col("id").between(0xD800, 0xDFFF))
+    bad = (cps.mapInPandas(_code_point_rows,
+                           "cp long, text string, want string")
+           .where(F.array_join(tokenize_col("text"), " ") != F.col("want"))
+           .limit(20).collect())
+    assert not bad, [(hex(r["cp"]), r["text"], r["want"]) for r in bad]
