@@ -114,8 +114,6 @@ MANIFEST_SCHEMA = (
 RETIRED_SCHEMA = ("tbl string, part_col string, part_val string, "
                   "gen int, retired_at double")
 
-TOMBSTONES_SCHEMA = "doc_id long, tomb_batch string"
-
 
 def local_df(spark: SparkSession, pdf: pd.DataFrame,
              schema: str) -> DataFrame:
@@ -456,9 +454,8 @@ class IndexPaths:
         # tomb_batch: the delete-batch partition key — compaction purges
         # whole snapshotted batch partitions, so deletes that land DURING
         # a compact live in new partitions and are never dropped (closes
-        # the old drop-then-rewrite race). Reads as NULL on legacy
-        # non-partitioned tombstone files.
-        "tombstones": TOMBSTONES_SCHEMA,
+        # the old drop-then-rewrite race).
+        "tombstones": "doc_id long, tomb_batch string",
         "compact_postings": POSTINGS_SCHEMA_ATTR,
         "compact_docstats": "doc_id long, shard_id int, "
                             "content_sha256 string, dl long",
@@ -495,28 +492,20 @@ class IndexPaths:
 
 
 def visible_generations(meta: dict) -> list[int]:
-    """The COMMITTED generation-id set, sorted. Stored explicitly in
-    scalars (``visible_gens``, comma-separated) since compaction started
-    retiring arbitrary subsets; scalars written before that carry only
-    ``generation`` (then = highest committed id) and the visible set is
-    the full prefix. The scalars write is the commit point for every
-    membership change (append adds an id, compaction swaps a subset for
-    one new id): rows of any table whose generation is not in this set
-    are uncommitted/retired and must be invisible to every reader."""
-    vg = meta.get("visible_gens")
-    if vg is not None and str(vg) != "":
-        return sorted(int(g) for g in str(vg).split(","))
-    return list(range(int(meta.get("generation", 0)) + 1))
+    """The COMMITTED generation-id set, sorted — scalars'
+    ``visible_gens`` (comma-separated). The scalars write is the commit
+    point for every membership change (append adds an id, compaction
+    swaps a subset for one new id): rows of any table whose generation
+    is not in this set are uncommitted/retired and must be invisible to
+    every reader."""
+    return sorted(int(g) for g in str(meta["visible_gens"]).split(","))
 
 
 def next_generation(meta: dict) -> int:
     """Next unused generation id (monotonic — retired ids are never
     reused, so a crashed writer's orphan partitions can always be
     cleaned by the next writer that allocates the same id)."""
-    ng = meta.get("next_gen")
-    if ng is not None:
-        return int(ng)
-    return int(meta.get("generation", 0)) + 1
+    return int(meta["next_gen"])
 
 
 def _gen_shards(gens: list[int], n_shards: int) -> list[int]:
@@ -746,13 +735,17 @@ def build_index(
     then ONE shard shuffle of fused-Arrow postings feeding a per-shard
     applyInPandas block build; both are the shared generation-write
     steps (_write_gen_docstats, _write_gen_blocks). What is build's own:
-    overwrite semantics — the tables it rebuilds are dropped first — and
-    ``resume``, which keeps the blocks of shards the manifest lists as
-    ok (only missing shards are rebuilt) and reuses committed docstats
-    totals. termstats and manifest are always re-derived over all of
-    generation 0. The scalars row is written LAST (the commit point).
-    A resume rejects a committed index of another block format, and a
-    done shard without a docmap row is rebuilt.
+    a build starts from nothing — every table in IndexPaths.SCHEMAS is
+    dropped first (tombstones, the retired ledger, dedup state and
+    compaction staging included), so the index it commits is a fresh
+    generation 0 with nothing of an earlier index at the same path —
+    and ``resume``, whose checkpoint is the only thing kept: the blocks
+    of shards the manifest lists as ok (only missing shards are rebuilt)
+    and the committed docstats, whose totals are reused. termstats and
+    manifest are always re-derived over all of generation 0. The scalars
+    row is written LAST (the commit point). A resume rejects a committed
+    index of another block format, and a done shard without a docmap
+    row is rebuilt.
 
     attr_col: optional metadata column (e.g. ``lang``, ``repo``) that
     becomes a PHYSICAL partition column of the blocks table — the
@@ -792,11 +785,13 @@ def build_index(
         # else: the directory exists but holds no committed rows (crash
         # mid-write left only _temporary) — rebuild it; bare existence
         # must not be trusted as a checkpoint.
-    # overwrite semantics: drop every table this build rewrites (a resume
-    # keeps its done shards' blocks and reusable docstats)
+    # a build starts from nothing: drop every index table except a
+    # resume's own checkpoint (its done shards' blocks, reusable docstats)
     cat = paths.catalog(spark)
-    for name in (["termstats", "manifest"] + ([] if done else ["blocks"])
-                 + ([] if totals else ["docstats"])):
+    keep = {"blocks"} if done else set()
+    if totals:
+        keep.add("docstats")
+    for name in IndexPaths.SCHEMAS.keys() - keep:
         cat.drop_table(name)
 
     corpus, dt = _shard_corpus(spark, corpus, n_shards, 0, attr_col)
@@ -826,7 +821,7 @@ def _write_scalars(spark: SparkSession, paths: IndexPaths, n_docs: int,
                    avgdl: float, n_shards: int,
                    visible_gens: list[int],
                    next_gen: int,
-                   sum_dl: int | None = None,
+                   sum_dl: int,
                    last_batch_id: str | None = None,
                    attr_col: str | None = None) -> None:
     """The scalars row is the index's COMMIT POINT: every other table is
@@ -842,8 +837,6 @@ def _write_scalars(spark: SparkSession, paths: IndexPaths, n_docs: int,
     avgdl updates exact (no float drift); last_batch_id is the
     streaming replay guard; block_format is this module's BLOCK_FORMAT,
     which every reader checks (check_block_format)."""
-    if sum_dl is None:
-        sum_dl = int(round(avgdl * n_docs))
     visible_gens = sorted(visible_gens)
     generation = len(visible_gens) - 1
     row = dict(n_docs=n_docs, avgdl=avgdl, n_shards=n_shards,
@@ -893,7 +886,7 @@ def index_stats(spark: SparkSession, paths: IndexPaths) -> dict:
         "compression_ratio": round(raw_bytes / vb_bytes, 3)
         if vb_bytes else None,
         # maintenance signals (compact when either grows large)
-        "generation": int(meta.get("generation", 0)),
+        "generation": int(meta["generation"]),
         "n_generations": len(visible_generations(meta)),
         "visible_gens": visible_generations(meta),
         "n_tombstones": count_tombstones(spark, paths),
@@ -949,10 +942,8 @@ def append_index(
     corpus, dt = _shard_corpus(spark, new_corpus, n_shards, gen, attr_col)
     batch_n, batch_sum = _write_gen_docstats(spark, paths, dt, gen,
                                              n_shards)
-    prev_sum = int(meta.get("sum_dl") or
-                   round(float(meta["avgdl"]) * int(meta["n_docs"])))
     n_docs = int(meta["n_docs"]) + batch_n
-    sum_dl = prev_sum + batch_sum
+    sum_dl = int(meta["sum_dl"]) + batch_sum
     avgdl = (sum_dl / n_docs) if n_docs else 0.0
     _write_gen_blocks(spark, paths,
                       corpus_postings_arrow(corpus, attr=bool(attr_col)),
@@ -981,42 +972,18 @@ def delete_docs(spark: SparkSession, path: str,
     Each call lands in its own ``tomb_batch`` PARTITION: a full compact
     snapshots the batch set, purges those ids, and deletes exactly the
     snapshotted partitions — a delete_docs racing the compaction writes
-    a new partition that survives untouched (no lost deletes).
-
-    Legacy indexes (tombstone files written before batch partitioning
-    sit at the table ROOT) are migrated first: Spark's partition
-    discovery silently DROPS root-level files once a partition directory
-    appears next to them, so appending a partitioned batch into a legacy
-    layout would resurrect every previously-deleted doc. The migration
-    rewrites the table into a ``tomb_batch=legacy`` partition before the
-    first partitioned append; while the layout is pure-legacy the read
-    is still correct (explicit schema, missing column → NULL)."""
+    a new partition that survives untouched (no lost deletes). An index
+    of another block format is rejected first, with no Spark job."""
     import uuid
 
     paths = IndexPaths(path)
-    if paths.exists(spark, "tombstones"):
-        legacy = paths.read(spark, "tombstones") \
-            .where(F.col("tomb_batch").isNull())
-        if not legacy.isEmpty():
-            rows = [r["doc_id"] for r in
-                    paths.read(spark, "tombstones").select("doc_id")
-                    .distinct().collect()]
-            paths.write(_tombstone_rows(spark, rows, "legacy"),
-                        "tombstones", mode="overwrite",
-                        partition_by=["tomb_batch"])
+    check_block_format(load_meta(spark, paths), path)
     batch = f"{time.time_ns():x}-{uuid.uuid4().hex[:8]}"
     paths.write(
         doc_ids.select(F.col("doc_id").cast("long")).distinct()
         .withColumn("tomb_batch", F.lit(batch)),
         "tombstones", mode="append", partition_by=["tomb_batch"],
     )
-
-
-def _tombstone_rows(spark: SparkSession, doc_ids, batch: str) -> DataFrame:
-    """(doc_id, tomb_batch) rows of one batch, as an Arrow local relation."""
-    return local_df(spark, pd.DataFrame({
-        "doc_id": np.asarray(doc_ids, dtype=np.int64),
-        "tomb_batch": batch}), TOMBSTONES_SCHEMA)
 
 
 def load_tombstones(spark: SparkSession, paths: IndexPaths):
@@ -1149,19 +1116,15 @@ def compact_index(spark: SparkSession, path: str,
     # tombstone SNAPSHOT (full compact only — a partial compact can't
     # purge: tombstones don't record which generation holds a doc). The
     # snapshot records both the id set AND the batch-partition set, so
-    # the post-commit cleanup drops exactly the snapshotted partitions;
-    # legacy rows (pre-partitioning files, tomb_batch NULL) fall back to
-    # the old rewrite path.
-    tomb_arr, snap_batches, legacy_tombs = None, [], False
+    # the post-commit cleanup drops exactly the snapshotted partitions.
+    tomb_arr, snap_batches = None, []
     if full and paths.exists(spark, "tombstones"):
         trows = (paths.read(spark, "tombstones")
                  .select("doc_id", "tomb_batch").distinct().collect())
         if trows:
             tomb_arr = np.unique(np.array(
                 [r["doc_id"] for r in trows], dtype=np.int64))
-            batches = {r["tomb_batch"] for r in trows}
-            legacy_tombs = None in batches
-            snap_batches = sorted(b for b in batches if b is not None)
+            snap_batches = sorted({r["tomb_batch"] for r in trows})
     purge = tomb_arr is not None
     tomb_df = (local_df(spark, pd.DataFrame({"doc_id": tomb_arr}),
                         "doc_id long") if purge else None)
@@ -1184,9 +1147,7 @@ def compact_index(spark: SparkSession, path: str,
         n_docs, sum_dl = sel_n, sel_sum
     else:
         # pure re-layout: global stats are untouched
-        n_docs = int(meta["n_docs"])
-        sum_dl = int(meta.get("sum_dl") or
-                     round(float(meta["avgdl"]) * n_docs))
+        n_docs, sum_dl = int(meta["n_docs"]), int(meta["sum_dl"])
     avgdl = (sum_dl / n_docs) if n_docs else 0.0
 
     attr_mode = bool(meta.get("attr_col"))
@@ -1239,30 +1200,11 @@ def compact_index(spark: SparkSession, path: str,
     # staging has no readers — dropped immediately
     cat.drop_table("compact_postings")
     cat.drop_table("compact_docstats")
-    if purge:
-        if not legacy_tombs:
-            # drop exactly the SNAPSHOTTED batch partitions — a
-            # delete_docs that raced this compaction wrote a NEW batch
-            # partition, which survives untouched and stays excluded at
-            # query time under deferred stats (no lost deletes, no
-            # rewrite)
-            cat.delete_partitions("tombstones", "tomb_batch",
-                                  snap_batches)
-        else:
-            # legacy non-partitioned rows: the old rewrite (single-writer
-            # window while it runs — only reachable on indexes written
-            # before batch partitioning)
-            cur = [int(r["doc_id"])
-                   for r in paths.read(spark, "tombstones")
-                   .select("doc_id").distinct().collect()] \
-                if paths.exists(spark, "tombstones") else []
-            snap = set(int(d) for d in tomb_arr)
-            remaining = sorted(d for d in cur if d not in snap)
-            cat.drop_table("tombstones")
-            if remaining:
-                paths.write(_tombstone_rows(spark, remaining, "legacy"),
-                            "tombstones", mode="append",
-                            partition_by=["tomb_batch"])
+    # drop exactly the SNAPSHOTTED batch partitions — a delete_docs that
+    # raced this compaction wrote a NEW batch partition, which survives
+    # untouched and stays excluded at query time under deferred stats (no
+    # lost deletes, no rewrite)
+    cat.delete_partitions("tombstones", "tomb_batch", snap_batches)
     return paths
 
 

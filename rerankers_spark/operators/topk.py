@@ -43,9 +43,3 @@ def topk(df: DataFrame, k: int, partition_cols=("query_id",),
     return with_rank(df, partition_cols, score_col, id_col).where(
         F.col("rank") <= k
     )
-
-
-def global_topk(df: DataFrame, k: int, score_col: str = "score",
-                id_col: str = "doc_id") -> DataFrame:
-    """Global ORDER BY + LIMIT → TakeOrderedAndProject (no full sort)."""
-    return df.orderBy(F.desc(score_col), F.asc(id_col)).limit(k)

@@ -730,7 +730,7 @@ def bmw_topk(
         keep_bc = spark.sparkContext.broadcast(keep_arr)
     n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
     shard_ids = _gen_shards(visible_generations(meta),
-                            int(meta.get("n_shards", 32)))
+                            int(meta["n_shards"]))
     n_shards_total = len(shard_ids)
     if query_buckets is None:
         query_buckets = max(
@@ -841,7 +841,7 @@ def bmw_topk(
         # nullable int64 column would decay to float64 through Arrow →
         # pandas and mangle full-range xxhash64 doc ids (CLAUDE.md
         # invariant); query_id stays int64 because every row sets it.
-        n_sh = int(meta.get("n_shards", 32))
+        n_sh = int(meta["n_shards"])
         base = keep_docs.select(
             F.col("doc_id").cast("long").alias("keep_doc")).distinct()
         keep_sharded = None

@@ -105,10 +105,19 @@ class Catalog:
         if self.catalog_name:
             return self.table(name).collect()[0].asDict()
         fs, d = self._hadoop_fs(self._path(name))
+        empty_listings = 0
         while True:
             files = [st for st in fs.listStatus(d)
                      if not st.getPath().getName().startswith((".", "_"))]
             if not files:
+                # the local listStatus reads the names, then stats each
+                # and drops one deleted meanwhile: a commit that renames
+                # its file in after the read and deletes the old file
+                # before the stat empties this listing, and the next
+                # listing sees the renamed file
+                empty_listings += 1
+                if empty_listings < 3:
+                    continue
                 raise FileNotFoundError(
                     f"no committed row under {self._path(name)}")
             newest = max(files, key=lambda st: st.getModificationTime())

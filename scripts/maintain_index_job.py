@@ -45,7 +45,10 @@ from rerankers_spark.index.spimi import (  # noqa: E402
     IndexPaths,
     compact_index,
     delete_docs,
+    gc_retired,
     load_meta,
+    plan_tiered_merge,
+    visible_generations,
 )
 
 
@@ -85,29 +88,15 @@ def main() -> None:
         print(f"tombstoned {n} doc ids in {args.index}")
 
     if args.compact:
-        from pyspark.sql import functions as F  # noqa: F401
-
-        from rerankers_spark.index.spimi import visible_generations
-
         gens = None
         if args.generations:
             gens = [int(g) for g in args.generations.split(",")]
         elif args.tiered:
-            paths = IndexPaths(args.index)
-            meta = load_meta(spark, paths)
-            vis = visible_generations(meta)
-            if len(vis) < 3:
+            # merge every generation but the largest, once 3 are visible
+            gens = plan_tiered_merge(spark, IndexPaths(args.index),
+                                     max_generations=2) or []
+            if not gens:
                 print("tiered compact skipped: fewer than 3 generations")
-                gens = []
-            else:
-                sizes = {g: 0 for g in vis}
-                for r in (paths.read(spark, "manifest")
-                          .where(F.col("gen").isin(vis))
-                          .groupBy("gen").agg(
-                              F.sum("n_docs").alias("nd")).collect()):
-                    sizes[int(r["gen"])] = int(r["nd"] or 0)
-                largest = max(vis, key=lambda g: sizes[g])
-                gens = [g for g in vis if g != largest]
         if gens != []:
             t0 = time.time()
             compact_index(spark, args.index, generations=gens)
@@ -118,8 +107,6 @@ def main() -> None:
                   f"n_shards={meta['n_shards']}")
 
     if args.gc_retention_secs is not None:
-        from rerankers_spark.index.spimi import gc_retired
-
         deleted = gc_retired(spark, args.index,
                              retention_secs=args.gc_retention_secs)
         print(f"gc: deleted {len(deleted)} retired partitions")

@@ -6,8 +6,8 @@ each block-build group carries a docmap (spimi module docstring).
   shards, tombstones, broadcast and bucketed keep-lists and attribute-
   partitioned groups all match the numpy oracle in every search mode;
 * an index without the format (no docmap rows, no ``block_format`` in
-  its scalars) is rejected by search, append, compact and resume with
-  the rebuild error before any Spark job starts;
+  its scalars) is rejected by search, append, compact, delete and
+  resume with the rebuild error before any Spark job starts;
 * a resume rebuilds a done shard that has no docmap row.
 """
 
@@ -154,6 +154,10 @@ def _rewrite(f: str, table) -> None:
         os.remove(crc)
 
 
+def _files(d: str) -> list[str]:
+    return sorted(os.path.join(p, f) for p, _, fs in os.walk(d) for f in fs)
+
+
 def _strip_format(path: str, shards=None) -> None:
     """Rewrite an index as the previous format would have left it: no
     docmap rows in ``shards`` (default all), and (when every shard is
@@ -173,9 +177,13 @@ def test_previous_format_is_rejected_before_any_job(spark, corpus):
     shutil.rmtree(path, ignore_errors=True)
     full = _df(spark, corpus)
     spimi.build_index(spark, full, path, n_shards=2)
+    dead = spark.createDataFrame([(d,) for d in EDGE_IDS], "doc_id long")
+    spimi.delete_docs(spark, path, dead)
     _strip_format(path)
     paths = spimi.IndexPaths(path)
     meta0 = spimi.load_meta(spark, paths)
+    tombs0 = _files(f"{path}/tombstones")
+    assert tombs0
     assert "block_format" not in meta0
     q = spark.createDataFrame(QUERIES, "query_id long, query string")
     more = _df(spark, corpus.assign(doc_id=corpus["doc_id"] ^ 1))
@@ -184,6 +192,7 @@ def test_previous_format_is_rejected_before_any_job(spark, corpus):
         "bmw_topk": lambda: bmw.bmw_topk(spark, q, paths, k=K),
         "append": lambda: spimi.append_index(spark, more, path),
         "compact": lambda: spimi.compact_index(spark, path),
+        "delete": lambda: spimi.delete_docs(spark, path, dead),
         "resume": lambda: spimi.build_index(spark, full, path, n_shards=2,
                                             resume=True),
     }
@@ -194,6 +203,7 @@ def test_previous_format_is_rejected_before_any_job(spark, corpus):
             call()
         assert set(tracker.getJobIdsForGroup(None)) == before, name
     assert spimi.load_meta(spark, paths) == meta0
+    assert _files(f"{path}/tombstones") == tombs0
 
 
 def test_group_without_docmap_raises():

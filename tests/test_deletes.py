@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -219,30 +220,24 @@ def test_compact_purges_and_recomputes_stats(spark, deleted_engine):
     assert all_docs and not (all_docs & dead_ids)
 
 
-def test_legacy_tombstone_layout_migrates_on_new_delete(spark):
-    """A pre-batch-partitioning index has tombstone files at the table
-    ROOT; Spark partition discovery silently drops root files once a
-    partition dir appears beside them. delete_docs must migrate the
-    legacy rows into a tomb_batch=legacy partition BEFORE its first
-    partitioned append, so no previously-deleted doc resurrects."""
-    import shutil
-
-    base = "/tmp/test_legacy_tombstones"
+def test_every_delete_runs_the_same_jobs(spark):
+    """A delete_docs call costs the same Spark jobs however many
+    tombstone batches the index already holds."""
+    base = "/tmp/test_delete_jobs"
     shutil.rmtree(base, ignore_errors=True)
-    pdf = synthetic_corpus_pdf(60)
-    corpus = with_doc_id(spark.createDataFrame(pdf))
+    corpus = with_doc_id(spark.createDataFrame(synthetic_corpus_pdf(60)))
     spimi.build_index(spark, corpus, base, n_shards=2)
-    paths = spimi.IndexPaths(base)
-    # simulate the legacy writer: doc_id-only rows, no partitioning
-    old_ids = [r["doc_id"] for r in corpus.select("doc_id")
-               .where(F.abs(F.col("doc_id")) % 5 == 0).collect()]
-    paths.write(spark.createDataFrame([(d,) for d in old_ids],
-                                      "doc_id long"),
-                "tombstones", mode="append")
-    new_ids = [r["doc_id"] for r in corpus.select("doc_id")
-               .where(F.abs(F.col("doc_id")) % 5 == 1).collect()]
-    spimi.delete_docs(spark, base,
-                      spark.createDataFrame([(d,) for d in new_ids],
-                                            "doc_id long"))
-    tomb = spimi.load_tombstones(spark, paths)
-    assert set(int(d) for d in tomb) == set(old_ids) | set(new_ids)
+    sc = spark.sparkContext
+    counts = []
+    for i in range(4):
+        group = f"delete-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "delete")
+        try:
+            spimi.delete_docs(spark, base, corpus.select("doc_id").where(
+                F.abs(F.col("doc_id")) % 5 == i))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert counts[0] > 0 and counts == [counts[0]] * 4, counts
+    assert spimi.count_tombstones(spark, spimi.IndexPaths(base)) > 0

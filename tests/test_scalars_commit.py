@@ -4,7 +4,7 @@ spelling of a local root commits to the same directory; a ``viewfs://``
 mount of a local directory stands in for a non-local scheme offline. A
 commit or read starts no Spark job, a failed commit leaves the old row in
 force, and a concurrent reader never finds the directory without a
-complete row."""
+complete row: a listing a concurrent commit left empty is taken again."""
 
 from __future__ import annotations
 
@@ -122,6 +122,45 @@ def test_failed_byte_write_keeps_the_previous_row(spark, viewfs,
     assert spimi.load_meta(spark, paths)["n_docs"] == 7
     (name,) = _visible(d)
     assert sorted(os.listdir(d)) == [f".{name}.crc", name]
+
+
+class _FirstListingEmpty:
+    """A Hadoop FileSystem whose first listStatus finds nothing, as a
+    local listing does when a commit deletes the old row between the
+    listing's directory read and its stat of that name."""
+
+    def __init__(self, fs):
+        self._fs, self.listings = fs, 0
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def listStatus(self, d):
+        self.listings += 1
+        return [] if self.listings == 1 else self._fs.listStatus(d)
+
+
+def test_read_lists_again_after_an_empty_listing(spark, monkeypatch):
+    shutil.rmtree(BASE, ignore_errors=True)
+    paths = spimi.IndexPaths(BASE)
+    _commit(spark, BASE, 9)
+    real = Catalog._hadoop_fs
+    fss = []
+
+    def first_listing_empty(self, path_str):
+        fs, jpath = real(self, path_str)
+        fss.append(_FirstListingEmpty(fs))
+        return fss[-1], jpath
+
+    monkeypatch.setattr(Catalog, "_hadoop_fs", first_listing_empty)
+    assert spimi.load_meta(spark, paths)["n_docs"] == 9
+    assert fss[-1].listings == 2
+    monkeypatch.undo()
+    # a directory with no committed row still raises
+    for f in _visible(f"{BASE}/scalars"):
+        os.remove(f"{BASE}/scalars/{f}")
+    with pytest.raises(FileNotFoundError, match="no committed row"):
+        spimi.load_meta(spark, paths)
 
 
 def test_viewfs_index_lifecycle_matches_local(spark, viewfs):
