@@ -540,14 +540,17 @@ def load_blocks(spark: SparkSession, paths: IndexPaths,
 
 def load_termstats(spark: SparkSession, paths: IndexPaths,
                    meta: dict) -> DataFrame:
-    """(term, df) over committed generations. termstats is stored as
-    per-generation df CONTRIBUTIONS (partition column ``gen``) so an
+    """(term, df, idf) over committed generations. termstats is stored
+    as per-generation df CONTRIBUTIONS (partition column ``gen``) so an
     append only writes its own generation's partition — append-only like
-    every other table, visibility-gated by the same scalars commit."""
+    every other table, visibility-gated by the same scalars commit. idf
+    is bm25.idf_col over the committed n_docs: the one place a search's
+    idf is evaluated, once per term, on both query-side formulations."""
     return (
         paths.read(spark, "termstats")
         .where(F.col("gen").isin(visible_generations(meta)))
         .groupBy("term").agg(F.sum("df").cast("long").alias("df"))
+        .withColumn("idf", bm25.idf_col(F.col("df"), int(meta["n_docs"])))
     )
 
 
@@ -761,6 +764,9 @@ def build_index(
     """
     paths = IndexPaths(path)
     done: set[int] = set()
+    # the checkpoint is generation 0 only: appended or compacted
+    # generations at the path are not this build's
+    gen0 = shard_pred({"n_shards": n_shards}, [0])
     if resume and paths.exists(spark, "scalars"):
         check_block_format(load_meta(spark, paths), path)
     if resume and paths.exists(spark, "manifest") \
@@ -768,16 +774,16 @@ def build_index(
         done = {
             r["shard_id"]
             for r in paths.read(spark, "manifest")
-            .where(F.col("status") == "ok")
+            .where((F.col("status") == "ok") & gen0)
             .join(paths.read(spark, "blocks")
-                  .where(F.col("term") == DOCMAP_TERM)
+                  .where((F.col("term") == DOCMAP_TERM) & gen0)
                   .select("shard_id").distinct(), "shard_id")
             .select("shard_id")
             .collect()
         }
     totals = None
     if resume and paths.exists(spark, "docstats"):
-        row = paths.read(spark, "docstats").agg(
+        row = paths.read(spark, "docstats").where(gen0).agg(
             F.count("*").alias("n"),
             F.sum("dl").cast("long").alias("sum_dl")).collect()[0]
         if int(row["n"]) > 0:
@@ -786,13 +792,18 @@ def build_index(
         # mid-write left only _temporary) — rebuild it; bare existence
         # must not be trusted as a checkpoint.
     # a build starts from nothing: drop every index table except a
-    # resume's own checkpoint (its done shards' blocks, reusable docstats)
+    # resume's own checkpoint (its done shards' blocks, reusable
+    # docstats), and of those every partition outside generation 0
     cat = paths.catalog(spark)
     keep = {"blocks"} if done else set()
     if totals:
         keep.add("docstats")
     for name in IndexPaths.SCHEMAS.keys() - keep:
         cat.drop_table(name)
+    for name in keep:
+        cat.delete_partitions(name, "shard_id", [
+            v for v in cat.partition_values(name, "shard_id")
+            if not 0 <= int(v) < n_shards])
 
     corpus, dt = _shard_corpus(spark, corpus, n_shards, 0, attr_col)
     n_docs, sum_dl = totals or _write_gen_docstats(spark, paths, dt, 0,

@@ -17,29 +17,30 @@ materializes the full sorted group — this is the scale path for
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def rank_window(partition_cols, score_col: str = "score",
-                id_col: str = "doc_id") -> Window:
-    return Window.partitionBy(*partition_cols).orderBy(
-        F.desc(score_col), F.asc(id_col)
-    )
+def _rank_sql(partition_cols, score_col: str, id_col: str) -> str:
+    """``row_number() OVER (PARTITION BY .. ORDER BY score DESC, id ASC)``
+    as one SQL string: one parse on the JVM where the Column API costs a
+    py4j round trip per window piece. DESC sorts nulls last and ASC nulls
+    first, as F.desc / F.asc do."""
+    part = ", ".join(f"`{c}`" for c in partition_cols)
+    over = (f"PARTITION BY {part} " if part else "") + \
+        f"ORDER BY `{score_col}` DESC, `{id_col}` ASC"
+    return f"row_number() OVER ({over})"
 
 
 def with_rank(df: DataFrame, partition_cols=("query_id",),
               score_col: str = "score", id_col: str = "doc_id") -> DataFrame:
     """rank = row_number over (score desc, id asc) — reference rank=idx+1."""
     return df.withColumn(
-        "rank",
-        F.row_number().over(rank_window(partition_cols, score_col, id_col)),
-    )
+        "rank", F.expr(_rank_sql(partition_cols, score_col, id_col)))
 
 
 def topk(df: DataFrame, k: int, partition_cols=("query_id",),
          score_col: str = "score", id_col: str = "doc_id") -> DataFrame:
     """Exact per-group top-k (reference results.py:56-68, k-best by score)."""
     return with_rank(df, partition_cols, score_col, id_col).where(
-        F.col("rank") <= k
-    )
+        f"rank <= {int(k)}")

@@ -1,16 +1,27 @@
 """Exact BM25 top-k over the doc-sharded block index.
 
-Distribution model: queries are split into B buckets and cogrouped with
-the shard's blocks on ``(shard_id, bucket)`` — the doc-sharded layout
-(see spimi.py) makes shard results independent, so per-shard top-k lists
-merge into the EXACT global top-k with a final window. Parallelism =
-|shards| × B. A bounded query set (QT_PAIR_CAP) is planned on the driver
-and dealt round-robin over the buckets; past the cap the query set stays
-distributed, hash-bucketed by ``pmod(xxhash64(query_id), B)`` (no driver
-collect — the query log can be a billion rows).
+Distribution model: queries are split into B buckets and each task
+scores one ``(shard_id, bucket)`` group of blocks against its bucket's
+queries — the doc-sharded layout (see spimi.py) makes shard results
+independent, so per-shard top-k lists merge into the EXACT global top-k
+with a final window. Parallelism = |shards| × B. Two formulations, one
+task body:
 
-Every Engine.search mode runs through this one cogroup kernel (bmw_topk),
-and every (query, shard) pair in it is scored by scan_topk_shard: a
+* bounded query sets (QT_PAIR_CAP, LocalQueryPlan): the queries are
+  tokenized on the driver, their (df, idf) come from the Engine's
+  vocabulary snapshot or one bounded lookup, and they are dealt
+  round-robin over the buckets. Only the blocks side is shuffled — a
+  grouped map over ``(shard_id, bucket)`` — and each task takes its
+  bucket's (query_id, term, idf) arrays from the plan captured in its
+  closure (≤ QT_PAIR_CAP pairs; PySpark ships a pickled command over
+  1 MB as a broadcast). A warm search is three Spark jobs.
+* past the cap, or with a bucketed keep-list (whose ids are already a
+  ≥ 10M-row shuffle), the query set stays distributed, hash-bucketed
+  by ``pmod(xxhash64(query_id), B)`` and cogrouped with the blocks (no
+  driver collect — the query log can be a billion rows).
+
+Every Engine.search mode runs through bmw_topk, and every (query, shard)
+pair in it is scored by scan_topk_shard: a
 columnar, term-at-a-time block scan that decodes the task's blocks once
 and scores all of the task's queries against a dense accumulator. Per-
 element work stays inside numpy: the per-query Python loops it replaced
@@ -18,7 +29,7 @@ element work stays inside numpy: the per-query Python loops it replaced
 on 1k-25k-doc shards, single-threaded on a 4-core x86 host.
 
 Block rows address docs by shard-local ordinal (spimi block format 2).
-Each group's docmap rows ride the cogroup with its posting rows; the
+Each group's docmap rows ride the shuffle with its posting rows; the
 kernel scores ordinals, and bmw_topk's task body maps tombstones and
 keep-lists into ordinals and the kernel's output back to doc ids
 through the spimi decode helpers. Ordinal order is doc_id order, so the
@@ -470,23 +481,22 @@ def wand_topk_shard(
 
 
 def query_terms_with_idf(
-    spark: SparkSession, queries: DataFrame, paths: IndexPaths, n_docs: int,
+    spark: SparkSession, queries: DataFrame, paths: IndexPaths,
     termstats: DataFrame | None = None,
 ) -> DataFrame:
-    """(query_id, term, idf) for the query set — termstats is filtered to
-    the query vocabulary BEFORE it is broadcast (semi-reduction), so the
-    full vocab table never moves. termstats, when not passed, is loaded
-    through spimi.load_termstats (per-generation contributions summed
-    over the COMMITTED generations only)."""
+    """(query_id, term, idf, df) for the query set — termstats is
+    filtered to the query vocabulary BEFORE it is broadcast
+    (semi-reduction), so the full vocab table never moves. termstats,
+    when not passed, is loaded through spimi.load_termstats
+    (per-generation contributions summed over the COMMITTED generations
+    only, idf evaluated once per term)."""
     from rerankers_spark.index.spimi import load_meta, load_termstats
 
     qt = bm25.query_terms(queries)
     ts = termstats if termstats is not None \
         else load_termstats(spark, paths, load_meta(spark, paths))
     return qt.join(ts, "term", "inner").select(
-        "query_id", "term", bm25.idf_col(F.col("df"), n_docs).alias("idf"),
-        "df",
-    )
+        "query_id", "term", "idf", "df")
 
 
 #: query vocabularies up to this size are collected once (a bounded,
@@ -498,14 +508,14 @@ TERM_PUSHDOWN_CAP = 4096
 #: query sets of at most this many rows and (query_id, term) pairs get
 #: the LOCAL query-plan fast path: the query rows are collected once and
 #: tokenized on the driver (no job when the queries frame is a local
-#: relation), term df is fetched with one bounded lookup, and the
-#: cogroup's query side is one local relation. The distributed
-#: formulation re-evaluated the tokenize→dedup→termstats subplan 3-5×
-#: per search (term collect, bucket_terms broadcast build, q_side —
-#: measured ~4 s of redundant jobs per 50-query call at local[32]). Past
-#: the cap the fully distributed path runs — a billion-row query log
-#: never touches the driver (same size-gated adaptivity as a broadcast
-#: join).
+#: relation), term (df, idf) come from the Engine's vocabulary snapshot
+#: or one bounded lookup, and the tasks take their queries from their
+#: closure — no query-side shuffle. The distributed formulation
+#: re-evaluates the tokenize→dedup→termstats subplan 3-5× per search
+#: (term collect, bucket_terms broadcast build, q_side — measured ~4 s
+#: of redundant jobs per 50-query call at local[32]). Past the cap the
+#: fully distributed path runs — a billion-row query log never touches
+#: the driver (same size-gated adaptivity as a broadcast join).
 QT_PAIR_CAP = 16384
 
 
@@ -524,19 +534,54 @@ def _explode_ints(values) -> Column:
     return F.expr(f"explode(array({', '.join(str(int(v)) for v in values)}))")
 
 
+def lookup_term_stats(termstats: DataFrame,
+                      terms: list[str]) -> dict[str, tuple[int, float]]:
+    """{term: (df, idf)} of the in-vocabulary ``terms``: one bounded
+    Spark job (the term list is one hash InSet on termstats)."""
+    return {t: (int(df), float(idf)) for t, df, idf in
+            termstats.where(_sql_in("term", terms))
+            .select("term", "df", "idf").collect()}
+
+
+class VocabSnapshot:
+    """A whole index state's (term, df, idf) on the driver: a pandas
+    Index over the terms plus two parallel arrays (about half the driver
+    memory of a {term: (df, idf)} dict, built 20× faster). idf is the
+    JVM's (spimi.load_termstats), so a plan built from the snapshot
+    scores bit-identically to one built by lookup_term_stats."""
+
+    __slots__ = ("terms", "df", "idf")
+
+    def __init__(self, pdf: pd.DataFrame):
+        self.terms = pd.Index(pdf["term"].to_numpy(dtype=object))
+        self.df = pdf["df"].to_numpy(dtype=np.int64)
+        self.idf = pdf["idf"].to_numpy(dtype=np.float64)
+
+    @classmethod
+    def load(cls, termstats: DataFrame, cap: int) -> "VocabSnapshot | None":
+        """One Arrow collect of at most cap + 1 rows; None past ``cap``."""
+        pdf = termstats.select("term", "df", "idf").limit(cap + 1).toPandas()
+        return None if len(pdf) > cap else cls(pdf)
+
+    def lookup(self, terms: list[str]) -> dict[str, tuple[int, float]]:
+        """lookup_term_stats on the driver: no Spark job."""
+        pos = self.terms.get_indexer(terms)
+        return {t: (int(self.df[p]), float(self.idf[p]))
+                for t, p in zip(terms, pos) if p >= 0}
+
+
 class LocalQueryPlan:
     """Driver-materialized query plan: deduplicated in-vocabulary
-    (query_id, term) pairs + the df of each term. idf is NOT computed
-    here — it is evaluated by the same JVM Column expression
-    (bm25.idf_col) on the local relation, so scores stay bit-identical
-    to the distributed path."""
+    (query_id, term) pairs + the (df, idf) of each term. idf is the
+    JVM's, evaluated once per term (spimi.load_termstats), so scores
+    stay bit-identical to the distributed path."""
 
-    __slots__ = ("pairs", "terms", "df_map", "n_queries", "qtext")
+    __slots__ = ("pairs", "terms", "stats", "n_queries", "qtext")
 
-    def __init__(self, pairs, terms, df_map, n_queries, qtext=None):
+    def __init__(self, pairs, terms, stats, n_queries, qtext=None):
         self.pairs = pairs          # [(query_id, term)] in-vocab, sorted
         self.terms = terms          # sorted in-vocab term list
-        self.df_map = df_map        # {term: df}
+        self.stats = stats          # {term: (df, idf)}
         self.n_queries = n_queries  # distinct query ids INCLUDING all-OOV
         self.qtext = qtext or {}    # {query_id: query text} (rank() join)
 
@@ -556,31 +601,34 @@ class LocalQueryPlan:
                           "query": [self.qtext[q] for q in ids]}),
             "query_id long, query string")
 
-    def bucketed_pairs(self, n_buckets: int) -> pd.DataFrame:
-        """(query_id, term, df, bucket) rows: the queries dealt round-
-        robin over the buckets in query_id order. Any assignment is
-        exact (a query meets every shard in exactly one task); this one
-        is balanced and needs no hash on the driver."""
+    def bucketed(self, n_buckets: int
+                 ) -> dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]]:
+        """{bucket: (query_id, term, idf) arrays}: the queries dealt
+        round-robin over the buckets in query_id order. Any assignment
+        is exact (a query meets every shard in exactly one task); this
+        one is balanced and needs no hash on the driver."""
         qid = np.array([q for q, _ in self.pairs], dtype=np.int64)
-        return pd.DataFrame({
-            "query_id": qid,
-            "term": [t for _, t in self.pairs],
-            "df": np.array([self.df_map[t] for _, t in self.pairs],
-                           dtype=np.int64),
-            # pairs are sorted: factorize codes are query_id ranks
-            "bucket": (pd.factorize(qid)[0] % n_buckets).astype(np.int32),
-        })
+        term = np.array([t for _, t in self.pairs], dtype=object)
+        idf = np.array([self.stats[t][1] for _, t in self.pairs],
+                       dtype=np.float64)
+        # pairs are sorted: factorize codes are query_id ranks
+        bucket = pd.factorize(qid)[0] % n_buckets
+        return {int(b): (qid[m], term[m], idf[m])
+                for b in np.unique(bucket) for m in [bucket == b]}
 
 
 def build_local_query_plan(
     spark: SparkSession, queries: DataFrame, termstats: DataFrame,
+    term_stats=None,
 ) -> LocalQueryPlan | None:
     """Try to materialize the bounded local query plan; None past the
     caps (the caller falls back to the distributed formulation). The
     query rows are collected (bounded by the cap) and tokenized on the
     driver with tokenize_py, the spec twin of the index's tokenizer and
-    of tokenize_col; the term-df lookup filtered to that vocabulary is
-    the one Spark job. The caps are read at call time."""
+    of tokenize_col. ``term_stats``: optional ``terms → {term: (df,
+    idf)}`` callable, called only once the caps are passed (the Engine's
+    vocabulary snapshot); None → lookup_term_stats, the one Spark job.
+    The caps are read at call time."""
     from rerankers_spark.functions.tokenize import tokenize_py
 
     rows = queries.select("query_id", "query").limit(QT_PAIR_CAP + 1) \
@@ -602,14 +650,12 @@ def build_local_query_plan(
     terms = sorted({t for _, t in seen})
     if len(terms) > TERM_PUSHDOWN_CAP:
         return None
-    df_map: dict[str, int] = {}
+    stats: dict[str, tuple[int, float]] = {}
     if terms:
-        df_map = {
-            r["term"]: int(r["df"])
-            for r in termstats.where(F.expr(_sql_in("term", terms)))
-            .collect()}
-    pairs = [(q, t) for q, t in sorted(seen) if t in df_map]
-    return LocalQueryPlan(pairs, sorted(df_map), df_map, len(qtext), qtext)
+        stats = (term_stats(terms) if term_stats is not None
+                 else lookup_term_stats(termstats, terms))
+    pairs = [(q, t) for q, t in sorted(seen) if t in stats]
+    return LocalQueryPlan(pairs, sorted(stats), stats, len(qtext), qtext)
 
 
 def empty_result(spark: SparkSession) -> DataFrame:
@@ -665,8 +711,9 @@ def bmw_topk(
       tombstones); right for filters up to ~10M ids (~80 MB).
     * 'bucketed' — keep ids are SHARDED like the index (each id maps to
       its candidate shard in every visible generation) and flow through
-      the same (shard, bucket) cogroup shuffle as marker rows on the
-      query side — fully distributed: no driver materialization, no
+      the (shard, bucket) cogroup shuffle as marker rows on the query
+      side (so such a search always takes the cogroup) — fully
+      distributed: no driver materialization, no
       broadcast, each task sees only its own shard's keep ids (|keep| ×
       |gens| × B shuffle rows), so arbitrarily large filters stay off
       the driver; Engine.search auto-routes past
@@ -692,7 +739,7 @@ def bmw_topk(
     partition directories are pruned before any byte moves (the 100-TB
     shape for high-selectivity attributes; no keep-list, no broadcast).
     Scores keep full-corpus stats, identical semantics to the
-    keep-list paths. The cogroup keys are (shard, bucket) on every
+    keep-list paths. The task keys are (shard, bucket) on every
     index; on an attr-partitioned index the task scores each (shard,
     attr) docmap group of its rows separately — the groups are
     doc-disjoint, so per-group top-k lists still merge exactly.
@@ -728,7 +775,7 @@ def bmw_topk(
              .distinct().collect()], dtype=np.int64)
         keep_arr.sort()
         keep_bc = spark.sparkContext.broadcast(keep_arr)
-    n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
+    avgdl = float(meta["avgdl"])
     shard_ids = _gen_shards(visible_generations(meta),
                             int(meta["n_shards"]))
     n_shards_total = len(shard_ids)
@@ -741,7 +788,11 @@ def bmw_topk(
 
     # local_plan: None = not probed yet; False = probed, past the caps
     # (use the distributed path without re-probing); a LocalQueryPlan is
-    # truthy and selects the local path.
+    # truthy and selects the local path. A bucketed keep-list's ids are
+    # already a shuffle of >= KEEP_BROADCAST_CAP rows: it always rides
+    # the cogroup.
+    if bucketed_keep:
+        local_plan = False
     if not local_plan and termstats is None:
         from rerankers_spark.index.spimi import load_termstats
 
@@ -761,76 +812,98 @@ def bmw_topk(
         blocks = blocks.where(
             F.col("attr").isin([str(v) for v in attr_values]))
 
+    def _task(bpdf: pd.DataFrame, qids: np.ndarray, terms: np.ndarray,
+              idfs: np.ndarray, keep_local: np.ndarray | None
+              ) -> pd.DataFrame:
+        """The task body of both formulations: one (shard, bucket)
+        group's block rows scored against its queries."""
+        if len(bpdf) == 0 or len(qids) == 0:
+            return _empty_topk()
+        deleted = tomb_bc.value if tomb_bc is not None else None
+        # each docmap group — the shard, or on an attr index each (shard,
+        # attr) pair — numbers its own ordinals and is doc-disjoint from
+        # the others: scored on its own, the lists merge in the top-k
+        outs = []
+        for _, g in (bpdf.groupby("attr", dropna=False, sort=False)
+                     if attr_mode else [(None, bpdf)]):
+            # the kernel sees ordinals: tombstones and the keep-list map
+            # in through the group's docmap, its output ordinals map back
+            postings, doc_map = split_docmap(g)
+            out = scan_topk_shard(
+                postings, qids, terms, idfs, k, avgdl,
+                deleted=None if deleted is None
+                else ordinals_of(doc_map, deleted),
+                keep=None if keep_local is None
+                else ordinals_of(doc_map, keep_local))
+            out["doc_id"] = doc_map[out["doc_id"].to_numpy(dtype=np.int64)]
+            outs.append(out)
+        return pd.concat(outs, ignore_index=True)
+
+    schema = "query_id long, doc_id long, score double"
+    if local_plan:
+        # bounded local plan: query terms, (df, idf) and buckets are on
+        # the driver. Only the blocks side is shuffled, bucketed by one
+        # expression with a hash InSet per bucket; each task takes its
+        # bucket's queries from the plan in its closure — no query
+        # subplan, no broadcast, no query-side job.
+        if local_plan.empty:
+            return empty_result(spark)
+        by_bucket = local_plan.bucketed(n_buckets)
+        # the pushdown keeps only the plan's terms and the docmap, so a
+        # bucket holding every term takes every row
+        arms = [str(b) if len(set(t)) == len(local_plan.terms) else
+                f"IF({_sql_in('term', sorted(set(t)) + [DOCMAP_TERM])}, "
+                f"{b}, NULL)"
+                for b, (_, t, _) in by_bucket.items()]
+        blocks_b = blocks.where(
+            _sql_in("term", local_plan.terms + [DOCMAP_TERM])).selectExpr(
+            "*", f"explode(array_compact(array({', '.join(arms)}))) "
+                 "AS bucket")
+
+        def _run_local(key, bpdf):
+            return _task(bpdf, *by_bucket[int(key[1])],
+                         keep_bc.value if keep_bc is not None else None)
+
+        local = blocks_b.groupby("shard_id", "bucket").applyInPandas(
+            _run_local, schema)
+        return topk(local, k)
+
     # Both sides are keyed on (shard_id, bucket). A posting row goes to
     # exactly the buckets whose queries use its term, a docmap row to
     # every bucket; a query row goes to every shard (shard results are
     # doc-disjoint and merge exactly — the query side is rows of (id,
     # term, idf), tiny next to block bytes, so the |shards|× replication
     # is the cheap direction).
-    if local_plan:
-        # bounded local plan: query terms, df and buckets are on the
-        # driver — the query side is ONE local relation (idf via the
-        # same JVM expression as the distributed path), and the blocks
-        # side is bucketed by one expression with a hash InSet per
-        # bucket: no query subplan, no broadcast, no extra job.
-        if local_plan.empty:
-            return empty_result(spark)
-        pairs = local_plan.bucketed_pairs(n_buckets)
-        used = sorted(set(pairs["bucket"]))
-        qt = local_df(spark, pairs,
-                      "query_id long, term string, df long, bucket int") \
-            .coalesce(1).select(
-                "query_id", "term",
-                bm25.idf_col(F.col("df"), n_docs).alias("idf"), "bucket")
+
+    # instantiated separately per use so the cogroup's two sides don't
+    # share an attribute (ambiguous-self-join check)
+    def _bucket_col():
+        return F.pmod(F.xxhash64("query_id"), F.lit(n_buckets)).cast("int")
+
+    qt_idf = query_terms_with_idf(spark, queries, paths, termstats)
+    # Bounded term-list pushdown (see TERM_PUSHDOWN_CAP). limit() means
+    # the driver never holds more than CAP+1 terms even for a huge query
+    # log. Collected from the RAW query terms (no termstats join in this
+    # job); OOV terms in the list are harmless — they match no blocks.
+    term_rows = bm25.query_terms(queries).select("term").distinct() \
+        .limit(TERM_PUSHDOWN_CAP + 1).collect()
+    if not term_rows:
+        return empty_result(spark)
+    if len(term_rows) <= TERM_PUSHDOWN_CAP:
         blocks = blocks.where(F.expr(_sql_in(
-            "term", local_plan.terms + [DOCMAP_TERM])))
-        # the pushdown keeps only the plan's terms and the docmap, so a
-        # bucket holding every term takes every row
-        arms = [str(b) if g.nunique() == len(local_plan.terms) else
-                f"IF({_sql_in('term', sorted(set(g)) + [DOCMAP_TERM])}, "
-                f"{b}, NULL)"
-                for b, g in pairs.groupby("bucket")["term"]]
-        blocks_b = blocks.select("*", F.expr(
-            f"explode(array_compact(array({', '.join(arms)})))"
-        ).alias("bucket"))
-    else:
-        used = range(n_buckets)
-
-        # instantiated separately per use so the cogroup's two sides
-        # don't share an attribute (ambiguous-self-join check)
-        def _bucket_col():
-            return F.pmod(F.xxhash64("query_id"),
-                          F.lit(n_buckets)).cast("int")
-
-        qt_idf = query_terms_with_idf(spark, queries, paths, n_docs,
-                                      termstats)
-        qt = qt_idf.select("query_id", "term", "idf",
-                           _bucket_col().alias("bucket"))
-        # Bounded term-list pushdown (see TERM_PUSHDOWN_CAP). limit() means
-        # the driver never holds more than CAP+1 terms even for a huge
-        # query log. Collected from the RAW query terms (no termstats join
-        # in this job); OOV terms in the list are harmless — they match no
-        # blocks.
-        term_rows = bm25.query_terms(queries).select("term").distinct() \
-            .limit(TERM_PUSHDOWN_CAP + 1).collect()
-        if not term_rows:
-            return empty_result(spark)
-        if len(term_rows) <= TERM_PUSHDOWN_CAP:
-            blocks = blocks.where(F.expr(_sql_in(
-                "term", [r["term"] for r in term_rows] + [DOCMAP_TERM])))
-        # docmap rows join every bucket through a literal relation, so
-        # the query subplan is not evaluated once more for them
-        docmap_buckets = local_df(
-            spark, pd.DataFrame({"bucket": np.arange(n_buckets,
-                                                     dtype=np.int32),
-                                 "term": DOCMAP_TERM}),
-            "bucket int, term string")
-        bucket_terms = qt_idf.select(_bucket_col().alias("bucket"), "term") \
-            .distinct().unionByName(docmap_buckets)
-        blocks_b = blocks.join(F.broadcast(bucket_terms), "term")
-
-    q_side = qt.select("query_id", "term", "idf", "bucket",
-                       _explode_ints(shard_ids).alias("shard_id"))
+            "term", [r["term"] for r in term_rows] + [DOCMAP_TERM])))
+    # docmap rows join every bucket through a literal relation, so the
+    # query subplan is not evaluated once more for them
+    docmap_buckets = local_df(
+        spark, pd.DataFrame({"bucket": np.arange(n_buckets, dtype=np.int32),
+                             "term": DOCMAP_TERM}),
+        "bucket int, term string")
+    bucket_terms = qt_idf.select(_bucket_col().alias("bucket"), "term") \
+        .distinct().unionByName(docmap_buckets)
+    blocks_b = blocks.join(F.broadcast(bucket_terms), "term")
+    q_side = qt_idf.select("query_id", "term", "idf",
+                           _bucket_col().alias("bucket"),
+                           _explode_ints(shard_ids).alias("shard_id"))
 
     if bucketed_keep:
         # keep ids flow through the SAME (shard, bucket) cogroup shuffle
@@ -856,47 +929,26 @@ def bmw_topk(
             F.col("keep_doc").alias("query_id"),
             F.lit(None).cast("string").alias("term"),
             F.lit(None).cast("double").alias("idf"),
-            _explode_ints(used).alias("bucket"), "shard_id"))
+            _explode_ints(range(n_buckets)).alias("bucket"), "shard_id"))
 
     def _run(bpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
+        if len(qpdf) == 0:
+            return _empty_topk()
         keep_local = keep_bc.value if keep_bc is not None else None
         if bucketed_keep:
             # marker rows (term NULL) → this task's keep array. An ACTIVE
             # bucketed filter with no marker rows in the group means no
             # eligible docs in this shard — empty array (excludes all),
             # not None.
-            if len(qpdf):
-                km = qpdf["term"].isna()
-                keep_local = np.sort(
-                    qpdf.loc[km, "query_id"].to_numpy(dtype=np.int64))
-                qpdf = qpdf[~km]
-            else:
-                keep_local = np.array([], dtype=np.int64)
-        if len(bpdf) == 0 or len(qpdf) == 0:
-            return _empty_topk()
-        deleted = tomb_bc.value if tomb_bc is not None else None
-        # each docmap group — the shard, or on an attr index each (shard,
-        # attr) pair — numbers its own ordinals and is doc-disjoint from
-        # the others: scored on its own, the lists merge in the top-k
-        outs = []
-        for _, g in (bpdf.groupby("attr", dropna=False, sort=False)
-                     if attr_mode else [(None, bpdf)]):
-            # the kernel sees ordinals: tombstones and the keep-list map
-            # in through the group's docmap, its output ordinals map back
-            postings, doc_map = split_docmap(g)
-            out = scan_topk_shard(
-                postings, qpdf["query_id"].to_numpy(dtype=np.int64),
-                qpdf["term"].to_numpy(dtype=object),
-                qpdf["idf"].to_numpy(dtype=np.float64), k, avgdl,
-                deleted=None if deleted is None
-                else ordinals_of(doc_map, deleted),
-                keep=None if keep_local is None
-                else ordinals_of(doc_map, keep_local))
-            out["doc_id"] = doc_map[out["doc_id"].to_numpy(dtype=np.int64)]
-            outs.append(out)
-        return pd.concat(outs, ignore_index=True)
+            km = qpdf["term"].isna()
+            keep_local = np.sort(
+                qpdf.loc[km, "query_id"].to_numpy(dtype=np.int64))
+            qpdf = qpdf[~km]
+        return _task(bpdf, qpdf["query_id"].to_numpy(dtype=np.int64),
+                     qpdf["term"].to_numpy(dtype=object),
+                     qpdf["idf"].to_numpy(dtype=np.float64), keep_local)
 
     local = blocks_b.groupby("shard_id", "bucket").cogroup(
         q_side.groupby("shard_id", "bucket")
-    ).applyInPandas(_run, "query_id long, doc_id long, score double")
+    ).applyInPandas(_run, schema)
     return topk(local, k)

@@ -54,12 +54,18 @@ class Engine:
         self._keep_bc_cache: "OrderedDict[int, tuple]" = OrderedDict()
         # cached local-query-plan probes, keyed like the keep cache on
         # the queries frame's SEMANTICS: a serving loop re-issuing the
-        # same query set skips the probe collect + df lookup, and a
+        # same query set skips the probe collect and tokenizing, and a
         # too-big log caches its False verdict so repeat calls go
         # straight to the distributed path with no probe at all. Entries
-        # hold term df snapshots — refresh() clears (append/compact can
+        # hold term (df, idf) — refresh() clears (append/compact can
         # shift df); soft deletes don't (deferred stats).
         self._plan_cache: "OrderedDict[int, tuple]" = OrderedDict()
+        # the index state's vocabulary snapshot (bmw.VocabSnapshot):
+        # None = not loaded yet, False = the vocabulary is past
+        # VOCAB_CAP (every plan looks its terms up per call). Loaded on
+        # the first call within the query caps that needs df, so a
+        # search past the caps never pays for it; refresh() drops it.
+        self._vocab = None
 
     def refresh(self) -> None:
         if self._termstats is not None:
@@ -70,6 +76,7 @@ class Engine:
         self._tomb_bc = "stale"
         self._keep_bc_cache.clear()
         self._plan_cache.clear()
+        self._vocab = None
 
     def delete(self, doc_ids: DataFrame) -> None:
         """Soft-delete docs from the index (tombstones; see
@@ -196,6 +203,23 @@ class Engine:
 
     PLAN_CACHE_MAX = 16
 
+    #: vocabularies up to this many terms are held on the driver as one
+    #: snapshot per index state (bmw.VocabSnapshot, about 100 MB at the
+    #: cap); a larger one keeps the per-call df/idf lookup job.
+    VOCAB_CAP = 1 << 20
+
+    def _term_stats(self, terms: list[str]) -> dict:
+        """{term: (df, idf)} of the in-vocabulary ``terms``: from the
+        vocabulary snapshot (loaded on first use), or one lookup job
+        past VOCAB_CAP."""
+        _, termstats, _ = self._handles()
+        if self._vocab is None:
+            self._vocab = bmw.VocabSnapshot.load(
+                termstats, self.VOCAB_CAP) or False
+        if self._vocab is False:
+            return bmw.lookup_term_stats(termstats, terms)
+        return self._vocab.lookup(terms)
+
     def _query_plan(self, queries: DataFrame):
         """LocalQueryPlan for ``queries`` (or False past the caps),
         cached per query-frame semantics — see _plan_cache."""
@@ -205,8 +229,9 @@ class Engine:
         if got is not None and queries.sameSemantics(got[0]):
             self._plan_cache.move_to_end(h)
             return got[1]
-        plan = bmw.build_local_query_plan(self.spark, queries,
-                                          termstats) or False
+        plan = bmw.build_local_query_plan(
+            self.spark, queries, termstats,
+            term_stats=self._term_stats) or False
         self._plan_cache[h] = (queries, plan)
         self._plan_cache.move_to_end(h)
         while len(self._plan_cache) > self.PLAN_CACHE_MAX:
@@ -284,15 +309,22 @@ class Engine:
         local_plan: optional pre-built bmw.LocalQueryPlan for these
         queries (rank() builds one and shares it between the stages);
         None → probe for one (bounded, falls back to the distributed
-        formulation past bmw.QT_PAIR_CAP).
+        formulation past bmw.QT_PAIR_CAP). A doc_filter past
+        KEEP_BROADCAST_CAP always takes the distributed formulation, so
+        it skips the probe.
 
-        Caching contract: the query plan (terms, df, query text) and the
-        doc_filter keep-list are cached per frame SEMANTICS, so queries
-        and doc_filter frames are treated as immutable snapshots — a
-        source rewritten in place under the same plan returns the cached
-        result. Call refresh() after the index or such a source changes
-        outside this Engine (appends, compactions, rewrites by another
-        process); delete()/compact() on this Engine handle their own.
+        Caching contract: the query plan (terms, df, idf, query text)
+        and the doc_filter keep-list are cached per frame SEMANTICS, so
+        queries and doc_filter frames are treated as immutable snapshots
+        — a source rewritten in place under the same plan returns the
+        cached result. The index state's vocabulary (df, idf of every
+        term, up to VOCAB_CAP terms) is one snapshot, loaded by the
+        first plan that needs it, so a fresh query set within the caps
+        runs no lookup job. Call refresh() after the index or such a
+        source changes outside this Engine (appends, compactions,
+        rewrites by another process): it drops the handles, both caches
+        and the snapshot. delete()/compact() on this Engine handle their
+        own (a soft delete keeps df, so it keeps the snapshot).
         """
         if mode not in self.MODES:
             raise ValueError(f"unknown mode {mode!r}")
@@ -300,7 +332,7 @@ class Engine:
         keep_mode, keep_bc = (self._keep_entry(doc_filter)
                               if doc_filter is not None
                               else ("broadcast", None))
-        if local_plan is None:
+        if local_plan is None and keep_mode != "bucketed":
             local_plan = self._query_plan(queries)
         return bmw.bmw_topk(self.spark, queries, self.paths, k=k,
                             meta=meta, termstats=termstats,
@@ -360,10 +392,10 @@ class Engine:
         doc_filter / attr_filter as in :meth:`search` (applied in the
         first stage, so the reranker only ever sees eligible
         candidates). The caching contract of :meth:`search` holds here
-        too, and extends to the query TEXT: the cached plan supplies it
-        to the final join, so a queries frame must be an immutable
-        snapshot; call refresh() after the index changes outside this
-        Engine.
+        too (plan cache, keep-list cache, vocabulary snapshot), and
+        extends to the query TEXT: the cached plan supplies it to the
+        final join, so a queries frame must be an immutable snapshot;
+        call refresh() after the index changes outside this Engine.
         """
         local_plan = self._query_plan(queries)
         cands = self.search(queries, k=first_k, mode=mode,

@@ -189,6 +189,22 @@ class Catalog:
             for v in values:
                 self._fs_delete(f"{self._path(name)}/{col}={v}")
 
+    def partition_values(self, name: str, col: str) -> list:
+        """The values of partition column ``col`` present in ``name``:
+        a listing of its ``col=<value>`` directories in parquet mode (no
+        Spark job), a distinct scan on Iceberg."""
+        if self.catalog_name:
+            return [r[0] for r in self.table(name).select(col).distinct()
+                    .collect()]
+        fs, d = self._hadoop_fs(self._path(name))
+        if not fs.exists(d):
+            return []
+        prefix = f"{col}="
+        return [st.getPath().getName()[len(prefix):]
+                for st in fs.listStatus(d)
+                if st.isDirectory()
+                and st.getPath().getName().startswith(prefix)]
+
     def drop_table(self, name: str) -> None:
         if self.catalog_name:
             self.spark.sql(f"DROP TABLE IF EXISTS {self.catalog_name}.{name}")

@@ -82,10 +82,8 @@ def main() -> None:
         "rerankers-spark-maintain").getOrCreate()
 
     if args.delete_ids:
-        ids = spark.read.parquet(args.delete_ids)
-        n = ids.select("doc_id").distinct().count()
-        delete_docs(spark, args.index, ids)
-        print(f"tombstoned {n} doc ids in {args.index}")
+        delete_docs(spark, args.index, spark.read.parquet(args.delete_ids))
+        print(f"tombstoned the doc ids of {args.delete_ids} in {args.index}")
 
     if args.compact:
         gens = None

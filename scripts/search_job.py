@@ -1,7 +1,8 @@
 """spark-submit job: BM25 top-k (optionally reranked) over a built index.
 
   spark-submit --py-files rerankers_spark.zip scripts/search_job.py \
-      --index /data/index --query "hash join" [--k 10] [--mode bmw] \
+      --index /data/index --query "hash join" [--k 10] \
+      [--mode bmw|auto|exhaustive] \
       [--rerank --corpus /data/corpus --scorer overlap]
 """
 
@@ -13,8 +14,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import numpy as np  # noqa: E402
+import pandas as pd  # noqa: E402
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
+from rerankers_spark.index.spimi import local_df  # noqa: E402
 from rerankers_spark.query.executor import Engine  # noqa: E402
 
 
@@ -23,7 +27,7 @@ def main() -> None:
     ap.add_argument("--index", required=True)
     ap.add_argument("--query", action="append", required=True)
     ap.add_argument("--k", type=int, default=10)
-    ap.add_argument("--mode", default="bmw", choices=["bmw", "exhaustive"])
+    ap.add_argument("--mode", default="bmw", choices=sorted(Engine.MODES))
     ap.add_argument("--rerank", action="store_true")
     ap.add_argument("--corpus")
     ap.add_argument("--scorer", default="overlap")
@@ -34,9 +38,9 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("rerankers-spark-search").getOrCreate()
     eng = Engine(spark, args.index, scorer=args.scorer)
-    qdf = spark.createDataFrame(
-        list(enumerate(args.query)), "query_id long, query string"
-    )
+    qdf = local_df(spark, pd.DataFrame({
+        "query_id": np.arange(len(args.query), dtype=np.int64),
+        "query": args.query}), "query_id long, query string")
     doc_filter = (spark.read.parquet(args.filter_ids)
                   if args.filter_ids else None)
     if args.rerank:

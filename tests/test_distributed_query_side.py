@@ -13,16 +13,24 @@ doc_filter, plus the two-stage rank(); rows compare as
 (query_id, doc_id, round(score, 9), rank) tuples. The same parity holds
 on an attribute-partitioned index (each task scores its shard's attr
 groups separately) with an attr_filter and a bucketed keep-list.
+
+Two more equalities hold bit for bit (scores compared as float.hex):
+the per-call df/idf lookup (a vocabulary past Engine.VOCAB_CAP) equals
+the Engine's vocabulary snapshot, and a bucketed keep-list (always the
+cogroup) equals the same filter as a broadcast keep-list (the local
+grouped map).
 """
 
 from __future__ import annotations
 
 import shutil
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from rerankers_spark.corpus import synthetic_corpus_pdf, with_doc_id
+from rerankers_spark.functions.tokenize import tokenize_py
 from rerankers_spark.index import spimi
 from rerankers_spark.query import bmw
 from rerankers_spark.query.executor import Engine
@@ -149,3 +157,48 @@ def test_attr_index_distributed_query_side_matches_local_plan(
     got, plan = _run_attr(spark, *attr_tombstoned)
     assert plan is False
     assert got == attr_local_results
+
+
+def _hex_rows(df, score="score"):
+    return sorted((r["query_id"], r["doc_id"], r[score].hex(), r["rank"])
+                  for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def batch16(spark, tombstoned):
+    corpus, _ = tombstoned
+    vocab = sorted({t for r in corpus.select("content").collect()
+                    for t in tokenize_py(r["content"])})
+    rng = np.random.default_rng(5)
+    rows = [(i, " ".join(rng.choice(vocab, int(rng.integers(1, 5)))))
+            for i in range(16)]
+    return spark.createDataFrame(rows, "query_id long, query string")
+
+
+def test_lookup_path_equals_vocabulary_snapshot(spark, tombstoned, batch16):
+    corpus, keep = tombstoned
+    snap, look = Engine(spark, BASE), Engine(spark, BASE)
+    look.VOCAB_CAP = 0
+    text = corpus.select("doc_id", "content")
+    for k in (10, 100):
+        for filt in (None, keep):
+            got = [_hex_rows(e.search(batch16, k=k, doc_filter=filt))
+                   for e in (snap, look)]
+            assert got[0] and got[0] == got[1], (k, filt)
+        got = [_hex_rows(e.rank(batch16, text, first_k=k, final_k=5),
+                         "bm25_score") for e in (snap, look)]
+        assert got[0] and got[0] == got[1], k
+    assert isinstance(snap._vocab, bmw.VocabSnapshot)
+    assert look._vocab is False
+
+
+def test_bucketed_keep_equals_broadcast_keep(spark, tombstoned, batch16):
+    _, keep = tombstoned
+    bc, bucketed = Engine(spark, BASE), Engine(spark, BASE)
+    bucketed.KEEP_BROADCAST_CAP = 0
+    assert bc._keep_entry(keep)[0] == "broadcast"
+    assert bucketed._keep_entry(keep)[0] == "bucketed"
+    for k in (10, 100):
+        got = [_hex_rows(e.search(batch16, k=k, doc_filter=keep))
+               for e in (bc, bucketed)]
+        assert got[0] and got[0] == got[1], k

@@ -142,7 +142,7 @@ def test_maintain_index_job_cli(spark, monkeypatch, capsys):
         "--compact", "--tiered", "--gc-retention-secs", "0"])
     _maintain_job().main()
     out = capsys.readouterr().out
-    assert f"tombstoned {len(dead_ids)} doc ids" in out
+    assert f"tombstoned the doc ids of {ids_path} in {path}" in out
     assert "generations=[0, 3]" in out
 
     meta = spimi.load_meta(spark, spimi.IndexPaths(path))
@@ -166,3 +166,86 @@ def test_maintain_index_job_cli(spark, monkeypatch, capsys):
         assert [d for d, _ in actual] == [d for d, _ in exp]
         for (_, s), (_, e) in zip(actual, exp):
             assert s == pytest.approx(e, abs=1e-8)
+
+
+def test_resume_after_an_append_resumes_generation_0(spark):
+    """A resume reads and keeps generation 0 only: the appended
+    generation's docs are not counted and its partitions are deleted."""
+    pdf = synthetic_corpus_pdf(150, seed=41)
+    path, fresh = f"{BASE}/resume", f"{BASE}/resume_fresh"
+    for p in (path, fresh):
+        shutil.rmtree(p, ignore_errors=True)
+    first = with_doc_id(spark.createDataFrame(pdf.iloc[:100]))
+    spimi.build_index(spark, first, path, n_shards=2)
+    spimi.append_index(
+        spark, with_doc_id(spark.createDataFrame(pdf.iloc[100:])), path)
+    spimi.build_index(spark, first, path, n_shards=2, resume=True)
+    spimi.build_index(spark, first, fresh, n_shards=2)
+
+    meta = spimi.load_meta(spark, spimi.IndexPaths(path))
+    assert meta["n_docs"] == 100
+    assert spimi.visible_generations(meta) == [0]
+    for table in ("blocks", "docstats"):
+        assert {d for d in os.listdir(f"{path}/{table}")
+                if d.startswith("shard_id=")} == {"shard_id=0", "shard_id=1"}
+    assert _search(spark, path) == _search(spark, fresh)
+
+
+def _search_job():
+    spec = importlib.util.spec_from_file_location(
+        "search_job", os.path.join(ROOT, "scripts", "search_job.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_search_job_cli(spark, monkeypatch, capsys):
+    """scripts/search_job.py main(): a filtered search in mode 'auto',
+    then a reranked search, both checked against the BM25 oracle."""
+    import ast
+
+    pdf = synthetic_corpus_pdf(120, seed=43)
+    path, corpus_path, ids_path = (f"{BASE}/{n}" for n in
+                                   ("search_cli", "search_cli_corpus",
+                                    "search_cli_ids"))
+    for p in (path, corpus_path, ids_path):
+        shutil.rmtree(p, ignore_errors=True)
+    corpus = with_doc_id(spark.createDataFrame(pdf))
+    spimi.build_index(spark, corpus, path, n_shards=2)
+    corpus.select("doc_id", "content").write.parquet(corpus_path)
+    kept = corpus.select("doc_id").where(F.abs(F.col("doc_id")) % 3 != 0)
+    kept.write.parquet(ids_path)
+    kept_ids = {r["doc_id"] for r in kept.collect()}
+    rows = corpus.select("doc_id", "content").collect()
+    oracle = BM25Oracle([r["doc_id"] for r in rows],
+                        [r["content"] for r in rows])
+    texts = [q for _, q in QUERIES]
+
+    def run(*extra):
+        argv = ["search_job.py", "--index", path, "--k", "5"]
+        for t in texts:
+            argv += ["--query", t]
+        monkeypatch.setattr(sys, "argv", argv + list(extra))
+        _search_job().main()
+        return [ast.literal_eval(line) for line in
+                capsys.readouterr().out.splitlines() if line.startswith("{")]
+
+    got = run("--mode", "auto", "--filter-ids", ids_path)
+    for qid, text in enumerate(texts):
+        exp = [(d, s) for d, s in oracle.topk(text, k=len(rows))
+               if d in kept_ids][:5]
+        actual = [(r["doc_id"], r["score"]) for r in got
+                  if r["query_id"] == qid]
+        assert [d for d, _ in actual] == [d for d, _ in exp]
+        for (_, s), (_, e) in zip(actual, exp):
+            assert s == pytest.approx(e, abs=1e-8)
+
+    got = run("--rerank", "--corpus", corpus_path)
+    for qid, text in enumerate(texts):
+        first = dict(oracle.topk(text, k=100))
+        actual = [r for r in got if r["query_id"] == qid]
+        assert [r["rank"] for r in actual] == list(
+            range(1, min(5, len(first)) + 1))
+        for r in actual:
+            assert r["bm25_score"] == pytest.approx(first[r["doc_id"]],
+                                                    abs=1e-8)

@@ -1,21 +1,26 @@
-"""The fixed cost of a bounded search, pinned in Spark jobs.
+"""The fixed cost of a bounded search, pinned in Spark jobs and py4j
+round trips.
 
-A 16-query Engine.search on a warm Engine (handles loaded) takes the
-local query plan: the query rows are collected without a job from a
-local relation and tokenized on the driver, the term-df lookup is the
-one probe job, and the cogroup kernel plus the top-k window take the
-rest. A plan-cache repeat skips the probe. Neither side of the cogroup
-is a broadcast literal relation.
+A 16-query Engine.search on a warm Engine (handles and vocabulary
+snapshot loaded) takes the local query plan: the query rows are
+collected without a job from a local relation and tokenized on the
+driver, (df, idf) come from the snapshot with no job, and a grouped map
+over the blocks side plus the top-k window take the three jobs. A
+plan-cache repeat runs the same three. The plan has no cogroup and no
+broadcast literal relation.
 """
 
 from __future__ import annotations
 
 import shutil
+import threading
 import uuid
 
 import numpy as np
 import pandas as pd
 import pytest
+
+from py4j.clientserver import ClientServerConnection
 
 from rerankers_spark.corpus import synthetic_corpus_pdf, with_doc_id
 from rerankers_spark.functions.tokenize import tokenize_py
@@ -23,11 +28,18 @@ from rerankers_spark.index import spimi
 from rerankers_spark.query.executor import Engine
 
 BASE = "/tmp/test_search_jobs"
-#: jobs of a fresh 16-query search: term-df lookup, the two cogroup
-#: sides' shuffle stages, the cogroup → top-k window shuffle, the result
-FRESH_JOBS = 5
-#: a plan-cache hit runs no probe
-CACHED_JOBS = 4
+#: jobs of a fresh 16-query search: the blocks side's shuffle stage,
+#: the grouped map → top-k window shuffle, the result (the vocabulary
+#: snapshot answers df and idf)
+FRESH_JOBS = 3
+#: a plan-cache hit runs the same jobs
+CACHED_JOBS = 3
+#: py4j round trips (ClientServerConnection.send_command calls on the
+#: calling thread) of a fresh search and of a plan-cache hit, collect
+#: included. py4j's finalizer thread, which releases garbage-collected
+#: Java proxies whenever Python's GC runs, is not counted.
+FRESH_ROUND_TRIPS = 170
+CACHED_ROUND_TRIPS = 150
 
 
 @pytest.fixture(scope="module")
@@ -75,6 +87,33 @@ def test_search_job_counts(spark, warm):
         assert sorted(cached) == sorted(fresh)
 
 
+def _round_trips(monkeypatch, fn):
+    calls = [0]
+    send = ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def counting(self, command):
+        calls[0] += 1 if threading.get_ident() == caller else 0
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        out = fn()
+    return out, calls[0]
+
+
+def test_search_round_trips(spark, warm, monkeypatch):
+    eng, batch = warm
+    q = batch(400)
+    fresh, n_fresh = _round_trips(monkeypatch,
+                                  lambda: eng.search(q, k=10).collect())
+    cached, n_cached = _round_trips(monkeypatch,
+                                    lambda: eng.search(q, k=10).collect())
+    assert fresh and sorted(cached) == sorted(fresh)
+    assert n_fresh <= FRESH_ROUND_TRIPS
+    assert n_cached <= CACHED_ROUND_TRIPS
+
+
 def _broadcasts_of_literals(plan: str) -> list[str]:
     """BroadcastExchange nodes whose subtree holds a LocalTableScan, from
     a plan tree string (a node's subtree: the lines indented past it)."""
@@ -109,9 +148,12 @@ def test_broadcast_finder_sees_a_literal_broadcast(spark):
 
 
 def test_no_broadcast_of_a_literal_relation(spark, warm):
+    """Only the blocks side is grouped: no cogroup, no literal relation
+    broadcast."""
     eng, batch = warm
     df = eng.search(batch(300), k=10)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan
+    assert "FlatMapGroupsInPandas" in plan, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
     assert not _broadcasts_of_literals(plan), plan
