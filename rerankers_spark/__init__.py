@@ -10,11 +10,12 @@ as a Spark-first engine:
   artifact — tests/consistency_notebooks/test_crossenc.ipynb cell 5)
 * second stage: ``Reranker.rank(query, docs, doc_ids) -> RankedResults``
   API parity (reference rerankers/models/ranker.py:19-24) with batched
-  pandas-UDF scorers.
+  pandas-series scorers, run distributed as one Arrow map per task.
 
 Everything relational is declarative DataFrame API (Catalyst optimizes);
-Python only appears as Arrow-vectorized UDFs (tokenizer parity UDF,
-varbyte codec, shard kernel, rerank scorers) — never per-row Python.
+Python only appears as Arrow-vectorized UDFs and maps (tokenizer parity
+UDF, varbyte codec, shard kernel, rerank score-and-cut) — never per-row
+Python.
 """
 
 __version__ = "0.1.0"

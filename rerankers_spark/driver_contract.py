@@ -647,7 +647,7 @@ def q_bm25_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_two_stage_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ENTIRE two-stage pipeline under the value-hash gate: BM25
     top-50 through the compressed index (rounded cut, cross-engine
-    deterministic), text join, the REAL Reranker scorer UDF (overlap —
+    deterministic), text join, the REAL Reranker scorer (overlap —
     |q∩d|/|q| over the frozen tokenizer, exactly SQL-expressible), and
     the frozen (score desc, doc_id asc) final ranking. Overlap values
     are quantized to multiples of 1/|q| (|q| ≤ ~6), so 4-digit rounding
@@ -663,8 +663,8 @@ def q_two_stage_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus.select("doc_id", F.col("content").alias("text")), "doc_id")
     with_query = with_text.join(F.broadcast(_queries_df(spark)),
                                 "query_id")
-    reranked = eng.reranker.rank_df(with_query)
-    return reranked.where(F.col("rank") <= 10).select(
+    reranked = eng.reranker.rank_df(with_query, k=10)
+    return reranked.select(
         "query_id", "doc_id", "rank", F.round("score", 4).alias("score"))
 
 

@@ -64,6 +64,7 @@ from rerankers_spark.index import varbyte as vb
 from rerankers_spark.index.spimi import (
     DOCMAP_TERM,
     IndexPaths,
+    load_blocks,
     local_df,
     ordinals_of,
     split_docmap,
@@ -304,6 +305,21 @@ def _wand_single(cursors: list[_TermCursor], k: int,
 #: score accumulator per chunk of queries (~16 MB); a task scores its
 #: queries in as many chunks as this budget needs.
 SCAN_BUDGET_CELLS = 1 << 21
+
+
+#: the blocks columns bmw_topk's task body reads (split_docmap,
+#: scan_topk_shard, the attr groups, the group key); the WAND bounds and
+#: block extents never reach the grouped map or the cogroup
+TASK_BLOCK_COLS = ("term", "block_id", "first_doc", "docs_vb", "tfs_vb",
+                   "dls_vb", "attr", "shard_id")
+
+
+def load_task_blocks(spark: SparkSession, paths: IndexPaths,
+                     meta: dict) -> DataFrame:
+    """spimi.load_blocks projected to TASK_BLOCK_COLS: the handle
+    bmw_topk scans. Projected once per handle, as each Python-bound
+    column costs py4j round trips on every call that plans over it."""
+    return load_blocks(spark, paths, meta).select(*TASK_BLOCK_COLS)
 
 
 def _empty_topk() -> pd.DataFrame:
@@ -583,23 +599,11 @@ class LocalQueryPlan:
         self.terms = terms          # sorted in-vocab term list
         self.stats = stats          # {term: (df, idf)}
         self.n_queries = n_queries  # distinct query ids INCLUDING all-OOV
-        self.qtext = qtext or {}    # {query_id: query text} (rank() join)
+        self.qtext = qtext or {}    # {query_id: query text} (rank scorer)
 
     @property
     def empty(self) -> bool:
         return not self.pairs
-
-    def queries_df(self, spark: SparkSession) -> DataFrame:
-        """(query_id, query) of every query with at least one token — a
-        local relation standing in for the caller's queries DataFrame in
-        the rank() text join (the caller's frame is often a pickled-RDD
-        local table whose every broadcast build spins Python workers)."""
-        ids = sorted(self.qtext)
-        return local_df(
-            spark,
-            pd.DataFrame({"query_id": np.array(ids, dtype=np.int64),
-                          "query": [self.qtext[q] for q in ids]}),
-            "query_id long, query string")
 
     def bucketed(self, n_buckets: int
                  ) -> dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]]:
@@ -688,7 +692,8 @@ def bmw_topk(
     shard) pair scored by the columnar block scan (scan_topk_shard).
 
     meta/termstats/blocks: pre-loaded handles (Engine caches them so
-    repeated searches skip the scalar-read jobs).
+    repeated searches skip the scalar-read jobs); blocks as
+    load_task_blocks returns it.
     query_buckets: query-side fan-out B (tasks = |shards| × B). None →
     sized so shards × buckets covers the cluster. Block bytes for a term
     shared by several buckets are replicated per bucket — B trades
@@ -746,7 +751,6 @@ def bmw_topk(
     """
     from rerankers_spark.index.spimi import (
         _gen_shards,
-        load_blocks,
         load_meta,
         load_tombstones,
         visible_generations,
@@ -756,7 +760,7 @@ def bmw_topk(
         meta = load_meta(spark, paths)
     if blocks is None:
         # first, so an index of another block format fails before any job
-        blocks = load_blocks(spark, paths, meta)
+        blocks = load_task_blocks(spark, paths, meta)
     if isinstance(tomb_bc, str) and tomb_bc == "load":
         tomb = load_tombstones(spark, paths)
         tomb_bc = (spark.sparkContext.broadcast(tomb)

@@ -141,7 +141,6 @@ class Engine:
 
     def _handles(self):
         from rerankers_spark.index.spimi import (
-            load_blocks,
             load_meta,
             load_termstats,
             load_tombstones,
@@ -153,10 +152,12 @@ class Engine:
             # append) or retired (compacted-away) generations are
             # excluded — see spimi.visible_generations. Blocks first:
             # load_blocks rejects an index of another block format
-            # before any Spark job. termstats is persisted: its
+            # before any Spark job; the handle keeps only the columns
+            # the search task reads. termstats is persisted: its
             # per-generation aggregation would otherwise re-run inside
             # every query job that joins it.
-            self._blocks = load_blocks(self.spark, self.paths, meta)
+            self._blocks = bmw.load_task_blocks(self.spark, self.paths,
+                                                meta)
             self._termstats = load_termstats(self.spark, self.paths,
                                              meta).persist()
             self._meta = meta
@@ -385,7 +386,7 @@ class Engine:
              mode: str = "bmw",
              doc_filter: Optional[DataFrame] = None,
              attr_filter: Optional[list] = None) -> DataFrame:
-        """BM25 top-first_k → join text → rerank scorer UDF → top-final_k.
+        """BM25 top-first_k → join text → score and cut to top-final_k.
 
         This is the consistency-notebook pipeline (test_crossenc.ipynb
         cells 5-8) as one job. corpus_text: (doc_id, content);
@@ -394,45 +395,46 @@ class Engine:
         candidates). The caching contract of :meth:`search` holds here
         too (plan cache, keep-list cache, vocabulary snapshot), and
         extends to the query TEXT: the cached plan supplies it to the
-        final join, so a queries frame must be an immutable snapshot;
+        scorer, so a queries frame must be an immutable snapshot;
         call refresh() after the index changes outside this Engine.
         """
         local_plan = self._query_plan(queries)
         cands = self.search(queries, k=first_k, mode=mode,
                             doc_filter=doc_filter,
                             attr_filter=attr_filter,
-                            local_plan=local_plan).select(
-            "query_id", "doc_id", F.col("score").alias("bm25_score")
-        )
+                            local_plan=local_plan).selectExpr(
+            "query_id", "doc_id", "score AS bm25_score")
         # Text attach: the candidate side is bounded (≤ n_queries ×
         # first_k rows of three numeric columns) whenever the local plan
         # resolved, so IT is the broadcast side — the planner's size
-        # estimate for a UDF-bearing subtree is unknown/huge and it
+        # estimate for a Python-bearing subtree is unknown/huge and it
         # otherwise builds a fresh broadcast of the corpus text on every
         # call (measured ~0.7 s/call; and at scale the corpus side must
         # never be the build side). Past the cap the planner keeps
         # choosing from its own estimates, unchanged.
         if local_plan and local_plan.n_queries * first_k <= 2_000_000:
             cands = F.broadcast(cands)
-        with_text = cands.join(corpus_text.select(
-            "doc_id", F.col("content").alias("text")), "doc_id")
-        # query text comes from the local plan when it resolved — the
-        # caller's queries frame is often a parallelized local table whose
-        # broadcast build otherwise re-evaluates it (with Python workers
-        # for pickled-RDD frames) on every call.
-        q_for_join = local_plan.queries_df(self.spark) if local_plan \
-            else queries
-        with_query = with_text.join(F.broadcast(q_for_join), "query_id")
-        # One exchange, placed BEFORE the scorer UDF: the final rank
-        # window repartitions by query_id regardless, but left after the
-        # UDF the scorer inherits the text join's partitioning (a
-        # broadcast join adds no exchange, so that is the corpus scan's
-        # — measured running the whole scorer in ONE task on a cached
-        # single-file corpus). Hoisting the same-keyed exchange lets AQE
-        # size the scorer stage and satisfies the window's requirement,
-        # so the plan's exchange count is unchanged.
-        with_query = with_query.repartition("query_id")
-        reranked = self.reranker.rank_df(with_query)
-        return reranked.where(F.col("rank") <= final_k).select(
-            "query_id", "doc_id", "bm25_score", "score", "rank"
-        )
+        with_text = cands.join(
+            corpus_text.selectExpr("doc_id", "content AS text"), "doc_id")
+        # Stage two is one query_id exchange and one Python map
+        # (Reranker.rank_df): each task scores its Arrow batches and
+        # keeps each query's final_k best rows, so no window and no
+        # second exchange follow the scorer. The exchange also sizes the
+        # scorer stage under AQE: left out, the scorer would inherit the
+        # corpus scan's partitioning (a broadcast join adds no exchange)
+        # — measured as ONE task on a cached single-file corpus. Under
+        # the local plan the query text rides in the task closure, as the
+        # search's query terms do; past the cap the caller's queries
+        # frame joins as a column, with no broadcast hint: AQE picks the
+        # strategy from the frame's real size.
+        if local_plan:
+            ranked = self.reranker.rank_df(with_text, k=final_k,
+                                           query_text=local_plan.qtext)
+        else:
+            ranked = self.reranker.rank_df(
+                with_text.join(queries.selectExpr("query_id", "query"),
+                               "query_id"), k=final_k)
+        # selectExpr: about two py4j round trips per name, where select
+        # builds a Column per name at about five
+        return ranked.selectExpr(
+            "query_id", "doc_id", "bm25_score", "score", "rank")

@@ -1,4 +1,4 @@
-"""Second stage: the unified ``Reranker.rank()`` API over pandas-UDF scorers.
+"""Second stage: the unified ``Reranker.rank()`` API over batched scorers.
 
 API parity with the reference's unified interface:
 * factory dispatch model_name/model_type → concrete scorer
@@ -11,12 +11,14 @@ API parity with the reference's unified interface:
   but NO rank (transformer_ranker.py:87-88)
 * ``score(query, doc) -> float`` (models/ranker.py:14-16)
 
-Execution model: scorers are BATCHED Arrow pandas UDFs over
-``(query, text)`` columns — the Spark inversion of the reference's
-fixed-size batch loop (transformer_ranker.py:72-78). The distributed
-entry point is :meth:`Reranker.rank_df` (DataFrame in → DataFrame out,
-used by the two-stage engine); :meth:`Reranker.rank` is the driver-side
-list API for reference-compatible callers.
+Execution model: scorers are BATCHED functions over ``(query, text)``
+pandas series, one call per Arrow batch — the Spark inversion of the
+reference's fixed-size batch loop (transformer_ranker.py:72-78). The
+distributed entry point is :meth:`Reranker.rank_df` (DataFrame in →
+DataFrame out, used by the two-stage engine): one exchange on the query
+key, then one Arrow map per task that scores and keeps each query's top
+k. :meth:`Reranker.rank` is the driver-side list API for
+reference-compatible callers.
 
 Model-backed scorers (cross-encoder/T5/ColBERT — reference models/*.py)
 are gated behind import-try: torch/transformers are not in this sandbox,
@@ -28,14 +30,17 @@ testable without downloads.
 from __future__ import annotations
 
 import warnings
-from typing import Callable, Iterator, List, Optional, Sequence, Tuple, Union
+from typing import Callable, List, Mapping, Optional, Sequence, Union
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
-from rerankers_spark.operators.topk import with_rank
 from rerankers_spark.results import Document, RankedResults, Result
 
 # ---------------------------------------------------------------------------
@@ -72,38 +77,73 @@ def _stub_scorer(model_name: Optional[str] = None):
 def _overlap_scorer(model_name: Optional[str] = None):
     """Lexical-overlap scorer: |query_terms ∩ doc_terms| / |query_terms|.
 
-    Fully batch-vectorized (no per-row Python loop — this is the gated
-    scorer inside the oracle-checked two_stage_rank pipeline, so it runs
-    hot): tokenize the whole Arrow batch with pandas ``.str`` ops under
-    the frozen spec (findall-form, FIXTURES.md §4), explode to
-    (row, token) pairs, dedup, and count the per-row intersection with
-    one merge. Integer-count division → bit-identical to the old
-    set-based form (tests/test_model_families.py pins the values)."""
+    Batch-vectorized over rows (this is the gated scorer inside the
+    oracle-checked two_stage_rank pipeline, so it runs hot): only the
+    batch's query tokens are tested, never every doc token. Each
+    distinct query is tokenized under the frozen spec (findall-form,
+    FIXTURES.md §4); each of its tokens is then searched, with RE2, in
+    the lowered texts of that query's rows (one zero-copy slice once the
+    rows are grouped by query) as ``tok`` with a non-token character or
+    the text's start before it and one or the end after it. A token so
+    bounded in the lowered text is exactly a doc token of at most
+    MAX_TOKEN_LEN chars, so the counts equal the set intersection, and
+    integer-count division keeps the scores bit-identical to the
+    set-based form (tests/test_model_families.py pins the values;
+    tests/test_overlap_kernel.py holds the kernel to tokenize_py
+    sets)."""
+    import re
+
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from rerankers_spark.functions.tokenize import (
         MAX_TOKEN_LEN,
         TOKEN_FINDALL_RE,
+        TOKEN_SPLIT_RE,
     )
 
-    def _pairs(s: pd.Series) -> pd.DataFrame:
-        """(row, tok) distinct token pairs for the batch, row = position."""
-        toks = s.fillna("").str.lower().str.findall(TOKEN_FINDALL_RE)
-        e = toks.reset_index(drop=True).explode().dropna()
-        e = e[e.str.len() <= MAX_TOKEN_LEN]
-        return pd.DataFrame(
-            {"row": e.index.to_numpy(dtype=np.int64), "tok": e.to_numpy()}
-        ).drop_duplicates()
+    findall = re.compile(TOKEN_FINDALL_RE).findall
+    edge = TOKEN_SPLIT_RE.removesuffix("+")  # one non-token character
+
+    def _utf8(s: pd.Series) -> pa.Array:
+        try:
+            arr = pa.array(s, type=pa.string())
+        except (UnicodeEncodeError, pa.ArrowInvalid):
+            # lone surrogates (only the driver API can pass them) have no
+            # UTF-8 form; they are not token characters, so a space in
+            # their place splits the same way
+            arr = pa.array(s.str.replace("[\ud800-\udfff]", " ",
+                                         regex=True), type=pa.string())
+        return pc.fill_null(arr, "")
 
     def score(query: pd.Series, text: pd.Series) -> pd.Series:
         n = len(query)
-        qp = _pairs(query)
-        tp = _pairs(text)
-        n_q = np.zeros(n, dtype=np.float64)
-        np.add.at(n_q, qp["row"].to_numpy(), 1.0)
+        codes, uniq = pd.factorize(query.to_numpy(dtype=object),
+                                   use_na_sentinel=False)
+        order = np.argsort(codes, kind="stable")
+        bounds = np.searchsorted(codes[order], np.arange(len(uniq) + 1))
+        n_q = np.zeros(len(uniq), dtype=np.float64)
         n_common = np.zeros(n, dtype=np.float64)
-        inter = qp.merge(tp, on=["row", "tok"])
-        np.add.at(n_common, inter["row"].to_numpy(), 1.0)
+        low = None
+        for qi, q in enumerate(uniq):
+            toks = {t for t in findall(q.lower() if isinstance(q, str)
+                                       else "") if len(t) <= MAX_TOKEN_LEN}
+            n_q[qi] = len(toks)
+            if not toks:
+                continue
+            if low is None:
+                # Python's full case mapping: İ → i + U+0307 and the
+                # Kelvin sign → k reach the token alphabet
+                low = _utf8(text.str.lower())
+                low = low.take(order) if len(uniq) > 1 else low
+            lo, hi = bounds[qi], bounds[qi + 1]
+            rows_q = low.slice(lo, hi - lo)
+            for tok in toks:
+                hit = pc.match_substring_regex(
+                    rows_q, f"(?:^|{edge}){tok}(?:{edge}|$)")
+                n_common[order[lo:hi]] += hit.to_numpy(zero_copy_only=False)
+        n_q = n_q[codes]
         out = np.divide(n_common, n_q, out=np.zeros(n, dtype=np.float64),
                         where=n_q > 0)
         return pd.Series(out, dtype="float64")
@@ -909,6 +949,125 @@ def prep_image_docs(
 
 
 # ---------------------------------------------------------------------------
+# rank_df's task body
+# ---------------------------------------------------------------------------
+
+
+def _frozen_order(tbl, partition_cols: Sequence[str],
+                  id_col: str = "doc_id"):
+    """(row order, rank) of ``tbl``'s rows: grouped by the partition
+    columns, then score desc with NULL last (a NaN score arrives as
+    NULL), then id asc with NULL first — the row_number window of
+    operators/topk.py. Ranks are dense codes, so any column type sorts
+    as Arrow (and Spark) order it."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    def codes(col, order, nulls):
+        return pc.rank(col, sort_keys=order, null_placement=nulls,
+                       tiebreaker="dense").to_numpy()
+
+    groups = [codes(tbl.column(c), "ascending", "at_start")
+              for c in partition_cols]
+    keys = [codes(tbl.column(id_col), "ascending", "at_start"),
+            codes(tbl.column("score"), "descending", "at_end")]
+    order = np.lexsort(keys + groups[::-1])
+    start = np.zeros(len(order), dtype=bool)  # a group's first row
+    start[:1] = True
+    for g in groups:
+        g = g[order]
+        start[1:] |= g[1:] != g[:-1]
+    first = np.flatnonzero(start)
+    rank = np.arange(len(order)) - first[np.cumsum(start) - 1] + 1
+    return order, rank.astype(np.int32)
+
+
+def _tail_start(tbl, partition_cols: Sequence[str]) -> int:
+    """First row of the last group of ``tbl``, whose rows arrive sorted
+    by the partition columns: every row before it is in a whole group."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    last = np.ones(tbl.num_rows, dtype=bool)
+    for c in partition_cols:
+        g = pc.rank(tbl.column(c), null_placement="at_start",
+                    tiebreaker="dense").to_numpy()
+        last &= g == g[-1]
+    return int(np.flatnonzero(~last)[-1]) + 1 if not last.all() else 0
+
+
+def _score_and_cut(factory: Callable, partition_cols: Sequence[str],
+                   query_col: str, text_col: str, k: Optional[int],
+                   query_text: Optional[Mapping]):
+    """rank_df's mapInArrow body over one task's Arrow batches.
+
+    Scored batches gather until they hold more than twice the rows of
+    the last cut (at least one batch), so the sorts over a task add up
+    to O(n log n). A cut keeps each group's top k; with k None the
+    input is sorted by the partition columns and a cut emits every
+    whole group. Either way a task holds at most about twice its
+    groups × k rows, or its largest group, plus a batch."""
+
+    def ranked(tbl):
+        order, rank = _frozen_order(tbl, partition_cols)
+        if k is not None:
+            order, rank = order[rank <= k], rank[rank <= k]
+        return tbl.take(order), rank
+
+    def emit(tbl):
+        import pyarrow as pa
+
+        tbl, rank = ranked(tbl)
+        return _put(tbl, "rank", pa.array(rank, type=pa.int32())).to_batches()
+
+    def task(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        fn = None
+        kept, n_kept, n_cut = [], 0, 0
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            if fn is None:
+                fn = factory()
+            text = b.column(text_col).to_pandas()
+            if query_text is None:
+                query = b.column(query_col).to_pandas()
+            else:
+                query = b.column(partition_cols[0]).to_pandas().map(
+                    query_text)
+            score = pa.array(np.asarray(fn(query, text), dtype=np.float64),
+                             from_pandas=True)
+            kept.append(_put(pa.Table.from_batches([b]), "score", score))
+            n_kept += b.num_rows
+            if n_kept <= 2 * max(n_cut, b.num_rows):
+                continue
+            tbl = pa.concat_tables(kept)
+            if k is None:
+                done = _tail_start(tbl, partition_cols)
+                if done:
+                    yield from emit(tbl.slice(0, done))
+                    tbl = tbl.slice(done)
+            else:
+                tbl = ranked(tbl)[0]
+            kept, n_kept = [tbl], tbl.num_rows
+            n_cut = n_kept
+        if kept:
+            yield from emit(pa.concat_tables(kept))
+
+    return task
+
+
+def _put(tbl, name: str, values):
+    """withColumn on an Arrow table: replace ``name`` in place, or
+    append it."""
+    i = tbl.schema.get_field_index(name)
+    return (tbl.append_column(name, values) if i < 0
+            else tbl.set_column(i, name, values))
+
+
+# ---------------------------------------------------------------------------
 # Reranker
 # ---------------------------------------------------------------------------
 
@@ -941,7 +1100,7 @@ class Reranker:
         from functools import partial
 
         # bind the checkpoint name now; factory() stays zero-arg for the
-        # UDF closure (model-backed families load it per executor task)
+        # task closure (model-backed families load it per executor task)
         self._factory = partial(AVAILABLE_SCORERS[self.model_type],
                                 self.model_name)
         self._spark = spark
@@ -949,35 +1108,54 @@ class Reranker:
 
     # -- distributed path ---------------------------------------------------
 
-    def scorer_udf(self):
-        """Batched Arrow pandas UDF (iterator form: scorer/model is built
-        ONCE per executor task — the Spark analog of the reference's
-        per-process model load, transformer_ranker.py:35-39)."""
-        factory = self._factory
-
-        @F.pandas_udf(DoubleType())
-        def _score(
-            it: Iterator[Tuple[pd.Series, pd.Series]],
-        ) -> Iterator[pd.Series]:
-            fn = factory()
-            for query, text in it:
-                yield fn(query, text)
-
-        return _score
-
     def rank_df(
         self,
         candidates: DataFrame,
         query_col: str = "query",
         text_col: str = "text",
         partition_cols: Sequence[str] = ("query_id",),
+        k: Optional[int] = None,
+        query_text: Optional[Mapping] = None,
     ) -> DataFrame:
-        """DataFrame[..., query, text] → + (score, rank) per query group.
-        This is the hot path of stage two (SURVEY.md §2C.11)."""
-        scored = candidates.withColumn(
-            "score", self.scorer_udf()(F.col(query_col), F.col(text_col))
-        )
-        return with_rank(scored, partition_cols)
+        """DataFrame[..., query, text] → + (score, rank) per group of
+        ``partition_cols``, keeping the rows with rank ≤ ``k`` (every
+        row when k is None). This is the hot path of stage two
+        (SURVEY.md §2C.11).
+
+        One exchange on the partition columns, then one Arrow map task
+        body (_score_and_cut): it builds the scorer once per task (the
+        Spark analog of the reference's per-process model load,
+        transformer_ranker.py:35-39), scores each Arrow batch, and emits
+        each group's rows in the frozen order (FIXTURES.md §4) — score
+        desc with NULL/NaN last, then doc_id asc — which is what
+        ``row_number() OVER (PARTITION BY .. ORDER BY score DESC,
+        doc_id ASC)`` assigns. With k None each task's rows are first
+        sorted by the partition columns, so whole groups leave the task
+        as they complete. A score or rank column already in
+        ``candidates`` is replaced in place, as withColumn replaces it.
+
+        query_text: optional {partition key: query} map that rides in
+        the task closure in place of ``query_col`` (one partition
+        column); Engine.rank passes its local query plan's texts."""
+        parts = list(partition_cols)
+        if query_text is not None and len(parts) != 1:
+            raise ValueError("query_text needs exactly one partition column")
+        fields = list(candidates.schema.fields)
+        for field in (StructField("score", DoubleType()),
+                      StructField("rank", IntegerType())):
+            names = [f.name for f in fields]
+            if field.name in names:
+                fields[names.index(field.name)] = field
+            else:
+                fields.append(field)
+        body = _score_and_cut(self._factory, parts, query_col, text_col,
+                              k, query_text)
+        parted = candidates.repartition(*parts)
+        if k is None:
+            # whole groups stream out of the task in sorted input; the
+            # sort spills where a task's rows outgrow memory
+            parted = parted.sortWithinPartitions(*parts)
+        return parted.mapInArrow(body, StructType(fields))
 
     # -- reference-compatible driver API -------------------------------------
 

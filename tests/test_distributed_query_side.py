@@ -9,8 +9,10 @@ forces TERM_PUSHDOWN_CAP to 0, so the block scan runs without the term
 filter and the broadcast bucket-join is the only term filter.
 
 The index carries tombstones, and every mode runs with and without a
-doc_filter, plus the two-stage rank(); rows compare as
-(query_id, doc_id, round(score, 9), rank) tuples. The same parity holds
+doc_filter, plus the two-stage rank(); search rows compare as
+(query_id, doc_id, round(score, 9), rank) tuples, rank() rows with both
+scores as float.hex (past the cap the query text arrives as a joined
+column, under the local plan in the task closure). The same parity holds
 on an attribute-partitioned index (each task scores its shard's attr
 groups separately) with an attr_filter and a bucketed keep-list.
 
@@ -67,8 +69,8 @@ def _run_all(spark, eng, corpus, keep):
                 for r in eng.search(q, k=10, mode=mode,
                                     doc_filter=filt).collect())
     out["rank"] = sorted(
-        (r["query_id"], r["doc_id"], round(r["bm25_score"], 9),
-         round(r["score"], 9), r["rank"])
+        (r["query_id"], r["doc_id"], r["bm25_score"].hex(),
+         r["score"].hex(), r["rank"])
         for r in eng.rank(q, corpus.select("doc_id", "content"),
                           first_k=20, final_k=5).collect())
     return out, q

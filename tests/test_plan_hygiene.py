@@ -1,7 +1,8 @@
 """Physical-plan checks (BASELINE.md hot-path constraint + SURVEY.md §7):
 
 * no ``BatchEvalPython`` (row-at-a-time Python) anywhere — only
-  ``ArrowEvalPython`` / ``MapInPandas`` / ``FlatMapGroupsInPandas``;
+  ``ArrowEvalPython`` / ``MapInPandas`` / ``MapInArrow`` /
+  ``FlatMapGroupsInPandas``;
 * parquet scans carry pushed filters / pruned schemas where expected;
 * the small side of the candidate join is broadcast.
 """

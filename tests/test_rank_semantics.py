@@ -226,7 +226,8 @@ def test_unknown_model_type_warns_and_defaults():
 
 
 def test_rank_df_distributed(spark):
-    """Distributed rank path: scorer pandas UDF + window rank."""
+    """Distributed rank path: one query_id exchange, then one Arrow map
+    that scores each batch and ranks each query's rows."""
     cands = spark.createDataFrame(
         [
             (0, 100, "12345", "123"),
@@ -243,3 +244,137 @@ def test_rank_df_distributed(spark):
     q0 = sorted(by_q[0], key=lambda r: r["rank"])
     assert [r["doc_id"] for r in q0] == [101, 100, 102]
     assert by_q[1][0]["rank"] == 1
+
+
+def _window_ranked(spark, cands, scorer, k, partition_cols):
+    """The former rank_df: scores through Arrow (a NaN lands as NULL),
+    then the row_number window of operators/topk.py and a rank ≤ k
+    filter."""
+    import math
+
+    import pandas as pd
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from rerankers_spark.operators.topk import with_rank
+
+    rows = cands.collect()
+    score = scorer(pd.Series([r["query"] for r in rows], dtype=object),
+                   pd.Series([r["text"] for r in rows], dtype=object))
+    scored = spark.createDataFrame(
+        [tuple(r) + (None if math.isnan(x) else float(x),)
+         for r, x in zip(rows, score)],
+        StructType(cands.schema.fields + [StructField("score",
+                                                      DoubleType())]))
+    out = with_rank(scored, partition_cols)
+    return out if k is None else out.where(f"rank <= {k}")
+
+
+@pytest.mark.parametrize("k", [None, 1, 2, 4, 10, 25])
+def test_rank_df_matches_the_window_ranking(spark, k):
+    """Score ties, NaN and NULL scores, a NULL doc_id, -0.0 against 0.0
+    and groups spread over several Arrow batches: rank_df's rows equal
+    the row_number window's (score desc NULLS LAST, doc_id asc NULLS
+    FIRST), for every k, k at or past the group size (10 or 20 rows)
+    and with no cut at all."""
+    import pandas as pd
+
+    from rerankers_spark.rerank.ranker import Reranker
+
+    def factory():
+        def score(query, text):
+            # text holds the score: "nan" → NaN, "" → NaN (NULL)
+            return pd.to_numeric(text, errors="coerce").astype("float64")
+        return score
+
+    values = ["1", "1", "nan", "", "-0.0", "0.0", "2", "0.5", "2", "-1"]
+    rows = []
+    for qid in range(3):
+        for lane in range(2):
+            for i, v in enumerate(values[qid:] + values[:qid]):
+                doc = None if (qid, lane, i) == (1, 0, 3) else 10 * i + lane
+                rows.append((qid, lane, doc, f"q{qid}", v))
+    cands = spark.createDataFrame(
+        rows, "query_id long, lane int, doc_id long, query string, "
+              "text string")
+    rr = Reranker("stub")
+    rr._factory = factory
+    conf = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
+    try:
+        for parts in (("query_id",), ("query_id", "lane")):
+            got = rr.rank_df(cands, partition_cols=parts, k=k).collect()
+            want = _window_ranked(spark, cands, factory(), k,
+                                  parts).collect()
+            key = lambda r: (r["query_id"], r["lane"], r["rank"])  # noqa
+            assert [tuple(r) for r in sorted(got, key=key)] == \
+                [tuple(r) for r in sorted(want, key=key)], parts
+            n_groups = 3 * len(parts)
+            assert len(got) == (len(rows) if k is None else n_groups * min(
+                k, len(rows) // n_groups))
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", conf)
+
+
+def test_rank_df_replaces_score_and_rank_columns(spark):
+    """A score or rank column already in the candidates is replaced in
+    place, as withColumn replaced it."""
+    cands = spark.createDataFrame(
+        [(0, 1, 9.0, 7, "ab", "a"), (0, 2, 9.0, 7, "ab", "ab")],
+        "query_id long, doc_id long, score double, rank int, "
+        "query string, text string")
+    out = Reranker("stub").rank_df(cands)
+    assert out.columns == cands.columns
+    assert sorted((r["doc_id"], r["score"], r["rank"])
+                  for r in out.collect()) == [(1, -1.0, 2), (2, 0.0, 1)]
+
+
+def _task_batches(n_batches, per_batch, seen):
+    import pyarrow as pa
+
+    for i in range(n_batches):
+        seen.append(i)
+        ids = list(range(i * per_batch, (i + 1) * per_batch))
+        yield pa.RecordBatch.from_pydict({
+            "query_id": [d // 12 for d in ids],
+            "doc_id": ids, "query": ["q"] * per_batch,
+            "text": ["x" * (d % 7) for d in ids]})
+
+
+def test_score_and_cut_sorts_o_n_log_n(monkeypatch):
+    """With nothing to cut (k past every group's size) a task re-ranks
+    its kept rows only when they double, not after every batch."""
+    from rerankers_spark.rerank import ranker
+
+    calls = []
+    frozen = ranker._frozen_order
+    monkeypatch.setattr(ranker, "_frozen_order",
+                        lambda tbl, parts: calls.append(tbl.num_rows)
+                        or frozen(tbl, parts))
+    body = ranker._score_and_cut(ranker._stub_scorer, ["query_id"],
+                                 "query", "text", 1000, None)
+    out = list(body(_task_batches(64, 3, [])))
+    assert sum(b.num_rows for b in out) == 192
+    assert len(calls) <= 8 and sum(calls) <= 4 * 192, calls
+
+
+def test_score_and_cut_streams_whole_groups_when_k_is_none():
+    """k None: the input arrives sorted by the partition columns, so a
+    task emits each whole group before it reads the last batch, with
+    the ranks of a single ranking of all the rows."""
+    from rerankers_spark.rerank import ranker
+
+    seen = []
+    body = ranker._score_and_cut(ranker._stub_scorer, ["query_id"],
+                                 "query", "text", None, None)
+    out = body(_task_batches(40, 3, seen))
+    first = next(out)
+    assert len(seen) < 40 and first.num_rows > 0
+    rows = first.to_pylist() + [r for b in out for r in b.to_pylist()]
+    assert len(seen) == 40 and len(rows) == 120
+    for qid in range(10):
+        got = sorted((r["rank"], r["doc_id"]) for r in rows
+                     if r["query_id"] == qid)
+        # stub score -|len(text) - len(query)|, then doc_id
+        want = sorted(range(12 * qid, 12 * qid + 12),
+                      key=lambda d: (abs(d % 7 - 1), d))
+        assert [d for _, d in got] == want

@@ -1,5 +1,5 @@
-"""The fixed cost of a bounded search, pinned in Spark jobs and py4j
-round trips.
+"""The fixed cost of a bounded search and of a bounded rank, pinned in
+Spark jobs and py4j round trips.
 
 A 16-query Engine.search on a warm Engine (handles and vocabulary
 snapshot loaded) takes the local query plan: the query rows are
@@ -8,6 +8,12 @@ driver, (df, idf) come from the snapshot with no job, and a grouped map
 over the blocks side plus the top-k window take the three jobs. A
 plan-cache repeat runs the same three. The plan has no cogroup and no
 broadcast literal relation.
+
+A 16-query Engine.rank adds stage two to that: the candidates are
+broadcast into the text join, one query_id exchange follows, and one
+Arrow map scores and cuts each query's rows (the query text rides in
+its closure). No window, no scorer UDF node and no second exchange
+follow the scorer.
 """
 
 from __future__ import annotations
@@ -37,9 +43,20 @@ CACHED_JOBS = 3
 #: py4j round trips (ClientServerConnection.send_command calls on the
 #: calling thread) of a fresh search and of a plan-cache hit, collect
 #: included. py4j's finalizer thread, which releases garbage-collected
-#: Java proxies whenever Python's GC runs, is not counted.
-FRESH_ROUND_TRIPS = 170
-CACHED_ROUND_TRIPS = 150
+#: Java proxies whenever Python's GC runs, is not counted. With every
+#: blocks column shipped to the grouped map (not only
+#: bmw.TASK_BLOCK_COLS) they were 114 and 94.
+FRESH_ROUND_TRIPS = 104
+CACHED_ROUND_TRIPS = 84
+#: jobs of a warm 16-query rank, fresh or plan-cache hit: the first
+#: stage's two shuffle stages, the candidates' broadcast, the text join
+#: → query_id shuffle, the scorer map's result. The window-ranked stage
+#: two (a scorer UDF between two query_id exchanges) took 7.
+RANK_JOBS = 5
+#: py4j round trips of a fresh rank and of a plan-cache hit, counted as
+#: for search (the window-ranked stage two took 347 and 327)
+RANK_FRESH_ROUND_TRIPS = 183
+RANK_CACHED_ROUND_TRIPS = 163
 
 
 @pytest.fixture(scope="module")
@@ -60,6 +77,19 @@ def warm(spark):
     eng = Engine(spark, BASE)
     eng.search(batch(0), k=10).collect()
     return eng, batch
+
+
+@pytest.fixture(scope="module")
+def warm_rank(spark, warm):
+    """The warm Engine after one rank, with its corpus text read from
+    parquet on every call, as a caller's table would be."""
+    eng, batch = warm
+    path = BASE + "_text"
+    with_doc_id(spark.createDataFrame(synthetic_corpus_pdf(600, seed=31))) \
+        .select("doc_id", "content").write.mode("overwrite").parquet(path)
+    text = spark.read.parquet(path)
+    eng.rank(batch(1000), text).collect()
+    return eng, batch, text
 
 
 def _jobs(spark, fn):
@@ -157,3 +187,52 @@ def test_no_broadcast_of_a_literal_relation(spark, warm):
     assert "FlatMapGroupsInPandas" in plan, plan
     assert "FlatMapCoGroupsInPandas" not in plan, plan
     assert not _broadcasts_of_literals(plan), plan
+
+
+def test_rank_job_counts(spark, warm_rank):
+    eng, batch, text = warm_rank
+    for first_id in (1100, 1200):
+        q = batch(first_id)
+        fresh, n_fresh = _jobs(spark, lambda: eng.rank(q, text).collect())
+        assert fresh, "the batch must have results"
+        assert n_fresh <= RANK_JOBS
+        cached, n_cached = _jobs(spark,
+                                 lambda: eng.rank(q, text).collect())
+        assert n_cached <= RANK_JOBS
+        assert sorted(cached) == sorted(fresh)
+
+
+def test_rank_round_trips(spark, warm_rank, monkeypatch):
+    eng, batch, text = warm_rank
+    q = batch(1300)
+    fresh, n_fresh = _round_trips(monkeypatch,
+                                  lambda: eng.rank(q, text).collect())
+    cached, n_cached = _round_trips(monkeypatch,
+                                    lambda: eng.rank(q, text).collect())
+    assert fresh and sorted(cached) == sorted(fresh)
+    assert n_fresh <= RANK_FRESH_ROUND_TRIPS
+    assert n_cached <= RANK_CACHED_ROUND_TRIPS
+
+
+def _final_plan(df) -> list[str]:
+    """The executed plan's lines, without AQE's initial-plan section."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0].splitlines()
+
+
+def test_rank_plan_has_one_exchange_after_the_first_stage(spark,
+                                                          warm_rank):
+    """From the rank's root down to the first stage's top-k window:
+    the scorer map, exactly one query_id exchange, and no window or
+    scorer UDF node over the scorer's output."""
+    eng, batch, text = warm_rank
+    lines = _final_plan(eng.rank(batch(1400), text))
+    first_stage = next(i for i, ln in enumerate(lines) if "Window" in ln)
+    stage_two = lines[:first_stage]
+    scorer = [i for i, ln in enumerate(stage_two) if "MapInArrow" in ln]
+    assert len(scorer) == 1, "\n".join(lines)
+    assert sum("hashpartitioning(query_id" in ln for ln in stage_two) == 1
+    assert not any("ArrowEvalPython" in ln for ln in lines)
+    above = stage_two[:scorer[0]]
+    assert not any("Window" in ln or "Exchange" in ln for ln in above)
