@@ -18,8 +18,6 @@ BASELINE.json input_hint).
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -105,11 +103,6 @@ def synthetic_corpus(spark: SparkSession, n_docs: int, seed: int = SEED,
     if n_partitions:
         df = df.repartition(n_partitions)
     return with_doc_id(df)
-
-
-def expected_sha256(pdf: pd.DataFrame) -> pd.Series:
-    """Generator-side sha256(content) — the per-row lineage invariant."""
-    return pdf["content"].map(lambda c: hashlib.sha256(c.encode()).hexdigest())
 
 
 def documents_as_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,6 +22,7 @@ from rerankers_spark.functions import textstats
 from rerankers_spark.functions.tokenize import tokenize_col
 from rerankers_spark.operators import ann, bm25, dedup
 from rerankers_spark.operators.topk import topk
+from rerankers_spark.query.executor import Engine
 
 # Fixed reference query set over the driver `documents` table (its
 # vocabulary is stable across scale factors).
@@ -208,18 +209,13 @@ def q_bm25_topk_bmw(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from rerankers_spark.index.spimi import build_index
-    from rerankers_spark.query import bmw as bmw_mod
 
     corpus = documents_as_corpus(spark, sf_dir)
     tag = os.path.basename(sf_dir.rstrip("/"))
     idx = f"/tmp/contract_index_{tag}"
     shutil.rmtree(idx, ignore_errors=True)
-    paths = build_index(spark, corpus, idx, n_shards=8)
-    raw = bmw_mod.bmw_topk(spark, _queries_df(spark), paths, k=50)
-    rounded = raw.select(
-        "query_id", "doc_id", F.round("score", 4).alias("score")
-    )
-    return topk(rounded, 10).select("query_id", "doc_id", "rank", "score")
+    build_index(spark, corpus, idx, n_shards=8)
+    return _bmw_rounded_top10(Engine(spark, idx))
 
 
 def q_bm25_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -237,7 +233,6 @@ def q_bm25_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_index,
         compact_index,
     )
-    from rerankers_spark.query import bmw as bmw_mod
 
     corpus = documents_as_corpus(spark, sf_dir)
     tag = os.path.basename(sf_dir.rstrip("/"))
@@ -245,14 +240,10 @@ def q_bm25_topk_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(idx, ignore_errors=True)
     half = corpus.where(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0)
     rest = corpus.where(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 1)
-    paths = build_index(spark, half, idx, n_shards=8)
+    build_index(spark, half, idx, n_shards=8)
     append_index(spark, rest, idx)
     compact_index(spark, idx)
-    raw = bmw_mod.bmw_topk(spark, _queries_df(spark), paths, k=50)
-    rounded = raw.select(
-        "query_id", "doc_id", F.round("score", 4).alias("score")
-    )
-    return topk(rounded, 10).select("query_id", "doc_id", "rank", "score")
+    return _bmw_rounded_top10(Engine(spark, idx))
 
 
 # Soft-delete fixture: a deterministic ~10% slice selectable in BOTH
@@ -314,10 +305,11 @@ WHERE rank <= 10
 """
 
 
-def _bmw_rounded_top10(spark: SparkSession, paths) -> DataFrame:
-    from rerankers_spark.query import bmw as bmw_mod
-
-    raw = bmw_mod.bmw_topk(spark, _queries_df(spark), paths, k=50)
+def _bmw_rounded_top10(eng: Engine, **filters) -> DataFrame:
+    """The fixed query set through ``eng.search`` at k=50 (``filters``
+    passed on), re-ranked on the rounded score and cut to 10 — see
+    q_bm25_topk_bmw."""
+    raw = eng.search(_queries_df(eng.spark), k=50, **filters)
     rounded = raw.select(
         "query_id", "doc_id", F.round("score", 4).alias("score")
     )
@@ -338,10 +330,10 @@ def q_bm25_topk_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = os.path.basename(sf_dir.rstrip("/"))
     idx = f"/tmp/contract_index_del_{tag}"
     shutil.rmtree(idx, ignore_errors=True)
-    paths = build_index(spark, corpus, idx, n_shards=8)
+    build_index(spark, corpus, idx, n_shards=8)
     delete_docs(spark, idx, corpus.select("doc_id")
                 .where(_delete_pred_col()))
-    return _bmw_rounded_top10(spark, paths)
+    return _bmw_rounded_top10(Engine(spark, idx))
 
 
 def q_bm25_topk_delete_compacted(spark: SparkSession, sf_dir: str
@@ -362,11 +354,11 @@ def q_bm25_topk_delete_compacted(spark: SparkSession, sf_dir: str
     tag = os.path.basename(sf_dir.rstrip("/"))
     idx = f"/tmp/contract_index_delcomp_{tag}"
     shutil.rmtree(idx, ignore_errors=True)
-    paths = build_index(spark, corpus, idx, n_shards=8)
+    build_index(spark, corpus, idx, n_shards=8)
     delete_docs(spark, idx, corpus.select("doc_id")
                 .where(_delete_pred_col()))
     compact_index(spark, idx)
-    return _bmw_rounded_top10(spark, paths)
+    return _bmw_rounded_top10(Engine(spark, idx))
 
 
 def q_bm25_topk_tiered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,14 +372,12 @@ def q_bm25_topk_tiered(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from rerankers_spark.index.spimi import (
-        IndexPaths,
         append_index,
         build_index,
         compact_index,
         load_meta,
         visible_generations,
     )
-    from rerankers_spark.query import bmw as bmw_mod
 
     corpus = documents_as_corpus(spark, sf_dir)
     tag = os.path.basename(sf_dir.rstrip("/"))
@@ -402,11 +392,7 @@ def q_bm25_topk_tiered(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact_index(spark, idx, generations=gens[1:])
     after = visible_generations(load_meta(spark, paths))
     assert len(after) == 2 and after[0] == gens[0]
-    raw = bmw_mod.bmw_topk(spark, _queries_df(spark), paths, k=50)
-    rounded = raw.select(
-        "query_id", "doc_id", F.round("score", 4).alias("score")
-    )
-    return topk(rounded, 10).select("query_id", "doc_id", "rank", "score")
+    return _bmw_rounded_top10(Engine(spark, idx))
 
 
 _SQL_BM25_TOPK_FILTERED = f"""
@@ -441,6 +427,14 @@ WHERE rank <= 10
 """
 
 
+def _lang_en_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (doc_id) frame of the lang='en' documents: the doc_filter of
+    the filtered contract queries."""
+    return (spark.read.parquet(f"{sf_dir}/documents.parquet")
+            .where(F.col("lang") == "en")
+            .select(F.col("doc_id").cast("long").alias("doc_id")))
+
+
 def q_bm25_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-filtered search: results restricted to lang='en' docs
     with FULL-corpus stats (a filter narrows candidates, it does not
@@ -450,44 +444,29 @@ def q_bm25_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from rerankers_spark.index.spimi import build_index
-    from rerankers_spark.query import bmw as bmw_mod
 
     corpus = documents_as_corpus(spark, sf_dir)
     tag = os.path.basename(sf_dir.rstrip("/"))
     idx = f"/tmp/contract_index_filt_{tag}"
     shutil.rmtree(idx, ignore_errors=True)
-    paths = build_index(spark, corpus, idx, n_shards=8)
-    keep = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where(F.col("lang") == "en")
-            .select(F.col("doc_id").cast("long").alias("doc_id")))
-    raw = bmw_mod.bmw_topk(spark, _queries_df(spark), paths, k=50,
-                           keep_docs=keep)
-    rounded = raw.select(
-        "query_id", "doc_id", F.round("score", 4).alias("score")
-    )
-    return topk(rounded, 10).select("query_id", "doc_id", "rank", "score")
+    build_index(spark, corpus, idx, n_shards=8)
+    return _bmw_rounded_top10(Engine(spark, idx),
+                              doc_filter=_lang_en_ids(spark, sf_dir))
 
 
 def q_bm25_topk_filtered_bucketed(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    """The SAME filtered search through keep_mode='bucketed': the keep
-    ids travel the (shard, bucket) cogroup shuffle as data rows instead
-    of a driver-collected broadcast array (the 100-TB shape for large
-    filters — Engine.search auto-routes past KEEP_BROADCAST_CAP). Must
-    hash-match the same DuckDB oracle as the broadcast path."""
-    from rerankers_spark.query import bmw as bmw_mod
-
+    """The SAME filtered search through the bucketed keep path: the
+    keep ids travel the (shard, bucket) cogroup shuffle as data rows
+    instead of a driver-collected broadcast array (the 100-TB shape for
+    large filters — Engine.search routes every filter past
+    KEEP_BROADCAST_CAP there, and the cap is 0 here). Must hash-match
+    the same DuckDB oracle as the broadcast path."""
     # the index q_bm25_topk_filtered built for this sf_dir
     paths = _contract_index(spark, sf_dir, "contract_index_filt")
-    keep = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .where(F.col("lang") == "en")
-            .select(F.col("doc_id").cast("long").alias("doc_id")))
-    raw = bmw_mod.bmw_topk(spark, _queries_df(spark), paths, k=50,
-                           keep_docs=keep, keep_mode="bucketed")
-    rounded = raw.select(
-        "query_id", "doc_id", F.round("score", 4).alias("score")
-    )
-    return topk(rounded, 10).select("query_id", "doc_id", "rank", "score")
+    eng = Engine(spark, paths.root)
+    eng.KEEP_BROADCAST_CAP = 0
+    return _bmw_rounded_top10(eng, doc_filter=_lang_en_ids(spark, sf_dir))
 
 
 def q_bm25_topk_attr_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -502,19 +481,13 @@ def q_bm25_topk_attr_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from rerankers_spark.index.spimi import build_index
-    from rerankers_spark.query import bmw as bmw_mod
 
     corpus = documents_as_corpus(spark, sf_dir)
     tag = os.path.basename(sf_dir.rstrip("/"))
     idx = f"/tmp/contract_index_attr_{tag}"
     shutil.rmtree(idx, ignore_errors=True)
-    paths = build_index(spark, corpus, idx, n_shards=8, attr_col="lang")
-    raw = bmw_mod.bmw_topk(spark, _queries_df(spark), paths, k=50,
-                           attr_values=["en"])
-    rounded = raw.select(
-        "query_id", "doc_id", F.round("score", 4).alias("score")
-    )
-    return topk(rounded, 10).select("query_id", "doc_id", "rank", "score")
+    build_index(spark, corpus, idx, n_shards=8, attr_col="lang")
+    return _bmw_rounded_top10(Engine(spark, idx), attr_filter=["en"])
 
 
 def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -625,8 +598,6 @@ def _contract_index(spark: SparkSession, sf_dir: str, name: str):
 def _contract_engine(spark: SparkSession, sf_dir: str, scorer="overlap"):
     """Engine over the shared per-sf contract index that q_bm25_topk_bmw
     builds (see _contract_index)."""
-    from rerankers_spark.query.executor import Engine
-
     paths = _contract_index(spark, sf_dir, "contract_index")
     return Engine(spark, paths.root, scorer=scorer)
 
@@ -636,12 +607,7 @@ def q_bm25_topk_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept for callers; it runs the same cogroup block-scan kernel as
     every mode — under the same from-scratch DuckDB oracle as the other
     index paths."""
-    eng = _contract_engine(spark, sf_dir)
-    raw = eng.search(_queries_df(spark), k=50, mode="auto")
-    rounded = raw.select(
-        "query_id", "doc_id", F.round("score", 4).alias("score")
-    )
-    return topk(rounded, 10).select("query_id", "doc_id", "rank", "score")
+    return _bmw_rounded_top10(_contract_engine(spark, sf_dir), mode="auto")
 
 
 def q_two_stage_rank(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -860,11 +860,6 @@ def _write_scalars(spark: SparkSession, paths: IndexPaths, n_docs: int,
         "scalars", pa.Table.from_pylist([row], SCALARS_SCHEMA))
 
 
-def load_scalars(spark: SparkSession, paths: IndexPaths) -> tuple[int, float]:
-    r = load_meta(spark, paths)
-    return int(r["n_docs"]), float(r["avgdl"])
-
-
 def load_meta(spark: SparkSession, paths: IndexPaths) -> dict:
     return paths.catalog(spark).read_row("scalars")
 

@@ -147,12 +147,6 @@ def _sig_expr(planes: list[list[float]], vec_col: str):
     return F.expr("CAST((" + " + ".join(parts) + ") AS BIGINT)")
 
 
-def lsh_signature(df: DataFrame, planes: list[list[float]],
-                  vec_col: str = "vec") -> DataFrame:
-    """Adds ``sig`` — sign-bit signature over the hyperplanes."""
-    return df.withColumn("sig", _sig_expr(planes, vec_col))
-
-
 def lsh_cosine_topk(
     queries: DataFrame,
     items: DataFrame,

@@ -20,13 +20,16 @@ task body:
   by ``pmod(xxhash64(query_id), B)`` and cogrouped with the blocks (no
   driver collect — the query log can be a billion rows).
 
-Every Engine.search mode runs through bmw_topk, and every (query, shard)
-pair in it is scored by scan_topk_shard: a
-columnar, term-at-a-time block scan that decodes the task's blocks once
-and scores all of the task's queries against a dense accumulator. Per-
-element work stays inside numpy: the per-query Python loops it replaced
-(doc-at-a-time WAND, a per-term groupby) measured 8-24× slower per task
-on 1k-25k-doc shards, single-threaded on a 4-core x86 host.
+Engine.search is the only entry point. It resolves an index state's
+handles once (meta, termstats, the projected blocks, the tombstone and
+keep-list broadcasts, the vocabulary snapshot and the query plan) and
+bmw_topk only plans a search over them. Every (query, shard) pair is
+scored by scan_topk_shard: a columnar, term-at-a-time block scan that
+decodes the task's blocks once and scores all of the task's queries
+against a dense accumulator. Per-element work stays inside numpy: the
+per-query Python loops it replaced (doc-at-a-time WAND, a per-term
+groupby) measured 8-24× slower per task on 1k-25k-doc shards,
+single-threaded on a 4-core x86 host.
 
 Block rows address docs by shard-local ordinal (spimi block format 2).
 Each group's docmap rows ride the shuffle with its posting rows; the
@@ -63,8 +66,6 @@ from pyspark.sql import functions as F
 from rerankers_spark.index import varbyte as vb
 from rerankers_spark.index.spimi import (
     DOCMAP_TERM,
-    IndexPaths,
-    load_blocks,
     local_df,
     ordinals_of,
     split_docmap,
@@ -308,18 +309,13 @@ SCAN_BUDGET_CELLS = 1 << 21
 
 
 #: the blocks columns bmw_topk's task body reads (split_docmap,
-#: scan_topk_shard, the attr groups, the group key); the WAND bounds and
-#: block extents never reach the grouped map or the cogroup
+#: scan_topk_shard, the attr groups, the group key): the Engine's blocks
+#: handle is spimi.load_blocks projected to these once per index state,
+#: as each Python-bound column costs py4j round trips on every call that
+#: plans over it. The WAND bounds and block extents never reach the
+#: grouped map or the cogroup.
 TASK_BLOCK_COLS = ("term", "block_id", "first_doc", "docs_vb", "tfs_vb",
                    "dls_vb", "attr", "shard_id")
-
-
-def load_task_blocks(spark: SparkSession, paths: IndexPaths,
-                     meta: dict) -> DataFrame:
-    """spimi.load_blocks projected to TASK_BLOCK_COLS: the handle
-    bmw_topk scans. Projected once per handle, as each Python-bound
-    column costs py4j round trips on every call that plans over it."""
-    return load_blocks(spark, paths, meta).select(*TASK_BLOCK_COLS)
 
 
 def _empty_topk() -> pd.DataFrame:
@@ -496,23 +492,14 @@ def wand_topk_shard(
     )
 
 
-def query_terms_with_idf(
-    spark: SparkSession, queries: DataFrame, paths: IndexPaths,
-    termstats: DataFrame | None = None,
-) -> DataFrame:
-    """(query_id, term, idf, df) for the query set — termstats is
-    filtered to the query vocabulary BEFORE it is broadcast
-    (semi-reduction), so the full vocab table never moves. termstats,
-    when not passed, is loaded through spimi.load_termstats
-    (per-generation contributions summed over the COMMITTED generations
-    only, idf evaluated once per term)."""
-    from rerankers_spark.index.spimi import load_meta, load_termstats
-
-    qt = bm25.query_terms(queries)
-    ts = termstats if termstats is not None \
-        else load_termstats(spark, paths, load_meta(spark, paths))
-    return qt.join(ts, "term", "inner").select(
-        "query_id", "term", "idf", "df")
+def query_terms_with_idf(queries: DataFrame,
+                         termstats: DataFrame) -> DataFrame:
+    """(query_id, term, idf, df) for the query set: termstats
+    (spimi.load_termstats) is joined on the query vocabulary, so the
+    planner filters it BEFORE any broadcast (semi-reduction) and the
+    full vocab table never moves."""
+    return bm25.query_terms(queries).join(termstats, "term", "inner") \
+        .select("query_id", "term", "idf", "df")
 
 
 #: query vocabularies up to this size are collected once (a bounded,
@@ -675,68 +662,47 @@ def empty_result(spark: SparkSession) -> DataFrame:
 def bmw_topk(
     spark: SparkSession,
     queries: DataFrame,
-    paths: IndexPaths,
+    meta: dict,
+    termstats: DataFrame,
+    blocks: DataFrame,
+    tomb_bc,
+    local_plan: LocalQueryPlan | None,
     k: int = 10,
-    meta: dict | None = None,
-    termstats: DataFrame | None = None,
-    blocks: DataFrame | None = None,
-    query_buckets: int | None = None,
-    keep_docs: DataFrame | None = None,
-    tomb_bc="load",
-    keep_mode: str = "broadcast",
+    keep=None,
     attr_values: list | None = None,
-    keep_bc=None,
-    local_plan: LocalQueryPlan | None = None,
 ) -> DataFrame:
     """(query_id, doc_id, score, rank): exact BM25 top-k, every (query,
     shard) pair scored by the columnar block scan (scan_topk_shard).
 
-    meta/termstats/blocks: pre-loaded handles (Engine caches them so
-    repeated searches skip the scalar-read jobs); blocks as
-    load_task_blocks returns it.
-    query_buckets: query-side fan-out B (tasks = |shards| × B). None →
-    sized so shards × buckets covers the cluster. Block bytes for a term
-    shared by several buckets are replicated per bucket — B trades
-    shuffle volume for query parallelism.
+    A plan builder over handles Engine.search has resolved: ``meta``,
+    ``termstats`` (spimi.load_termstats) and ``blocks`` (projected to
+    TASK_BLOCK_COLS) of one index state, ``tomb_bc`` (a Broadcast of
+    the sorted tombstone array, or None) and ``local_plan`` (the
+    bounded LocalQueryPlan of ``queries``, or None for the distributed
+    formulation). It loads nothing and builds no broadcast. The query
+    fan-out B is sized so that shards × buckets covers the cluster;
+    block bytes for a term shared by several buckets are replicated per
+    bucket.
 
-    Soft deletes: if a tombstones table exists (spimi.delete_docs), its
-    sorted id array is broadcast and excluded inside the kernels; global
-    stats stay pre-delete until compact_index purges (Lucene deferred-
-    stats semantics).
+    Soft deletes: tombstoned docs are excluded inside the kernels;
+    global stats stay pre-delete until compact_index purges (Lucene
+    deferred-stats semantics).
 
-    keep_docs: optional (doc_id) DataFrame — metadata-filtered search
-    (e.g. ``docs.where(lang='python').select('doc_id')``). Results are
-    restricted to the set, scores keep full-corpus stats (the standard
-    filtered-search semantics: a filter narrows candidates, it does not
-    re-weight idf).
+    keep: the metadata-filtered search's doc set. Results are restricted
+    to it, and scores keep full-corpus stats (a filter narrows
+    candidates, it does not re-weight idf). Two shapes:
 
-    keep_mode selects how the keep set reaches the kernels:
-
-    * 'broadcast' — driver-collected sorted array, one broadcast (like
-      tombstones); right for filters up to ~10M ids (~80 MB).
-    * 'bucketed' — keep ids are SHARDED like the index (each id maps to
-      its candidate shard in every visible generation) and flow through
-      the (shard, bucket) cogroup shuffle as marker rows on the query
-      side (so such a search always takes the cogroup) — fully
-      distributed: no driver materialization, no
-      broadcast, each task sees only its own shard's keep ids (|keep| ×
-      |gens| × B shuffle rows), so arbitrarily large filters stay off
-      the driver; Engine.search auto-routes past
-      KEEP_BROADCAST_CAP. (At 100 TB a high-selectivity attribute is
-      still better as an index partition column — that prunes whole
-      shards instead of filtering inside them.)
-
-    tomb_bc: the sentinel "load" (default) loads + broadcasts the
-    tombstone array per call; a long-lived Engine instead passes its
-    CACHED Broadcast (or None for no tombstones) so repeated searches
-    reuse one broadcast instead of re-collecting and re-shipping the
-    array every query (executor.Engine._handles).
-
-    keep_bc: optional pre-built Broadcast of keep_docs' sorted id array
-    (broadcast mode only) — the Engine's per-filter cache
-    (executor.Engine._keep_entry) passes it so repeated filtered searches
-    skip the collect + ship; a standalone call leaves it None and this
-    function builds one.
+    * a Broadcast of the sorted id array (the Engine's cached keep-list,
+      up to its KEEP_BROADCAST_CAP ids) — read in every task;
+    * a (doc_id) DataFrame — the ids are SHARDED like the index (each id
+      maps to its candidate shard in every visible generation) and flow
+      through the (shard, bucket) cogroup shuffle as marker rows on the
+      query side: no driver materialization, no broadcast, each task
+      sees only its own shard's keep ids (|keep| × |gens| × B shuffle
+      rows). Such a search always takes the cogroup, so ``local_plan``
+      must be None. (At 100 TB a high-selectivity attribute is still
+      better as an index partition column — that prunes whole shards
+      instead of filtering inside them.)
 
     attr_values: for an attribute-partitioned index (build_index
     attr_col), restrict results to these attribute values — the filter
@@ -749,67 +715,22 @@ def bmw_topk(
     attr) docmap group of its rows separately — the groups are
     doc-disjoint, so per-group top-k lists still merge exactly.
     """
-    from rerankers_spark.index.spimi import (
-        _gen_shards,
-        load_meta,
-        load_tombstones,
-        visible_generations,
-    )
+    from rerankers_spark.index.spimi import _gen_shards, visible_generations
 
-    if meta is None:
-        meta = load_meta(spark, paths)
-    if blocks is None:
-        # first, so an index of another block format fails before any job
-        blocks = load_task_blocks(spark, paths, meta)
-    if isinstance(tomb_bc, str) and tomb_bc == "load":
-        tomb = load_tombstones(spark, paths)
-        tomb_bc = (spark.sparkContext.broadcast(tomb)
-                   if tomb is not None else None)
-    if keep_mode not in ("broadcast", "bucketed"):
-        raise ValueError(f"unknown keep_mode {keep_mode!r}")
-    bucketed_keep = keep_docs is not None and keep_mode == "bucketed"
-    if bucketed_keep:
-        keep_bc = None
-    elif keep_docs is not None and keep_bc is None:
-        # standalone call: collect + broadcast here. A long-lived Engine
-        # passes its CACHED keep_bc instead (executor.Engine._keep_entry) so
-        # repeated filtered searches ship the array once, like tomb_bc.
-        keep_arr = np.array(
-            [r["doc_id"] for r in keep_docs.select("doc_id")
-             .distinct().collect()], dtype=np.int64)
-        keep_arr.sort()
-        keep_bc = spark.sparkContext.broadcast(keep_arr)
+    bucketed_keep = isinstance(keep, DataFrame)
+    keep_bc = None if bucketed_keep else keep
     avgdl = float(meta["avgdl"])
     shard_ids = _gen_shards(visible_generations(meta),
                             int(meta["n_shards"]))
-    n_shards_total = len(shard_ids)
-    if query_buckets is None:
-        query_buckets = max(
-            1, spark.sparkContext.defaultParallelism
-            // max(1, n_shards_total))
-    n_buckets = int(query_buckets)
+    n_buckets = max(1, spark.sparkContext.defaultParallelism
+                    // max(1, len(shard_ids)))
     attr_mode = bool(meta.get("attr_col"))
-
-    # local_plan: None = not probed yet; False = probed, past the caps
-    # (use the distributed path without re-probing); a LocalQueryPlan is
-    # truthy and selects the local path. A bucketed keep-list's ids are
-    # already a shuffle of >= KEEP_BROADCAST_CAP rows: it always rides
-    # the cogroup.
-    if bucketed_keep:
-        local_plan = False
-    if not local_plan and termstats is None:
-        from rerankers_spark.index.spimi import load_termstats
-
-        termstats = load_termstats(spark, paths, meta)
-    if local_plan is None:
-        local_plan = build_local_query_plan(spark, queries,
-                                            termstats) or False
 
     if attr_values is not None:
         if not attr_mode:
             raise ValueError(
                 "attr_values requires an attribute-partitioned index "
-                "(build_index attr_col=...); use keep_docs for ad-hoc "
+                "(build_index attr_col=...); use a doc_filter for ad-hoc "
                 "filters")
         # partition-column predicate → whole attr directories pruned at
         # the parquet scan (PartitionFilters, asserted in tests)
@@ -844,7 +765,7 @@ def bmw_topk(
         return pd.concat(outs, ignore_index=True)
 
     schema = "query_id long, doc_id long, score double"
-    if local_plan:
+    if local_plan is not None:
         # bounded local plan: query terms, (df, idf) and buckets are on
         # the driver. Only the blocks side is shuffled, bucketed by one
         # expression with a hash InSet per bucket; each task takes its
@@ -884,7 +805,7 @@ def bmw_topk(
     def _bucket_col():
         return F.pmod(F.xxhash64("query_id"), F.lit(n_buckets)).cast("int")
 
-    qt_idf = query_terms_with_idf(spark, queries, paths, termstats)
+    qt_idf = query_terms_with_idf(queries, termstats)
     # Bounded term-list pushdown (see TERM_PUSHDOWN_CAP). limit() means
     # the driver never holds more than CAP+1 terms even for a huge query
     # log. Collected from the RAW query terms (no termstats join in this
@@ -919,7 +840,7 @@ def bmw_topk(
         # pandas and mangle full-range xxhash64 doc ids (CLAUDE.md
         # invariant); query_id stays int64 because every row sets it.
         n_sh = int(meta["n_shards"])
-        base = keep_docs.select(
+        base = keep.select(
             F.col("doc_id").cast("long").alias("keep_doc")).distinct()
         keep_sharded = None
         for g in visible_generations(meta):

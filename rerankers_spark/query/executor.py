@@ -10,6 +10,7 @@ Spark job instead of a per-query Python loop.
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -18,6 +19,24 @@ from pyspark.sql import functions as F
 from rerankers_spark.index.spimi import IndexPaths, build_index
 from rerankers_spark.query import bmw
 from rerankers_spark.rerank.ranker import Reranker
+
+
+def _semantic_lru(cache: OrderedDict, cap: int, frame: DataFrame, make):
+    """The value cached for ``frame``'s SEMANTICS (semanticHash, then
+    sameSemantics — two logically-equal plans share one entry), else
+    ``make()``, stored as the most recent entry of an LRU of ``cap``
+    entries. An evicted value is simply dropped."""
+    h = frame.semanticHash()
+    got = cache.get(h)
+    if got is not None and frame.sameSemantics(got[0]):
+        cache.move_to_end(h)
+        return got[1]
+    value = make()
+    cache[h] = (frame, value)
+    cache.move_to_end(h)
+    while len(cache) > cap:
+        cache.popitem(last=False)
+    return value
 
 
 class Engine:
@@ -37,23 +56,19 @@ class Engine:
         # (invalidated by delete()/refresh()); dropped handles are
         # reclaimed by Spark's ContextCleaner once unreferenced.
         self._tomb_bc = "stale"
-        # cached keep-list entries, keyed on the doc_filter's SEMANTIC
-        # fingerprint (semanticHash + sameSemantics — two logically-equal
-        # plans share one entry): a long-lived Engine serving repeated
-        # filtered searches runs the size probe AND collects + ships the
-        # sorted id array once, not per call (an ~80 MB array at
-        # KEEP_BROADCAST_CAP). Bounded LRU (KEEP_CACHE_MAX): an evicted
-        # entry is simply dropped — Spark's ContextCleaner reclaims the
-        # unreferenced broadcast; no destroy(), which could fail a query
-        # still holding the handle. The key covers the filter PLAN, not
-        # its input bytes — refresh() drops the cache, so re-create/
-        # refresh the Engine if the filter's source table itself changed
-        # in place.
-        from collections import OrderedDict
-
+        # cached keep-list routes, an LRU (_semantic_lru, KEEP_CACHE_MAX)
+        # keyed on the doc_filter's semantics: a long-lived Engine
+        # serving repeated filtered searches runs the size probe AND
+        # collects + ships the sorted id array once, not per call (an
+        # ~80 MB array at KEEP_BROADCAST_CAP). Spark's ContextCleaner
+        # reclaims an evicted, unreferenced broadcast; no destroy(),
+        # which could fail a query still holding the handle. The key
+        # covers the filter PLAN, not its input bytes — refresh() drops
+        # the cache, so re-create/refresh the Engine if the filter's
+        # source table itself changed in place.
         self._keep_bc_cache: "OrderedDict[int, tuple]" = OrderedDict()
-        # cached local-query-plan probes, keyed like the keep cache on
-        # the queries frame's SEMANTICS: a serving loop re-issuing the
+        # cached local-query-plan probes, an LRU (PLAN_CACHE_MAX) keyed
+        # on the queries frame's semantics: a serving loop re-issuing the
         # same query set skips the probe collect and tokenizing, and a
         # too-big log caches its False verdict so repeat calls go
         # straight to the distributed path with no probe at all. Entries
@@ -140,7 +155,10 @@ class Engine:
         return did if not n_gc else f"{did} + gc({n_gc} partitions)"
 
     def _handles(self):
+        """(meta, termstats, blocks) and ``_tomb_bc`` of the index
+        state: stage one's only loader (bmw.bmw_topk plans from these)."""
         from rerankers_spark.index.spimi import (
+            load_blocks,
             load_meta,
             load_termstats,
             load_tombstones,
@@ -156,8 +174,8 @@ class Engine:
             # the search task reads. termstats is persisted: its
             # per-generation aggregation would otherwise re-run inside
             # every query job that joins it.
-            self._blocks = bmw.load_task_blocks(self.spark, self.paths,
-                                                meta)
+            self._blocks = load_blocks(self.spark, self.paths,
+                                       meta).select(*bmw.TASK_BLOCK_COLS)
             self._termstats = load_termstats(self.spark, self.paths,
                                              meta).persist()
             self._meta = meta
@@ -175,32 +193,25 @@ class Engine:
     KEEP_CACHE_MAX = 8
 
     def _keep_entry(self, doc_filter: DataFrame):
-        """(keep_mode, keep_bc) for a doc_filter, cached per filter
-        SEMANTICS (see __init__). A cache hit skips BOTH per-call jobs:
-        the size probe (a scan of up to CAP+1 filter rows) and the
-        collect + broadcast of the sorted id array."""
-        import numpy as np
+        """("broadcast", keep_bc) or ("bucketed", None) for a doc_filter,
+        cached per filter SEMANTICS (see __init__). A cache hit skips
+        BOTH per-call jobs: the size probe (a scan of up to CAP+1 filter
+        rows) and the collect + broadcast of the sorted id array."""
+        def make():
+            import numpy as np
 
-        h = doc_filter.semanticHash()
-        got = self._keep_bc_cache.get(h)
-        if got is not None and doc_filter.sameSemantics(got[0]):
-            self._keep_bc_cache.move_to_end(h)
-            return got[1], got[2]
-        probe = (doc_filter.select("doc_id")
-                 .limit(self.KEEP_BROADCAST_CAP + 1).count())
-        if probe > self.KEEP_BROADCAST_CAP:
-            mode, bc = "bucketed", None
-        else:
+            probe = (doc_filter.select("doc_id")
+                     .limit(self.KEEP_BROADCAST_CAP + 1).count())
+            if probe > self.KEEP_BROADCAST_CAP:
+                return "bucketed", None
             arr = np.array(
                 [r["doc_id"] for r in doc_filter.select("doc_id")
                  .distinct().collect()], dtype=np.int64)
             arr.sort()
-            mode, bc = "broadcast", self.spark.sparkContext.broadcast(arr)
-        self._keep_bc_cache[h] = (doc_filter, mode, bc)
-        self._keep_bc_cache.move_to_end(h)
-        while len(self._keep_bc_cache) > self.KEEP_CACHE_MAX:
-            self._keep_bc_cache.popitem(last=False)
-        return mode, bc
+            return "broadcast", self.spark.sparkContext.broadcast(arr)
+
+        return _semantic_lru(self._keep_bc_cache, self.KEEP_CACHE_MAX,
+                             doc_filter, make)
 
     PLAN_CACHE_MAX = 16
 
@@ -225,19 +236,11 @@ class Engine:
         """LocalQueryPlan for ``queries`` (or False past the caps),
         cached per query-frame semantics — see _plan_cache."""
         _, termstats, _ = self._handles()
-        h = queries.semanticHash()
-        got = self._plan_cache.get(h)
-        if got is not None and queries.sameSemantics(got[0]):
-            self._plan_cache.move_to_end(h)
-            return got[1]
-        plan = bmw.build_local_query_plan(
-            self.spark, queries, termstats,
-            term_stats=self._term_stats) or False
-        self._plan_cache[h] = (queries, plan)
-        self._plan_cache.move_to_end(h)
-        while len(self._plan_cache) > self.PLAN_CACHE_MAX:
-            self._plan_cache.popitem(last=False)
-        return plan
+        return _semantic_lru(
+            self._plan_cache, self.PLAN_CACHE_MAX, queries,
+            lambda: bmw.build_local_query_plan(
+                self.spark, queries, termstats,
+                term_stats=self._term_stats) or False)
 
     @classmethod
     def build(cls, spark: SparkSession, corpus: DataFrame, index_path: str,
@@ -259,10 +262,10 @@ class Engine:
     #: as a sorted broadcast array (~80 MB at the cap); a larger filter
     #: (a low-selectivity predicate over a 100-TB corpus can select
     #: billions of ids) would OOM the driver building the array, so
-    #: search() auto-routes it to keep_mode='bucketed': the ids are
-    #: sharded like the index and flow through the (shard, bucket)
-    #: cogroup shuffle as data rows — no driver materialization, no
-    #: broadcast.
+    #: search() routes it to the bucketed keep path (bmw.bmw_topk's keep
+    #: is the filter frame): the ids are sharded like the index and flow
+    #: through the (shard, bucket) cogroup shuffle as data rows — no
+    #: driver materialization, no broadcast.
     KEEP_BROADCAST_CAP = 10_000_000
 
     #: the accepted Engine.search mode names (see search()).
@@ -295,7 +298,7 @@ class Engine:
         doc_filter: optional (doc_id) DataFrame restricting results to a
         metadata-selected doc set (e.g. ``corpus.where(lang ==
         'python').select('doc_id')``) with full-corpus stats — see
-        bmw.bmw_topk keep_docs. Filters beyond KEEP_BROADCAST_CAP ids
+        bmw.bmw_topk keep. Filters beyond KEEP_BROADCAST_CAP ids
         are routed off the broadcast kernel path automatically (the
         size probe scans only until CAP+1 ids are seen) onto the
         bucketed cogroup keep path; an attribute that routinely selects
@@ -308,9 +311,10 @@ class Engine:
         attr_values). Composable with doc_filter.
 
         local_plan: optional pre-built bmw.LocalQueryPlan for these
-        queries (rank() builds one and shares it between the stages);
-        None → probe for one (bounded, falls back to the distributed
-        formulation past bmw.QT_PAIR_CAP). A doc_filter past
+        queries, or False past the caps (rank() probes once and shares
+        the outcome between the stages); None → probe for one (bounded,
+        falls back to the distributed formulation past
+        bmw.QT_PAIR_CAP). A doc_filter past
         KEEP_BROADCAST_CAP always takes the distributed formulation, so
         it skips the probe.
 
@@ -330,19 +334,17 @@ class Engine:
         if mode not in self.MODES:
             raise ValueError(f"unknown mode {mode!r}")
         meta, termstats, blocks = self._handles()
-        keep_mode, keep_bc = (self._keep_entry(doc_filter)
-                              if doc_filter is not None
-                              else ("broadcast", None))
-        if local_plan is None and keep_mode != "bucketed":
+        keep = None
+        if doc_filter is not None:
+            route, keep = self._keep_entry(doc_filter)
+            if route == "bucketed":
+                # the ids ride the cogroup: never the local plan
+                keep, local_plan = doc_filter, False
+        if local_plan is None:
             local_plan = self._query_plan(queries)
-        return bmw.bmw_topk(self.spark, queries, self.paths, k=k,
-                            meta=meta, termstats=termstats,
-                            blocks=blocks, keep_docs=doc_filter,
-                            tomb_bc=self._tomb_bc,
-                            keep_mode=keep_mode,
-                            attr_values=attr_filter,
-                            keep_bc=keep_bc,
-                            local_plan=local_plan)
+        return bmw.bmw_topk(self.spark, queries, meta, termstats, blocks,
+                            self._tomb_bc, local_plan=local_plan or None,
+                            k=k, keep=keep, attr_values=attr_filter)
 
     # -- driver-side facade ----------------------------------------------------
 

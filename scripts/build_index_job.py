@@ -24,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from rerankers_spark.corpus import with_doc_id  # noqa: E402
-from rerankers_spark.index.spimi import build_index  # noqa: E402
+from rerankers_spark.index.spimi import build_index, load_meta  # noqa: E402
 
 
 def main() -> None:
@@ -47,9 +47,10 @@ def main() -> None:
         corpus = with_doc_id(raw)
 
     t0 = time.time()
-    build_index(spark, corpus, args.index, n_shards=args.n_shards,
-                resume=args.resume)
-    n = spark.read.parquet(f"{args.index}/docstats").count()
+    paths = build_index(spark, corpus, args.index, n_shards=args.n_shards,
+                        resume=args.resume)
+    # the committed scalars row: read through the Catalog, no Spark job
+    n = int(load_meta(spark, paths)["n_docs"])
     wall = time.time() - t0
     print(f"indexed {n} docs in {wall:.1f}s ({n / wall:.1f} docs/sec) "
           f"→ {args.index}")

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from rerankers_spark.corpus import synthetic_corpus_pdf, with_doc_id
 from rerankers_spark.index import spimi
-from rerankers_spark.query import bmw
 from rerankers_spark.query.executor import Engine
 from tests.test_deletes import _oracle_excluding
 
@@ -33,6 +32,14 @@ PLAIN = "/tmp/test_attr_index_plain"
 def _rounded(df):
     return sorted((r["query_id"], r["doc_id"], round(r["score"], 9))
                   for r in df.collect())
+
+
+def _bucketed(eng):
+    """A second Engine on ``eng``'s index whose every doc_filter takes
+    the bucketed keep path (the ids ride the cogroup shuffle)."""
+    out = Engine(eng.spark, eng.paths.root)
+    out.KEEP_BROADCAST_CAP = 0
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -132,10 +139,11 @@ def test_bucketed_keep_on_attr_index(spark, attr_setup):
     corpus, eng, plain, q = attr_setup
     keep = corpus.select("doc_id").where(F.abs(F.col("doc_id")) % 3 == 0)
     exp = _rounded(plain.search(q, k=10, mode="bmw", doc_filter=keep))
-    got_b = _rounded(bmw.bmw_topk(spark, q, eng.paths, k=10,
-                                  keep_docs=keep, keep_mode="broadcast"))
-    got_k = _rounded(bmw.bmw_topk(spark, q, eng.paths, k=10,
-                                  keep_docs=keep, keep_mode="bucketed"))
+    bucketed = _bucketed(eng)
+    assert eng._keep_entry(keep)[0] == "broadcast"
+    assert bucketed._keep_entry(keep)[0] == "bucketed"
+    got_b = _rounded(eng.search(q, k=10, doc_filter=keep))
+    got_k = _rounded(bucketed.search(q, k=10, doc_filter=keep))
     assert got_b == exp
     assert got_k == exp
 
@@ -198,10 +206,9 @@ def test_lifecycle_matrix_cell(spark, lifecycle_matrix, keep_mode, attr):
     expect = _oracle_excluding(rows, drop)
     exp = sorted((r["query_id"], d, round(s, 9)) for r in q.collect()
                  for d, s in expect(r["query"], 10))
-    got = _rounded(bmw.bmw_topk(spark, q, eng.paths, k=10,
-                                keep_docs=keep,
-                                keep_mode=keep_mode or "broadcast",
-                                attr_values=attr))
+    if keep_mode == "bucketed":
+        eng = _bucketed(eng)
+    got = _rounded(eng.search(q, k=10, doc_filter=keep, attr_filter=attr))
     assert got == exp
     if keep_mode is None and attr is None:
         assert got  # the unfiltered cell must be non-empty

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from rerankers_spark.corpus import synthetic_corpus_pdf
 from rerankers_spark.index import spimi
-from rerankers_spark.query import bmw
 from rerankers_spark.query.executor import Engine
 from tests.oracle import BM25Oracle
 
@@ -189,7 +188,6 @@ def test_previous_format_is_rejected_before_any_job(spark, corpus):
     more = _df(spark, corpus.assign(doc_id=corpus["doc_id"] ^ 1))
     calls = {
         "search": lambda: Engine(spark, path).search(q, k=K),
-        "bmw_topk": lambda: bmw.bmw_topk(spark, q, paths, k=K),
         "append": lambda: spimi.append_index(spark, more, path),
         "compact": lambda: spimi.compact_index(spark, path),
         "delete": lambda: spimi.delete_docs(spark, path, dead),

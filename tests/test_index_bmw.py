@@ -9,6 +9,7 @@ import shutil
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark import Broadcast
 from pyspark.sql import functions as F
 
 from rerankers_spark.index import spimi
@@ -63,7 +64,8 @@ def test_block_format(spark, engine):
 
 def test_index_stats_match_native(spark, engine, tiny_corpus):
     """Index-derived df/N/avgdl == native-DataFrame-derived values."""
-    n_docs, avgdl = spimi.load_scalars(spark, engine.paths)
+    meta = spimi.load_meta(spark, engine.paths)
+    n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
     n2, avg2 = bm25.corpus_scalars(tiny_corpus)
     assert n_docs == n2 and abs(avgdl - avg2) < 1e-12
     ts_idx = {
@@ -267,21 +269,31 @@ def test_oversized_doc_filter_routes_to_bucketed_keep(spark, engine,
                                                       monkeypatch):
     """A doc_filter beyond KEEP_BROADCAST_CAP must NOT become a driver
     array / broadcast (at 100 TB that would OOM the driver) — search()
-    auto-routes it to keep_mode='bucketed', where the ids flow through
-    the (shard, bucket) cogroup shuffle as data rows. Results must be
+    routes it to the bucketed keep path (bmw_topk's keep is the filter
+    frame, not a broadcast), where the ids flow through the (shard,
+    bucket) cogroup shuffle as data rows. Results must be
     identical across the broadcast kernel path, the bucketed kernel
     path, and the exhaustive mode (rounded-score comparison, CLAUDE.md
     cross-mode invariant)."""
     keep = tiny_corpus.select("doc_id").where(
         F.abs(F.col("doc_id")) % 2 == 0)
-    n_keep = keep.count()
+    keep_ids = {r["doc_id"] for r in keep.collect()}
+    n_keep = len(keep_ids)
     assert n_keep > 5
 
     modes = []
     real = bmw.bmw_topk
 
     def spy(*a, **kw):
-        modes.append(kw.get("keep_mode", "broadcast"))
+        # the bucketed route hands bmw_topk the filter frame itself and
+        # no local plan; the broadcast route the cached sorted id array
+        if kw["keep"] is keep:
+            assert kw["local_plan"] is None
+            modes.append("bucketed")
+        else:
+            assert isinstance(kw["keep"], Broadcast)
+            assert kw["keep"].value.tolist() == sorted(keep_ids)
+            modes.append("broadcast")
         return real(*a, **kw)
 
     monkeypatch.setattr(bmw, "bmw_topk", spy)
@@ -328,8 +340,10 @@ def test_bucketed_keep_excludes_shards_with_no_eligible_docs(spark,
     # query with a term from the target doc so it scores
     term = content.split()[0]
     q = spark.createDataFrame([(0, term)], "query_id long, query string")
-    got = bmw.bmw_topk(spark, q, engine.paths, k=10, keep_docs=one,
-                       keep_mode="bucketed").collect()
+    eng = Engine(spark, INDEX_PATH)
+    eng.KEEP_BROADCAST_CAP = 0
+    assert eng._keep_entry(one)[0] == "bucketed"
+    got = eng.search(q, k=10, doc_filter=one).collect()
     assert [r["doc_id"] for r in got] == [target]
 
 

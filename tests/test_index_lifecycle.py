@@ -1,5 +1,5 @@
 """What a build leaves behind, which tables an index root holds, and the
-maintenance CLI.
+maintenance and build CLIs.
 
 * a build starts from nothing: rebuilding at a path that held an index
   with pending tombstones, a retired ledger and dedup state publishes an
@@ -7,7 +7,9 @@ maintenance CLI.
 * every directory a full lifecycle writes under the root is ``scalars``
   or a table of ``IndexPaths.SCHEMAS`` — the set a build drops;
 * ``scripts/maintain_index_job.py`` deletes, runs a tiered merge and a
-  GC against a real index.
+  GC against a real index;
+* ``scripts/build_index_job.py --resume`` completes a build that failed
+  before its commit without rewriting a finished shard.
 """
 
 from __future__ import annotations
@@ -109,10 +111,10 @@ def test_every_table_is_registered(spark):
     assert {"tombstones", "retired", "dedup_state"} <= seen
 
 
-def _maintain_job():
+def _job(name: str):
+    """scripts/<name>.py, imported as a module."""
     spec = importlib.util.spec_from_file_location(
-        "maintain_index_job",
-        os.path.join(ROOT, "scripts", "maintain_index_job.py"))
+        name, os.path.join(ROOT, "scripts", f"{name}.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -140,7 +142,7 @@ def test_maintain_index_job_cli(spark, monkeypatch, capsys):
     monkeypatch.setattr(sys, "argv", [
         "maintain_index_job.py", "--index", path, "--delete-ids", ids_path,
         "--compact", "--tiered", "--gc-retention-secs", "0"])
-    _maintain_job().main()
+    _job("maintain_index_job").main()
     out = capsys.readouterr().out
     assert f"tombstoned the doc ids of {ids_path} in {path}" in out
     assert "generations=[0, 3]" in out
@@ -191,14 +193,6 @@ def test_resume_after_an_append_resumes_generation_0(spark):
     assert _search(spark, path) == _search(spark, fresh)
 
 
-def _search_job():
-    spec = importlib.util.spec_from_file_location(
-        "search_job", os.path.join(ROOT, "scripts", "search_job.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 def test_search_job_cli(spark, monkeypatch, capsys):
     """scripts/search_job.py main(): a filtered search in mode 'auto',
     then a reranked search, both checked against the BM25 oracle."""
@@ -226,7 +220,7 @@ def test_search_job_cli(spark, monkeypatch, capsys):
         for t in texts:
             argv += ["--query", t]
         monkeypatch.setattr(sys, "argv", argv + list(extra))
-        _search_job().main()
+        _job("search_job").main()
         return [ast.literal_eval(line) for line in
                 capsys.readouterr().out.splitlines() if line.startswith("{")]
 
@@ -249,3 +243,48 @@ def test_search_job_cli(spark, monkeypatch, capsys):
         for r in actual:
             assert r["bm25_score"] == pytest.approx(first[r["doc_id"]],
                                                     abs=1e-8)
+
+
+def test_build_index_job_resumes_a_failed_build(spark, monkeypatch, capsys):
+    """scripts/build_index_job.py main(): a build that fails before its
+    commit (the scalars write) and is run again with --resume equals a
+    fresh build, and the resume rewrites no block file of a shard the
+    failed run finished."""
+    pdf = synthetic_corpus_pdf(150, seed=47)
+    path, fresh, corpus_path = (f"{BASE}/{n}" for n in
+                                ("build_cli", "build_cli_fresh",
+                                 "build_cli_corpus"))
+    for p in (path, fresh, corpus_path):
+        shutil.rmtree(p, ignore_errors=True)
+    spark.createDataFrame(pdf).write.parquet(corpus_path)
+    argv = ["build_index_job.py", "--corpus", corpus_path, "--index", path,
+            "--n-shards", "2"]
+
+    def fail(*a, **kw):
+        raise RuntimeError("failed before the commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(spimi, "_write_scalars", fail)
+        m.setattr(sys, "argv", argv)
+        with pytest.raises(RuntimeError, match="before the commit"):
+            _job("build_index_job").main()
+    assert not os.path.exists(f"{path}/scalars")
+
+    def block_files():
+        return {os.path.relpath(os.path.join(d, f), path):
+                os.stat(os.path.join(d, f)).st_mtime_ns
+                for d, _, fs in os.walk(f"{path}/blocks")
+                for f in fs if f.endswith(".parquet")}
+
+    done = block_files()
+    assert {f.split("/")[1] for f in done} == {"shard_id=0", "shard_id=1"}
+    capsys.readouterr()
+    monkeypatch.setattr(sys, "argv", argv + ["--resume"])
+    _job("build_index_job").main()
+    assert capsys.readouterr().out.startswith("indexed 150 docs in ")
+    assert block_files() == done
+
+    spimi.build_index(spark, with_doc_id(spark.read.parquet(corpus_path)),
+                      fresh, n_shards=2)
+    got = _search(spark, path)
+    assert got and got == _search(spark, fresh)
