@@ -1,13 +1,15 @@
 """Headline benchmark (driver-run per round; prints ONE JSON line).
 
 Measures on $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) with
-local[$SPARK_GRAFT_CPUS]:
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on):
 
 * q_index_build       — SPIMI block-index build, resumable layout
                         (docs-indexed/sec — the north-rule metric)
-* q_bmw_queryset50    — 50-query BM25 top-10 via block-max WAND
-                        (queries/sec — the north-rule metric)
-* q_exhaustive_queryset50 — same queries, decode-everything path
+* q_bmw_queryset50    — 50-query BM25 top-10, mode "bmw" (the columnar
+                        block scan, bmw.scan_topk_shard; queries/sec —
+                        the north-rule metric)
+* q_exhaustive_queryset50 — same queries, mode "exhaustive" (the same
+                        scan under another mode name)
 * q_two_stage         — BM25 top-100 → pandas-UDF rerank → top-10
 
 Scaling-efficiency evidence (north rule, N vs 4N cores) is produced by
@@ -137,7 +139,8 @@ def run(sf_dir: str, cpus: int, index_root: str = "/tmp/bench_index"):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     r = run(sf_dir, cpus)
     total = sum(r["timings"].values())

@@ -457,7 +457,7 @@ def q_bm25_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bm25_topk_filtered_bucketed(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """The SAME filtered search through the bucketed keep path: the
-    keep ids travel the (shard, bucket) cogroup shuffle as data rows
+    keep ids travel the shard cogroup shuffle as data rows
     instead of a driver-collected broadcast array (the 100-TB shape for
     large filters — Engine.search routes every filter past
     KEEP_BROADCAST_CAP there, and the cap is 0 here). Must hash-match

@@ -1,24 +1,25 @@
 """Exact BM25 top-k over the doc-sharded block index.
 
-Distribution model: queries are split into B buckets and each task
-scores one ``(shard_id, bucket)`` group of blocks against its bucket's
-queries — the doc-sharded layout (see spimi.py) makes shard results
-independent, so per-shard top-k lists merge into the EXACT global top-k
-with a final window. Parallelism = |shards| × B. Two formulations, one
-task body:
+Distribution model: a task is one shard. Each task scores its shard's
+blocks against every query — the doc-sharded layout (see spimi.py)
+makes shard results independent, so per-shard top-k lists merge into
+the EXACT global top-k with a final window. Parallelism = visible
+shards. Two formulations, one task body:
 
-* bounded query sets (QT_PAIR_CAP, LocalQueryPlan): the queries are
-  tokenized on the driver, their (df, idf) come from the Engine's
-  vocabulary snapshot or one bounded lookup, and they are dealt
-  round-robin over the buckets. Only the blocks side is shuffled — a
-  grouped map over ``(shard_id, bucket)`` — and each task takes its
-  bucket's (query_id, term, idf) arrays from the plan captured in its
+* bounded query sets (QT_PAIR_CAP, TERM_PUSHDOWN_CAP, LocalQueryPlan):
+  the queries are tokenized on the driver and their (df, idf) come from
+  the Engine's vocabulary snapshot or one bounded lookup. Only the
+  blocks side is shuffled — a grouped map over ``shard_id`` behind a
+  term filter that pushes into the parquet scan — and each task takes
+  the (query_id, term, idf) arrays from the plan captured in its
   closure (≤ QT_PAIR_CAP pairs; PySpark ships a pickled command over
   1 MB as a broadcast). A warm search is three Spark jobs.
-* past the cap, or with a bucketed keep-list (whose ids are already a
-  ≥ 10M-row shuffle), the query set stays distributed, hash-bucketed
-  by ``pmod(xxhash64(query_id), B)`` and cogrouped with the blocks (no
-  driver collect — the query log can be a billion rows).
+* past the caps, or with a bucketed keep-list (whose ids are already a
+  ≥ 10M-row shuffle), the query set stays distributed: its terms
+  filter the blocks through a broadcast left-semi join, and its rows,
+  replicated to every shard, are cogrouped with the blocks on
+  ``shard_id`` (no driver collect — the query log can be a billion
+  rows).
 
 Engine.search is the only entry point. It resolves an index state's
 handles once (meta, termstats, the projected blocks, the tombstone and
@@ -502,10 +503,11 @@ def query_terms_with_idf(queries: DataFrame,
         .select("query_id", "term", "idf", "df")
 
 
-#: query vocabularies up to this size are collected once (a bounded,
-#: semi-reduced driver list) so the term filter pushes into the parquet
-#: block scan; above it the broadcast bucket-join is the only term filter
-#: (a query log that big touches most of the index anyway).
+#: the local query plan's term cap: a plan's distinct terms become one
+#: literal IN list that pushes into the parquet block scan. A query set
+#: with more terms takes the distributed formulation, whose broadcast
+#: left-semi join is its only term filter (a vocabulary that big
+#: touches most of the index anyway).
 TERM_PUSHDOWN_CAP = 4096
 
 #: query sets of at most this many rows and (query_id, term) pairs get
@@ -514,11 +516,10 @@ TERM_PUSHDOWN_CAP = 4096
 #: relation), term (df, idf) come from the Engine's vocabulary snapshot
 #: or one bounded lookup, and the tasks take their queries from their
 #: closure — no query-side shuffle. The distributed formulation
-#: re-evaluates the tokenize→dedup→termstats subplan 3-5× per search
-#: (term collect, bucket_terms broadcast build, q_side — measured ~4 s
-#: of redundant jobs per 50-query call at local[32]). Past the cap the
-#: fully distributed path runs — a billion-row query log never touches
-#: the driver (same size-gated adaptivity as a broadcast join).
+#: evaluates the tokenize→termstats subplan twice per search (the term
+#: broadcast and the query side). Past the caps it runs, so a
+#: billion-row query log never touches the driver (same size-gated
+#: adaptivity as a broadcast join).
 QT_PAIR_CAP = 16384
 
 
@@ -532,7 +533,7 @@ def _sql_in(col: str, values) -> str:
 
 
 def _explode_ints(values) -> Column:
-    """One row per literal int (shard ids, buckets), by expression — no
+    """One row per literal int (the shard ids), by expression — no
     literal relation and no broadcast of it."""
     return F.expr(f"explode(array({', '.join(str(int(v)) for v in values)}))")
 
@@ -592,20 +593,13 @@ class LocalQueryPlan:
     def empty(self) -> bool:
         return not self.pairs
 
-    def bucketed(self, n_buckets: int
-                 ) -> dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]]:
-        """{bucket: (query_id, term, idf) arrays}: the queries dealt
-        round-robin over the buckets in query_id order. Any assignment
-        is exact (a query meets every shard in exactly one task); this
-        one is balanced and needs no hash on the driver."""
-        qid = np.array([q for q, _ in self.pairs], dtype=np.int64)
-        term = np.array([t for _, t in self.pairs], dtype=object)
-        idf = np.array([self.stats[t][1] for _, t in self.pairs],
-                       dtype=np.float64)
-        # pairs are sorted: factorize codes are query_id ranks
-        bucket = pd.factorize(qid)[0] % n_buckets
-        return {int(b): (qid[m], term[m], idf[m])
-                for b in np.unique(bucket) for m in [bucket == b]}
+    def arrays(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """The pairs as (query_id, term, idf) arrays: what every shard's
+        task scores."""
+        return (np.array([q for q, _ in self.pairs], dtype=np.int64),
+                np.array([t for _, t in self.pairs], dtype=object),
+                np.array([self.stats[t][1] for _, t in self.pairs],
+                         dtype=np.float64))
 
 
 def build_local_query_plan(
@@ -679,10 +673,8 @@ def bmw_topk(
     TASK_BLOCK_COLS) of one index state, ``tomb_bc`` (a Broadcast of
     the sorted tombstone array, or None) and ``local_plan`` (the
     bounded LocalQueryPlan of ``queries``, or None for the distributed
-    formulation). It loads nothing and builds no broadcast. The query
-    fan-out B is sized so that shards × buckets covers the cluster;
-    block bytes for a term shared by several buckets are replicated per
-    bucket.
+    formulation). It loads nothing and builds no broadcast. A task is
+    one shard and scores every query against it.
 
     Soft deletes: tombstoned docs are excluded inside the kernels;
     global stats stay pre-delete until compact_index purges (Lucene
@@ -696,13 +688,13 @@ def bmw_topk(
       up to its KEEP_BROADCAST_CAP ids) — read in every task;
     * a (doc_id) DataFrame — the ids are SHARDED like the index (each id
       maps to its candidate shard in every visible generation) and flow
-      through the (shard, bucket) cogroup shuffle as marker rows on the
-      query side: no driver materialization, no broadcast, each task
-      sees only its own shard's keep ids (|keep| × |gens| × B shuffle
-      rows). Such a search always takes the cogroup, so ``local_plan``
-      must be None. (At 100 TB a high-selectivity attribute is still
-      better as an index partition column — that prunes whole shards
-      instead of filtering inside them.)
+      through the shard cogroup shuffle as marker rows on the query
+      side: no driver materialization, no broadcast, each task sees
+      only its own shard's keep ids (|keep| × |gens| shuffle rows). Such
+      a search always takes the cogroup, so ``local_plan`` must be None.
+      (At 100 TB a high-selectivity attribute is still better as an
+      index partition column — that prunes whole shards instead of
+      filtering inside them.)
 
     attr_values: for an attribute-partitioned index (build_index
     attr_col), restrict results to these attribute values — the filter
@@ -710,20 +702,16 @@ def bmw_topk(
     partition directories are pruned before any byte moves (the 100-TB
     shape for high-selectivity attributes; no keep-list, no broadcast).
     Scores keep full-corpus stats, identical semantics to the
-    keep-list paths. The task keys are (shard, bucket) on every
-    index; on an attr-partitioned index the task scores each (shard,
-    attr) docmap group of its rows separately — the groups are
-    doc-disjoint, so per-group top-k lists still merge exactly.
+    keep-list paths. The task key is the shard on every index; on an
+    attr-partitioned index the task scores each (shard, attr) docmap
+    group of its rows separately — the groups are doc-disjoint, so
+    per-group top-k lists still merge exactly.
     """
     from rerankers_spark.index.spimi import _gen_shards, visible_generations
 
     bucketed_keep = isinstance(keep, DataFrame)
     keep_bc = None if bucketed_keep else keep
     avgdl = float(meta["avgdl"])
-    shard_ids = _gen_shards(visible_generations(meta),
-                            int(meta["n_shards"]))
-    n_buckets = max(1, spark.sparkContext.defaultParallelism
-                    // max(1, len(shard_ids)))
     attr_mode = bool(meta.get("attr_col"))
 
     if attr_values is not None:
@@ -740,8 +728,8 @@ def bmw_topk(
     def _task(bpdf: pd.DataFrame, qids: np.ndarray, terms: np.ndarray,
               idfs: np.ndarray, keep_local: np.ndarray | None
               ) -> pd.DataFrame:
-        """The task body of both formulations: one (shard, bucket)
-        group's block rows scored against its queries."""
+        """The task body of both formulations: one shard's block rows
+        scored against its queries."""
         if len(bpdf) == 0 or len(qids) == 0:
             return _empty_topk()
         deleted = tomb_bc.value if tomb_bc is not None else None
@@ -766,74 +754,44 @@ def bmw_topk(
 
     schema = "query_id long, doc_id long, score double"
     if local_plan is not None:
-        # bounded local plan: query terms, (df, idf) and buckets are on
-        # the driver. Only the blocks side is shuffled, bucketed by one
-        # expression with a hash InSet per bucket; each task takes its
-        # bucket's queries from the plan in its closure — no query
-        # subplan, no broadcast, no query-side job.
+        # bounded local plan: query terms and (df, idf) are on the
+        # driver. Only the blocks side is shuffled, behind one hash InSet
+        # of the plan's terms and the docmap; each task takes the queries
+        # from the plan in its closure — no query subplan, no broadcast,
+        # no query-side job.
         if local_plan.empty:
             return empty_result(spark)
-        by_bucket = local_plan.bucketed(n_buckets)
-        # the pushdown keeps only the plan's terms and the docmap, so a
-        # bucket holding every term takes every row
-        arms = [str(b) if len(set(t)) == len(local_plan.terms) else
-                f"IF({_sql_in('term', sorted(set(t)) + [DOCMAP_TERM])}, "
-                f"{b}, NULL)"
-                for b, (_, t, _) in by_bucket.items()]
-        blocks_b = blocks.where(
-            _sql_in("term", local_plan.terms + [DOCMAP_TERM])).selectExpr(
-            "*", f"explode(array_compact(array({', '.join(arms)}))) "
-                 "AS bucket")
+        qids, terms, idfs = local_plan.arrays()
 
-        def _run_local(key, bpdf):
-            return _task(bpdf, *by_bucket[int(key[1])],
+        def _run_local(bpdf):
+            return _task(bpdf, qids, terms, idfs,
                          keep_bc.value if keep_bc is not None else None)
 
-        local = blocks_b.groupby("shard_id", "bucket").applyInPandas(
-            _run_local, schema)
+        local = blocks.where(
+            _sql_in("term", local_plan.terms + [DOCMAP_TERM])) \
+            .groupby("shard_id").applyInPandas(_run_local, schema)
         return topk(local, k)
 
-    # Both sides are keyed on (shard_id, bucket). A posting row goes to
-    # exactly the buckets whose queries use its term, a docmap row to
-    # every bucket; a query row goes to every shard (shard results are
-    # doc-disjoint and merge exactly — the query side is rows of (id,
-    # term, idf), tiny next to block bytes, so the |shards|× replication
-    # is the cheap direction).
-
-    # instantiated separately per use so the cogroup's two sides don't
-    # share an attribute (ambiguous-self-join check)
-    def _bucket_col():
-        return F.pmod(F.xxhash64("query_id"), F.lit(n_buckets)).cast("int")
-
+    # Both sides are keyed on shard_id. The blocks side keeps the rows of
+    # the query set's terms and the docmap rows; a query row goes to every
+    # shard (shard results are doc-disjoint and merge exactly — the query
+    # side is rows of (id, term, idf), tiny next to block bytes, so the
+    # |shards|× replication is the cheap direction).
     qt_idf = query_terms_with_idf(queries, termstats)
-    # Bounded term-list pushdown (see TERM_PUSHDOWN_CAP). limit() means
-    # the driver never holds more than CAP+1 terms even for a huge query
-    # log. Collected from the RAW query terms (no termstats join in this
-    # job); OOV terms in the list are harmless — they match no blocks.
-    term_rows = bm25.query_terms(queries).select("term").distinct() \
-        .limit(TERM_PUSHDOWN_CAP + 1).collect()
-    if not term_rows:
-        return empty_result(spark)
-    if len(term_rows) <= TERM_PUSHDOWN_CAP:
-        blocks = blocks.where(F.expr(_sql_in(
-            "term", [r["term"] for r in term_rows] + [DOCMAP_TERM])))
-    # docmap rows join every bucket through a literal relation, so the
-    # query subplan is not evaluated once more for them
-    docmap_buckets = local_df(
-        spark, pd.DataFrame({"bucket": np.arange(n_buckets, dtype=np.int32),
-                             "term": DOCMAP_TERM}),
-        "bucket int, term string")
-    bucket_terms = qt_idf.select(_bucket_col().alias("bucket"), "term") \
-        .distinct().unionByName(docmap_buckets)
-    blocks_b = blocks.join(F.broadcast(bucket_terms), "term")
+    # every query term row also yields the docmap term, so the docmap
+    # rows join without a literal relation or another query subplan
+    terms = qt_idf.selectExpr(
+        f"explode(array(term, '{DOCMAP_TERM}')) AS term").distinct()
+    blocks_s = blocks.join(F.broadcast(terms), "term", "left_semi")
+    shard_ids = _gen_shards(visible_generations(meta),
+                            int(meta["n_shards"]))
     q_side = qt_idf.select("query_id", "term", "idf",
-                           _bucket_col().alias("bucket"),
                            _explode_ints(shard_ids).alias("shard_id"))
 
     if bucketed_keep:
-        # keep ids flow through the SAME (shard, bucket) cogroup shuffle
-        # as marker rows on the query side: each id maps to its candidate
-        # shard in every visible generation, replicated per bucket. Fully
+        # keep ids flow through the SAME shard cogroup shuffle as marker
+        # rows on the query side: each id maps to its candidate shard in
+        # every visible generation. Fully
         # distributed — no driver array, no broadcast. The id rides in
         # the NON-NULL query_id column with term=NULL as the marker: a
         # nullable int64 column would decay to float64 through Arrow →
@@ -853,8 +811,7 @@ def bmw_topk(
         q_side = q_side.unionByName(keep_sharded.select(
             F.col("keep_doc").alias("query_id"),
             F.lit(None).cast("string").alias("term"),
-            F.lit(None).cast("double").alias("idf"),
-            _explode_ints(range(n_buckets)).alias("bucket"), "shard_id"))
+            F.lit(None).cast("double").alias("idf"), "shard_id"))
 
     def _run(bpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
         if len(qpdf) == 0:
@@ -873,7 +830,6 @@ def bmw_topk(
                      qpdf["term"].to_numpy(dtype=object),
                      qpdf["idf"].to_numpy(dtype=np.float64), keep_local)
 
-    local = blocks_b.groupby("shard_id", "bucket").cogroup(
-        q_side.groupby("shard_id", "bucket")
-    ).applyInPandas(_run, schema)
+    local = blocks_s.groupby("shard_id").cogroup(
+        q_side.groupby("shard_id")).applyInPandas(_run, schema)
     return topk(local, k)

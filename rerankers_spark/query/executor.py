@@ -264,8 +264,8 @@ class Engine:
     #: billions of ids) would OOM the driver building the array, so
     #: search() routes it to the bucketed keep path (bmw.bmw_topk's keep
     #: is the filter frame): the ids are sharded like the index and flow
-    #: through the (shard, bucket) cogroup shuffle as data rows — no
-    #: driver materialization, no broadcast.
+    #: through the shard cogroup shuffle as data rows — no driver
+    #: materialization, no broadcast.
     KEEP_BROADCAST_CAP = 10_000_000
 
     #: the accepted Engine.search mode names (see search()).
@@ -274,9 +274,7 @@ class Engine:
     def search(self, queries: DataFrame, k: int = 10,
                mode: str = "bmw",
                doc_filter: Optional[DataFrame] = None,
-               attr_filter: Optional[list] = None,
-               local_plan: Optional["bmw.LocalQueryPlan"] = None
-               ) -> DataFrame:
+               attr_filter: Optional[list] = None) -> DataFrame:
         """(query_id, doc_id, score, rank) — BM25 top-k.
 
         'bmw', 'auto' and 'exhaustive' are three names for one call:
@@ -310,13 +308,10 @@ class Engine:
         scan, the cheapest filter shape by far (bmw.bmw_topk
         attr_values). Composable with doc_filter.
 
-        local_plan: optional pre-built bmw.LocalQueryPlan for these
-        queries, or False past the caps (rank() probes once and shares
-        the outcome between the stages); None → probe for one (bounded,
-        falls back to the distributed formulation past
-        bmw.QT_PAIR_CAP). A doc_filter past
-        KEEP_BROADCAST_CAP always takes the distributed formulation, so
-        it skips the probe.
+        The query set is probed for a bounded local plan (it falls back
+        to the distributed formulation past bmw.QT_PAIR_CAP or
+        bmw.TERM_PUSHDOWN_CAP). A doc_filter past KEEP_BROADCAST_CAP
+        always takes the distributed formulation, so it skips the probe.
 
         Caching contract: the query plan (terms, df, idf, query text)
         and the doc_filter keep-list are cached per frame SEMANTICS, so
@@ -331,6 +326,14 @@ class Engine:
         and the snapshot. delete()/compact() on this Engine handle their
         own (a soft delete keeps df, so it keeps the snapshot).
         """
+        return self._search(queries, k, mode, doc_filter, attr_filter)
+
+    def _search(self, queries: DataFrame, k: int, mode: str,
+                doc_filter: Optional[DataFrame],
+                attr_filter: Optional[list], local_plan=None
+                ) -> DataFrame:
+        """search(), given the outcome of rank()'s plan probe (a
+        bmw.LocalQueryPlan, or False past the caps); None probes here."""
         if mode not in self.MODES:
             raise ValueError(f"unknown mode {mode!r}")
         meta, termstats, blocks = self._handles()
@@ -401,10 +404,8 @@ class Engine:
         call refresh() after the index changes outside this Engine.
         """
         local_plan = self._query_plan(queries)
-        cands = self.search(queries, k=first_k, mode=mode,
-                            doc_filter=doc_filter,
-                            attr_filter=attr_filter,
-                            local_plan=local_plan).selectExpr(
+        cands = self._search(queries, first_k, mode, doc_filter,
+                             attr_filter, local_plan).selectExpr(
             "query_id", "doc_id", "score AS bm25_score")
         # Text attach: the candidate side is bounded (≤ n_queries ×
         # first_k rows of three numeric columns) whenever the local plan

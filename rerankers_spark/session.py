@@ -61,7 +61,7 @@ def get_spark(
         .config("spark.sql.limit.initialNumPartitions", "64")
         # AQE coalescing targets BYTES, but this engine's post-shuffle
         # stages are Python kernels whose cost per byte dwarfs shuffle
-        # IO: with the 1m default the (shard × bucket) cogroup collapses
+        # IO: with the 1m default the per-shard kernel stage collapses
         # to ONE task on compressed-KB inputs and the shard kernel runs
         # serially. 64k keeps small-input kernels parallel while leaving
         # sizeable shuffles governed by totalBytes/parallelism as before.

@@ -30,7 +30,8 @@ import bench  # noqa: E402
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     os.makedirs("/tmp/spark-events", exist_ok=True)
     os.environ["SPARK_EXTRA_CONF"] = json.dumps({
         "spark.eventLog.enabled": "true",

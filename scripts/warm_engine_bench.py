@@ -6,7 +6,7 @@ Builds the index ONCE, then measures a long-lived Engine (cached
 meta/termstats/blocks handles + tombstone broadcast) the way a serving
 deployment runs it: first call cold, then best-of-3 warm per phase:
 
-* bmw_2k      — 2,000-query BM25 top-10 via block-max WAND
+* bmw_2k      — 2,000-query BM25 top-10 (the columnar block scan)
 * bmw_100k    — 100,000-query batch (amortizes the ~2.3s scheduling
                 floor; the marginal-per-query number)
 * two_stage_2k — BM25 top-100 cut -> pandas-UDF rerank -> top-10

@@ -1,12 +1,14 @@
-"""The distributed query side (query sets past bmw.QT_PAIR_CAP) must
-return exactly what the bounded local query plan returns.
+"""The distributed query side (query sets past bmw.QT_PAIR_CAP or
+bmw.TERM_PUSHDOWN_CAP) must return exactly what the bounded local query
+plan returns.
 
-Production query sets in tests stay far under the cap, so the cap is
-forced to 0 here: build_local_query_plan then gives up, and bmw_topk
-derives its query side from query_terms_with_idf (a DataFrame, never
-collected) plus the bounded term-pushdown collect. A second case also
-forces TERM_PUSHDOWN_CAP to 0, so the block scan runs without the term
-filter and the broadcast bucket-join is the only term filter.
+Production query sets in tests stay far under the caps, so one cap is
+forced to 0 here: QT_PAIR_CAP in one case, TERM_PUSHDOWN_CAP alone in
+the other. build_local_query_plan then gives up, and bmw_topk derives
+both sides of its shard cogroup from query_terms_with_idf (a DataFrame,
+never collected): its distinct terms filter the blocks through a
+broadcast left-semi join, and its rows are the query side. A token-less
+query set past the cap returns no rows, with the result schema.
 
 The index carries tombstones, and every mode runs with and without a
 doc_filter, plus the two-stage rank(); search rows compare as
@@ -92,15 +94,29 @@ def test_distributed_query_side_matches_local_plan(spark, tombstoned,
                                                    monkeypatch,
                                                    no_pushdown):
     corpus, keep = tombstoned
-    monkeypatch.setattr(bmw, "QT_PAIR_CAP", 0)
-    if no_pushdown:
-        monkeypatch.setattr(bmw, "TERM_PUSHDOWN_CAP", 0)
+    # the term cap alone also sends the query set past the local plan
+    monkeypatch.setattr(bmw, "TERM_PUSHDOWN_CAP" if no_pushdown
+                        else "QT_PAIR_CAP", 0)
     eng = Engine(spark, BASE)
     got, q = _run_all(spark, eng, corpus, keep)
     assert eng._query_plan(q) is False
     assert got.keys() == local_results.keys()
     for key in local_results:
         assert got[key] == local_results[key], key
+
+
+def test_tokenless_query_set_past_the_cap_returns_no_rows(spark,
+                                                         tombstoned,
+                                                         monkeypatch):
+    monkeypatch.setattr(bmw, "QT_PAIR_CAP", 0)
+    eng = Engine(spark, BASE)
+    q = spark.createDataFrame([(0, ""), (1, "!!!")],
+                              "query_id long, query string")
+    df = eng.search(q, k=10)
+    assert eng._query_plan(q) is False
+    assert df.collect() == []
+    assert df.schema.simpleString() == (
+        "struct<query_id:bigint,doc_id:bigint,score:double,rank:int>")
 
 
 ATTR_BASE = "/tmp/test_distributed_query_side_attr"
@@ -153,9 +169,8 @@ def attr_local_results(spark, attr_tombstoned):
 def test_attr_index_distributed_query_side_matches_local_plan(
         spark, attr_tombstoned, attr_local_results, monkeypatch,
         no_pushdown):
-    monkeypatch.setattr(bmw, "QT_PAIR_CAP", 0)
-    if no_pushdown:
-        monkeypatch.setattr(bmw, "TERM_PUSHDOWN_CAP", 0)
+    monkeypatch.setattr(bmw, "TERM_PUSHDOWN_CAP" if no_pushdown
+                        else "QT_PAIR_CAP", 0)
     got, plan = _run_attr(spark, *attr_tombstoned)
     assert plan is False
     assert got == attr_local_results

@@ -270,8 +270,8 @@ def test_oversized_doc_filter_routes_to_bucketed_keep(spark, engine,
     """A doc_filter beyond KEEP_BROADCAST_CAP must NOT become a driver
     array / broadcast (at 100 TB that would OOM the driver) — search()
     routes it to the bucketed keep path (bmw_topk's keep is the filter
-    frame, not a broadcast), where the ids flow through the (shard,
-    bucket) cogroup shuffle as data rows. Results must be
+    frame, not a broadcast), where the ids flow through the shard
+    cogroup shuffle as data rows. Results must be
     identical across the broadcast kernel path, the bucketed kernel
     path, and the exhaustive mode (rounded-score comparison, CLAUDE.md
     cross-mode invariant)."""

@@ -9,6 +9,11 @@ over the blocks side plus the top-k window take the three jobs. A
 plan-cache repeat runs the same three. The plan has no cogroup and no
 broadcast literal relation.
 
+The same batch past the local plan's caps (bmw.QT_PAIR_CAP forced to 0)
+takes the distributed formulation: a broadcast of the query set's terms
+into a left-semi join with the blocks, and a cogroup of the blocks with
+the query rows on shard_id. It runs no driver collect of its terms.
+
 A 16-query Engine.rank adds stage two to that: the candidates are
 broadcast into the text join, one query_id exchange follows, and one
 Arrow map scores and cuts each query's rows (the query text rides in
@@ -31,6 +36,7 @@ from py4j.clientserver import ClientServerConnection
 from rerankers_spark.corpus import synthetic_corpus_pdf, with_doc_id
 from rerankers_spark.functions.tokenize import tokenize_py
 from rerankers_spark.index import spimi
+from rerankers_spark.query import bmw
 from rerankers_spark.query.executor import Engine
 
 BASE = "/tmp/test_search_jobs"
@@ -46,8 +52,12 @@ CACHED_JOBS = 3
 #: Java proxies whenever Python's GC runs, is not counted. With every
 #: blocks column shipped to the grouped map (not only
 #: bmw.TASK_BLOCK_COLS) they were 114 and 94.
-FRESH_ROUND_TRIPS = 104
-CACHED_ROUND_TRIPS = 84
+FRESH_ROUND_TRIPS = 89
+CACHED_ROUND_TRIPS = 69
+#: jobs and py4j round trips of a fresh warm 16-query search past the
+#: caps, counted as above
+OVER_CAP_JOBS = 9
+OVER_CAP_ROUND_TRIPS = 297
 #: jobs of a warm 16-query rank, fresh or plan-cache hit: the first
 #: stage's two shuffle stages, the candidates' broadcast, the text join
 #: → query_id shuffle, the scorer map's result. The window-ranked stage
@@ -55,8 +65,8 @@ CACHED_ROUND_TRIPS = 84
 RANK_JOBS = 5
 #: py4j round trips of a fresh rank and of a plan-cache hit, counted as
 #: for search (the window-ranked stage two took 347 and 327)
-RANK_FRESH_ROUND_TRIPS = 183
-RANK_CACHED_ROUND_TRIPS = 163
+RANK_FRESH_ROUND_TRIPS = 168
+RANK_CACHED_ROUND_TRIPS = 148
 
 
 @pytest.fixture(scope="module")
@@ -142,6 +152,20 @@ def test_search_round_trips(spark, warm, monkeypatch):
     assert fresh and sorted(cached) == sorted(fresh)
     assert n_fresh <= FRESH_ROUND_TRIPS
     assert n_cached <= CACHED_ROUND_TRIPS
+
+
+def test_over_cap_search_jobs_and_round_trips(spark, warm, monkeypatch):
+    eng, batch = warm
+    monkeypatch.setattr(bmw, "QT_PAIR_CAP", 0)
+    q = batch(500)
+    rows, n_jobs = _jobs(spark, lambda: eng.search(q, k=10).collect())
+    assert rows and eng._query_plan(q) is False
+    assert n_jobs <= OVER_CAP_JOBS
+    q = batch(600)
+    rows, n_trips = _round_trips(monkeypatch,
+                                 lambda: eng.search(q, k=10).collect())
+    assert rows
+    assert n_trips <= OVER_CAP_ROUND_TRIPS
 
 
 def _broadcasts_of_literals(plan: str) -> list[str]:
